@@ -3,9 +3,8 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.text
 
@@ -117,7 +116,7 @@ object CardStreams {
       rocksdbState: Boolean = false,
       checkpointDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
+    val stream = StagedStream.staged(spark, stagedDir)
     def cardOf(df: DataFrame): DataFrame = df
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_docs"),
@@ -128,47 +127,39 @@ object CardStreams {
           1)).as("n_quality_pass"))
     val stateDir = checkpointDir.map(d => new java.io.File(d, "card_state"))
     // written from the micro-batch thread, read by the caller after
-    // awaitTermination (and legitimately readable mid-run by a monitor)
+    // the query finishes (and legitimately readable mid-run by a monitor)
     val stateLock = new Object
     val (loaded, loadedBatch) = stateDir
       .map(loadCardState(spark, _)).getOrElse((None, -1L))
     var state: Option[DataFrame] = loaded
     var lastApplied: Long = loadedBatch
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState,
-        batchAdaptive) {
-      val writer = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-        .writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) => stateLock.synchronized {
-          // a replayed batch (crash between persist and offset commit)
-          // is already inside the persisted counters: skip it
-          if (batchId > lastApplied) {
-            val delta = cardOf(batch.toDF())
-            val next = state match {
-              case None => delta
-              case Some(st) =>
-                st.select(col(groupCol), col("n_docs").as("a_docs"),
-                    col("sum_tokens").as("a_tok"), col("n_quality_pass").as("a_pass"))
-                  .join(delta, Seq(groupCol), "full")
-                  .select(col(groupCol),
-                    (coalesce(col("a_docs"), lit(0L))
-                      + coalesce(col("n_docs"), lit(0L))).as("n_docs"),
-                    (coalesce(col("a_tok"), lit(0L))
-                      + coalesce(col("sum_tokens"), lit(0L))).as("sum_tokens"),
-                    (coalesce(col("a_pass"), lit(0L))
-                      + coalesce(col("n_quality_pass"), lit(0L))).as("n_quality_pass"))
-            }
-            val materialized = next.localCheckpoint(true)
-            stateDir.foreach(saveCardState(materialized, _, batchId))
-            state = Some(materialized)
-            lastApplied = batchId
+    StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
+        batchAdaptive, checkpointDir) { (batch, batchId) =>
+      stateLock.synchronized {
+        // a replayed batch (crash between persist and offset commit)
+        // is already inside the persisted counters: skip it
+        if (batchId > lastApplied) {
+          val delta = cardOf(batch)
+          val next = state match {
+            case None => delta
+            case Some(st) =>
+              st.select(col(groupCol), col("n_docs").as("a_docs"),
+                  col("sum_tokens").as("a_tok"), col("n_quality_pass").as("a_pass"))
+                .join(delta, Seq(groupCol), "full")
+                .select(col(groupCol),
+                  (coalesce(col("a_docs"), lit(0L))
+                    + coalesce(col("n_docs"), lit(0L))).as("n_docs"),
+                  (coalesce(col("a_tok"), lit(0L))
+                    + coalesce(col("sum_tokens"), lit(0L))).as("sum_tokens"),
+                  (coalesce(col("a_pass"), lit(0L))
+                    + coalesce(col("n_quality_pass"), lit(0L))).as("n_quality_pass"))
           }
-        }}
-        .trigger(Trigger.AvailableNow())
-      val q = checkpointDir
-        .fold(writer)(d => writer.option("checkpointLocation", d))
-        .start()
-      q.awaitTermination()
+          val materialized = next.localCheckpoint(true)
+          stateDir.foreach(saveCardState(materialized, _, batchId))
+          state = Some(materialized)
+          lastApplied = batchId
+        }
+      }
     }
     // a restarted run where every batch was already committed sees zero
     // new micro-batches — the reloaded state IS the answer

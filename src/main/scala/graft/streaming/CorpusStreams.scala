@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 import java.nio.file.attribute.FileTime
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.ext.Dedup
 
@@ -77,7 +77,7 @@ object CorpusStreams {
           }
           val target = dir.resolve(f"batch_$i%04d.parquet")
           Files.move(part, target)
-          deleteRecursively(tmp)
+          StagedStream.deleteTree(tmp)
           Files.setLastModifiedTime(target, FileTime.fromMillis(base + i * 2000L))
           target.toFile.deleteOnExit()
         }
@@ -86,14 +86,6 @@ object CorpusStreams {
         scala.concurrent.duration.Duration.Inf))
     } finally pool.shutdown()
     dir.toString
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val listing = Files.walk(p)
-    try listing.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
-    finally listing.close()
   }
 
   /** Run the streaming dedup over a staged batch directory (one micro-batch
@@ -132,10 +124,10 @@ object CorpusStreams {
       checkpointDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
     require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val schema = spark.read.parquet(stagedDir).schema
+    val stream = StagedStream.staged(spark, stagedDir)
     val params = Dedup.MinhashParams(numHashes, bands, shingleK)
     // `state` is written from the micro-batch thread and read from the
-    // caller thread after awaitTermination — synchronize on `stateLock`
+    // caller thread after the query finishes — synchronize on `stateLock`
     // explicitly rather than relying on the termination happens-before
     // (same standard the survivor buffer used before it moved to the sink).
     val stateLock = new Object
@@ -143,53 +135,38 @@ object CorpusStreams {
       stateDir.flatMap(Dedup.loadMinhashState(spark, _, params))
     }
     var batchesSinceCheckpoint = 0
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_corpus_survivors")
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState,
-        batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          val b = batch.persist()
-          try stateLock.synchronized {
-            // ONE feature pass per batch: the eagerly-checkpointed state
-            // serves the dedup verify, the corpus probe AND the index
-            // (checkpointing is also required anyway — the batch frame is
-            // only valid inside this callback)
-            val incCk = Dedup.minhashStateCheckpointed(b.toDF(), idCol,
-              textCol, numHashes, bands, shingleK, maxBucket)
-            val kept = Dedup.minhashDedupWithState(b.toDF(), incCk, state,
-              idCol, threshold)
-            // executor-side append; survivor ids never touch the driver
-            kept.select(col(idCol).cast("long").as(idCol))
-              .write.mode("append").parquet(sink)
-            // index ALL seen docs (see class doc)
-            state = Some(state.fold(incCk) { st =>
-              Dedup.MinhashState(st.sets.union(incCk.sets),
-                st.buckets.union(incCk.buckets), st.params)
-            })
-            // the accumulated index is a left-deep union of checkpointed
-            // leaves; the UNION's plan depth still grows with batch count, so
-            // collapse it to a fresh pair of flat leaves every few batches —
-            // keeps per-batch analysis cost O(checkpointEvery), not O(#batches)
-            batchesSinceCheckpoint += 1
-            if (batchesSinceCheckpoint >= checkpointEvery) {
-              state = state.map(st => Dedup.MinhashState(
-                st.sets.localCheckpoint(true), st.buckets.localCheckpoint(true),
-                st.params))
-              batchesSinceCheckpoint = 0
-            }
-          } finally b.unpersist()
+    val sink = StagedStream.sinkOrTemp(sinkDir, "graft_corpus_survivors")
+    StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
+        batchAdaptive, checkpointDir) { (b, _) =>
+      stateLock.synchronized {
+        // ONE feature pass per batch: the eagerly-checkpointed state
+        // serves the dedup verify, the corpus probe AND the index
+        // (checkpointing is also required anyway — the batch frame is
+        // only valid inside this callback)
+        val incCk = Dedup.minhashStateCheckpointed(b, idCol,
+          textCol, numHashes, bands, shingleK, maxBucket)
+        val kept = Dedup.minhashDedupWithState(b, incCk, state,
+          idCol, threshold)
+        // executor-side append; survivor ids never touch the driver
+        kept.select(col(idCol).cast("long").as(idCol))
+          .write.mode("append").parquet(sink)
+        // index ALL seen docs (see class doc)
+        state = Some(state.fold(incCk) { st =>
+          Dedup.MinhashState(st.sets.union(incCk.sets),
+            st.buckets.union(incCk.buckets), st.params)
+        })
+        // the accumulated index is a left-deep union of checkpointed
+        // leaves; the UNION's plan depth still grows with batch count, so
+        // collapse it to a fresh pair of flat leaves every few batches —
+        // keeps per-batch analysis cost O(checkpointEvery), not O(#batches)
+        batchesSinceCheckpoint += 1
+        if (batchesSinceCheckpoint >= checkpointEvery) {
+          state = state.map(st => Dedup.MinhashState(
+            st.sets.localCheckpoint(true), st.buckets.localCheckpoint(true),
+            st.params))
+          batchesSinceCheckpoint = 0
         }
-        .trigger(Trigger.AvailableNow())
-      val started = checkpointDir
-        .fold(q)(d => q.option("checkpointLocation", d))
-        .start()
-      started.awaitTermination()
+      }
     }
     stateLock.synchronized {
       for (dir <- stateDir; st <- state) Dedup.saveMinhashState(st, dir, params)
@@ -237,45 +214,31 @@ object CorpusStreams {
       stateDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
     require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val schema = spark.read.parquet(stagedDir).schema
+    val stream = StagedStream.staged(spark, stagedDir)
     val stateLock = new Object
     var seen: Option[DataFrame] = stateLock.synchronized {
       stateDir.flatMap(Dedup.loadParagraphState(spark, _, sepPattern))
     }
     var batchesSinceCollapse = 0
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_segment_dedup")
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          val b = batch.persist()
-          try stateLock.synchronized {
-            Dedup.paragraphDedup(b.toDF(), idCol, textCol, sepPattern,
-                joinSep, dropAboveCount = None, priorSeenHashes = seen)
-              .write.mode("append").parquet(sink)
-            // eager checkpoint: the batch frame is only valid inside this
-            // callback, and the state must outlive it
-            val newHashes = Dedup.paragraphHashes(b.toDF(), idCol, textCol,
-              sepPattern).select(col("seg_h")).distinct().localCheckpoint()
-            var merged = seen.fold(newHashes)(_.unionByName(newHashes))
-            batchesSinceCollapse += 1
-            if (batchesSinceCollapse >= checkpointEvery) {
-              merged = merged.distinct().localCheckpoint()
-              batchesSinceCollapse = 0
-            }
-            seen = Some(merged)
-          } finally b.unpersist()
+    val sink = StagedStream.sinkOrTemp(sinkDir, "graft_segment_dedup")
+    StagedStream.foreachStaged(stream, shufflePartitions,
+        adaptive = batchAdaptive, queryName = Some(queryName)) { (b, _) =>
+      stateLock.synchronized {
+        Dedup.paragraphDedup(b, idCol, textCol, sepPattern,
+            joinSep, dropAboveCount = None, priorSeenHashes = seen)
+          .write.mode("append").parquet(sink)
+        // eager checkpoint: the batch frame is only valid inside this
+        // callback, and the state must outlive it
+        val newHashes = Dedup.paragraphHashes(b, idCol, textCol,
+          sepPattern).select(col("seg_h")).distinct().localCheckpoint()
+        var merged = seen.fold(newHashes)(_.unionByName(newHashes))
+        batchesSinceCollapse += 1
+        if (batchesSinceCollapse >= checkpointEvery) {
+          merged = merged.distinct().localCheckpoint()
+          batchesSinceCollapse = 0
         }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
+        seen = Some(merged)
+      }
     }
     stateLock.synchronized {
       for (dir <- stateDir; st <- seen)
@@ -321,33 +284,17 @@ object CorpusStreams {
         "annProbeStreaming: refineWiden needs an index built with " +
           "refineDim > 0 — this state has no SQ8 refine tier")
     }
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_ann_hits")
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          val b = batch.persist()
-          try {
-            val hits = refineWiden match {
-              case Some(w) => graft.ext.AnnIndex.probeRefined(state,
-                b.toDF(), vecCol, idCol, k = k, nProbe = nProbe, widen = w)
-              case None => graft.ext.AnnIndex.probe(state, b.toDF(),
-                vecCol, idCol, k = k, nProbe = nProbe)
-            }
-            hits.write.mode("append").parquet(sink)
-          } finally b.unpersist()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
+    val stream = StagedStream.staged(spark, stagedDir)
+    val sink = StagedStream.sinkOrTemp(sinkDir, "graft_ann_hits")
+    StagedStream.foreachStaged(stream, shufflePartitions,
+        adaptive = batchAdaptive, queryName = Some(queryName)) { (b, _) =>
+      val hits = refineWiden match {
+        case Some(w) => graft.ext.AnnIndex.probeRefined(state,
+          b, vecCol, idCol, k = k, nProbe = nProbe, widen = w)
+        case None => graft.ext.AnnIndex.probe(state, b,
+          vecCol, idCol, k = k, nProbe = nProbe)
+      }
+      hits.write.mode("append").parquet(sink)
     }
     spark.read.parquet(sink)
   }
@@ -363,7 +310,7 @@ object CorpusStreams {
     * arriving crawl batch against it.
     *
     * Sink retention: with `sinkDir = None` each CALL allocates a fresh
-    * temp directory removed only at JVM exit (`deleteOnExit`) — correct
+    * temp directory, deleted with its contents only at JVM exit — correct
     * for the one-shot gate/spec shape, but a long-lived session invoking
     * the screen repeatedly accumulates hit files on disk. A production
     * ingest loop should pass an explicit `sinkDir` it owns (the results
@@ -378,28 +325,13 @@ object CorpusStreams {
       shufflePartitions: Option[Int] = None,
       maxDf: Long = Long.MaxValue,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_containment_hits")
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.persist()
-          try graft.ext.Dedup.containmentProbe(b.toDF(), state, idCol,
-              textCol, tau, shingleK, maxDf)
-            .write.mode("append").parquet(sink)
-          finally b.unpersist()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
+    val stream = StagedStream.staged(spark, stagedDir)
+    val sink = StagedStream.sinkOrTemp(sinkDir, "graft_containment_hits")
+    StagedStream.foreachStaged(stream, shufflePartitions,
+        adaptive = batchAdaptive, queryName = Some(queryName)) { (b, _) =>
+      graft.ext.Dedup.containmentProbe(b, state, idCol, textCol, tau,
+          shingleK, maxDf)
+        .write.mode("append").parquet(sink)
     }
     spark.read.parquet(sink)
   }
@@ -424,28 +356,12 @@ object CorpusStreams {
       shufflePartitions: Option[Int] = None,
       maxDf: Long = Long.MaxValue,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_resemblance_hits")
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.persist()
-          try graft.ext.Dedup.jaccardProbe(b.toDF(), state, idCol,
-              textCol, maxDf)
-            .write.mode("append").parquet(sink)
-          finally b.unpersist()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
+    val stream = StagedStream.staged(spark, stagedDir)
+    val sink = StagedStream.sinkOrTemp(sinkDir, "graft_resemblance_hits")
+    StagedStream.foreachStaged(stream, shufflePartitions,
+        adaptive = batchAdaptive, queryName = Some(queryName)) { (b, _) =>
+      graft.ext.Dedup.jaccardProbe(b, state, idCol, textCol, maxDf)
+        .write.mode("append").parquet(sink)
     }
     spark.read.parquet(sink)
   }
@@ -468,24 +384,12 @@ object CorpusStreams {
       sinkDir: Option[String] = None,
       shufflePartitions: Option[Int] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_lm_scores")
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          graft.ext.NgramLm.score(batch.toDF(), idCol, textCol, model)
-            .write.mode("append").parquet(sink)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val stream = StagedStream.staged(spark, stagedDir)
+    val sink = StagedStream.sinkOrTemp(sinkDir, "graft_lm_scores")
+    StagedStream.foreachStaged(stream, shufflePartitions,
+        adaptive = batchAdaptive) { (b, _) =>
+      graft.ext.NgramLm.score(b, idCol, textCol, model)
+        .write.mode("append").parquet(sink)
     }
     spark.read.parquet(sink)
   }
@@ -514,32 +418,19 @@ object CorpusStreams {
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
     import graft.ext.HeavyHitters
     HeavyHitters.requireGuarantee(minShare, k)
-    val schema = spark.read.parquet(stagedDir).schema
     def tokens(df: DataFrame): DataFrame = df.select(
       explode(graft.functions.text.tokens(col(textCol))).as(itemName))
-    val stream = tokens(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    val agg = stream.agg(
+    val agg = tokens(StagedStream.staged(spark, stagedDir)).agg(
       graft.expressions.MisraGriesAgg.misraGriesSummary(col(itemName), k)
         .as("mg"),
       count(col(itemName)).as("n"))
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // bounded by design at ONE row holding <= k counters — measured
-      EventStreams.auditStateSizeOrDrop(spark, q, "heavy-hitters monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
-    // bounded: at most one row, <= k strings (empty when zero batches ran)
-    val first = spark.table(queryName)
+    // bounded by design at ONE row holding <= k counters — measured; the
+    // drained frame is at most that row (empty when zero batches ran)
+    val first = StagedStream.toMemory(agg, OutputMode.Complete(), queryName,
+        shufflePartitions, rocksdbState, Some(StagedStream.StateCap(
+          "heavy-hitters monitor", maxStateRows, maxStateBytes)))
       .select(map_keys(col("mg")).as("cands"), col("n"))
       .collect().headOption
-    spark.catalog.dropTempView(queryName)
     HeavyHitters.recountExact(tokens(spark.read.parquet(stagedDir)),
       col(itemName),
       first.map(_.getSeq[String](0)).getOrElse(Nil),
@@ -564,25 +455,13 @@ object CorpusStreams {
       sinkDir: Option[String] = None,
       shufflePartitions: Option[Int] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_novelty_scores")
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          graft.ext.Decontaminate.noveltyScores(
-              batch.toDF(), idCol, textCol, reference, refTextCol, n)
-            .write.mode("append").parquet(sink)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val stream = StagedStream.staged(spark, stagedDir)
+    val sink = StagedStream.sinkOrTemp(sinkDir, "graft_novelty_scores")
+    StagedStream.foreachStaged(stream, shufflePartitions,
+        adaptive = batchAdaptive) { (b, _) =>
+      graft.ext.Decontaminate.noveltyScores(
+          b, idCol, textCol, reference, refTextCol, n)
+        .write.mode("append").parquet(sink)
     }
     spark.read.parquet(sink)
   }
@@ -609,28 +488,17 @@ object CorpusStreams {
       maxStateRows: Long = Long.MaxValue,
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
     import graft.functions.text
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream0 = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+    val stream0 = StagedStream.staged(spark, stagedDir)
     val stream = streamFilter.fold(stream0)(stream0.where)
     val agg = stream
       .select(explode(text.tokens(col(textCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("n_b"))
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // honest floor = |vocabulary| rows (the scaladoc's declared bound);
-      // the audit is where a vocabulary-shaped state stops being a
-      // claim — cap it when only the top drifts matter (the MG pass)
-      EventStreams.auditStateSizeOrDrop(spark, q, "token-drift monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
-    val streamedCounts = EventStreams.drainMemorySink(spark, queryName)
+    // honest floor = |vocabulary| rows (the scaladoc's declared bound);
+    // the audit is where a vocabulary-shaped state stops being a
+    // claim — cap it when only the top drifts matter (the MG pass)
+    val streamedCounts = StagedStream.toMemory(agg, OutputMode.Complete(),
+      queryName, shufflePartitions, rocksdbState, Some(StagedStream.StateCap(
+        "token-drift monitor", maxStateRows, maxStateBytes)))
     val baseCounts = baseline
       .select(explode(text.tokens(col(baselineTextCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("n_a"))
@@ -653,23 +521,12 @@ object CorpusStreams {
       rocksdbState: Boolean = false,
       maxStateRows: Long = Long.MaxValue,
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    val agg = graft.ext.Sketches.hllRegisters(stream, Seq(groupCol), valueCol, p)
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // bounded by design at groups x 2^p register rows — measured
-      EventStreams.auditStateSizeOrDrop(spark, q, "hll-registers monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
-    EventStreams.drainMemorySink(spark, queryName)
+    val agg = graft.ext.Sketches.hllRegisters(
+      StagedStream.staged(spark, stagedDir), Seq(groupCol), valueCol, p)
+    // bounded by design at groups x 2^p register rows — measured
+    StagedStream.toMemory(agg, OutputMode.Complete(), queryName,
+      shufflePartitions, rocksdbState, Some(StagedStream.StateCap(
+        "hll-registers monitor", maxStateRows, maxStateBytes)))
   }
 
   /** [[graft.ext.Decontaminate.semanticHitsLiteral]] over an ARRIVING
@@ -693,24 +550,13 @@ object CorpusStreams {
       spark: SparkSession, stagedDir: String, idCol: String, textCol: String,
       weights: Array[Int], bias: Long, queryName: String,
       shufflePartitions: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    val scored = stream.select(col(idCol),
+    val scored = StagedStream.staged(spark, stagedDir).select(col(idCol),
         graft.functions.text.hashedLinearScore(col(textCol), weights, bias)
           .as("score"))
       .withColumn("label",
         when(col("score") >= 0, lit("keep")).otherwise(lit("drop")))
-    EventStreams.withStatePartitions(spark, shufflePartitions) {
-      val q = scored.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    EventStreams.drainMemorySink(spark, queryName)
+    StagedStream.toMemory(scored, OutputMode.Append(), queryName,
+      shufflePartitions)
   }
 
   /** Row-local clamped fixed-width score bin — the state key of the
@@ -753,31 +599,21 @@ object CorpusStreams {
       shufflePartitions: Option[Int] = None,
       maxStateRows: Long = Long.MaxValue,
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    val scored = stream.where(col(textCol).isNotNull)
+    val scored = StagedStream.staged(spark, stagedDir)
+      .where(col(textCol).isNotNull)
       .select(col(groupCol), positive.as("__pos"),
         clampedScoreBucket(graft.ext.Classifier.nbScoreColumn(
           col(textCol), weights, bias, buckets),
           scoreBinWidth, maxAbsBucket).as("score"))
     val counts = graft.ops.Profile.aucCounts(
       scored, Seq(groupCol), "score", col("__pos"))
-    EventStreams.withStatePartitions(spark, shufflePartitions) {
-      val q = counts.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // the clamped bins bound state at groups x (2*maxAbsBucket + 1) x 2
-      // BY DESIGN — the audit turns that argument into a measurement
-      EventStreams.auditStateSizeOrDrop(spark, q, "classifier-auc monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
+    // the clamped bins bound state at groups x (2*maxAbsBucket + 1) x 2
+    // BY DESIGN — the audit turns that argument into a measurement
     graft.ops.Profile.aucFromCounts(
-      EventStreams.drainMemorySink(spark, queryName), Seq(groupCol))
+      StagedStream.toMemory(counts, OutputMode.Complete(), queryName,
+        shufflePartitions, audit = Some(StagedStream.StateCap(
+          "classifier-auc monitor", maxStateRows, maxStateBytes))),
+      Seq(groupCol))
   }
 
   def semanticScreenStreaming(
@@ -785,21 +621,11 @@ object CorpusStreams {
       evalVecs: Seq[(Long, Seq[Double])], tau: Double, queryName: String,
       corpusFilter: Option[org.apache.spark.sql.Column] = None,
       shufflePartitions: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream0 = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+    val stream0 = StagedStream.staged(spark, stagedDir)
     val stream = corpusFilter.map(stream0.where).getOrElse(stream0)
     val screened = graft.ext.Decontaminate.semanticHitsLiteral(
       stream, idCol, vecCol, evalVecs, tau)
-    EventStreams.withStatePartitions(spark, shufflePartitions) {
-      val q = screened.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    EventStreams.drainMemorySink(spark, queryName)
+    StagedStream.toMemory(screened, OutputMode.Append(), queryName,
+      shufflePartitions)
   }
 }

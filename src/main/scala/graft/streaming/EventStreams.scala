@@ -3,14 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming operators over the `events` table shape
   * (`event_id, ts, user_id, event_type, value, props`).
   *
   * The reference's chunked fetch loop (`R/ffsql.R:276-333`) is micro-batch
   * shaped; its true Spark-native descendant is Structured Streaming:
-  * readStream -> transform -> writeStream with watermarks and stateful ops.
+  * readStream -> transform -> sink, with watermarks and stateful ops.
   * Batch twins of each streaming query are provided so the SAME semantics
   * are verifiable against a SQL oracle (streaming parity = batch result on
   * the complete input).
@@ -43,8 +43,9 @@ object EventStreams {
     * size is bounded by local disk not executor memory, and changelog
     * checkpointing ships deltas rather than full snapshots.
     *
-    * Measured by [[StateBench]] (this box, local[32], changelog
-    * checkpointing on, warmed, every batch rewriting every key):
+    * Measured by a one-off state-store benchmark (local[32], changelog
+    * checkpointing on, warmed, every batch rewriting every key; the
+    * round-10 record in SURVEY.md):
     * 1e5 keys/state-partition -> HDFS 4.77 s vs RocksDB 6.37 s;
     * 4e5 keys/partition -> 12.70 s vs 24.20 s. While state FITS IN HEAP
     * the default heap-map provider wins (mutating an in-memory map beats
@@ -74,8 +75,8 @@ object EventStreams {
     * production pairing the provider's scaladoc describes — each commit
     * ships the batch's delta instead of a full state snapshot (Spark
     * leaves it off by default only for pre-3.5 checkpoint compatibility).
-    * [[StateBench]] measures the pairing; see [[RocksDbProvider]] for the
-    * recorded numbers and when flipping the knob actually pays.
+    * See [[RocksDbProvider]] for the recorded numbers of the pairing and
+    * when flipping the knob actually pays.
     * Provider choice never affects results — only where state bytes
     * live — and the streaming specs assert streamed == batch under both
     * providers.
@@ -181,41 +182,6 @@ object EventStreams {
     }
   }
 
-  /** [[auditStateSize]] with guaranteed sink release on breach: the cap
-    * throwing must not LEAK the Complete-mode memory sink's driver-held
-    * rows (round-16 self-review — every monitor audits BEFORE its
-    * drain, so a breached cap would leave the temp view registered for
-    * the session's lifetime, pinning the full streamed aggregate on the
-    * driver across repeated breached runs). The view is dropped before
-    * the breach propagates; the success path leaves it for the drain.
-    */
-  private[streaming] def auditStateSizeOrDrop(
-      spark: SparkSession, q: org.apache.spark.sql.streaming.StreamingQuery,
-      what: String, maxStateRows: Long, queryName: String,
-      maxStateBytes: Long = Long.MaxValue): Unit =
-    try auditStateSize(q, what, maxStateRows, maxStateBytes)
-    catch {
-      case e: IllegalStateException =>
-        try spark.catalog.dropTempView(queryName)
-        catch { case _: Exception => () } // release is best-effort
-        throw e
-    }
-
-  /** Drain a finished memory-sink table into a local DataFrame and DROP the
-    * sink's temp view. The memory sink already holds its rows on the driver;
-    * draining adds nothing, but dropping the view releases them when the
-    * caller is done — without this, every streaming query in a long session
-    * pins its full result on the driver forever (a 100-query battery
-    * accumulates them all).
-    */
-  private[streaming] def drainMemorySink(spark: SparkSession, name: String): DataFrame = {
-    val t = spark.table(name)
-    val rows = t.collect()
-    val schema = t.schema
-    spark.catalog.dropTempView(name)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
-
   /** The file stream source requires a DIRECTORY; when given a single
     * parquet file, stage a symlink to it inside a temp dir.
     */
@@ -261,24 +227,14 @@ object EventStreams {
       eventKey: String, dimKey: String, segCol: String, queryName: String,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
+    val stream = StagedStream.events(spark, eventsPath)
     val agg = stream
       .join(broadcast(dim.select(col(dimKey), col(segCol))),
         stream(eventKey) === dim(dimKey), "left")
       .groupBy(coalesce(col(segCol), lit("UNKNOWN")).as("segment"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    StagedStream.toMemory(agg, OutputMode.Complete(), queryName,
+      shufflePartitions, rocksdbState)
   }
 
   /** Streaming approximate distinct count per group — the KMV sketch is
@@ -298,26 +254,14 @@ object EventStreams {
       maxStateRows: Long = Long.MaxValue,
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
     import graft.ext.Sketches
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
-    val agg = stream
+    val agg = StagedStream.events(spark, eventsPath)
       .groupBy(col(groupCol))
       .agg(graft.expressions.BottomKAgg
         .bottomKHashes(Sketches.kmvHash(col(valueCol)), k).as("bk"))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // bounded by design at |groups| rows of k longs — measured + capped
-      auditStateSizeOrDrop(spark, q, "distinct-estimate monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
-    drainMemorySink(spark, queryName)
+    // bounded by design at |groups| rows of k longs — measured + capped
+    StagedStream.toMemory(agg, OutputMode.Complete(), queryName,
+        shufflePartitions, rocksdbState, Some(StagedStream.StateCap(
+          "distinct-estimate monitor", maxStateRows, maxStateBytes)))
       .withColumn("n_est", Sketches.kmvEstimate(k))
       .select(col(groupCol), col("n_est"))
   }
@@ -338,26 +282,16 @@ object EventStreams {
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
     import graft.ext.Sketches
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
-    val agg = stream
+    val agg = StagedStream.events(spark, eventsPath)
       .where(col(valueCol).isNotNull && col(hashKeyCol).isNotNull)
       .groupBy(col(groupCol))
       .agg(graft.expressions.BottomKSample.bottomKSample(
         Sketches.kmvHash(col(hashKeyCol)), col(valueCol).cast("double"), k)
         .as("__vals"))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     Sketches.quantilePicks(
-      drainMemorySink(spark, queryName), Seq(groupCol), qs, interpolate)
+      StagedStream.toMemory(agg, OutputMode.Complete(), queryName,
+        shufflePartitions, rocksdbState),
+      Seq(groupCol), qs, interpolate)
   }
 
   /** Batch twin: tumbling-window counts/sums per event_type. */
@@ -378,25 +312,14 @@ object EventStreams {
       windowLen: String = "1 hour", watermark: String = "10 minutes",
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
-    val agg = stream
+    val agg = StagedStream.events(spark, eventsPath)
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
       .select(unix_timestamp(col("w.start")).as("wstart"), col("event_type"),
         col("n_events"), col("sum_value"))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    StagedStream.toMemory(agg, OutputMode.Complete(), queryName,
+      shufflePartitions, rocksdbState)
   }
 
   /** Streaming deduplication: stage the source file TWICE so the stream
@@ -440,21 +363,11 @@ object EventStreams {
         l.toFile.deleteOnExit()
       }
     }
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(spark.readStream.schema(schema).parquet(d.toString))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = stream
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(keys)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    val deduped = StagedStream.events(spark, eventsPath, Some(d.toString))
+      .withWatermark("ts", watermark)
+      .dropDuplicatesWithinWatermark(keys)
+    StagedStream.toMemory(deduped, OutputMode.Append(), queryName,
+      shufflePartitions, rocksdbState)
   }
 
   /** The ONE gap-rule session-id assignment (lag -> flag -> running sum)
@@ -552,27 +465,18 @@ object EventStreams {
       userMod: Long = 1L,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
+    val schema = Some(spark.read.parquet(eventsPath).schema)
     // userMod > 1 bounds join state to a deterministic 1/userMod user slice
     // — same machinery, proportionally less per-row state-store traffic
     def stream() = {
-      val s0 = normalizeTs(
-        spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
+      val s0 = StagedStream.events(spark, eventsPath, schema = schema)
       if (userMod > 1L) s0.where(pmod(col("user_id"), lit(userMod)) === 0L) else s0
     }
     // A stream-stream join runs FOUR state stores per shuffle partition per
     // micro-batch, so this query benefits most from bounding them.
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = correlate(stream(), stream(), typeA, typeB, withinMinutes, watermark)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    StagedStream.toMemory(
+      correlate(stream(), stream(), typeA, typeB, withinMinutes, watermark),
+      OutputMode.Append(), queryName, shufflePartitions, rocksdbState)
   }
 
   /** Stateful streaming twin of [[graft.ops.Behavior.transitions]]: one
@@ -650,20 +554,10 @@ object EventStreams {
       spark: SparkSession, stagedDir: String, queryName: String,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = transitionsStateful(stream).writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val pairs = drainMemorySink(spark, queryName)
-    pairs.groupBy(col("prev_type"), col("next_type"))
+    val stream = normalizeTs(StagedStream.staged(spark, stagedDir))
+    StagedStream.toMemory(transitionsStateful(stream), OutputMode.Append(),
+        queryName, shufflePartitions, rocksdbState)
+      .groupBy(col("prev_type"), col("next_type"))
       .agg(sum(col("n")).as("n"))
       .withColumn("prob",
         round(col("n").cast("double") / sum(col("n"))
@@ -735,20 +629,10 @@ object EventStreams {
       stages: Seq[String],
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = funnelStateful(stream, stages).writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val stream = normalizeTs(StagedStream.staged(spark, stagedDir))
     import spark.implicits._
-    val counts = drainMemorySink(spark, queryName)
+    val counts = StagedStream.toMemory(funnelStateful(stream, stages),
+        OutputMode.Append(), queryName, shufflePartitions, rocksdbState)
       .groupBy(col("stage_idx")).agg(count(lit(1)).as("n_users"))
     val stageDf = stages.zipWithIndex
       .map { case (st, k) => (k, st) }.toDF("stage_idx", "stage")
@@ -836,19 +720,9 @@ object EventStreams {
       windowDays: Int = 7,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = rollingActiveStateful(stream, windowDays).writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    val stream = normalizeTs(StagedStream.staged(spark, stagedDir))
+    StagedStream.toMemory(rollingActiveStateful(stream, windowDays),
+        OutputMode.Append(), queryName, shufflePartitions, rocksdbState)
       .groupBy(col("window_day")).agg(count(lit(1)).as("n_active"))
   }
 
@@ -864,20 +738,12 @@ object EventStreams {
       groupCols: Seq[String], valCol: String,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    val daily = graft.ops.Behavior.dailyTotals(stream, groupCols, valCol)
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = daily.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.ops.Behavior.cusumFromDaily(drainMemorySink(spark, queryName), groupCols)
+    val daily = graft.ops.Behavior.dailyTotals(
+      normalizeTs(StagedStream.staged(spark, stagedDir)), groupCols, valCol)
+    graft.ops.Behavior.cusumFromDaily(
+      StagedStream.toMemory(daily, OutputMode.Complete(), queryName,
+        shufflePartitions, rocksdbState),
+      groupCols)
   }
 
   /** Streamed EWMA monitor — the [[cusumStreaming]] pattern verbatim: the
@@ -893,20 +759,10 @@ object EventStreams {
       groupCols: Seq[String], valCol: String,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    val daily = graft.ops.Behavior.dailyTotals(stream, groupCols, valCol)
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = daily.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val drained = drainMemorySink(spark, queryName)
+    val daily = graft.ops.Behavior.dailyTotals(
+      normalizeTs(StagedStream.staged(spark, stagedDir)), groupCols, valCol)
+    val drained = StagedStream.toMemory(daily, OutputMode.Complete(),
+        queryName, shufflePartitions, rocksdbState)
       .select(groupCols.map(col) :+ col("d") :+
         col("x").cast("double").as("x"): _*)
     graft.ops.Profile.ewmaHalf(drained, groupCols, "d", "x")
@@ -928,22 +784,13 @@ object EventStreams {
       prep: DataFrame => DataFrame = identity,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = prep(normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)))
+    val stream = prep(normalizeTs(StagedStream.staged(spark, stagedDir)))
     val counts = graft.ops.Profile.ksSideCounts(
       stream, groupCols, sideCol, valCol, sideA, sideB)
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = counts.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     graft.ops.Profile.ksFromCounts(
-      drainMemorySink(spark, queryName), groupCols)
+      StagedStream.toMemory(counts, OutputMode.Complete(), queryName,
+        shufflePartitions, rocksdbState),
+      groupCols)
   }
 
   // NOTE: these must be public — Catalyst's generated (de)serializer code
@@ -1045,18 +892,8 @@ object EventStreams {
       gapMinutes: Int = 30,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = sessionizeStateful(stream, gapMinutes).writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    StagedStream.toMemory(
+      sessionizeStateful(StagedStream.events(spark, eventsPath), gapMinutes),
+      OutputMode.Append(), queryName, shufflePartitions, rocksdbState)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.IncrementalAgg
 
@@ -30,40 +29,33 @@ object MaterializedAgg {
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
+    val stream = StagedStream.staged(spark, stagedDir)
     // written from the micro-batch thread, read from the caller thread after
-    // awaitTermination — synchronized explicitly rather than relying on the
+    // the query finishes — synchronized explicitly rather than relying on the
     // termination happens-before
     val stateLock = new Object
     var state: Option[DataFrame] = None
     // bounding partitions here shrinks the per-batch groups-sized shuffle
     // AND the localCheckpoint'ed state materialization (tasks per batch)
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState,
-        batchAdaptive) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-        .writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) => stateLock.synchronized {
-          val added = batch.toDF()
-          val next = state match {
-            case None =>
-              added.groupBy(groupCols.map(col): _*)
-                .agg(count(lit(1)).as(nCol),
-                  sum(col(valueCol).cast(s"decimal(27,$scale)"))
-                    .cast("double").as(sumCol))
-            case Some(st) =>
-              // append-only stream: no removals; an upstream CDC feed would
-              // route its delete/old-image rows through `removed` instead
-              val removed = spark.createDataFrame(
-                java.util.Collections.emptyList[Row](), added.schema)
-              IncrementalAgg.refresh(st, removed, added, groupCols, valueCol,
-                nCol, sumCol, scale)
-          }
-          state = Some(next.localCheckpoint(true))
-        }}
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
+        batchAdaptive) { (added, _) =>
+      stateLock.synchronized {
+        val next = state match {
+          case None =>
+            added.groupBy(groupCols.map(col): _*)
+              .agg(count(lit(1)).as(nCol),
+                sum(col(valueCol).cast(s"decimal(27,$scale)"))
+                  .cast("double").as(sumCol))
+          case Some(st) =>
+            // append-only stream: no removals; an upstream CDC feed would
+            // route its delete/old-image rows through `removed` instead
+            val removed = spark.createDataFrame(
+              java.util.Collections.emptyList[Row](), added.schema)
+            IncrementalAgg.refresh(st, removed, added, groupCols, valueCol,
+              nCol, sumCol, scale)
+        }
+        state = Some(next.localCheckpoint(true))
+      }
     }
     stateLock.synchronized(state).getOrElse(
       throw new IllegalStateException(s"no micro-batches arrived from $stagedDir"))

@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 import graft.ops.Expectations
@@ -65,14 +64,10 @@ object QualityStreams {
       quarantineDir: Option[String] = None,
       checkpointDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): GateResult = {
-    val schema = spark.read.parquet(stagedDir).schema
-    def sink(prefix: String): String = {
-      val d = Files.createTempDirectory(prefix)
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val passSink = passDir.getOrElse(sink("graft_gate_pass"))
-    val quarSink = quarantineDir.getOrElse(sink("graft_gate_quarantine"))
+    val stream = StagedStream.staged(spark, stagedDir)
+    val schema = stream.schema
+    val passSink = StagedStream.sinkOrTemp(passDir, "graft_gate_pass")
+    val quarSink = StagedStream.sinkOrTemp(quarantineDir, "graft_gate_quarantine")
     // caller-provided sinks may not exist yet (first run of a resumable
     // gate) — the read-back below requires the directory to be present
     Seq(passSink, quarSink).foreach(d =>
@@ -83,35 +78,22 @@ object QualityStreams {
     val perRule = rules.map(r =>
       count(when(!coalesce(r.predicate, lit(false)), 1)).as(r.name))
     // written from the micro-batch thread, read from the caller thread
-    // after awaitTermination (and legitimately readable mid-run) — lock
+    // after the query finishes (and legitimately readable mid-run) — lock
     // rather than rely on the termination happens-before
     val metricsLock = new Object
     val ruleCounts = scala.collection.mutable.Map.empty[String, Long]
     rules.foreach(r => ruleCounts(r.name) = 0L)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState,
-        batchAdaptive) {
-      val writer = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          val b = batch.persist()
-          try {
-            val (pass, quarantine) = Expectations.split(b.toDF(), rules)
-            pass.write.mode("append").parquet(passSink)
-            quarantine.write.mode("append").parquet(quarSink)
-            val m = b.agg(perRule.head, perRule.tail: _*).head()
-            metricsLock.synchronized {
-              rules.zipWithIndex.foreach { case (r, i) =>
-                ruleCounts(r.name) += m.getLong(i)
-              }
-            }
-          } finally b.unpersist()
+    StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
+        batchAdaptive, checkpointDir) { (b, _) =>
+      val (pass, quarantine) = Expectations.split(b, rules)
+      pass.write.mode("append").parquet(passSink)
+      quarantine.write.mode("append").parquet(quarSink)
+      val m = b.agg(perRule.head, perRule.tail: _*).head()
+      metricsLock.synchronized {
+        rules.zipWithIndex.foreach { case (r, i) =>
+          ruleCounts(r.name) += m.getLong(i)
         }
-        .trigger(Trigger.AvailableNow())
-      val q = checkpointDir
-        .fold(writer)(d => writer.option("checkpointLocation", d))
-        .start()
-      q.awaitTermination()
+      }
     }
     val quarSchema = StructType(schema.fields :+
       StructField("violations", ArrayType(StringType, containsNull = true)))
