@@ -3536,20 +3536,19 @@ $fin"""
       val model = graft.ext.NgramLm.fit(
         fanOut(s, docs.where(col("doc_id") <= mid), "doc_id", parts = 8),
         "text", maxBigrams = 500)
-      // stage the UPPER half as two deterministic micro-batches
-      val hiPath = {
-        val dir = java.nio.file.Files.createTempDirectory("graft_lm_hi")
-        dir.toFile.deleteOnExit()
-        docs.where(col("doc_id") > mid).write.mode("overwrite")
-          .parquet(s"$dir/hi")
-        s"$dir/hi"
-      }
-      val cut = mid + (mx - mid) / 2
-      val staged = CorpusStreams.stageIdSlices(s, hiPath, "doc_id",
-        cuts = Seq(cut))
-      CorpusStreams.lmScoreStreaming(s, staged, "doc_id", "text", model,
-          shufflePartitions = Some(8), batchAdaptive = Some(false))
-        .select("doc_id", "n_pairs", "n_hit", "sum_bi", "sum_uni")
+      // stage the UPPER half as two deterministic micro-batches; the copy
+      // is deleted once the stream has run (the result reads the sink)
+      val hiDir = java.nio.file.Files.createTempDirectory("graft_lm_hi")
+      val scored =
+        try {
+          docs.where(col("doc_id") > mid).write.parquet(s"$hiDir/hi")
+          val cut = mid + (mx - mid) / 2
+          val staged = CorpusStreams.stageIdSlices(s, s"$hiDir/hi", "doc_id",
+            cuts = Seq(cut))
+          CorpusStreams.lmScoreStreaming(s, staged, "doc_id", "text", model,
+            shufflePartitions = Some(8), batchAdaptive = Some(false))
+        } finally org.apache.commons.io.FileUtils.deleteDirectory(hiDir.toFile)
+      scored.select("doc_id", "n_pairs", "n_hit", "sum_bi", "sum_uni")
         .orderBy("doc_id")
     }),
 

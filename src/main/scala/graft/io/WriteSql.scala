@@ -4,6 +4,7 @@ import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Chunked DataFrame-to-database sink — the reference's `write.dbi.ffdf` /
   * `write.jdbc.ffdf` / `write.odbc.ffdf` (`R/ffsql.R:972-1010`, `:1060-1098`,
@@ -11,6 +12,10 @@ import org.apache.spark.sql.functions.col
   *
   * Reference semantics preserved:
   *  - non-empty input required (`stopifnot(nrow(x) > 0)`, `R/ffsql.R:980`).
+  *    The check and the write share one run of the input plan: the
+  *    probe takes one row from the plan's final stage, and the write reuses
+  *    the broadcasts and shuffle files of that run. Only the final stage
+  *    runs twice (for a plan without a shuffle, that is the source scan).
   *  - chunked inserts: `by` rows per round-trip (`bit::chunk`,
   *    `R/ffsql.R:991`) -> JDBC `batchsize`.
   *  - first-chunk `overwrite` then forced append for the rest
@@ -39,16 +44,22 @@ object WriteSql {
       requireNonEmpty: Boolean = true): Unit = {
     GraftDerbyDialect.ensureRegistered()
     require(!(overwrite && append), "overwrite and append are exclusive")
-    // Reference semantic `stopifnot(nrow(x) > 0)`. NOTE: this check runs the
-    // upstream plan once before the write runs it again — for an expensive
-    // pipeline either persist the input or pass requireNonEmpty = false.
-    if (requireNonEmpty)
-      require(df.head(1).nonEmpty, "nothing to write: input has zero rows")
+    // Reference semantic `stopifnot(nrow(x) > 0)`, checked before any DDL.
+    // The probe and the written frame share the plan's RDD, so the write
+    // skips the map stages (scans, shuffles, broadcasts) already run and
+    // pays only the final stage again. Nothing is cached.
+    val input =
+      if (!requireNonEmpty) df
+      else {
+        val (shared, empty) = ColumnBridge.executeOnce(df, "WriteSql")(_.isEmpty())
+        require(!empty, "nothing to write: input has zero rows")
+        shared
+      }
 
     val arranged = orderedBy match {
-      case Some(c) => df.orderBy(col(c)).coalesce(1)
-      case None if numPartitions > 0 => df.repartition(numPartitions)
-      case None => df
+      case Some(c) => input.orderBy(col(c)).coalesce(1)
+      case None if numPartitions > 0 => input.repartition(numPartitions)
+      case None => input
     }
     val mode =
       if (overwrite) SaveMode.Overwrite

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Lookup (equi) join with unique-key right side — the reference's
   * `matchmerge` (`R/matchmerge.R:95-182`) re-expressed as a Spark broadcast
@@ -68,10 +69,17 @@ object MatchMerge {
 
     if (checkDuplicates) {
       // Reference guard `R/matchmerge.R:149-160`: error when the right key
-      // has duplicates. One cheap agg job over the (bounded) right side.
-      val dup = yProj.groupBy(byY.map(bq): _*).count()
-        .where(col("count") > 1).limit(1).collect()
-      if (dup.nonEmpty)
+      // has duplicates. A broadcast y is bounded by contract, so its keys
+      // are collected and checked on the driver: one job, no shuffle. A
+      // large y (or a collated string key) keeps the grouped form, an
+      // aggregate shuffle plus a result job.
+      def grouped = yProj.groupBy(byY.map(bq): _*).count()
+        .where(col("count") > 1).limit(1).collect().nonEmpty
+      val dup =
+        if (broadcastRhs)
+          ColumnBridge.hasRepeatedRow(yProj.select(byY.map(bq): _*)).getOrElse(grouped)
+        else grouped
+      if (dup)
         throw new IllegalArgumentException(
           "Key of y contains doubles: matchmerge requires a unique right-side key")
     }

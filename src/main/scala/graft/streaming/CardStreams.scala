@@ -134,7 +134,7 @@ object CardStreams {
     var state: Option[DataFrame] = loaded
     var lastApplied: Long = loadedBatch
     StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
-        batchAdaptive, checkpointDir) { (batch, batchId) =>
+        batchAdaptive, checkpointDir, persistBatch = false) { (batch, batchId) =>
       stateLock.synchronized {
         // a replayed batch (crash between persist and offset commit)
         // is already inside the persisted counters: skip it

@@ -387,7 +387,7 @@ object CorpusStreams {
     val stream = StagedStream.staged(spark, stagedDir)
     val sink = StagedStream.sinkOrTemp(sinkDir, "graft_lm_scores")
     StagedStream.foreachStaged(stream, shufflePartitions,
-        adaptive = batchAdaptive) { (b, _) =>
+        adaptive = batchAdaptive, persistBatch = false) { (b, _) =>
       graft.ext.NgramLm.score(b, idCol, textCol, model)
         .write.mode("append").parquet(sink)
     }
@@ -458,7 +458,7 @@ object CorpusStreams {
     val stream = StagedStream.staged(spark, stagedDir)
     val sink = StagedStream.sinkOrTemp(sinkDir, "graft_novelty_scores")
     StagedStream.foreachStaged(stream, shufflePartitions,
-        adaptive = batchAdaptive) { (b, _) =>
+        adaptive = batchAdaptive, persistBatch = false) { (b, _) =>
       graft.ext.Decontaminate.noveltyScores(
           b, idCol, textCol, reference, refTextCol, n)
         .write.mode("append").parquet(sink)

@@ -38,7 +38,7 @@ object MaterializedAgg {
     // bounding partitions here shrinks the per-batch groups-sized shuffle
     // AND the localCheckpoint'ed state materialization (tasks per batch)
     StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
-        batchAdaptive) { (added, _) =>
+        batchAdaptive, persistBatch = false) { (added, _) =>
       stateLock.synchronized {
         val next = state match {
           case None =>

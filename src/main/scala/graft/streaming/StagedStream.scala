@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.StructType
   *  - [[toMemory]]: the monitors and stateful twins, whose result is the
   *    drained memory-sink table;
   *  - [[foreachStaged]]: the per-batch writers, whose body sees each
-  *    micro-batch persisted and released around it.
+  *    micro-batch persisted and released around it (or, for a body that
+  *    reads the batch once, not persisted at all).
   *
   * The reference's chunked fetch loop (`R/ffsql.R:276-333`) is this
   * micro-batch shape; keeping it in one place is what lets a failing
@@ -88,18 +89,26 @@ private[streaming] object StagedStream {
     * released however the body ends; a body that throws fails the query,
     * and the failure surfaces here from `awaitTermination`. Pass
     * `checkpointDir` to make the source progress restartable.
+    *
+    * `persistBatch = false` hands the body the batch as it is: for a body
+    * that reads the batch once, caching all of its columns costs more
+    * than that one pruned read.
     */
   def foreachStaged(stream: DataFrame, partitions: Option[Int],
       rocksdb: Boolean = false, adaptive: Option[Boolean] = None,
       checkpointDir: Option[String] = None,
-      queryName: Option[String] = None)(
+      queryName: Option[String] = None,
+      persistBatch: Boolean = true)(
       body: (DataFrame, Long) => Unit): Unit =
     EventStreams.withStatePartitions(stream.sparkSession, partitions,
         rocksdb, adaptive) {
       val w = stream.writeStream
         .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          val b = batch.persist()
-          try body(b.toDF(), batchId) finally b.unpersist()
+          if (!persistBatch) body(batch.toDF(), batchId)
+          else {
+            val b = batch.persist()
+            try body(b.toDF(), batchId) finally b.unpersist()
+          }
         }
         .trigger(Trigger.AvailableNow())
       val named = queryName.fold(w)(w.queryName)

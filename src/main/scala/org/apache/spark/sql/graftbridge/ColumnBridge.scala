@@ -1,8 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** `ExpressionUtils` is `private[sql]`; this bridge (placed under the
   * `org.apache.spark.sql` namespace, the standard extension-point pattern)
@@ -39,4 +44,48 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Runs `df`'s plan afresh (a new execution, as `df.write` would start)
+    * as one SQL execution named `name`, hands the resulting row RDD to
+    * `probe`, and returns a frame that reads that same RDD. The plan's
+    * broadcasts and (under AQE) shuffle stages run here; an action on the
+    * returned frame skips every map stage whose shuffle files already
+    * exist, so it pays only the final stage again. Nothing is cached.
+    * (`Dataset.localCheckpoint` builds its frame the same way, minus the
+    * block copy.)
+    */
+  def executeOnce[T](df: DataFrame, name: String)(
+      probe: RDD[InternalRow] => T): (DataFrame, T) = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val ds = classic.Dataset.ofRows(spark, df.asInstanceOf[classic.Dataset[_]].logicalPlan)
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      val rdd = qe.toRdd
+      val out = probe(rdd)
+      (ofRows(spark, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)), out)
+    }
+  }
+
+  /** Whether `df` holds two rows that `groupBy` on all of its columns would
+    * put in one group: nulls equal each other, -0.0 equals 0.0, NaN equals
+    * NaN, binary compares by content. One collect of `df` to the driver and
+    * no shuffle, so `df` must be small. `None` when a column type is not
+    * binary-stable (a non-binary collation), where byte equality of the
+    * rows is not grouping equality.
+    */
+  def hasRepeatedRow(df: DataFrame): Option[Boolean] = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    val out = qe.analyzed.output
+    if (!out.forall(a => UnsafeRowUtils.isBinaryStable(a.dataType))) None
+    else {
+      val rows = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+        qe.executedPlan.executeCollect()
+      }
+      val key = UnsafeProjection.create(out.zipWithIndex.map { case (a, i) =>
+        normalizeFloats(BoundReference(i, a.dataType, a.nullable))
+      })
+      val seen = new java.util.HashSet[UnsafeRow](rows.length * 2)
+      Some(rows.exists(r => !seen.add(key(r).copy())))
+    }
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,8 +7,7 @@ class ScaleBenchSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   test("buildScaled replicas are isomorphic: token counts, near-dup structure, vector geometry") {
-    val dir = Files.createTempDirectory("graft_scale_spec")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_scale_spec")
     val docs = Seq(
       (1L, "alpha beta gamma delta", "en", "s0", 22L),
       (2L, "alpha beta gamma delta", "en", "s0", 22L), // exact dup of 1
@@ -72,8 +69,7 @@ class ScaleBenchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("100x tier: two-letter tags past 26 replicas, rotate+negate isometry past dim") {
-    val dir = Files.createTempDirectory("graft_scale_100x_spec")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_scale_100x_spec")
     Seq((1L, "alpha beta", "en", "s0", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/src/documents.parquet")
@@ -107,8 +103,7 @@ class ScaleBenchSpec extends AnyFunSuite with SparkSpec {
 
     // 27 replicas (a 2-dim source can't host that rotation family; use a
     // separate docs-focused source with a wide embedding)
-    val dir2 = Files.createTempDirectory("graft_scale_27_spec")
-    dir2.toFile.deleteOnExit()
+    val dir2 = TempDirs.make("graft_scale_27_spec")
     Seq((1L, "alpha beta", "en", "s0", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir2/src/documents.parquet")
@@ -134,8 +129,7 @@ class ScaleBenchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("skewed build replaces the doc_id%10 slice with boilerplate, metadata consistent") {
-    val dir = Files.createTempDirectory("graft_scale_skew_spec")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_scale_skew_spec")
     val docs = (1L to 30L).map(id => (id, s"alpha$id beta$id gamma$id", "en", "s0", 30L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     docs.write.parquet(s"$dir/src/documents.parquet")

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class AllPairsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -217,7 +217,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("containment state round-trips through disk; param mismatch fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cstate").toString
+    val dir = TempDirs.make("graft_cstate").toString
     val standing = Seq((1L, "a b c d e f"), (2L, "p q r s t"))
       .toDF("doc_id", "text")
     val st = Dedup.containmentState(standing, "doc_id", "text", shingleK = 1)
@@ -285,7 +285,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     assert(refreshed.staleDocs == 0L, "drift past threshold must rebuild")
     assert(refreshed.dfreq.count() > st0.dfreq.count())
     // staleDocs persists through disk round-trips
-    val dir = java.nio.file.Files.createTempDirectory("graft_cstate_app").toString
+    val dir = TempDirs.make("graft_cstate_app").toString
     Dedup.saveContainmentState(appended, dir, Dedup.ContainmentParams(1))
     val loaded = Dedup.loadContainmentState(
       spark, dir, Dedup.ContainmentParams(1)).get
@@ -317,7 +317,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     assert(fast == brute, s"missing=${brute -- fast} extra=${fast -- brute}")
     assert(brute.nonEmpty, "fixture must exercise real matches")
     // disk round-trip: identical results; param mismatch fails loudly
-    val dir = java.nio.file.Files.createTempDirectory("graft_rstate").toString
+    val dir = TempDirs.make("graft_rstate").toString
     Dedup.saveResemblanceState(st, dir)
     val loaded = Dedup.loadResemblanceState(
       spark, dir, Dedup.ResemblanceParams(0.5, 1)).get
@@ -382,7 +382,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     assert(st2.staleDocs == 0L)
     assert(st2.dfreq.count() > st0.dfreq.count())
     // drift counter survives the disk round-trip
-    val dir = java.nio.file.Files.createTempDirectory("graft_rstate_app").toString
+    val dir = TempDirs.make("graft_rstate_app").toString
     Dedup.saveResemblanceState(st1, dir)
     assert(Dedup.loadResemblanceState(spark, dir,
       Dedup.ResemblanceParams(0.5, 1)).get.staleDocs == appended.size.toLong)
@@ -403,8 +403,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
       .orderBy("id_in", "id_host")
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(batch.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cprobe_in")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_cprobe_in")
     incoming.repartition(3).write.parquet(s"$dir/in") // 3 micro-batches
     val streamed = graft.streaming.CorpusStreams.containmentProbeStreaming(
         spark, s"$dir/in", "doc_id", "text", state,

@@ -1,11 +1,9 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -37,7 +35,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("save/load round trip: bit-identical models and codes, probe unchanged") {
-    val dir = Files.createTempDirectory("graft_ann_index_spec").toString
+    val dir = TempDirs.make("graft_ann_index_spec").toString
     val c = corpus(40)
     val q = corpus(5, idOffset = 1000L)
     val (coarse, pq) = models(c)
@@ -56,7 +54,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("mismatched params fail loudly; missing/torn state reads as absent") {
-    val dir = Files.createTempDirectory("graft_ann_index_mm").toString
+    val dir = TempDirs.make("graft_ann_index_mm").toString
     val c = corpus(40)
     val (coarse, pq) = models(c)
     val params = AnnIndex.Params(nCells = 4, m = 2, c = 4)
@@ -125,7 +123,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // save/load: ranges + codes round-trip exactly; append under frozen
     // ranges equals rebuild over the union (provenance invariance,
     // refine tier included)
-    val dir = Files.createTempDirectory("graft_ann_refine_spec").toString
+    val dir = TempDirs.make("graft_ann_refine_spec").toString
     AnnIndex.save(spark, st, dir)
     val loaded = AnnIndex.load(spark, dir, st.params)
       .getOrElse(fail("no refined state read back"))

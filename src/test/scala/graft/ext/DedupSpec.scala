@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class DedupSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -71,7 +71,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val hits = Dedup.jaccardProbe(incoming, st, "doc_id", "text")
       .select("id_in", "id_host").as[(Long, Long)].collect().toSet
     assert(hits.contains((10L, 1L)), s"routed probe must find the Han host: $hits")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rroute").toString
+    val dir = TempDirs.make("graft_rroute").toString
     Dedup.saveResemblanceState(st, dir)
     val loaded = Dedup.loadResemblanceState(spark, dir,
       Dedup.ResemblanceParams(0.5, 3, route)).get
@@ -87,7 +87,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // a routed containment state served to an UNROUTED expectation must
     // fail loudly at load (the gram sets would never intersect and every
     // duplicate would silently pass)
-    val cdir = java.nio.file.Files.createTempDirectory("graft_croute").toString
+    val cdir = TempDirs.make("graft_croute").toString
     Dedup.saveContainmentState(cst, cdir, Dedup.ContainmentParams(3, route))
     intercept[IllegalArgumentException] {
       Dedup.loadContainmentState(spark, cdir, Dedup.ContainmentParams(3))
@@ -135,7 +135,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val inline = Dedup.minhashDedupAgainst(incoming, corpus,
       "doc_id", "text", threshold = 0.5)
       .select("doc_id").as[Long].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_state").toString
+    val dir = TempDirs.make("graft_mh_state").toString
     val params = Dedup.MinhashParams(64, 16, 3)
     assert(Dedup.loadMinhashState(spark, dir, params).isEmpty, "no state yet -> None")
     Dedup.saveMinhashState(
@@ -461,7 +461,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // batch against an index containing its own windows removes all text
     val idxPrior = Dedup.exactSubstringWindows(slices(0), "doc_id", "text", k)
       .union(Dedup.exactSubstringWindows(slices(1), "doc_id", "text", k))
-    val dir = java.nio.file.Files.createTempDirectory("graft_subidx").toString
+    val dir = TempDirs.make("graft_subidx").toString
     Dedup.saveSubstringIndex(idxPrior, dir)
     intercept[IllegalArgumentException] {
       Dedup.loadSubstringIndex(spark, dir, k + 1)

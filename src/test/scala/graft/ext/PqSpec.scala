@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class PqSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -123,8 +123,7 @@ class PqSpec extends AnyFunSuite with SparkSpec {
       (i.toLong, (0 until 8).map(d => i * 0.37 + d * 1.13))
     }.toDF("vec_id", "embedding")
     val m = Pq.portableSeedCodebooks(emb, "vec_id", "embedding", m = 4, c = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_spec")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_pq_spec")
     val path = s"$dir/codebooks.txt"
     Pq.saveCodebooks(spark, m, path)
     val loaded = Pq.loadCodebooks(spark, path)

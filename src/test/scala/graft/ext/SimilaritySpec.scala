@@ -2,7 +2,7 @@ package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class SimilaritySpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -255,7 +255,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
   test("IVF model save/load round-trips bit-identically and searches identically") {
     val model = Ivf.train(clustered, "vec_id", "embedding", k = 4, iters = 2)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf")
+    val path = TempDirs.make("graft_ivf")
       .resolve("quantizer.txt").toString
     Ivf.saveModel(spark, model, path)
     val loaded = Ivf.loadModel(spark, path)

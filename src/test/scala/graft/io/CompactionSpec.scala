@@ -1,17 +1,15 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class CompactionSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private def fragmented(files: Int, rows: Int): String = {
-    val dir = Files.createTempDirectory("graft_compact_in").toString
+    val dir = TempDirs.make("graft_compact_in").toString
     spark.range(rows).select(col("id"),
         concat(lit("payload-"), col("id")).as("text"))
       .repartition(files).write.mode("overwrite").parquet(dir)
@@ -21,7 +19,7 @@ class CompactionSpec extends AnyFunSuite with SparkSpec {
   test("compaction reduces file count to ceil(bytes/target) and preserves content exactly") {
     val in = fragmented(files = 32, rows = 10000)
     assert(Compaction.dataFileCount(spark, in) == 32)
-    val out = Files.createTempDirectory("graft_compact_out").toString
+    val out = TempDirs.make("graft_compact_out").toString
     val total = Compaction.dataBytes(spark, in)
     val compacted = Compaction.compact(spark, in, out,
       targetFileBytes = (total + 3) / 4)
@@ -35,7 +33,7 @@ class CompactionSpec extends AnyFunSuite with SparkSpec {
 
   test("clusterBy range-clusters: per-file id ranges are disjoint") {
     val in = fragmented(files = 16, rows = 10000)
-    val out = Files.createTempDirectory("graft_compact_cl").toString
+    val out = TempDirs.make("graft_compact_cl").toString
     val total = Compaction.dataBytes(spark, in)
     Compaction.compact(spark, in, out, targetFileBytes = (total + 3) / 4,
       clusterBy = Seq("id"))
@@ -53,7 +51,7 @@ class CompactionSpec extends AnyFunSuite with SparkSpec {
 
   test("partitionBy keeps the Hive layout, targets files per partition, pruning survives") {
     // hot/cold skew: status A ~10x the bytes of B/C
-    val in = Files.createTempDirectory("graft_compact_part_in").toString
+    val in = TempDirs.make("graft_compact_part_in").toString
     spark.range(11000).select(col("id"),
         when(col("id") < 10000, "A").otherwise(when(col("id") < 10500, "B")
           .otherwise("C")).as("status"),
@@ -61,7 +59,7 @@ class CompactionSpec extends AnyFunSuite with SparkSpec {
       .repartition(16).write.partitionBy("status").mode("overwrite").parquet(in)
     // the fragmented input wrote ~16 files per partition value
     assert(Compaction.dataFileCount(spark, in) > 30)
-    val out = Files.createTempDirectory("graft_compact_part_out").toString
+    val out = TempDirs.make("graft_compact_part_out").toString
     val aBytes = Compaction.partitionBytes(spark, in)("status=A")
     // target = A/4: the hot partition should land ~4 files, cold ones 1 each
     val compacted = Compaction.compact(spark, in, out,
@@ -98,13 +96,13 @@ class CompactionSpec extends AnyFunSuite with SparkSpec {
     // duplicate keys and the broadcast left join would DUPLICATE every
     // data row in those partitions. The  separator keeps the
     // tuples apart; this pins row-exact output on exactly that shape.
-    val in = Files.createTempDirectory("graft_compact_mc_in").toString
+    val in = TempDirs.make("graft_compact_mc_in").toString
     spark.range(2000).select(col("id"),
         when(col("id") % 2 === 0, "ab").otherwise("a").as("k1"),
         when(col("id") % 2 === 0, "c").otherwise("bc").as("k2"),
         concat(lit("payload-"), col("id")).as("text"))
       .repartition(8).write.partitionBy("k1", "k2").mode("overwrite").parquet(in)
-    val out = Files.createTempDirectory("graft_compact_mc_out").toString
+    val out = TempDirs.make("graft_compact_mc_out").toString
     val compacted = Compaction.compact(spark, in, out,
       targetFileBytes = 1L << 30, partitionBy = Seq("k1", "k2"))
     assert(compacted.count() == 2000,
@@ -119,7 +117,7 @@ class CompactionSpec extends AnyFunSuite with SparkSpec {
 
   test("a dataset already below target compacts to one file") {
     val in = fragmented(files = 8, rows = 100)
-    val out = Files.createTempDirectory("graft_compact_one").toString
+    val out = TempDirs.make("graft_compact_one").toString
     Compaction.compact(spark, in, out, targetFileBytes = 1L << 30)
     assert(Compaction.dataFileCount(spark, out) == 1)
     assert(spark.read.parquet(out).count() == 100)

@@ -3,7 +3,9 @@ package graft.io
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import org.apache.spark.graftspec.JobLog
+
+import graft.{SparkSpec, TempDirs}
 
 /** JDBC source/sink semantics against embedded Derby (the in-container
   * stand-in for the reference's Oracle/MySQL/PostgreSQL/Hive/SQLite targets).
@@ -15,7 +17,7 @@ class ReadWriteSqlSpec extends AnyFunSuite with SparkSpec {
 
   System.setProperty("derby.system.home", "/tmp/graft_derby_test")
   private val url =
-    s"jdbc:derby:/tmp/graft_derby_test/db_${System.nanoTime()};create=true"
+    s"jdbc:derby:${TempDirs.make("graft_derby_db")}/db;create=true"
 
   // the reference fixture shape: a TEXT, b TEXT(date), c REAL (FIXTURES.md §1)
   private def fixture = {
@@ -88,6 +90,19 @@ class ReadWriteSqlSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException] {
       WriteSql(empty, url, "SHOULD_NOT_EXIST")
     }
+    // raised before any DDL: overwrite and append alike leave a table be
+    val five = fixture.limit(5)
+    WriteSql(five, url, "GUARDED", overwrite = true)
+    val msgs = Seq(
+      intercept[IllegalArgumentException] {
+        WriteSql(empty, url, "GUARDED", overwrite = true)
+      },
+      intercept[IllegalArgumentException] {
+        WriteSql(empty, url, "GUARDED", append = true)
+      }).map(_.getMessage)
+    assert(msgs.distinct == Seq("requirement failed: nothing to write: input has zero rows"))
+    val back = ReadSql(spark, url, "SELECT * FROM GUARDED")
+    assert(back.count() == 5 && back.except(five).count() == 0)
   }
 
   test("default save mode errors when the table exists; append appends") {
@@ -158,5 +173,47 @@ class ReadWriteSqlSpec extends AnyFunSuite with SparkSpec {
       numPartitions = 4)
     assert(df.count() == expected)
     assert(df.rdd.getNumPartitions == 4)
+  }
+
+  test("write over a window shuffle of a JDBC read scans the source once") {
+    import graft.ops.NaLocfPlusOne
+    WriteSql(fixture.withColumn("id", monotonically_increasing_id()), url,
+      "ONE_PASS_SRC", overwrite = true)
+    // the benchmark's shape: a partitioned JDBC read feeding a per-group
+    // window, so the probe and the write share one shuffle
+    val read = ReadSql(spark, url, "SELECT * FROM ONE_PASS_SRC",
+      partitionColumn = Some("\"id\""), lowerBound = 0L,
+      upperBound = 1L << 34, numPartitions = 4)
+    val filled = NaLocfPlusOne.byGroup(read, Seq("a"), "id", "c", "c_filled")
+    val (_, log) = JobLog.of(spark) {
+      WriteSql(filled, url, "ONE_PASS_OUT", overwrite = true)
+    }
+    assert(log.jdbcScans == 1, s"JDBC scan stages: ${log.stages.map(_.name)}")
+    assert(ReadSql(spark, url, "SELECT * FROM ONE_PASS_OUT").count() == 2860)
+  }
+
+  test("each write runs its input afresh: a changed source is seen") {
+    WriteSql(fixture.limit(10), url, "FRESH_SRC", overwrite = true)
+    // a shuffle over the JDBC read, whose files the write reuses
+    val counted = ReadSql(spark, url, "SELECT * FROM FRESH_SRC").groupBy("a").count()
+    WriteSql(counted, url, "FRESH_OUT", overwrite = true)
+    WriteSql(fixture.limit(5), url, "FRESH_SRC", append = true)
+    WriteSql(counted, url, "FRESH_OUT", overwrite = true)
+    val back = ReadSql(spark, url, "SELECT * FROM FRESH_OUT")
+    assert(back.agg(sum(col("count"))).head().getLong(0) == 15)
+  }
+
+  test("requireNonEmpty = false runs no probe job") {
+    val df = spark.range(0, 8, 1, 2).select(col("id").as("k"),
+      concat(lit("v"), col("id")).as("v"))
+    val (_, unchecked) = JobLog.of(spark) {
+      WriteSql(df, url, "NO_PROBE", overwrite = true, requireNonEmpty = false)
+    }
+    val (_, checked) = JobLog.of(spark) {
+      WriteSql(df, url, "NO_PROBE", overwrite = true)
+    }
+    assert(unchecked.jobs == 1, "the insert job alone")
+    assert(checked.jobs == 2, "the emptiness probe, then the insert")
+    assert(ReadSql(spark, url, "SELECT * FROM NO_PROBE").count() == 8)
   }
 }

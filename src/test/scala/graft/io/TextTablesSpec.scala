@@ -1,10 +1,8 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class TextTablesSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -22,7 +20,7 @@ class TextTablesSpec extends AnyFunSuite with SparkSpec {
   ).toDF("id", "text")
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    TempDirs.make(prefix).toString
 
   test("CSV round trip is lossless including quotes, newlines, unicode AND null vs empty") {
     val back = TextTables.csvRoundTrip(fixture, tmp("graft_csv_spec"))

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class BloomJoinSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -40,7 +40,7 @@ class BloomJoinSpec extends AnyFunSuite with SparkSpec {
   test("the probe filter sits below the join in the physical plan") {
     // a file-backed input: over a LocalRelation the optimizer pre-evaluates
     // the probe away (ConvertToLocalRelation), which hides it from the plan
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_plan").toString
+    val dir = TempDirs.make("graft_bloom_plan").toString
     (1L to 100L).map(i => (i, i * 2)).toDF("k", "v")
       .write.mode("overwrite").parquet(dir)
     val big = spark.read.parquet(dir)

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.graftspec.JobLog
+
 import graft.SparkSpec
 
 /** Reference fixture from `R/matchmerge.R:57-68` (FIXTURES.md §2):
@@ -136,6 +138,67 @@ class MatchMergeSpec extends AnyFunSuite with SparkSpec {
       val l = Seq.fill(40)((rng.nextInt(10), rng.nextInt(100))).toDF("k", "v")
       val r = (0 until 10).map(k => (k, s"r$k")).toDF("k2", "w")
       assert(MatchMerge(l, r, Seq("k"), Seq("k2"), allX = true).count() == 40)
+    }
+  }
+
+  test("key check raises exactly when groupBy on y's keys finds a count > 1") {
+    import org.apache.spark.sql.DataFrame
+    val weirdNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
+    // (case, y, key columns, pasteCompat, expected duplicate)
+    val cases: Seq[(String, DataFrame, Seq[String], Boolean, Boolean)] = Seq(
+      ("unique ints", Seq((1, "a"), (2, "b")).toDF("k", "w"), Seq("k"), false, false),
+      ("repeated int", Seq((1, "a"), (1, "b")).toDF("k", "w"), Seq("k"), false, true),
+      ("two null keys", Seq((Option.empty[Int], "a"), (None, "b")).toDF("k", "w"),
+        Seq("k"), false, true),
+      ("null and a value", Seq((Option.empty[Int], "a"), (Some(0), "b")).toDF("k", "w"),
+        Seq("k"), false, false),
+      ("-0.0 and 0.0", Seq((-0.0, "a"), (0.0, "b")).toDF("k", "w"), Seq("k"), false, true),
+      ("NaN and NaN", Seq((Double.NaN, "a"), (weirdNaN, "b")).toDF("k", "w"),
+        Seq("k"), false, true),
+      ("NaN and 0.0", Seq((Double.NaN, "a"), (0.0, "b")).toDF("k", "w"),
+        Seq("k"), false, false),
+      ("-0.0 inside a struct", Seq((-0.0, "a"), (0.0, "b")).toDF("d", "w")
+        .select(struct(col("d")).as("k"), col("w")), Seq("k"), false, true),
+      ("equal binary keys", Seq((Array[Byte](1, 2), "a"), (Array[Byte](1, 2), "b"))
+        .toDF("k", "w"), Seq("k"), false, true),
+      ("distinct binary keys", Seq((Array[Byte](1, 2), "a"), (Array[Byte](2, 1), "b"))
+        .toDF("k", "w"), Seq("k"), false, false),
+      ("multi-column, one column differs", Seq((1, "x", "a"), (1, "y", "b"))
+        .toDF("k1", "k2", "w"), Seq("k1", "k2"), false, false),
+      ("multi-column repeat with a null", Seq((1, null: String, "a"), (1, null, "b"))
+        .toDF("k1", "k2", "w"), Seq("k1", "k2"), false, true),
+      ("pasteCompat checks the columns, not the pasted key",
+        Seq(("a b", "c", "w1"), ("a", "b c", "w2")).toDF("k1", "k2", "w"),
+        Seq("k1", "k2"), true, false),
+      ("pasteCompat repeat", Seq(("a", "b", "w1"), ("a", "b", "w2"))
+        .toDF("k1", "k2", "w"), Seq("k1", "k2"), true, true),
+      ("case-folding collation", Seq(("a", "w1"), ("A", "w2")).toDF("s", "w")
+        .select(collate(col("s"), "UTF8_LCASE").as("k"), col("w")), Seq("k"), false, true))
+    cases.foreach { case (name, y, keys, paste, expected) =>
+      val grouped = y.groupBy(keys.map(col): _*).count().where(col("count") > 1)
+      assert(!grouped.isEmpty == expected, s"$name: the table's expectation is wrong")
+      val x = y.select(keys.map(col): _*)
+      Seq(true, false).foreach { bc =>
+        val raised =
+          try {
+            MatchMerge(x, y, keys, keys, pasteCompat = paste, broadcastRhs = bc)
+            false
+          } catch { case _: IllegalArgumentException => true }
+        assert(raised == expected, s"$name (broadcastRhs = $bc)")
+      }
+    }
+  }
+
+  test("key check on a bounded y is one Spark job at call time") {
+    val y = right.localCheckpoint()
+    val (out, log) = JobLog.of(spark) {
+      MatchMerge(left, y, Seq("idlhs"), Seq("idrhs"), allX = true)
+    }
+    assert(log.jobs == 1)
+    assert(log.stages.size == 1, "a shuffle-free collect")
+    assert(out.count() == 7)
+    intercept[IllegalArgumentException] {
+      MatchMerge(left, y.union(y).localCheckpoint(), Seq("idlhs"), Seq("idrhs"))
     }
   }
 }

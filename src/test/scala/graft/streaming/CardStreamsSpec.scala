@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.ext.Report
 
 class CardStreamsSpec extends AnyFunSuite with SparkSpec {
@@ -19,8 +19,7 @@ class CardStreamsSpec extends AnyFunSuite with SparkSpec {
   ).toDF("doc_id", "text", "source")
 
   private def staged(cuts: Seq[Long]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_card_fix")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_card_fix")
     fixture.write.mode("overwrite").parquet(s"$dir/src")
     CorpusStreams.stageIdSlices(spark, s"$dir/src", "doc_id", cuts)
   }
@@ -52,8 +51,8 @@ class CardStreamsSpec extends AnyFunSuite with SparkSpec {
       .select("source", "n_docs", "sum_tokens", "n_quality_pass")
       .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
     val stagedDir = staged(Seq(3L)) // slice 0: ids 1-2 (a); slice 1: ids 3-5 (b)
-    val ckpt = JFiles.createTempDirectory("graft_card_ckpt").toString
-    val parked = JFiles.createTempDirectory("graft_card_parked")
+    val ckpt = TempDirs.make("graft_card_ckpt").toString
+    val parked = TempDirs.make("graft_card_parked")
     val slice1 = Paths.get(stagedDir, "batch_0001.parquet")
     JFiles.move(slice1, parked.resolve("batch_0001.parquet"))
     val run1 = CardStreams.streamingDataCard(spark, stagedDir,
@@ -89,8 +88,8 @@ class CardStreamsSpec extends AnyFunSuite with SparkSpec {
       .select("source", "n_docs", "sum_tokens", "n_quality_pass")
       .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
     val stagedDir = staged(Seq(3L))
-    val ckpt = JFiles.createTempDirectory("graft_card_ckpt2").toString
-    val parked = JFiles.createTempDirectory("graft_card_parked2")
+    val ckpt = TempDirs.make("graft_card_ckpt2").toString
+    val parked = TempDirs.make("graft_card_parked2")
     val slice1 = Paths.get(stagedDir, "batch_0001.parquet")
     JFiles.move(slice1, parked.resolve("batch_0001.parquet"))
     val run1 = CardStreams.streamingDataCard(spark, stagedDir,

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.ext.Dedup
 
 class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
@@ -20,8 +20,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
   private val docC = docB.replace("victor", "different")
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cs_spec")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_cs_spec")
     val p = s"$dir/docs"
     rows.toDF("doc_id", "text").coalesce(1).write.parquet(p)
     p
@@ -86,8 +85,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
     val oneShot = Dedup.paragraphDedup(rows.toDF("doc_id", "text"),
         "doc_id", "text")
       .orderBy("doc_id").as[(Long, String, Long, Long)].collect().toSeq
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_seg_state").toString
+    val stateDir = TempDirs.make("graft_seg_state").toString
     // run 1 ingests {1,2}; run 2 is a NEW invocation ingesting {3} that
     // must see run 1's footer only through the persisted state
     val run1 = CorpusStreams.paragraphDedupStreaming(spark,
@@ -126,8 +124,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
     val batch = AnnIndex.probe(idx, queries.toDF("vec_id", "embedding"),
         "embedding", "vec_id", k = 3, nProbe = 2)
       .as[(Long, Long, Double, Int)].collect().toSet
-    val qDir = java.nio.file.Files.createTempDirectory("graft_cs_ann")
-    qDir.toFile.deleteOnExit()
+    val qDir = TempDirs.make("graft_cs_ann")
     val qPath = s"$qDir/queries"
     queries.toDF("vec_id", "embedding").coalesce(1).write.parquet(qPath)
     val staged = CorpusStreams.stageIdSlices(spark, qPath, "vec_id",
@@ -172,7 +169,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
     val oneShot = Dedup.minhashDedup(rows.toDF("doc_id", "text"),
       "doc_id", "text", threshold = 0.7)
       .select("doc_id").as[Long].collect().toSet
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_cs_state").toString
+    val stateDir = TempDirs.make("graft_cs_state").toString
     // run 1 ingests {1,2}; run 2 is a NEW invocation (fresh staged dir)
     // ingesting {3,4} — it must see run 1's corpus only through stateDir.
     // The chain (3 dups 2, not 1) proves the reloaded index carries ALL
@@ -271,8 +268,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
     val batch = Profile.aucExact(scored, Seq("grp"), "score", $"y" === 1)
       .orderBy("grp")
       .as[(String, Long, Long, Long, Option[Double])].collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_auc_spec")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_auc_spec")
     df.coalesce(1).write.parquet(s"$dir/docs")
     for (cuts <- Seq(Seq(9L), Seq(6L, 17L))) {
       val staged = CorpusStreams.stageIdSlices(spark, s"$dir/docs", "doc_id", cuts)
@@ -342,8 +338,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
     // corpus: HLL registers (groups x 2^p) and the one-row MG summary
     val hll = (1L to 40L).map(i => (i, s"g${i % 3}", s"u$i"))
       .toDF("doc_id", "grp", "uid")
-    val hdir = java.nio.file.Files.createTempDirectory("graft_audit_hll")
-    hdir.toFile.deleteOnExit()
+    val hdir = TempDirs.make("graft_audit_hll")
     hll.coalesce(1).write.parquet(s"$hdir/t")
     val hstaged = CorpusStreams.stageIdSlices(spark, s"$hdir/t", "doc_id",
       Seq(20L))
@@ -366,8 +361,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
     // store-reported positive number under BOTH providers
     val docs = (1L to 40L).map(i => (i, s"g${i % 3}", s"u$i"))
       .toDF("doc_id", "grp", "uid")
-    val dir = java.nio.file.Files.createTempDirectory("graft_audit_engine")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_audit_engine")
     docs.coalesce(1).write.parquet(s"$dir/t")
     val staged = CorpusStreams.stageIdSlices(spark, s"$dir/t", "doc_id",
       Seq(20L))

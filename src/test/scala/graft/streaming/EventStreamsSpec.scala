@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class EventStreamsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -36,7 +36,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     // state (append-mode semantics) — compare only the closed ones.
     // batches must respect per-user event-time order (operator contract);
     // coalesce(1) keeps each batch a single file.
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
+    val dir = TempDirs.make("graft_sess").toString
     events.where($"event_id".isin(1, 2, 4)).coalesce(1).write.parquet(s"$dir/b1")
 
     val schema = events.schema
@@ -61,7 +61,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
   test("stateful streaming transitions splice sequences across micro-batches") {
     // split MID-user-sequence: user 1's click->view pair is in b1, its
     // view->click pair crosses the batch boundary (the carried state path)
-    val dir = java.nio.file.Files.createTempDirectory("graft_trans").toString
+    val dir = TempDirs.make("graft_trans").toString
     events.where($"event_id".isin(1, 2, 4)).coalesce(1).write.parquet(s"$dir/b1")
     val stream = spark.readStream.schema(events.schema).parquet(s"$dir/b*/")
     val q = EventStreams.transitionsStateful(stream)
@@ -85,7 +85,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     // click -> view funnel: user 1 completes it ACROSS the batch split
     // (click in b1, view in b2 — the carried-bitmap path); user 2
     // completes within b1
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString
+    val dir = TempDirs.make("graft_funnel").toString
     events.where($"event_id".isin(1, 4, 5)).coalesce(1).write.parquet(s"$dir/b1")
     val stream = spark.readStream.schema(events.schema).parquet(s"$dir/b*/")
     val q = EventStreams.funnelStateful(stream, Seq("click", "view"))
@@ -107,7 +107,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
   test("stateful streaming rolling-active dedups (user, window) across batches") {
     // user 1 active day X in BOTH batches: the carried seen-set must not
     // double count its windows; day X+2 adds only the new windows
-    val dir = java.nio.file.Files.createTempDirectory("graft_wau").toString
+    val dir = TempDirs.make("graft_wau").toString
     events.where($"event_id".isin(1, 2, 4)).coalesce(1).write.parquet(s"$dir/b1")
     val stream = spark.readStream.schema(events.schema).parquet(s"$dir/b*/")
     val q = EventStreams.rollingActiveStateful(stream, windowDays = 3)
@@ -129,7 +129,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     // user 1's minute-50 event arrives in b1, its minute-0/5 events in b2 —
     // a violated arrival-order contract must THROW (ADVICE r10), not emit
     // silently wrong pairs that diverge from the batch oracle
-    val dir = java.nio.file.Files.createTempDirectory("graft_trans_ooo").toString
+    val dir = TempDirs.make("graft_trans_ooo").toString
     events.where($"event_id".isin(3, 4)).coalesce(1).write.parquet(s"$dir/b1")
     val stream = spark.readStream.schema(events.schema).parquet(s"$dir/b*/")
     val q = EventStreams.transitionsStateful(stream)
@@ -156,7 +156,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     // them (the documented bounded-exactness trade); with a negative
     // horizon nothing is ever evicted and the replay dedups exactly.
     def run(horizon: Int, tag: String): Map[Long, Long] = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_wau_$tag").toString
+      val dir = TempDirs.make(s"graft_wau_$tag").toString
       val far = Seq((7L, new Timestamp(1700000000000L + 40L * 86400000L), 1L, "click", 9.0))
         .toDF("event_id", "ts", "user_id", "event_type", "value")
       events.coalesce(1).write.parquet(s"$dir/b1")
@@ -189,7 +189,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("watermark drops late data in streaming windowed aggregation") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_late").toString
+    val dir = TempDirs.make("graft_late").toString
     // batch 1: events up to minute 200
     events.where($"event_id" =!= 4).coalesce(1).write.parquet(s"$dir/b1")
     val stream = spark.readStream.schema(events.schema).parquet(s"$dir/b*/")
@@ -346,7 +346,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streamingDedup survivors = distinct source rows (doubled stream)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sd").toString
+    val dir = TempDirs.make("graft_sd").toString
     events.coalesce(1).write.parquet(s"$dir/src")
     val out = EventStreams.streamingDedup(spark, s"$dir/src", "sd_test",
       keys = Seq("event_id"))
@@ -356,7 +356,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sessionizeStatefulStreaming emits all but each user's final session") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssd").toString
+    val dir = TempDirs.make("graft_ssd").toString
     events.coalesce(1).write.parquet(s"$dir/src")
     val closed = EventStreams.sessionizeStatefulStreaming(
       spark, s"$dir/src", "sss_test")

@@ -3,13 +3,13 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class MaterializedAggSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private def writeFixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_matagg").toString
+    val dir = TempDirs.make("graft_matagg").toString
     (1 to 200).map(i => (i.toLong, s"g${i % 5}", i * 1.25))
       .toDF("id", "g", "v")
       .write.mode("overwrite").parquet(dir)

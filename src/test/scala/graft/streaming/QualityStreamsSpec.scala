@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.ops.Expectations
 import graft.ops.Expectations.Rule
 
@@ -24,8 +24,7 @@ class QualityStreamsSpec extends AnyFunSuite with SparkSpec {
     Rule("type_ok", col("typ").isin("click", "view")))
 
   private def staged(cuts: Seq[Long]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gate_fix")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_gate_fix")
     fixture.write.mode("overwrite").parquet(s"$dir/src")
     CorpusStreams.stageIdSlices(spark, s"$dir/src", "id", cuts)
   }
@@ -56,8 +55,7 @@ class QualityStreamsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("checkpointed gate resumes: only newly-arrived files process, sinks don't duplicate") {
-    val base = java.nio.file.Files.createTempDirectory("graft_gate_resume")
-    base.toFile.deleteOnExit()
+    val base = TempDirs.make("graft_gate_resume")
     val staged = base.resolve("staged"); java.nio.file.Files.createDirectories(staged)
     val pass = base.resolve("pass").toString
     val quar = base.resolve("quar").toString
@@ -94,8 +92,7 @@ class QualityStreamsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("an all-clean stream yields a well-typed empty quarantine side") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gate_clean")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.make("graft_gate_clean")
     fixture.where(col("id") === 1L || col("id") === 5L)
       .write.mode("overwrite").parquet(s"$dir/src")
     val stagedDir = CorpusStreams.stageIdSlices(spark, s"$dir/src", "id", Seq(3L))
