@@ -4,11 +4,12 @@ package graft
   * query id to the public operator it exercises, the operator's
   * definition site, and a one-line purpose (r14 verdict #6).
   *
-  * The index is GENERATED from `SparkEntry.scala` itself (the query
-  * blocks' leading comments and first public-operator call) plus a
-  * `def`-site scan of `src/main` — so it cannot drift from the code: the
-  * golden spec re-renders it and fails on any difference, and every
-  * `SparkEntry.queries` id must appear or the render itself fails.
+  * The ids and the file each query is declared in come from
+  * [[graft.queries.Registry]]; each body (its leading comments and first
+  * public-operator call) is read from that file, and definition sites
+  * from a `def`-site scan of `src/main`. So the index cannot drift from
+  * the code: the golden spec re-renders it and fails on any difference,
+  * and a registry id whose body cannot be found fails the render itself.
   *
   * Usage: `runMain graft.OperatorIndex` (writes `OPERATORS.md` at the
   * repo root; pass an argument to write elsewhere).
@@ -18,8 +19,10 @@ object OperatorIndex {
   final case class Entry(
       query: String, operator: String, where: String, purpose: String)
 
-  private val entryStart =
-    """^\s*"(q\w+)" -> \(\(s, d\) =>( \{)?\s*$""".r
+  // a case's body runs from the line after `Case("<id>", (s, d) =>` up
+  // to the line that starts its `oracle =` argument
+  private val caseStart = """^\s*Case\("(q\w+)", \(s, d\) =>( \{)?\s*$""".r
+  private val oracleArg = """^\s*(\}, )?oracle = .*$"""
   // the first public operator invocation inside a query body: an
   // object (or qualified object) dot lower-case method call. graft's
   // function bags `text`/`vectors` are lower-case objects — matched by
@@ -64,7 +67,7 @@ object OperatorIndex {
 
   /** `file:line` of `def <method>` under src/main (first hit, searched
     * with the object's file as a tie-break); the composition rows point
-    * at SparkEntry itself.
+    * at the file that declares the query.
     */
   private def defSites(srcRoot: java.io.File): Map[String, Seq[(String, Int)]] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -82,34 +85,23 @@ object OperatorIndex {
     }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
   }
 
-  /** Parse the query blocks of SparkEntry.scala into index entries. */
-  def entries(sparkEntrySource: Seq[String], srcRoot: java.io.File): Seq[Entry] = {
-    val sites = defSites(srcRoot)
-    val blocks = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[String])]
-    var i = 0
-    while (i < sparkEntrySource.length) {
-      sparkEntrySource(i) match {
-        case entryStart(q, brace) =>
-          // brace-form bodies end at the dedented `}),`; expression-form
-          // bodies (no brace) end at their first `)),` line
-          val rest = sparkEntrySource.drop(i + 1)
-          val body =
-            if (brace != null)
-              rest.takeWhile(l => !l.matches("""^    \}\),?\s*$"""))
-            else {
-              val upto = rest.indexWhere(_.trim.endsWith(")),"))
-              rest.take(if (upto < 0) 0 else upto + 1)
-            }
-          blocks += ((q, body.toSeq))
-          i += body.length
-        case _ =>
-      }
-      i += 1
+  /** The body of case `id` in `source`, the lines of the file declaring it. */
+  private def bodyOf(id: String, file: String, source: Seq[String]): Seq[String] = {
+    val start = source.indexWhere {
+      case caseStart(q, _) => q == id
+      case _ => false
     }
-    blocks.toSeq.map { case (q, body) =>
+    require(start >= 0, s"query $id is not declared in $file")
+    source.drop(start + 1).takeWhile(!_.matches(oracleArg))
+  }
+
+  /** Index entries for `(id, declaring file, body)` triples. */
+  def entries(bodies: Seq[(String, String, Seq[String])], srcRoot: java.io.File): Seq[Entry] = {
+    val sites = defSites(srcRoot)
+    bodies.map { case (q, file, body) =>
       val op = operatorOf(body)
       val where = op match {
-        case "DataFrame/SQL composition" => "src/main/scala/graft/SparkEntry.scala"
+        case "DataFrame/SQL composition" => file
         case o =>
           val m = o.split('.').last
           val hits = sites.getOrElse(m, Nil)
@@ -122,16 +114,13 @@ object OperatorIndex {
             (if (objFile.exists(of =>
               f.toLowerCase.endsWith(s"/$of.scala"))) 0 else 1, f)
           }.headOption.map { case (f, l) => s"$f:$l" }
-            .getOrElse("src/main/scala/graft/SparkEntry.scala")
+            .getOrElse(file)
       }
       Entry(q, op, where, purposeOf(body))
     }.sortBy(e => (e.query.drop(1).takeWhile(_.isDigit).toInt, e.query))
   }
 
-  def render(es: Seq[Entry], declared: Set[String]): String = {
-    val missing = declared -- es.map(_.query).toSet
-    require(missing.isEmpty,
-      s"OPERATORS.md would miss declared queries: ${missing.toSeq.sorted.mkString(", ")}")
+  def render(es: Seq[Entry]): String = {
     val sb = new StringBuilder
     sb ++= "# Operator index\n\n"
     sb ++= "GENERATED by `runMain graft.OperatorIndex` — do not edit by hand\n"
@@ -154,11 +143,14 @@ object OperatorIndex {
   }
 
   def generate(repoRoot: String): String = {
-    val f = scala.io.Source.fromFile(
-      s"$repoRoot/src/main/scala/graft/SparkEntry.scala", "UTF-8")
-    val src = try f.getLines().toSeq finally f.close()
-    render(entries(src, new java.io.File(s"$repoRoot/src/main/scala")),
-      SparkEntry.queries.keySet)
+    val bodies = graft.queries.Registry.families.flatMap { family =>
+      val file = "src/main/scala/graft/queries/" +
+        family.getClass.getSimpleName.stripSuffix("$") + ".scala"
+      val f = scala.io.Source.fromFile(s"$repoRoot/$file", "UTF-8")
+      val source = try f.getLines().toSeq finally f.close()
+      family.cases.map(c => (c.id, file, bodyOf(c.id, file, source)))
+    }
+    render(entries(bodies, new java.io.File(s"$repoRoot/src/main/scala")))
   }
 
   def main(args: Array[String]): Unit = {

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.SimilarityQueries
+
 /** Scaling-curve harness (dev tooling, like Verify/Bench): measure the
   * heaviest dedup / graph / pipeline operators at sf0.1 and at a
   * synthetic 10x corpus ("sf1"), so sub-quadratic growth is a
@@ -330,10 +332,11 @@ object ScaleBench {
     val t0 = System.nanoTime()
     val df = name match {
       case "q310_hybrid_rrf" if tag.nonEmpty =>
-        SparkEntry.hybridRrf(spark, dir, SparkEntry.bm25QueriesSuffixed(tag))
+        SimilarityQueries.hybridRrf(spark, dir,
+          SimilarityQueries.bm25QueriesSuffixed(tag))
       case "q311_hybrid_indexed" if tag.nonEmpty =>
-        SparkEntry.hybridIndexed(spark, dir,
-          SparkEntry.bm25QueriesSuffixed(tag))
+        SimilarityQueries.hybridIndexed(spark, dir,
+          SimilarityQueries.bm25QueriesSuffixed(tag))
       case _ => SparkEntry.queries(name)(spark, dir)
     }
     df.write.format("noop").mode("overwrite").save()

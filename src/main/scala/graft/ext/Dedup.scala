@@ -1710,7 +1710,7 @@ object Dedup {
     * Spark job): above [[probeBroadcastBudget]] the frame loads as-is —
     * a corpus-sized state is already many splits, and the repartition
     * would be a pointless corpus shuffle. Width ≈ one cached partition
-    * per 2 MB of file bytes (compressed parquet expands ~2-4x in cache;
+    * per 64 KB of file bytes (compressed parquet expands ~2-4x in cache;
     * the verify kernels are CPU-dense per byte), capped at the session
     * width so a streamed probe's per-batch task count stays bounded.
     */
@@ -1722,7 +1722,7 @@ object Dedup {
         val p = new org.apache.hadoop.fs.Path(path)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getContentSummary(p).getLength
-      } catch { case _: Throwable => Long.MaxValue }
+      } catch { case _: java.io.IOException => Long.MaxValue }
     if (bytes > probeBroadcastBudget(spark)) df
     else {
       val w = math.min(sessionWidth(spark).toLong,

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.SimilarityQueries
+
 class ScaleBenchSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
@@ -172,16 +174,16 @@ class ScaleBenchSpec extends AnyFunSuite with SparkSpec {
     // Java-replaceAll vs Spark-regexp_replace semantics, which is what
     // this locks. A drift here means scale rows quietly time an empty
     // retrieval pipeline again (the round-18 review finding).
-    val qs = SparkEntry.bm25QueriesSuffixed("")
+    val qs = SimilarityQueries.bm25QueriesSuffixed("")
     val viaSpark = qs.map(_._2).toDF("qtext")
       .select(regexp_replace(col("qtext"), ScaleBench.TokenPattern, "$1a"))
       .as[String].collect().toSeq
-    assert(SparkEntry.bm25QueriesSuffixed("a").map(_._2) == viaSpark)
-    assert(SparkEntry.bm25QueriesSuffixed("a").map(_._2) != qs.map(_._2),
+    assert(SimilarityQueries.bm25QueriesSuffixed("a").map(_._2) == viaSpark)
+    assert(SimilarityQueries.bm25QueriesSuffixed("a").map(_._2) != qs.map(_._2),
       "suffixing must actually change the query text")
     // and the suffixed terms must actually hit a suffixed corpus: every
     // token ends with the tag
-    assert(SparkEntry.bm25QueriesSuffixed("aa").map(_._2)
+    assert(SimilarityQueries.bm25QueriesSuffixed("aa").map(_._2)
       .forall(_.split(" ").forall(_.endsWith("aa"))))
     // the shared tag rule: single letters to 26 replicas, uniform
     // two-letter tags above (same-length = isomorphic token stats)

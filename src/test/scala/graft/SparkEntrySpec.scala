@@ -8,11 +8,6 @@ class SparkEntrySpec extends AnyFunSuite with SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
-  }
-
   test("all queries run and are non-empty on sf0.001") {
     val dir = "/root/testdata/sf0.001"
     // cheap structural smoke for the non-oracled queries (oracled ones are
