@@ -24,14 +24,16 @@ object OperatorIndex {
   private val caseStart = """^\s*Case\("(q\w+)", \(s, d\) =>( \{)?\s*$""".r
   private val oracleArg = """^\s*(\}, )?oracle = .*$"""
   // the first public operator invocation inside a query body: an
-  // object (or qualified object) dot lower-case method call. graft's
+  // object (or qualified object) dot lower-case method call, or an
+  // object called through its `apply` (`MatchMerge(...)`). graft's
   // function bags `text`/`vectors` are lower-case objects — matched by
   // the qualified alternative.
   private val opCall =
     ("""(?:graft\.functions\.|\b)(text|vectors)\.(\w+)\(|""" +
       // (?<![\w.]) left boundary: without it "sameLabel.groupBy(" parses
       // as a phantom operator "Label.groupBy" (round-17 review finding)
-      """(?<![\w.])((?:graft\.)?(?:[a-z][a-z0-9]*\.)*[A-Z][A-Za-z0-9]*)\.([a-z]\w*)\(""").r
+      """(?<![\w.])((?:graft\.)?(?:[a-z][a-z0-9]*\.)*[A-Z][A-Za-z0-9]*)\.([a-z]\w*)\(|""" +
+      """(?<![\w.])((?:graft\.)?(?:[a-z][a-z0-9]*\.)*[A-Z][A-Za-z0-9]*)\(""").r
 
   /** Strip a query block's leading `//` comment run into one purpose
     * line (first sentence, capped).
@@ -48,7 +50,11 @@ object OperatorIndex {
     (if (t.length > 160) t.take(157) + "..." else t).capitalize
   }
 
-  private def operatorOf(body: Seq[String]): String = {
+  /** `appliers`: the objects whose own file under src/main defines an
+    * `apply`, so `Obj(` is an operator call and not a constructor or a
+    * collection literal.
+    */
+  private def operatorOf(body: Seq[String], appliers: Set[String]): String = {
     val noComments = body.map { l =>
       val i = l.indexOf("//")
       if (i >= 0) l.take(i) else l
@@ -59,9 +65,11 @@ object OperatorIndex {
       "String", "File", "Files")
     noComments.iterator.flatMap(opCall.findAllMatchIn).collectFirst {
       case m if m.group(1) != null => s"${m.group(1)}.${m.group(2)}"
-      case m if !deny(m.group(3).split('.').last) =>
+      case m if m.group(3) != null && !deny(m.group(3).split('.').last) =>
         val obj = m.group(3).stripPrefix("graft.")
         s"$obj.${m.group(4)}"
+      case m if m.group(5) != null && appliers(m.group(5).split('.').last) =>
+        s"${m.group(5).stripPrefix("graft.")}.apply"
     }.getOrElse("DataFrame/SQL composition")
   }
 
@@ -73,7 +81,8 @@ object OperatorIndex {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val defRe = """^\s*(?:override )?(?:private\S* )?def (\w+)[\[(:]""".r
+    // an override (`Strategy.apply` inside GroupTopK) is never the operator
+    val defRe = """^\s*(?:private\S* )?def (\w+)[\[(:]""".r
     walk(srcRoot).flatMap { f =>
       val rel = f.getPath.replaceFirst("^.*?src/main/scala/", "src/main/scala/")
       val src = scala.io.Source.fromFile(f, "UTF-8")
@@ -98,8 +107,10 @@ object OperatorIndex {
   /** Index entries for `(id, declaring file, body)` triples. */
   def entries(bodies: Seq[(String, String, Seq[String])], srcRoot: java.io.File): Seq[Entry] = {
     val sites = defSites(srcRoot)
+    val appliers = sites.getOrElse("apply", Nil).map { case (f, _) =>
+      f.split('/').last.stripSuffix(".scala") }.toSet
     bodies.map { case (q, file, body) =>
-      val op = operatorOf(body)
+      val op = operatorOf(body, appliers)
       val where = op match {
         case "DataFrame/SQL composition" => file
         case o =>

@@ -24,4 +24,16 @@ class OperatorIndexSpec extends AnyFunSuite {
       assert(checkedIn.contains(s"| $q |"), s"missing index row for $q")
     }
   }
+
+  test("operators called through apply are indexed as Obj.apply at the apply def") {
+    val rows = OperatorIndex.generate(".").linesIterator.toSeq
+    assert(rows.contains("| q14_matchmerge_inner | `MatchMerge.apply` | See the query body |"))
+    assert(rows.contains("| q19_locf | `NaLocfPlusOne.apply` | See the query body |"))
+    val applyDef = raw"\| `MatchMerge\.apply` \| src/main/scala/graft/ops/MatchMerge\.scala:(\d+) \|.*".r
+    val line = rows.collectFirst { case applyDef(l) => l.toInt }
+    assert(line.nonEmpty, "no operator row for MatchMerge.apply")
+    val src = scala.io.Source.fromFile("src/main/scala/graft/ops/MatchMerge.scala", "UTF-8")
+    try assert(src.getLines().drop(line.get - 1).next().trim.startsWith("def apply("))
+    finally src.close()
+  }
 }
