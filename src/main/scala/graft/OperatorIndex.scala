@@ -21,7 +21,7 @@ object OperatorIndex {
 
   // a case's body runs from the line after `Case("<id>", (s, d) =>` up
   // to the line that starts its `oracle =` argument
-  private val caseStart = """^\s*Case\("(q\w+)", \(s, d\) =>( \{)?\s*$""".r
+  private val caseStart = """^\s*Case\("(q\w+)", \(s, d\) =>(?: \{)?\s*$""".r
   private val oracleArg = """^\s*(\}, )?oracle = .*$"""
   // the first public operator invocation inside a query body: an
   // object (or qualified object) dot lower-case method call, or an
@@ -97,7 +97,7 @@ object OperatorIndex {
   /** The body of case `id` in `source`, the lines of the file declaring it. */
   private def bodyOf(id: String, file: String, source: Seq[String]): Seq[String] = {
     val start = source.indexWhere {
-      case caseStart(q, _) => q == id
+      case caseStart(q) => q == id
       case _ => false
     }
     require(start >= 0, s"query $id is not declared in $file")

@@ -14,9 +14,9 @@ import graft.queries.Shared.t
   */
 object SparkEntry {
 
-  /** Query id -> body, built once. An immutable `HashMap` like the map
-    * literal it replaces: its key order, which is `Bench`'s battery order,
-    * depends only on the set of ids.
+  /** Query id -> body, built once. Its key order, which is `Bench`'s
+    * battery order, is the immutable `HashMap`'s: it depends only on the
+    * set of ids, not on where they are declared.
     */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.cases.map(c => c.id -> c.run).toMap

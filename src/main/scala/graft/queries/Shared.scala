@@ -48,7 +48,7 @@ object Shared {
   private[graft] def events(s: SparkSession, d: String): DataFrame =
     graft.streaming.EventStreams.normalizeTs(t(s, d, "events"))
 
-  /** Exact decimal-routed double sum (see class doc). */
+  /** Exact decimal-routed double sum (see the object doc). */
   private[graft] def dsum(c: Column, scale: Int = 4): Column =
     sum(c.cast(s"decimal(18,$scale)")).cast("double")
 

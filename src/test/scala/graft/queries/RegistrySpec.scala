@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
-
 class RegistrySpec extends AnyFunSuite {
 
   private val body: (SparkSession, String) => DataFrame = (s, _) => s.emptyDataFrame
@@ -16,12 +14,5 @@ class RegistrySpec extends AnyFunSuite {
       Case("q1_twice", body, Some("SELECT 2")))))
     assert(e.getMessage.contains("q1_twice"))
     assert(!e.getMessage.contains("q2_once"))
-  }
-
-  test("the driver maps hold every registered case, once") {
-    val ids = Registry.cases.map(_.id)
-    assert(SparkEntry.queries.keySet == ids.toSet && ids.size == ids.toSet.size)
-    assert(SparkEntry.oracleSql.keySet ==
-      Registry.cases.filter(_.oracle.nonEmpty).map(_.id).toSet)
   }
 }
