@@ -18,15 +18,19 @@ object Verify {
         "otherwise run zero queries and report a vacuous green gate")
     def selected[A](m: Map[String, A]): Map[String, A] =
       if (only.isEmpty) m else m.view.filterKeys(only).toMap
-    selected(SparkEntry.queries).foreach { case (name, fn) =>
-      // a query that throws before its write must not leave an earlier
-      // run's output behind for the oracle compare to grade
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = selected(SparkEntry.queries).flatMap {
+      case (name, fn) =>
+        // a query that throws before its write must not leave an earlier
+        // run's output behind for the oracle compare to grade
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -44,5 +48,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // every other output is written first; then fail loudly, since the
+    // queries without an oracle are graded by nothing else
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -22,9 +22,8 @@ import graft.expressions.{PqExpressions, VectorExpressions}
   * that produced them and cell membership only under the centroids that
   * assigned it, so an increment MUST encode under the LOADED models —
   * [[append]] takes the state, never a fresh trainer. The manifest
-  * carries `(nCells, m, c)` through the same [[Dedup.StateManifest]]
-  * codec as the four dedup states and fails loudly on a mismatched
-  * resume.
+  * carries `(nCells, m, c)` through the same [[graft.io.StateStore]] as
+  * the dedup states and fails loudly on a mismatched resume.
   *
   * The reference (ETLUtils) has no vector operators — this extends the
   * LLM-pipeline surface like the rest of `graft.ext`.
@@ -315,19 +314,19 @@ object AnnIndex {
   /** Persist: codes as parquet, models as the exact-text formats their
     * own save/load pairs use ([[Ivf.saveModel]] / [[Pq.saveCodebooks]]
     * — `java.lang.Double.toString` round-trips bit-identically), all
-    * inside the [[Dedup.StateManifest]] crash-safe window (manifest
-    * deleted first, recreated only after every part lands — a torn save
-    * is never served). The manifest params DERIVE from the state, so
-    * the manifest cannot state anything but the truth (a review pass
-    * removed the caller-supplied params this require'd against). The
-    * codes frame is localCheckpoint'ed first so saving into the
-    * directory the state was LOADED from is safe.
+    * written into one fresh version of the [[graft.io.StateStore]] and
+    * committed by its pointer swap only after every part lands — a crash
+    * mid-save leaves the previous index served. The manifest params
+    * DERIVE from the state, so the manifest cannot state anything but the
+    * truth (a review pass removed the caller-supplied params this
+    * require'd against). The codes frame is localCheckpoint'ed first so
+    * the sizing count and the write share one encode.
     *
-    * `dir` is LOCAL-FILESYSTEM scratch, like the four dedup state dirs:
-    * the shared manifest codec is `java.io.File`-based, so although the
-    * model writers go through the Hadoop FileSystem API, a remote
+    * `dir` is LOCAL-FILESYSTEM scratch, like the dedup state dirs: the
+    * store's pointer swap is `java.nio`-based, so although the model
+    * writers go through the Hadoop FileSystem API, a remote
     * `hdfs://`/`s3://` dir would persist models the loader's local
-    * existence checks can never see (state silently rebuilt every run).
+    * pointer check can never see (state silently rebuilt every run).
     * Fail loudly instead of that.
     */
   def save(spark: SparkSession, state: State, dir: String): Unit = {
@@ -335,18 +334,16 @@ object AnnIndex {
     val codes = state.codes.localCheckpoint(true)
     warnOnSizingDrift(sizingDriftOf(codes.count(),
       state.coarse.centroids.length), s"save($dir)")
-    val refineCk = state.refine.map(r =>
-      r.copy(codes = r.codes.localCheckpoint(true)))
-    Dedup.StateManifest.save(dir, state.params.encoded) {
-      codes.write.mode("overwrite").parquet(s"$dir/codes")
-      Ivf.saveModel(spark, state.coarse, s"$dir/centroids.txt")
-      Pq.saveCodebooks(spark, state.pq, s"$dir/codebooks.txt")
-      refineCk.foreach { r =>
-        r.codes.write.mode("overwrite").parquet(s"$dir/refine_codes")
+    graft.io.StateStore.save(dir, state.params.encoded) { v =>
+      codes.write.parquet(s"$v/codes")
+      Ivf.saveModel(spark, state.coarse, s"$v/centroids.txt")
+      Pq.saveCodebooks(spark, state.pq, s"$v/codebooks.txt")
+      state.refine.foreach { r =>
+        r.codes.write.parquet(s"$v/refine_codes")
         // two lines, lo then hi, exact toPlainString decimals — the
         // saveModel text convention for the Sq8 range model
         java.nio.file.Files.write(
-          new java.io.File(dir, "refine_ranges.txt").toPath,
+          new java.io.File(v, "refine_ranges.txt").toPath,
           (r.lo.map(_.toPlainString).mkString(",") + "\n" +
             r.hi.map(_.toPlainString).mkString(",") + "\n")
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -354,7 +351,7 @@ object AnnIndex {
     }
   }
 
-  /** The manifest codec only sees the local filesystem (see [[save]]):
+  /** The state store only sees the local filesystem (see [[save]]):
     * a URI-schemed dir would split the state across two filesystems and
     * read as forever-absent — the silent re-encode-every-run failure
     * this guard turns into an error.
@@ -362,34 +359,30 @@ object AnnIndex {
   private def requireLocalDir(dir: String): Unit =
     require(!dir.matches("^[a-zA-Z][a-zA-Z0-9+.-]*://.*"),
       s"AnnIndex state dir must be a local path (got $dir): the state " +
-        "manifest codec is local-filesystem based — stage the index " +
+        "store is local-filesystem based — stage the index " +
         "locally, or sync the directory to remote storage as files")
 
-  /** Load a state previously written by [[save]]: None when no complete
-    * state exists (manifest + codes `_SUCCESS` + both model files);
-    * loud when the stored parameters differ from `expect`; the loaded
-    * model shapes are re-validated against the manifest (a hand-edited
-    * model file cannot silently disagree with the declared geometry).
+  /** Load a state previously written by [[save]]: None when no index was
+    * committed at `dir`; loud when the stored parameters differ from
+    * `expect`; the loaded model shapes are re-validated against the
+    * manifest (a hand-edited model file cannot silently disagree with
+    * the declared geometry).
     */
   def load(spark: SparkSession, dir: String, expect: Params)
       : Option[State] = {
     requireLocalDir(dir)
     val withR = expect.refineDim > 0
-    val modelFiles = (Seq("centroids.txt", "codebooks.txt") ++
-        (if (withR) Seq("refine_ranges.txt") else Nil))
-      .forall(f => new java.io.File(dir, f).exists())
     val parts = "codes" +: (if (withR) Seq("refine_codes") else Nil)
-    if (!Dedup.StateManifest.complete(dir, parts) || !modelFiles) None
-    else {
-      Dedup.StateManifest.check(dir, "ann index", expect.encoded,
+    graft.io.StateStore.load(dir, parts, "ann index", expect.encoded,
         "codes are only comparable under the models that produced them " +
           "— probing with a different geometry silently mis-ranks " +
-          "every candidate")
+          "every candidate").map { version =>
+      val v = version.dir
       val refine =
         if (!withR) None
         else {
           val lines = new String(java.nio.file.Files.readAllBytes(
-            new java.io.File(dir, "refine_ranges.txt").toPath),
+            new java.io.File(v, "refine_ranges.txt").toPath),
             java.nio.charset.StandardCharsets.UTF_8)
             .split("\n").filter(_.nonEmpty)
           require(lines.length == 2,
@@ -400,16 +393,16 @@ object AnnIndex {
             // byte-gated widen-into-cache (the Dedup.loadStateFrame
             // rationale): small persisted codes are one parquet split,
             // serializing every probe's ADC/refine scan onto one task
-            Dedup.loadStateFrame(spark, s"$dir/refine_codes")))
+            Dedup.loadStateFrame(spark, s"$v/refine_codes")))
         }
       val st = State(
-        Ivf.loadModel(spark, s"$dir/centroids.txt"),
-        Pq.loadCodebooks(spark, s"$dir/codebooks.txt"),
-        Dedup.loadStateFrame(spark, s"$dir/codes"), refine)
+        Ivf.loadModel(spark, s"$v/centroids.txt"),
+        Pq.loadCodebooks(spark, s"$v/codebooks.txt"),
+        Dedup.loadStateFrame(spark, s"$v/codes"), refine)
       require(st.params == expect,
         s"ann index at $dir: loaded model shapes ${st.params} disagree " +
           s"with the manifest $expect — the state files are inconsistent")
-      Some(st)
+      st
     }
   }
 }

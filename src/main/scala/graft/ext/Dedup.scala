@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{text, vectors}
+import graft.io.StateStore
 
 /** Corpus deduplication operators for large-scale training-data pipelines:
   * exact, MinHash+LSH, SimHash, character-n-gram Jaccard, and
@@ -749,112 +750,32 @@ object Dedup {
       route.map(_.encoded).getOrElse("")
   }
 
-  private val stateManifest = "_GRAFT_STATE"
-
-  /** The ONE manifest codec behind all four persisted dedup states
-    * (minhash / containment / resemblance / substring). Each screen used
-    * to hand-roll the same delete-write-commit + exists + loud-equality
-    * sequence; the contract lives here once:
-    *
-    *  - crash-safe manifest-LAST save: the manifest (carrying the build
-    *    params) is deleted BEFORE the frame writes and committed only
-    *    after ALL succeed, so a crash mid-save leaves no manifest and a
-    *    torn state is never served;
-    *  - completeness = manifest present AND a `_SUCCESS` marker under
-    *    every part directory;
-    *  - loud parameter equality on load: a state built under different
-    *    params would silently find NOTHING (buckets/shingles/windows
-    *    from different schemes never join) — the gate turns that into
-    *    an immediate error naming both sides.
-    *
-    * The optional `stale` drift counter rides BESIDE the frames, not in
-    * the manifest — the manifest is the parameter-equality gate and
-    * staleness varies per save.
-    */
-  private[ext] object StateManifest {
-    private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
-
-    /** Crash-safe save: invalidate, run `writeFrames`, commit params. */
-    def save(dir: String, encoded: String)(writeFrames: => Unit): Unit = {
-      val manifest = new java.io.File(dir, stateManifest)
-      manifest.delete() // invalidate any previous state before touching it
-      writeFrames
-      java.nio.file.Files.write(manifest.toPath, encoded.getBytes(Utf8))
-    }
-
-    /** True when a complete state exists at `dir` (manifest + every
-      * part's `_SUCCESS`) — a partial or torn save reads as absent.
-      */
-    def complete(dir: String, parts: Seq[String]): Boolean =
-      new java.io.File(dir, stateManifest).exists() && parts.forall(p =>
-        new java.io.File(s"$dir/$p", "_SUCCESS").exists())
-
-    /** Loud parameter-equality gate: fails with both sides named when the
-      * stored params differ from `expect`; `consequence` says what the
-      * silent failure WOULD have been (the reason the gate exists).
-      */
-    def check(dir: String, kind: String, expect: String,
-        consequence: String): Unit = {
-      val stored = new String(
-        java.nio.file.Files.readAllBytes(
-          new java.io.File(dir, stateManifest).toPath), Utf8)
-      require(stored == expect,
-        s"$kind at $dir was built with [$stored] but this run uses " +
-          s"[$expect] — $consequence; rebuild the state or pass the " +
-          "original parameters")
-    }
-
-    /** Drift counter beside the frames (missing reads as 0 — states
-      * persisted before the counter existed keep loading).
-      */
-    def saveStale(dir: String, staleDocs: Long): Unit =
-      java.nio.file.Files.write(new java.io.File(dir, "stale").toPath,
-        staleDocs.toString.getBytes(Utf8))
-
-    def loadStale(dir: String): Long = {
-      val f = new java.io.File(dir, "stale")
-      if (f.exists())
-        new String(java.nio.file.Files.readAllBytes(f.toPath), Utf8).trim.toLong
-      else 0L
-    }
-  }
-
-  /** Persist a [[MinhashState]] to `dir` (parquet `sets/` + `buckets/`) —
-    * the between-runs half of the incremental-dedup contract. Both frames
-    * are localCheckpoint'ed first, so saving into the SAME directory the
-    * state was loaded from is safe (the lazy plans would otherwise still be
-    * reading the files being overwritten). The save is crash-safe: the
-    * manifest (carrying `params`) is deleted before the writes and recreated
-    * only after BOTH succeed, so a crash between the two parquet writes
-    * leaves no manifest and the torn pair is never served.
+  /** Persist a [[MinhashState]] to `dir` (parquet `sets/` + `buckets/`
+    * through the crash-safe [[graft.io.StateStore]]) — the between-runs
+    * half of the incremental-dedup contract. Saving into the directory the
+    * state was loaded from is safe: the save writes a fresh version and
+    * a crash between the two parquet writes leaves the previous state
+    * served.
     */
   def saveMinhashState(
-      state: MinhashState, dir: String, params: MinhashParams): Unit = {
-    val sets = state.sets.localCheckpoint(true)
-    val buckets = state.buckets.localCheckpoint(true)
-    StateManifest.save(dir, params.encoded) {
-      sets.write.mode("overwrite").parquet(s"$dir/sets")
-      buckets.write.mode("overwrite").parquet(s"$dir/buckets")
+      state: MinhashState, dir: String, params: MinhashParams): Unit =
+    StateStore.save(dir, params.encoded) { v =>
+      state.sets.write.parquet(s"$v/sets")
+      state.buckets.write.parquet(s"$v/buckets")
     }
-  }
 
   /** Load a [[MinhashState]] previously written by [[saveMinhashState]].
-    * Returns None when no complete state exists at `dir` (manifest + both
-    * `_SUCCESS` markers required — a partial or torn save is never served).
-    * Fails loudly when the stored parameters differ from `expect`.
+    * Returns None when no state was ever committed at `dir`. Fails loudly
+    * when the stored parameters differ from `expect`.
     */
   def loadMinhashState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      expect: MinhashParams): Option[MinhashState] = {
-    if (!StateManifest.complete(dir, Seq("sets", "buckets"))) None
-    else {
-      StateManifest.check(dir, "minhash state", expect.encoded,
-        "buckets would never match")
-      Some(MinhashState(
-        spark.read.parquet(s"$dir/sets"), spark.read.parquet(s"$dir/buckets"),
-        expect))
+      expect: MinhashParams): Option[MinhashState] =
+    StateStore.load(dir, Seq("sets", "buckets"), "minhash state",
+        expect.encoded, "buckets would never match").map { v =>
+      MinhashState(spark.read.parquet(v.part("sets")),
+        spark.read.parquet(v.part("buckets")), expect)
     }
-  }
 
   /** Incremental dedup — the daily-increment workflow: drop rows of
     * `incoming` that near-duplicate (exact-verified jaccard >= threshold)
@@ -1053,17 +974,15 @@ object Dedup {
   }
 
   /** Persist a [[SubstringIndex]]: windows as parquet, parameters as the
-    * loud-equality manifest (the [[saveContainmentState]] convention —
-    * completing the persisted-state family: all four screens now carry
-    * their build parameters to disk and fail loudly on a mismatched
+    * loud-equality manifest of the shared [[graft.io.StateStore]] (the
+    * [[saveContainmentState]] convention: every persisted screen carries
+    * its build parameters to disk and fails loudly on a mismatched
     * resume instead of silently finding nothing).
     */
-  def saveSubstringIndex(index: SubstringIndex, dir: String): Unit = {
-    val windows = index.windows.localCheckpoint(true)
-    StateManifest.save(dir, substringEncoded(index.windowTokens, index.route)) {
-      windows.write.mode("overwrite").parquet(s"$dir/windows")
+  def saveSubstringIndex(index: SubstringIndex, dir: String): Unit =
+    StateStore.save(dir, substringEncoded(index.windowTokens, index.route)) {
+      v => index.windows.write.parquet(s"$v/windows")
     }
-  }
 
   /** The substring index's manifest encoding — its `MinhashParams.encoded`
     * analog (the index's params live on [[SubstringIndex]] itself, so the
@@ -1079,48 +998,38 @@ object Dedup {
   def loadSubstringIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       windowTokens: Int,
-      route: Option[CharGramRouting] = None): Option[SubstringIndex] = {
-    if (!StateManifest.complete(dir, Seq("windows"))) None
-    else {
-      StateManifest.check(dir, "substring index",
+      route: Option[CharGramRouting] = None): Option[SubstringIndex] =
+    StateStore.load(dir, Seq("windows"), "substring index",
         substringEncoded(windowTokens, route),
-        "windows would never equi-join")
-      Some(SubstringIndex(spark.read.parquet(s"$dir/windows"),
-        windowTokens, route))
+        "windows would never equi-join").map { v =>
+      SubstringIndex(spark.read.parquet(v.part("windows")), windowTokens, route)
     }
-  }
 
   /** Persist a paragraph-dedup seen-hash state (the `priorSeenHashes` frame
     * [[paragraphDedup]] screens against): the distinct `seg_h` values as
     * parquet, the split pattern as the loud-equality manifest — the FIFTH
     * member of the persisted-screen family (minhash / containment /
-    * resemblance / substring / segment), on the same crash-safe codec.
-    * A state built under a different `sepPattern` would hash different
-    * segment boundaries and silently pass every duplicate; the manifest
-    * turns that into an immediate error.
+    * resemblance / substring / segment), on the same crash-safe
+    * [[graft.io.StateStore]]. A state built under a different
+    * `sepPattern` would hash different segment boundaries and silently
+    * pass every duplicate; the manifest turns that into an immediate error.
     */
   def saveParagraphState(
-      seenHashes: DataFrame, dir: String, sepPattern: String = "\\. "): Unit = {
-    val hashes = seenHashes.select(col("seg_h")).distinct().localCheckpoint(true)
-    StateManifest.save(dir, s"sepPattern=$sepPattern") {
-      hashes.write.mode("overwrite").parquet(s"$dir/hashes")
+      seenHashes: DataFrame, dir: String, sepPattern: String = "\\. "): Unit =
+    StateStore.save(dir, s"sepPattern=$sepPattern") { v =>
+      seenHashes.select(col("seg_h")).distinct().write.parquet(s"$v/hashes")
     }
-  }
 
   /** Load a seen-hash state written by [[saveParagraphState]]; None when no
-    * complete state exists, loud failure on a split-pattern mismatch.
+    * state was committed, loud failure on a split-pattern mismatch.
     */
   def loadParagraphState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      sepPattern: String = "\\. "): Option[DataFrame] = {
-    if (!StateManifest.complete(dir, Seq("hashes"))) None
-    else {
-      StateManifest.check(dir, "paragraph-dedup state",
+      sepPattern: String = "\\. "): Option[DataFrame] =
+    StateStore.load(dir, Seq("hashes"), "paragraph-dedup state",
         s"sepPattern=$sepPattern",
         "differently-bounded segments would all read as fresh")
-      Some(spark.read.parquet(s"$dir/hashes"))
-    }
-  }
+      .map(v => spark.read.parquet(v.part("hashes")))
 
   /** The standing-corpus window index for [[exactSubstringDedupAgainst]]:
     * the distinct `windowTokens`-token windows of `df`, carried WITH the
@@ -2199,20 +2108,12 @@ object Dedup {
     sets.select(explode(col("toks")).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("__df"))
 
-  /** Build (or rebuild) the containment state for a standing corpus. */
-  def containmentState(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3,
-      route: Option[CharGramRouting] = None): ContainmentState = {
-    val sets = portableSets(df, idCol, textCol, shingleK, route)
-    ContainmentState(sets, dfreqOf(sets), 0L, shingleK, route)
-  }
-
-  /** [[containmentState]] with both frames eagerly checkpointed and the
-    * df frame DERIVED from the already-checkpointed sets — exactly one
-    * shingle pass over the corpus no matter how many probes consume the
-    * state afterwards (the [[minhashStateCheckpointed]] argument; a lazy
-    * state would re-shingle the corpus per probe action).
+  /** Build (or rebuild) the containment state for a standing corpus,
+    * both frames eagerly checkpointed and the df frame DERIVED from the
+    * already-checkpointed sets — exactly one shingle pass over the corpus
+    * no matter how many probes consume the state afterwards (the
+    * [[minhashStateCheckpointed]] argument; a lazy state would re-shingle
+    * the corpus per probe action).
     */
   def containmentStateCheckpointed(
       df: DataFrame, idCol: String, textCol: String,
@@ -2238,37 +2139,30 @@ object Dedup {
       route.map(_.encoded).getOrElse("")
   }
 
-  /** Persist a [[ContainmentState]] (crash-safe manifest-last, the
-    * [[saveMinhashState]] contract: safe to save into the directory the
-    * state was loaded from).
+  /** Persist a [[ContainmentState]] with its drift counter (the
+    * [[saveMinhashState]] contract: crash-safe, and safe to save into the
+    * directory the state was loaded from).
     */
   def saveContainmentState(
-      state: ContainmentState, dir: String, params: ContainmentParams): Unit = {
-    val sets = state.sets.localCheckpoint(true)
-    val dfreq = state.dfreq.localCheckpoint(true)
-    StateManifest.save(dir, params.encoded) {
-      sets.write.mode("overwrite").parquet(s"$dir/sets")
-      dfreq.write.mode("overwrite").parquet(s"$dir/dfreq")
-      StateManifest.saveStale(dir, state.staleDocs)
+      state: ContainmentState, dir: String, params: ContainmentParams): Unit =
+    StateStore.save(dir, params.encoded, state.staleDocs) { v =>
+      state.sets.write.parquet(s"$v/sets")
+      state.dfreq.write.parquet(s"$v/dfreq")
     }
-  }
 
   /** Load a [[ContainmentState]] written by [[saveContainmentState]];
-    * None when no complete state exists, loud failure on a parameter
+    * None when no state was committed, loud failure on a parameter
     * mismatch.
     */
   def loadContainmentState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      expect: ContainmentParams): Option[ContainmentState] = {
-    if (!StateManifest.complete(dir, Seq("sets", "dfreq"))) None
-    else {
-      StateManifest.check(dir, "containment state", expect.encoded,
-        "shingles would never match")
-      Some(ContainmentState(loadStateFrame(spark, s"$dir/sets"),
-        loadStateFrame(spark, s"$dir/dfreq"), StateManifest.loadStale(dir),
-        expect.shingleK, expect.route))
+      expect: ContainmentParams): Option[ContainmentState] =
+    StateStore.load(dir, Seq("sets", "dfreq"), "containment state",
+        expect.encoded, "shingles would never match").map { v =>
+      ContainmentState(loadStateFrame(spark, v.part("sets")),
+        loadStateFrame(spark, v.part("dfreq")), v.counter,
+        expect.shingleK, expect.route)
     }
-  }
 
   /** Containment probe of an ARRIVING batch against a standing corpus —
     * the ingest face of [[containmentPairs]]: emit `(id_in, id_host,
@@ -2457,23 +2351,7 @@ object Dedup {
         state.threshold, state.shingleK, stale, state.route)
   }
 
-  /** Build the resemblance state; see [[resemblanceStateCheckpointed]]
-    * for the probe-loop variant.
-    */
-  def resemblanceState(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.6, shingleK: Int = 3,
-      route: Option[CharGramRouting] = None): ResemblanceState = {
-    require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    require(shingleK >= 1, "shingleK must be at least 1")
-    val sets = portableSets(df, idCol, textCol, shingleK, route)
-    val dfreq = dfreqOf(sets)
-    ResemblanceState(sets, dfreq,
-      jaccardPrefix(sets, dfreq, threshold), threshold, shingleK,
-      route = route)
-  }
-
-  /** [[resemblanceState]] with every corpus-sized frame eagerly
+  /** Build the resemblance state with every corpus-sized frame eagerly
     * checkpointed and derived frames built FROM the checkpointed sets —
     * exactly one shingle pass over the corpus no matter how many probes
     * consume the state (the [[containmentStateCheckpointed]] argument).
@@ -2508,40 +2386,33 @@ object Dedup {
       route.map(_.encoded).getOrElse("")
   }
 
-  /** Persist a [[ResemblanceState]] (crash-safe manifest-last). */
-  def saveResemblanceState(
-      state: ResemblanceState, dir: String): Unit = {
-    val encoded =
-      ResemblanceParams(state.threshold, state.shingleK, state.route).encoded
-    StateManifest.save(dir, encoded) {
-      state.sets.localCheckpoint(true)
-        .write.mode("overwrite").parquet(s"$dir/sets")
-      state.dfreq.localCheckpoint(true)
-        .write.mode("overwrite").parquet(s"$dir/dfreq")
-      state.prefix.localCheckpoint(true)
-        .write.mode("overwrite").parquet(s"$dir/prefix")
-      StateManifest.saveStale(dir, state.staleDocs)
+  /** Persist a [[ResemblanceState]] (the [[saveContainmentState]]
+    * contract).
+    */
+  def saveResemblanceState(state: ResemblanceState, dir: String): Unit =
+    StateStore.save(dir,
+        ResemblanceParams(state.threshold, state.shingleK, state.route).encoded,
+        state.staleDocs) { v =>
+      state.sets.write.parquet(s"$v/sets")
+      state.dfreq.write.parquet(s"$v/dfreq")
+      state.prefix.write.parquet(s"$v/prefix")
     }
-  }
 
   /** Load a [[ResemblanceState]] written by [[saveResemblanceState]];
-    * None when no complete state exists, loud failure on a parameter
+    * None when no state was committed, loud failure on a parameter
     * mismatch.
     */
   def loadResemblanceState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      expect: ResemblanceParams): Option[ResemblanceState] = {
-    if (!StateManifest.complete(dir, Seq("sets", "dfreq", "prefix"))) None
-    else {
-      StateManifest.check(dir, "resemblance state", expect.encoded,
-        "the prefix is only complete at its build threshold")
-      Some(ResemblanceState(loadStateFrame(spark, s"$dir/sets"),
-        loadStateFrame(spark, s"$dir/dfreq"),
-        loadStateFrame(spark, s"$dir/prefix"),
-        expect.threshold, expect.shingleK, StateManifest.loadStale(dir),
-        expect.route))
-    }
-  }
+      expect: ResemblanceParams): Option[ResemblanceState] =
+    StateStore.load(dir, Seq("sets", "dfreq", "prefix"), "resemblance state",
+        expect.encoded, "the prefix is only complete at its build threshold")
+      .map { v =>
+        ResemblanceState(loadStateFrame(spark, v.part("sets")),
+          loadStateFrame(spark, v.part("dfreq")),
+          loadStateFrame(spark, v.part("prefix")),
+          expect.threshold, expect.shingleK, v.counter, expect.route)
+      }
 
   /** EXACT-Jaccard probe of an ARRIVING batch against a standing corpus
     * — the resemblance face of [[containmentProbe]]: emit `(id_in,

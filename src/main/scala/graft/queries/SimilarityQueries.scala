@@ -17,7 +17,7 @@ object SimilarityQueries extends Family {
 
   /** The q299/q305 persisted IVF-PQ index over the standing corpus slice
     * (`vec_id % 5 != 2`): built+saved once per (fixture, params)
-    * generation under the loud StateManifest contract, loaded on every
+    * generation through the loud-params StateStore, loaded on every
     * later call — the production ingest shape shared by both faces.
     */
   private def standingAnnIndex(
@@ -931,7 +931,7 @@ $fin"""
       // family's q284 (round 17): the standing corpus is encoded ONCE
       // (cell id + PQ codes, ~9 bytes/vector instead of 256 float
       // bytes) and persisted with its frozen models under the same
-      // loud StateManifest contract as the four dedup states; the
+      // loud-params StateStore as the dedup states; the
       // query pays state LOAD + a broadcast probe join on the probed
       // cells only. Oracle = the q169 IVFADC composition over the
       // standing slice with incoming probes — results are

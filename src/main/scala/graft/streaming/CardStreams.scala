@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.text
+import graft.io.StateStore
 
 /** Streaming per-source data card — the drift-monitoring face of
   * [[graft.ext.Report.dataCard]]: the document, token and quality-pass
@@ -24,11 +22,14 @@ import graft.functions.text
   * artifact.
   *
   * Restart contract: with `checkpointDir` set, the counters are PERSISTED
-  * beside the checkpoint (`<checkpointDir>/card_state`, batch-versioned
-  * directories behind an atomically-swapped manifest) after every
-  * batch and reloaded on start, tagged with the last applied batchId. A
-  * restarted run therefore resumes BOTH the source offsets (from the
-  * checkpoint) and the counters (from the state dir) — and because a
+  * beside the checkpoint (`<checkpointDir>/card_state`, through the
+  * crash-safe [[graft.io.StateStore]]: a fresh version per save behind an
+  * atomically swapped pointer, so a crash mid-save serves the previous
+  * card) after every batch and reloaded on start, tagged with the last
+  * applied batchId. A restarted run therefore resumes BOTH the source
+  * offsets (from the checkpoint) and the counters (from the state dir),
+  * and a restart with another `groupCol` or `minStopwords` fails loudly
+  * instead of mixing two card definitions — and because a
   * replayed micro-batch arrives with its original batchId, the
   * `batchId <= lastApplied` guard skips re-applying a batch whose counts
   * were persisted before the crash. Every crash window is covered:
@@ -43,70 +44,6 @@ import graft.functions.text
   * the persisted copy is one groups-sized parquet write per batch.
   */
 object CardStreams {
-
-  private val cardDirName = "card"
-  private val manifestName = "card_manifest"
-
-  private def versionDir(stateDir: java.io.File, batchId: Long) =
-    new java.io.File(stateDir, s"${cardDirName}_$batchId")
-
-  /** (loaded card, last applied batchId); (None, -1) when no persisted
-    * state exists. The manifest names the batch whose `card_<batchId>`
-    * directory is current; because the manifest is only ever swapped
-    * atomically AFTER that directory is fully written, a manifest that
-    * exists always points at a complete card (`_SUCCESS` is still
-    * required, defensively).
-    */
-  private def loadCardState(
-      spark: SparkSession, stateDir: java.io.File): (Option[DataFrame], Long) = {
-    val manifest = new java.io.File(stateDir, manifestName)
-    if (!manifest.exists()) (None, -1L)
-    else {
-      val lastApplied =
-        new String(Files.readAllBytes(manifest.toPath), UTF_8).trim.toLong
-      val card = versionDir(stateDir, lastApplied)
-      if (!new java.io.File(card, "_SUCCESS").exists()) (None, -1L)
-      else (Some(spark.read.parquet(card.toString)), lastApplied)
-    }
-  }
-
-  /** Crash-safe save with NO lossy window: write the card to a fresh
-    * batch-versioned directory, then atomically swap the manifest to
-    * point at it, then garbage-collect superseded versions. A crash at
-    * any instant leaves the manifest pointing at a complete older card —
-    * the in-place-overwrite scheme this replaces had a window (manifest
-    * deleted, card half-overwritten) where restart loaded (None, -1)
-    * while the stream's committed offsets never replayed the lost
-    * batches: silent total counter loss. `next` must already be
-    * materialized (localCheckpoint) so this write never reads the
-    * directory it is about to supersede.
-    */
-  private def saveCardState(
-      next: DataFrame, stateDir: java.io.File, batchId: Long): Unit = {
-    stateDir.mkdirs()
-    val dir = versionDir(stateDir, batchId)
-    next.write.mode("overwrite").parquet(dir.toString)
-    val manifest = new java.io.File(stateDir, manifestName).toPath
-    val tmp = new java.io.File(stateDir, manifestName + ".tmp").toPath
-    Files.write(tmp, batchId.toString.getBytes(UTF_8))
-    try Files.move(tmp, manifest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp, manifest,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    // only after the commit: drop every older card_<id> version
-    Option(stateDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(cardDirName + "_")
-        && f.getName != dir.getName)
-      .foreach(deleteRecursively)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
 
   def streamingDataCard(
       spark: SparkSession, stagedDir: String,
@@ -125,14 +62,15 @@ object CardStreams {
         count(when(
           text.gopherReasons(col(textCol), minStopwords = minStopwords) === 0,
           1)).as("n_quality_pass"))
-    val stateDir = checkpointDir.map(d => new java.io.File(d, "card_state"))
+    val stateDir = checkpointDir.map(d => s"$d/card_state")
+    val params = s"groupCol=$groupCol;minStopwords=$minStopwords"
     // written from the micro-batch thread, read by the caller after
     // the query finishes (and legitimately readable mid-run by a monitor)
     val stateLock = new Object
-    val (loaded, loadedBatch) = stateDir
-      .map(loadCardState(spark, _)).getOrElse((None, -1L))
-    var state: Option[DataFrame] = loaded
-    var lastApplied: Long = loadedBatch
+    val loaded = stateDir.flatMap(StateStore.load(_, Seq("card"),
+      "streaming data card", params, "counters would mix two card definitions"))
+    var state: Option[DataFrame] = loaded.map(v => spark.read.parquet(v.part("card")))
+    var lastApplied: Long = loaded.fold(-1L)(_.counter)
     StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
         batchAdaptive, checkpointDir, persistBatch = false) { (batch, batchId) =>
       stateLock.synchronized {
@@ -155,7 +93,9 @@ object CardStreams {
                     + coalesce(col("n_quality_pass"), lit(0L))).as("n_quality_pass"))
           }
           val materialized = next.localCheckpoint(true)
-          stateDir.foreach(saveCardState(materialized, _, batchId))
+          stateDir.foreach(StateStore.save(_, params, batchId) { v =>
+            materialized.write.parquet(s"$v/card")
+          })
           state = Some(materialized)
           lastApplied = batchId
         }

@@ -29,9 +29,9 @@ import graft.ext.Dedup
   * flat over unbounded streams; survivors are written to a parquet file
   * sink per batch (a distributed executor-side write — ids never pass
   * through the driver), so the only driver-side state is the index
-  * DataFrame handles. A production deployment would additionally persist
-  * the index to parquet between runs ([[Dedup.minhashState]] is designed
-  * for exactly that).
+  * DataFrame handles. With `stateDir` the index also persists between
+  * runs: [[corpusDedupStreaming]] loads it at start and saves it at the
+  * end through the crash-safe [[graft.io.StateStore]].
   */
 object CorpusStreams {
 
@@ -198,7 +198,7 @@ object CorpusStreams {
     * seen, not documents; localCheckpoint'ed leaves keep lineage flat and
     * a `distinct()` collapse every `checkpointEvery` batches keeps the
     * union tree shallow. With `stateDir` the seen-hash set loads before
-    * the run and persists after it under the shared loud-manifest codec
+    * the run and persists after it through the shared state store
     * ([[graft.ext.Dedup.saveParagraphState]]) — two separate invocations
     * over consecutive increments equal the one-shot screen, the
     * restartable-ingest contract the other persisted screens carry. Same

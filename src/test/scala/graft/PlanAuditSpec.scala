@@ -569,6 +569,23 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("q284: the loaded resemblance state enters as a widened checkpoint, " +
+      "never a raw state scan; no cartesian") {
+    // the first run builds and saves the state (or loads one an earlier
+    // run saved), the second always loads it
+    finalPlan("q284_resemblance_probe_persisted")
+    val plan = finalPlan("q284_resemblance_probe_persisted")
+    assert(!plan.contains("CartesianProduct"),
+      s"q284 planned a cartesian product:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin"),
+      s"q284 planned a nested-loop join:\n$plan")
+    // loadStateFrame widens the small state frames into checkpoints; a
+    // parquet scan of the state dir would be the single-split read
+    assert(plan.contains("ExistingRDD"), s"q284: no checkpointed state in:\n$plan")
+    assert(!plan.contains("graft_resemb_state"),
+      s"q284 scans the persisted state raw:\n$plan")
+  }
+
   test("q301: paragraph dedup is equi-joins + partial aggs — never " +
       "all-pairs, winners combine map-side") {
     val plan = finalPlan("q301_paragraph_dedup")

@@ -197,7 +197,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
       (id, r.shuffle(vocab).take(8).map(_ * 2).mkString(" ")) // doubled letters: disjoint vocab
     }
     val incoming = (quotes ++ fresh).toDF("doc_id", "text")
-    val state = Dedup.containmentState(standing.toDF("doc_id", "text"),
+    val state = Dedup.containmentStateCheckpointed(standing.toDF("doc_id", "text"),
       "doc_id", "text", shingleK = 1)
     val fast = Dedup.containmentProbe(incoming, state, "doc_id", "text",
         tau = 0.8, shingleK = 1)
@@ -220,7 +220,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     val dir = TempDirs.make("graft_cstate").toString
     val standing = Seq((1L, "a b c d e f"), (2L, "p q r s t"))
       .toDF("doc_id", "text")
-    val st = Dedup.containmentState(standing, "doc_id", "text", shingleK = 1)
+    val st = Dedup.containmentStateCheckpointed(standing, "doc_id", "text", shingleK = 1)
     Dedup.saveContainmentState(st, dir, Dedup.ContainmentParams(1))
     val loaded = Dedup.loadContainmentState(
       spark, dir, Dedup.ContainmentParams(1)).get
@@ -415,11 +415,11 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
 
   test("containmentProbe degenerate inputs: empty batch, empty corpus, null text") {
     val standing = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
-    val state = Dedup.containmentState(standing, "doc_id", "text", shingleK = 1)
+    val state = Dedup.containmentStateCheckpointed(standing, "doc_id", "text", shingleK = 1)
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(Dedup.containmentProbe(empty, state, "doc_id", "text",
       tau = 0.8, shingleK = 1).isEmpty)
-    val emptyState = Dedup.containmentState(empty, "doc_id", "text", shingleK = 1)
+    val emptyState = Dedup.containmentStateCheckpointed(empty, "doc_id", "text", shingleK = 1)
     val incoming = Seq((10L, "a b c d e"), (11L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
     assert(Dedup.containmentProbe(incoming, emptyState, "doc_id", "text",

@@ -74,9 +74,14 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     }
     assert(ex2.getMessage.contains("local path"), ex2.getMessage)
     assert(AnnIndex.load(spark, dir, params).isDefined) // state intact
-    // a torn save (manifest gone mid-write) is never served
-    new java.io.File(dir, "_GRAFT_STATE").delete()
-    assert(AnnIndex.load(spark, dir, params).isEmpty)
+    // a torn save (a newer version written but never committed) is
+    // never served: the previous index still is
+    val torn = new java.io.File(dir, "graft_v99/codes")
+    torn.mkdirs()
+    java.nio.file.Files.write(new java.io.File(torn, "part-00000.parquet").toPath,
+      Array[Byte](1, 2, 3))
+    val served = AnnIndex.load(spark, dir, params).getOrElse(fail("index lost"))
+    assert(served.codes.count() == 40L)
   }
 
   test("append under frozen models: probe equals rebuild over the union") {

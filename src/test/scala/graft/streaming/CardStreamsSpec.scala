@@ -81,8 +81,8 @@ class CardStreamsSpec extends AnyFunSuite with SparkSpec {
     // versioned scheme must serve the PREVIOUS complete card whenever the
     // newest version directory is torn. Simulate the exact crash instant:
     // after run 1 commits its card, plant a half-written newer version
-    // (parquet dir without _SUCCESS, no manifest swap — a crash between
-    // the data write and the manifest commit).
+    // (parquet dir without _SUCCESS, no pointer swap — a crash between
+    // the data write and the pointer commit).
     import java.nio.file.{Files => JFiles, Paths}
     val batch = Report.dataCard(fixture, Seq("source"), "text")
       .select("source", "n_docs", "sum_tokens", "n_quality_pass")
@@ -96,11 +96,11 @@ class CardStreamsSpec extends AnyFunSuite with SparkSpec {
         shufflePartitions = Some(4), checkpointDir = Some(ckpt))
       .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(run1.map(_._1) == Seq("a"), s"precondition failed: $run1")
-    // the torn next version: data file but NO _SUCCESS, manifest untouched
+    // the torn next version: data file but NO _SUCCESS, pointer untouched
     val stateDir = Paths.get(ckpt, "card_state")
-    val torn = stateDir.resolve("card_99")
-    JFiles.createDirectories(torn)
-    JFiles.write(torn.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    val torn = stateDir.resolve("graft_v99")
+    JFiles.createDirectories(torn.resolve("card"))
+    JFiles.write(torn.resolve("card/part-00000.parquet"), Array[Byte](1, 2, 3))
     JFiles.move(parked.resolve("batch_0001.parquet"), slice1)
     val run2 = CardStreams.streamingDataCard(spark, stagedDir,
         shufflePartitions = Some(4), checkpointDir = Some(ckpt))
