@@ -376,13 +376,12 @@ object AnnIndex {
     graft.io.StateStore.load(dir, parts, "ann index", expect.encoded,
         "codes are only comparable under the models that produced them " +
           "— probing with a different geometry silently mis-ranks " +
-          "every candidate").map { version =>
-      val v = version.dir
+          "every candidate").map { v =>
       val refine =
         if (!withR) None
         else {
           val lines = new String(java.nio.file.Files.readAllBytes(
-            new java.io.File(v, "refine_ranges.txt").toPath),
+            new java.io.File(v.part("refine_ranges.txt")).toPath),
             java.nio.charset.StandardCharsets.UTF_8)
             .split("\n").filter(_.nonEmpty)
           require(lines.length == 2,
@@ -393,12 +392,12 @@ object AnnIndex {
             // byte-gated widen-into-cache (the Dedup.loadStateFrame
             // rationale): small persisted codes are one parquet split,
             // serializing every probe's ADC/refine scan onto one task
-            Dedup.loadStateFrame(spark, s"$v/refine_codes")))
+            Dedup.loadStateFrame(spark, v.part("refine_codes"))))
         }
       val st = State(
-        Ivf.loadModel(spark, s"$v/centroids.txt"),
-        Pq.loadCodebooks(spark, s"$v/codebooks.txt"),
-        Dedup.loadStateFrame(spark, s"$v/codes"), refine)
+        Ivf.loadModel(spark, v.part("centroids.txt")),
+        Pq.loadCodebooks(spark, v.part("codebooks.txt")),
+        Dedup.loadStateFrame(spark, v.part("codes")), refine)
       require(st.params == expect,
         s"ann index at $dir: loaded model shapes ${st.params} disagree " +
           s"with the manifest $expect — the state files are inconsistent")
