@@ -8,7 +8,7 @@ import graft.ext.{Ivf, Pq, Similarity, Sq8}
 import graft.functions.vectors
 
 /** ANN recall-at-scale harness (dev tooling beside [[ScaleBench]] /
-  * [[ProbeBench]]): the timing curves for the ANN family exist
+  * SURVEY.md's probe-only curves): the timing curves for the ANN family exist
   * (ScaleBench q24/q98/q118/q168/q264 rows), but recall was only ever
   * SPEC'd at sf0.01 (LshCoverageSpec) — so "the index still finds the
   * neighbors at 25x" was an assertion from bucket math, not a
@@ -42,8 +42,8 @@ import graft.functions.vectors
   * — the metric-mismatch ceiling that separates the two readings.
   *
   * Usage: `runMain graft.RecallBench <srcDir> [attempts=2] [replicas...=10 25]`
-  * Scaled corpora land in /tmp/graft_probe_r<N> (shared with ProbeBench —
-  * same stamp, built once). One JSON line per (face, scale) with
+  * Scaled corpora land in /tmp/graft_probe_r<N> (same stamp, built
+  * once). One JSON line per (face, scale) with
   * recall_cos / recall_own / min-of-`attempts` wall seconds.
   */
 object RecallBench {
@@ -53,7 +53,8 @@ object RecallBench {
   /** Graded relative-noise levels for the planted twins. */
   private[graft] val PlantEps = Seq(0.02, 0.05, 0.10, 0.20, 0.40)
   /** Planted ids start past every replica offset (buildScaled caps at
-    * 100 replicas x 1e8, max standing id < 1e10; the ProbeBench lesson)
+    * 100 replicas x 1e8, max standing id < 1e10; the increment-offset
+    * lesson recorded in SURVEY.md)
     * — 1e10 collides with nothing in the embeddings keyspace.
     */
   private[graft] val PlantBase = 10000000000L
@@ -324,7 +325,8 @@ object RecallBench {
     // refine codes CHECKPOINTED: the production index loads them as
     // persisted parquet (q312's standingAnnIndex path), so re-encoding
     // the corpus per timed run would charge the probe a build cost —
-    // the measured wall must be load + re-score, like ProbeBench's
+    // the measured wall must be load + re-score, like the probe-only
+    // walls recorded in SURVEY.md
     val idxTrainedR = {
       val st = graft.ext.AnnIndex.withRefine(idxTrained, corpus,
         "vec_id", "embedding", dim)

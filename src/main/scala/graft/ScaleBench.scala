@@ -106,7 +106,7 @@ object ScaleBench {
     "q256_stream_classifier_auc",
     // round 15: script-aware routing (the CJK dedup face of AllPairs),
     // the persisted-state probe (production ingest shape — see
-    // ProbeBench for the probe-ONLY curves), and the pre-flight
+    // SURVEY.md for the probe-ONLY curves), and the pre-flight
     // candidate-mass advisor (must stay cheap at any scale: that is
     // its entire point)
     // CAVEAT q281: the token-suffix replica construction is NOT
@@ -160,8 +160,9 @@ object ScaleBench {
     // shortlist depth + a broadcast exact rerank; expect the q299 class
     // (round 18: nCells now DERIVES from the corpus count, so the
     // r17 frozen-cells caveat no longer applies — the probed slice is
-    // ~sqrt(N) and these curves should flatten toward the ProbeBench
-    // story; the query slice still scales with the corpus by fixture)
+    // ~sqrt(N) and these curves should flatten toward the flat probe
+    // walls recorded in SURVEY.md; the query slice still scales with the
+    // corpus by fixture)
     "q305_hard_negatives_indexed",
     // round 18: the composed faces that shipped without scale rows
     // (r17 verdict #5) — triplets (bounded query set, broadcast mining
@@ -210,7 +211,7 @@ object ScaleBench {
   def buildScaled(spark: SparkSession, srcDir: String, outDir: String,
       replicas: Int = 10, skewFrac: Double = 0.0): Unit = {
     // 100 ceiling: doc/vec id offsets stay strictly below RecallBench's
-    // PlantBase (1e10) and ProbeBench's increment offset; tag scheme
+    // PlantBase (1e10); tag scheme
     // switches to uniform two-letter suffixes above 26 replicas (all
     // replicas get SAME-LENGTH suffixes, so token statistics stay
     // isomorphic across the whole corpus at any tier)

@@ -268,8 +268,8 @@ object AnnIndex {
     * (nProbe = nCells) refined mining reads **0.97** where unrefined
     * reads 0.76. So: spend `nProbe` on pool width (tune it with
     * [[Ivf.autoTuneNProbe]]), keep `widen` ≈ 4. Probe wall with
-    * persisted codes stays ProbeBench-class (2.0–2.2 s at 100× vs
-    * 0.85–1.5 s unrefined).
+    * persisted codes stays flat (2.0–2.2 s at 100× vs 0.85–1.5 s
+    * unrefined; the probe-only record in SURVEY.md).
     */
   def probeRefined(state: State, queries: DataFrame, vecCol: String,
       queryIdCol: String, k: Int = 10, nProbe: Int = 4,

@@ -670,29 +670,16 @@ object Dedup {
   final case class MinhashState(sets: DataFrame, buckets: DataFrame,
       params: MinhashParams)
 
-  /** Build (or rebuild) the dedup state for a document set. */
-  def minhashState(
-      df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
-      maxBucket: Int = 1000,
-      route: Option[CharGramRouting] = None): MinhashState = {
-    val sets = shingleHashSets(df, idCol, textCol, shingleK, route)
-    val buckets = dropOversizedBuckets(
-      bandBuckets(signatureOf(sets, idCol, numHashes), idCol, numHashes, bands),
-      maxBucket)
-    MinhashState(sets, buckets, MinhashParams(numHashes, bands, shingleK, route))
-  }
-
-  /** [[minhashState]] with both frames eagerly `localCheckpoint`'ed and
-    * the buckets DERIVED from the already-checkpointed sets — exactly one
-    * shingle/signature pass over `df` no matter how many consumers read
-    * the frames afterwards. The streaming-ingest shape: the same
-    * checkpointed pair serves the intra-batch verify, the corpus-probe
-    * banding AND the accumulating index, where the lazy [[minhashState]]
-    * would re-execute its feature pass per action (measured: three
-    * passes per micro-batch in the q71 driver before this existed).
+  /** Build (or rebuild) the dedup state for a document set, both frames
+    * eagerly `localCheckpoint`'ed and the buckets DERIVED from the
+    * already-checkpointed sets — exactly one shingle/signature pass over
+    * `df` no matter how many consumers read the frames afterwards. The
+    * streaming-ingest shape: the same checkpointed pair serves the
+    * intra-batch verify, the corpus-probe banding AND the accumulating
+    * index, where a lazy state would re-execute its feature pass per
+    * action (measured: three passes per micro-batch in q71).
     */
-  def minhashStateCheckpointed(
+  def minhashState(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
       maxBucket: Int = 1000,
@@ -706,10 +693,10 @@ object Dedup {
   }
 
   /** Dedup `incoming` given its PRECOMPUTED state (one feature pass,
-    * shared with indexing — see [[minhashStateCheckpointed]]) against an
-    * optional standing corpus: canonical keep-first, identical results to
-    * [[minhashDedup]] (corpusState = None) / [[minhashDedupAgainst]]
-    * (corpusState = Some) — asserted in DedupSpec.
+    * shared with indexing — see [[minhashState]]) against an optional
+    * standing corpus: canonical keep-first, identical results to
+    * [[minhashDedup]] over the id-ordered union (corpus ids below the
+    * increment's) — asserted in DedupSpec.
     */
   def minhashDedupWithState(
       incoming: DataFrame, incState: MinhashState,
@@ -755,14 +742,20 @@ object Dedup {
     * half of the incremental-dedup contract. Saving into the directory the
     * state was loaded from is safe: the save writes a fresh version and
     * a crash between the two parquet writes leaves the previous state
-    * served.
+    * served. The manifest is the state's own `params`; `params` must
+    * equal them, so a state is never saved under another label.
     */
   def saveMinhashState(
-      state: MinhashState, dir: String, params: MinhashParams): Unit =
-    StateStore.save(dir, params.encoded) { v =>
+      state: MinhashState, dir: String, params: MinhashParams): Unit = {
+    require(params == state.params,
+      s"saving a minhash state built with [${state.params.encoded}] " +
+        s"under [${params.encoded}] — a probe trusting the label would " +
+        "never match its buckets")
+    StateStore.save(dir, state.params.encoded) { v =>
       state.sets.write.parquet(s"$v/sets")
       state.buckets.write.parquet(s"$v/buckets")
     }
+  }
 
   /** Load a [[MinhashState]] previously written by [[saveMinhashState]].
     * Returns None when no state was ever committed at `dir`. Fails loudly
@@ -781,29 +774,19 @@ object Dedup {
     * `incoming` that near-duplicate (exact-verified jaccard >= threshold)
     * ANY corpus row ("corpus wins" — the existing corpus is never
     * touched), or an earlier-id row of `incoming` itself (canonical-min-id
-    * within the batch). Only the increment's sets/buckets are computed
-    * here; the corpus side comes from `corpusState` — persist it once via
-    * [[minhashState]] and re-load per increment.
+    * within the batch). Only the increment's state is computed here, with
+    * the signature pipeline of `corpusState.params` (mismatched parameters
+    * never bucket-collide); persist the corpus state once via
+    * [[minhashState]] and re-load it per increment.
     */
   def minhashDedupAgainst(
       incoming: DataFrame, corpusState: MinhashState, idCol: String,
       textCol: String, threshold: Double, maxBucket: Int): DataFrame = {
-    // the increment's signature pipeline derives FROM THE STATE's params
-    // (its scaladoc contract): hashes/banding/shingling/routing from
-    // mismatched parameters never bucket-collide correctly, so per-call
-    // arguments were a silent-no-match hazard (ADVICE r15)
     val p = corpusState.params
-    val inc = minhashState(incoming, idCol, textCol, p.numHashes, p.bands,
-      p.shingleK, maxBucket, p.route)
-    val candCross = inc.buckets.select(col("band"), col("bh"), col(idCol).as("id_l"))
-      .join(corpusState.buckets.select(col("band"), col("bh"), col(idCol).as("id_r")),
-        Seq("band", "bh"))
-      .select("id_l", "id_r").distinct()
-    val dropVsCorpus = verifyJaccard(candCross, inc.sets, corpusState.sets,
-      idCol, threshold).select(col("id_l").as(idCol))
-    val dropIntra = verifyJaccard(pairsFromSizedBuckets(inc.buckets, idCol),
-      inc.sets, idCol, threshold).select(col("id_r").as(idCol))
-    incoming.join(dropVsCorpus.union(dropIntra).distinct(), Seq(idCol), "left_anti")
+    minhashDedupWithState(incoming,
+      minhashState(incoming, idCol, textCol, p.numHashes, p.bands,
+        p.shingleK, maxBucket, p.route),
+      Some(corpusState), idCol, threshold)
   }
 
   /** Convenience overload computing the corpus state inline — fine for
@@ -1967,17 +1950,14 @@ object Dedup {
   def containmentProbeAdvisor(
       incoming: DataFrame, state: ContainmentState,
       idCol: String, textCol: String,
-      tau: Double = 0.9, shingleK: Int = 0,
+      tau: Double = 0.9,
       maxCandidates: Long = 100000000L): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, "tau must be in (0, 1]")
     require(maxCandidates >= 1, "maxCandidates must be at least 1")
     // shingling from the state (the containmentProbe contract) so the
     // advisor measures exactly the mass the probe it advises would run
-    require(shingleK == 0 || shingleK == state.shingleK,
-      s"advisor shingleK=$shingleK but the state was built with " +
-        s"shingleK=${state.shingleK} — pass 0 (or omit) to use the state's")
-    val inc = portableSets(incoming, idCol, textCol, state.shingleK,
-      state.route)
+    val inc = portableSets(incoming, idCol, textCol, state.params.shingleK,
+      state.params.route)
     prefixMassReport(
       containmentPrefix(inc, state.dfreq, tau), maxCandidates)
   }
@@ -2037,18 +2017,49 @@ object Dedup {
     * documents appended since `dfreq` was last built and persists with
     * the state.
     *
-    * `shingleK` and `route` ride IN the state (the [[ResemblanceState]]
-    * convention, round 16): probes and appends derive their shingling
-    * from the state instead of per-call arguments — a mismatched re-pass
-    * would build gram sets that never intersect the state's and silently
-    * pass every duplicate, the exact failure mode the persisted-state
-    * manifests guard against on disk. `shingleK`/`route` carry no
-    * defaults for the [[MinhashState]] reason: frames built elsewhere
-    * must be labeled with their true parameters.
+    * `params` (shingling and routing) ride IN the state (the
+    * [[MinhashState]] convention): probes, appends and saves derive
+    * their shingling and manifest from the state instead of per-call
+    * arguments — a mismatched re-pass would build gram sets that never
+    * intersect the state's and silently pass every duplicate, the exact
+    * failure mode the persisted-state manifests guard against on disk.
     */
   final case class ContainmentState(
       sets: DataFrame, dfreq: DataFrame, staleDocs: Long,
-      shingleK: Int, route: Option[CharGramRouting])
+      params: ContainmentParams)
+
+  /** What [[guardedAppend]] returns: the unioned sets, the batch's new
+    * rows, the advanced drift counter and whether it crossed the refresh
+    * threshold (the counter then reads 0: the caller rebuilds its
+    * df-derived frames).
+    */
+  private final case class Appended(
+      sets: DataFrame, inc: DataFrame, staleDocs: Long, refresh: Boolean)
+
+  /** The retry-safe step both appends share: shingle `incoming` under the
+    * state's parameters, drop ids the state already holds (the KEEP-FIRST
+    * guard of [[appendContainmentState]]), union and checkpoint, and
+    * advance the drift counter against `refreshDfreqAbove`.
+    */
+  private def guardedAppend(
+      sets: DataFrame, staleDocs: Long, incoming: DataFrame,
+      idCol: String, textCol: String, shingleK: Int,
+      route: Option[CharGramRouting],
+      refreshDfreqAbove: Double): Appended = {
+    require(refreshDfreqAbove >= 0.0, "refreshDfreqAbove must be >= 0")
+    // checkpoint the BATCH (post-guard) first: the union materialization
+    // and the batch count below both read the stored blocks — without
+    // this the incoming shingle pipeline (scan + tokenize + md5 +
+    // groupBy + anti-join) would execute twice per append
+    val inc = portableSets(incoming, idCol, textCol, shingleK, route)
+      .join(sets.select(col("doc")), Seq("doc"), "left_anti")
+      .localCheckpoint(true)
+    val all = sets.unionByName(inc).localCheckpoint(true)
+    val nTotal = all.count()
+    val stale = staleDocs + inc.count()
+    val refresh = nTotal > 0 && stale.toDouble / nTotal > refreshDfreqAbove
+    Appended(all, inc, if (refresh) 0L else stale, refresh)
+  }
 
   /** Append an arriving batch to a standing [[ContainmentState]] — the
     * O(batch + union) ingest step of the containment screen. `dfreq` is
@@ -2077,31 +2088,13 @@ object Dedup {
     */
   def appendContainmentState(
       state: ContainmentState, incoming: DataFrame,
-      idCol: String, textCol: String, shingleK: Int = 0,
+      idCol: String, textCol: String,
       refreshDfreqAbove: Double = 0.2): ContainmentState = {
-    require(refreshDfreqAbove >= 0.0, "refreshDfreqAbove must be >= 0")
-    // shingling derives FROM THE STATE (its scaladoc contract); an
-    // explicit shingleK is only accepted when it agrees — a mismatch
-    // must fail loudly, never shingle incompatibly
-    require(shingleK == 0 || shingleK == state.shingleK,
-      s"append shingleK=$shingleK but the state was built with " +
-        s"shingleK=${state.shingleK} — pass 0 (or omit) to use the state's")
-    // checkpoint the BATCH (post-guard) first: the union materialization
-    // and the batch count below both read the stored blocks — without
-    // this the incoming shingle pipeline (scan + tokenize + md5 +
-    // groupBy + anti-join) would execute twice per append
-    val inc = portableSets(incoming, idCol, textCol, state.shingleK,
-        state.route)
-      .join(state.sets.select(col("doc")), Seq("doc"), "left_anti")
-      .localCheckpoint(true)
-    val sets = state.sets.unionByName(inc).localCheckpoint(true)
-    val nTotal = sets.count()
-    val nInc = inc.count()
-    val stale = state.staleDocs + nInc
-    if (nTotal > 0 && stale.toDouble / nTotal > refreshDfreqAbove)
-      ContainmentState(sets, dfreqOf(sets).localCheckpoint(true), 0L,
-        state.shingleK, state.route)
-    else ContainmentState(sets, state.dfreq, stale, state.shingleK, state.route)
+    val a = guardedAppend(state.sets, state.staleDocs, incoming, idCol,
+      textCol, state.params.shingleK, state.params.route, refreshDfreqAbove)
+    ContainmentState(a.sets,
+      if (a.refresh) dfreqOf(a.sets).localCheckpoint(true) else state.dfreq,
+      a.staleDocs, state.params)
   }
 
   private def dfreqOf(sets: DataFrame): DataFrame =
@@ -2112,17 +2105,17 @@ object Dedup {
     * both frames eagerly checkpointed and the df frame DERIVED from the
     * already-checkpointed sets — exactly one shingle pass over the corpus
     * no matter how many probes consume the state afterwards (the
-    * [[minhashStateCheckpointed]] argument; a lazy state would re-shingle
-    * the corpus per probe action).
+    * [[minhashState]] argument; a lazy state would re-shingle the corpus
+    * per probe action).
     */
-  def containmentStateCheckpointed(
+  def containmentState(
       df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3,
       route: Option[CharGramRouting] = None): ContainmentState = {
     val sets = portableSets(df, idCol, textCol, shingleK, route)
       .localCheckpoint(true)
     ContainmentState(sets, dfreqOf(sets).localCheckpoint(true), 0L,
-      shingleK, route)
+      ContainmentParams(shingleK, route))
   }
 
   /** The parameters a persisted [[ContainmentState]] was built with —
@@ -2139,13 +2132,12 @@ object Dedup {
       route.map(_.encoded).getOrElse("")
   }
 
-  /** Persist a [[ContainmentState]] with its drift counter (the
-    * [[saveMinhashState]] contract: crash-safe, and safe to save into the
-    * directory the state was loaded from).
+  /** Persist a [[ContainmentState]] under its own params with its drift
+    * counter (the [[saveMinhashState]] contract: crash-safe, and safe to
+    * save into the directory the state was loaded from).
     */
-  def saveContainmentState(
-      state: ContainmentState, dir: String, params: ContainmentParams): Unit =
-    StateStore.save(dir, params.encoded, state.staleDocs) { v =>
+  def saveContainmentState(state: ContainmentState, dir: String): Unit =
+    StateStore.save(dir, state.params.encoded, state.staleDocs) { v =>
       state.sets.write.parquet(s"$v/sets")
       state.dfreq.write.parquet(s"$v/dfreq")
     }
@@ -2160,8 +2152,7 @@ object Dedup {
     StateStore.load(dir, Seq("sets", "dfreq"), "containment state",
         expect.encoded, "shingles would never match").map { v =>
       ContainmentState(loadStateFrame(spark, v.part("sets")),
-        loadStateFrame(spark, v.part("dfreq")), v.counter,
-        expect.shingleK, expect.route)
+        loadStateFrame(spark, v.part("dfreq")), v.counter, expect)
     }
 
   /** Containment probe of an ARRIVING batch against a standing corpus —
@@ -2184,24 +2175,20 @@ object Dedup {
   def containmentProbe(
       incoming: DataFrame, state: ContainmentState,
       idCol: String, textCol: String,
-      tau: Double = 0.9, shingleK: Int = 0,
+      tau: Double = 0.9,
       maxDf: Long = Long.MaxValue,
       broadcastBudget: Option[Long] = None): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, "tau must be in (0, 1]")
     require(maxDf >= 1, "maxDf must be at least 1")
     // incoming shingles under the STATE's shingleK and routing (its
-    // scaladoc contract — a mismatched re-pass silently finds nothing);
-    // an explicit shingleK is accepted only when it agrees, 0 = derive
-    require(shingleK == 0 || shingleK == state.shingleK,
-      s"probe shingleK=$shingleK but the state was built with " +
-        s"shingleK=${state.shingleK} — pass 0 (or omit) to use the state's")
-    val inc = portableSets(incoming, idCol, textCol, state.shingleK,
-        state.route)
+    // scaladoc contract — a mismatched re-pass silently finds nothing)
+    val inc = portableSets(incoming, idCol, textCol, state.params.shingleK,
+        state.params.route)
       .localCheckpoint() // feeds the prefix pass and the verify side once
     // corpus-sized frames come FROM THE STATE as built: per-call work is
     // batch-sized only — a streaming screen must never re-checkpoint the
     // corpus sets or re-aggregate corpus-wide df per micro-batch (pass a
-    // containmentStateCheckpointed / loaded state)
+    // built or loaded containmentState)
     val hosts = state.sets.select(col("doc").as("host"), col("toks"))
     val postings = hosts.select(col("host"), explode(col("toks")).as("token"))
     // shared rarest-first prefix against the STANDING df (see
@@ -2218,8 +2205,9 @@ object Dedup {
     // ever be SCANNED per probe, never shuffled — without the hints
     // Spark plans sort-merge joins that exchange the whole standing
     // corpus per batch, and the probe wall grows super-linearly in
-    // corpus size at fixed width (ProbeBench measured 4.9x time on 2.5x
-    // corpus; with the hints the fixed-increment probe curve is flat).
+    // corpus size at fixed width (measured 4.9x time on 2.5x corpus;
+    // with the hints the fixed-increment probe curve is flat — the
+    // probe-only scaling record in SURVEY.md).
     // The gate is the advisor's own cost model evaluated on the frames
     // in hand (prefix rows for the prefix side, sum-of-df x batch array
     // bytes for the verify side): an UNCONDITIONAL hint OOMs the driver
@@ -2294,13 +2282,13 @@ object Dedup {
     * all computed once and persisted. The prefix lives in the state
     * because the symmetric filter needs prefixes on BOTH join sides —
     * rebuilding host prefixes per probe would re-aggregate the corpus
-    * inside every micro-batch. `threshold`/`shingleK` ride in the state
-    * so a probe can never run with mismatched parameters.
+    * inside every micro-batch. `params` (threshold, shingling, routing)
+    * ride in the state so a probe can never run with mismatched
+    * parameters.
     */
   final case class ResemblanceState(
       sets: DataFrame, dfreq: DataFrame, prefix: DataFrame,
-      threshold: Double, shingleK: Int, staleDocs: Long = 0L,
-      route: Option[CharGramRouting] = None)
+      params: ResemblanceParams, staleDocs: Long = 0L)
 
   /** Append an arriving batch of HOSTS to a standing
     * [[ResemblanceState]] — the ingest step of the exact-resemblance
@@ -2327,36 +2315,26 @@ object Dedup {
       state: ResemblanceState, incoming: DataFrame,
       idCol: String, textCol: String,
       refreshDfreqAbove: Double = 0.2): ResemblanceState = {
-    require(refreshDfreqAbove >= 0.0, "refreshDfreqAbove must be >= 0")
-    // batch checkpoints (post-guard) first: union, prefix build and
-    // count all read the stored blocks (the appendContainmentState
-    // argument)
-    val inc = portableSets(incoming, idCol, textCol, state.shingleK,
-        state.route)
-      .join(state.sets.select(col("doc")), Seq("doc"), "left_anti")
-      .localCheckpoint(true)
-    val sets = state.sets.unionByName(inc).localCheckpoint(true)
-    val nTotal = sets.count()
-    val stale = state.staleDocs + inc.count()
-    if (nTotal > 0 && stale.toDouble / nTotal > refreshDfreqAbove) {
-      val dfreq = dfreqOf(sets).localCheckpoint(true)
-      ResemblanceState(sets, dfreq,
-        jaccardPrefix(sets, dfreq, state.threshold).localCheckpoint(true),
-        state.threshold, state.shingleK, 0L, state.route)
+    val p = state.params
+    val a = guardedAppend(state.sets, state.staleDocs, incoming, idCol,
+      textCol, p.shingleK, p.route, refreshDfreqAbove)
+    if (a.refresh) {
+      val dfreq = dfreqOf(a.sets).localCheckpoint(true)
+      ResemblanceState(a.sets, dfreq,
+        jaccardPrefix(a.sets, dfreq, p.threshold).localCheckpoint(true), p)
     } else
-      ResemblanceState(sets, state.dfreq,
-        state.prefix.unionByName(
-          jaccardPrefix(inc, state.dfreq, state.threshold))
+      ResemblanceState(a.sets, state.dfreq,
+        state.prefix.unionByName(jaccardPrefix(a.inc, state.dfreq, p.threshold))
           .localCheckpoint(true),
-        state.threshold, state.shingleK, stale, state.route)
+        p, a.staleDocs)
   }
 
   /** Build the resemblance state with every corpus-sized frame eagerly
     * checkpointed and derived frames built FROM the checkpointed sets —
     * exactly one shingle pass over the corpus no matter how many probes
-    * consume the state (the [[containmentStateCheckpointed]] argument).
+    * consume the state (the [[containmentState]] argument).
     */
-  def resemblanceStateCheckpointed(
+  def resemblanceState(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.6, shingleK: Int = 3,
       route: Option[CharGramRouting] = None): ResemblanceState = {
@@ -2367,7 +2345,7 @@ object Dedup {
     val dfreq = dfreqOf(sets).localCheckpoint(true)
     ResemblanceState(sets, dfreq,
       jaccardPrefix(sets, dfreq, threshold).localCheckpoint(true),
-      threshold, shingleK, route = route)
+      ResemblanceParams(threshold, shingleK, route))
   }
 
   /** Parameters a persisted [[ResemblanceState]] was built with — the
@@ -2390,9 +2368,7 @@ object Dedup {
     * contract).
     */
   def saveResemblanceState(state: ResemblanceState, dir: String): Unit =
-    StateStore.save(dir,
-        ResemblanceParams(state.threshold, state.shingleK, state.route).encoded,
-        state.staleDocs) { v =>
+    StateStore.save(dir, state.params.encoded, state.staleDocs) { v =>
       state.sets.write.parquet(s"$v/sets")
       state.dfreq.write.parquet(s"$v/dfreq")
       state.prefix.write.parquet(s"$v/prefix")
@@ -2410,8 +2386,7 @@ object Dedup {
       .map { v =>
         ResemblanceState(loadStateFrame(spark, v.part("sets")),
           loadStateFrame(spark, v.part("dfreq")),
-          loadStateFrame(spark, v.part("prefix")),
-          expect.threshold, expect.shingleK, v.counter, expect.route)
+          loadStateFrame(spark, v.part("prefix")), expect, v.counter)
       }
 
   /** EXACT-Jaccard probe of an ARRIVING batch against a standing corpus
@@ -2442,13 +2417,13 @@ object Dedup {
     // incoming shingles under the STATE's routing — routed and unrouted
     // gram sets never intersect correctly, so the choice is a state
     // parameter, not a call-site one
-    val inc = portableSets(incoming, idCol, textCol, state.shingleK,
-        state.route)
+    val p = state.params
+    val inc = portableSets(incoming, idCol, textCol, p.shingleK, p.route)
       .localCheckpoint() // feeds the prefix pass and the verify side once
     // checkpointed: the size-gate stats and the candidate join both
     // consume it (the containmentProbe argument)
     val incPrefix = capPrefix(
-      jaccardPrefix(inc, state.dfreq, state.threshold), maxDf)
+      jaccardPrefix(inc, state.dfreq, p.threshold), maxDf)
       .select(col("doc").as("din"), col("sz").as("__szi"), col("token"),
         col("__df"))
       .localCheckpoint()
@@ -2475,8 +2450,8 @@ object Dedup {
     val cand = (if (bcast) broadcast(incJoin) else incJoin)
       .join(hostPrefix, Seq("token"))
       .where(col("din") =!= col("host") &&
-        lit(state.threshold) * col("__szi") <= col("__szh") &&
-        lit(state.threshold) * col("__szh") <= col("__szi"))
+        lit(p.threshold) * col("__szi") <= col("__szh") &&
+        lit(p.threshold) * col("__szh") <= col("__szi"))
       .select(col("din"), col("host")).distinct()
     // broadcast mode streams the STANDING sets scan through the verify
     // join, so the intersects run at the state's parquet split count —
@@ -2493,7 +2468,7 @@ object Dedup {
       .withColumn("__ic", graft.expressions.SortedIntersect.sortedIntersectCount(col("__ti"), col("__th")))
       .withColumn("__jac", col("__ic").cast("double") /
         (size(col("__ti")) + size(col("__th")) - col("__ic")))
-      .where(col("__jac") >= state.threshold)
+      .where(col("__jac") >= p.threshold)
       .select(col("din").as("id_in"), col("host").as("id_host"),
         size(col("__ti")).cast("long").as("sz_in"),
         size(col("__th")).cast("long").as("sz_host"),

@@ -1137,12 +1137,11 @@ object DedupQueries extends Family {
       val stateDir = graft.io.TextTables.scratchDir("resemb_state", d,
         graft.io.TextTables.sourceFingerprint(s"$d/documents.parquet")
           + ";" + params.encoded)
-      new java.io.File(stateDir).mkdirs()
-      val state = Dedup.loadResemblanceState(s, stateDir, params).getOrElse {
+      val state = loadOrBuild(stateDir)(
+          Dedup.loadResemblanceState(s, stateDir, params)) {
         Dedup.saveResemblanceState(
-          Dedup.resemblanceStateCheckpointed(fanOut(s, standing, "doc_id"),
+          Dedup.resemblanceState(fanOut(s, standing, "doc_id"),
             "doc_id", "text", threshold = 0.6, shingleK = 3), stateDir)
-        Dedup.loadResemblanceState(s, stateDir, params).get
       }
       Dedup.jaccardProbe(fanOut(s, incoming, "doc_id"), state,
           "doc_id", "text")
@@ -1170,12 +1169,11 @@ object DedupQueries extends Family {
       val stateDir = graft.io.TextTables.scratchDir("resemb_state", d,
         graft.io.TextTables.sourceFingerprint(s"$d/documents.parquet")
           + ";" + params.encoded)
-      new java.io.File(stateDir).mkdirs()
-      val state = Dedup.loadResemblanceState(s, stateDir, params).getOrElse {
+      val state = loadOrBuild(stateDir)(
+          Dedup.loadResemblanceState(s, stateDir, params)) {
         Dedup.saveResemblanceState(
-          Dedup.resemblanceStateCheckpointed(standing, "doc_id", "text",
+          Dedup.resemblanceState(standing, "doc_id", "text",
             threshold = 0.6, shingleK = 3), stateDir)
-        Dedup.loadResemblanceState(s, stateDir, params).get
       }
       val name = s"graft_stream_resemb_p_${streamCounter.incrementAndGet()}"
       CorpusStreams.resemblanceProbeStreaming(s, staged, "doc_id", "text",
@@ -1762,7 +1760,7 @@ object DedupQueries extends Family {
       // naive incoming x standing enumeration the prefix join must
       // reproduce exactly
       val (standing, incoming) = resemblanceSlices(s, d)
-      val state = Dedup.resemblanceStateCheckpointed(
+      val state = Dedup.resemblanceState(
         fanOut(s, standing, "doc_id"), "doc_id", "text",
         threshold = 0.6, shingleK = 3)
       Dedup.jaccardProbe(fanOut(s, incoming, "doc_id"), state,
@@ -1793,12 +1791,11 @@ object DedupQueries extends Family {
       val stateDir = graft.io.TextTables.scratchDir("resemb_state", d,
         graft.io.TextTables.sourceFingerprint(s"$d/documents.parquet")
           + ";" + params.encoded)
-      new java.io.File(stateDir).mkdirs()
-      val state = Dedup.loadResemblanceState(s, stateDir, params).getOrElse {
+      val state = loadOrBuild(stateDir)(
+          Dedup.loadResemblanceState(s, stateDir, params)) {
         Dedup.saveResemblanceState(
-          Dedup.resemblanceStateCheckpointed(standing, "doc_id", "text",
+          Dedup.resemblanceState(standing, "doc_id", "text",
             threshold = 0.6, shingleK = 3), stateDir)
-        Dedup.loadResemblanceState(s, stateDir, params).get
       }
       val name = s"graft_stream_resemb_${streamCounter.incrementAndGet()}"
       CorpusStreams.resemblanceProbeStreaming(s, staged, "doc_id", "text",
@@ -2079,10 +2076,9 @@ object DedupQueries extends Family {
             array_join(slice(text.tokens(col("text")), 1, 40), " ").as("text")))
       // checkpointed state: one shingle pass + one df aggregation total,
       // shared by the prefix, candidate and verify consumers
-      val state = Dedup.containmentStateCheckpointed(
+      val state = Dedup.containmentState(
         standing, "doc_id", "text", shingleK = 3)
-      Dedup.containmentProbe(incoming, state, "doc_id", "text",
-          tau = 0.8, shingleK = 3)
+      Dedup.containmentProbe(incoming, state, "doc_id", "text", tau = 0.8)
         .orderBy("id_in", "id_host")
     }, oracle = Some(
       // the naive incoming-x-standing enumeration (every cross pair
@@ -2107,11 +2103,11 @@ object DedupQueries extends Family {
       incoming.repartition(2).write.mode("overwrite").parquet(staged)
       // checkpointed state: the corpus sets AND df materialize once; every
       // micro-batch probe re-reads the frames instead of re-shingling
-      val state = Dedup.containmentStateCheckpointed(
+      val state = Dedup.containmentState(
         standing, "doc_id", "text", shingleK = 3)
       val name = s"graft_stream_contain_${streamCounter.incrementAndGet()}"
       CorpusStreams.containmentProbeStreaming(s, staged, "doc_id", "text",
-          state, tau = 0.8, shingleK = 3, name, shufflePartitions = Some(4),
+          state, tau = 0.8, name, shufflePartitions = Some(4),
           batchAdaptive = Some(false))
         .orderBy("id_in", "id_host")
     }, oracle = Some(

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** The few helpers several query families use: fixture-table reads, the
   * bench-shape scan fan-out, exact sums and timestamp literals, the
-  * stopword literal for oracle SQL and the stream-name counter.
+  * stopword literal for oracle SQL, the stream-name counter and the
+  * load-or-build step of query-owned persisted states.
   *
   * Numeric-parity convention: any SUM over doubles goes through
   * `CAST(x AS DECIMAL(18,k))` and the exact decimal sum is cast back to
@@ -64,4 +65,29 @@ object Shared {
   private[graft] def ts(lit0: String): Column = lit(lit0).cast("timestamp")
 
   private[graft] val streamCounter = new AtomicInteger(0)
+
+  /** The state a query keeps in its own scratch dir `dir` (a
+    * [[graft.io.TextTables.scratchDir]] salted by the source fingerprint
+    * and the state's params): `load` it, or on a miss clear `dir`, run
+    * `buildAndSave` and load again. The clear drops whatever an older
+    * on-disk layout left there, which the state store never deletes
+    * itself; a dir still holding that layout's manifest (`_GRAFT_STATE`)
+    * counts as a miss, so it is cleared once even where a store version
+    * was committed beside it. A state that does not read back right
+    * after its save is an error naming `dir`, not a bare `None.get`
+    * after the full build.
+    */
+  private[graft] def loadOrBuild[S](dir: String)(load: => Option[S])(
+      buildAndSave: => Unit): S = {
+    val root = new java.io.File(dir)
+    val hit = if (new java.io.File(root, "_GRAFT_STATE").exists()) None else load
+    hit.getOrElse {
+      org.apache.commons.io.FileUtils.deleteDirectory(root)
+      buildAndSave
+      load.getOrElse(throw new IllegalStateException(
+        s"state at $dir did not read back complete right after save — " +
+          "check that parquet writes produce _SUCCESS markers " +
+          "(mapreduce.fileoutputcommitter.marksuccessfuljobs)"))
+    }
+  }
 }

@@ -67,18 +67,11 @@ object SimilarityQueries extends Family {
       refineDim = 64)
     val stateDir = graft.io.TextTables.scratchDir("ann_index", d,
       fp + ";" + params.encoded)
-    new java.io.File(stateDir).mkdirs()
-    val state = graft.ext.AnnIndex.load(s, stateDir, params).getOrElse {
+    val state = loadOrBuild(stateDir)(
+        graft.ext.AnnIndex.load(s, stateDir, params)) {
       graft.ext.AnnIndex.save(s,
         graft.ext.AnnIndex.buildPortable(standing, "vec_id", "embedding",
           m = 8, c = 16, nCells = Some(nCells), refineDim = 64), stateDir)
-      graft.ext.AnnIndex.load(s, stateDir, params).getOrElse(
-        // a bare .get would die as "None.get" AFTER paying the full
-        // encode+persist — name the dir and the likely cause instead
-        throw new IllegalStateException(
-          s"ann index at $stateDir did not read back complete right " +
-            "after save — check that parquet writes produce _SUCCESS " +
-            "markers (mapreduce.fileoutputcommitter.marksuccessfuljobs)"))
     }
     standingIndexMemo.put(memoKey, (params, stateDir, standingN))
     (state, standingN)
@@ -378,7 +371,7 @@ $fin"""
     * the measured-knee nProbe = 4, the ADC shortlist reranks EXACTLY by
     * cosine ([[Similarity.shortlistRerankTopK]]), and RRF fuses that
     * ranking with BM25 — hybrid retrieval inherits the index's flat
-    * probe wall (ProbeBench) instead of q310's corpus-sized brute-force
+    * probe wall (SURVEY.md) instead of q310's corpus-sized brute-force
     * stream. Self-exclusion stays OFF: retrieval query ids (1..3) live
     * in a different id space than doc ids (the q310 caveat).
     */

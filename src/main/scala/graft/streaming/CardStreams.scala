@@ -50,7 +50,6 @@ object CardStreams {
       groupCol: String = "source", textCol: String = "text",
       minStopwords: Int = 1,
       shufflePartitions: Option[Int] = None,
-      rocksdbState: Boolean = false,
       checkpointDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
     val stream = StagedStream.staged(spark, stagedDir)
@@ -71,8 +70,8 @@ object CardStreams {
       "streaming data card", params, "counters would mix two card definitions"))
     var state: Option[DataFrame] = loaded.map(v => spark.read.parquet(v.part("card")))
     var lastApplied: Long = loaded.fold(-1L)(_.counter)
-    StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
-        batchAdaptive, checkpointDir, persistBatch = false) { (batch, batchId) =>
+    StagedStream.foreachStaged(stream, shufflePartitions, batchAdaptive,
+        checkpointDir, persistBatch = false) { (batch, batchId) =>
       stateLock.synchronized {
         // a replayed batch (crash between persist and offset commit)
         // is already inside the persisted counters: skip it

@@ -11,7 +11,7 @@ import graft.ext.Dedup
 
 /** Continuous corpus ingestion with streaming near-duplicate removal: each
   * micro-batch of documents is deduplicated against the standing corpus
-  * index (and itself) with [[Dedup.minhashDedupAgainst]], then the batch is
+  * index (and itself) with [[Dedup.minhashDedupWithState]], then the batch is
   * added to the index — the streaming shape of the daily-increment workflow.
   *
   * Design invariant (batch-boundary invariance): the index accumulates the
@@ -34,6 +34,12 @@ import graft.ext.Dedup
   * end through the crash-safe [[graft.io.StateStore]].
   */
 object CorpusStreams {
+
+  /** Batches between collapses of a streamed dedup's accumulated state
+    * into fresh checkpointed leaves: the union tree's plan depth, and so
+    * the per-batch analysis cost, stays bounded by this constant.
+    */
+  private val CollapseEvery = 8
 
   /** Stage a parquet table as an ordered sequence of single-file batches cut
     * at `cuts` (exclusive upper bounds) of `idCol`: batch i holds rows in
@@ -117,13 +123,11 @@ object CorpusStreams {
       spark: SparkSession, stagedDir: String, idCol: String, textCol: String,
       threshold: Double = 0.7, numHashes: Int = 64, bands: Int = 16,
       shingleK: Int = 3, maxBucket: Int = 1000,
-      checkpointEvery: Int = 8, sinkDir: Option[String] = None,
+      sinkDir: Option[String] = None,
       shufflePartitions: Option[Int] = None,
       stateDir: Option[String] = None,
-      rocksdbState: Boolean = false,
       checkpointDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    require(checkpointEvery > 0, "checkpointEvery must be positive")
     val stream = StagedStream.staged(spark, stagedDir)
     val params = Dedup.MinhashParams(numHashes, bands, shingleK)
     // `state` is written from the micro-batch thread and read from the
@@ -136,15 +140,15 @@ object CorpusStreams {
     }
     var batchesSinceCheckpoint = 0
     val sink = StagedStream.sinkOrTemp(sinkDir, "graft_corpus_survivors")
-    StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
-        batchAdaptive, checkpointDir) { (b, _) =>
+    StagedStream.foreachStaged(stream, shufflePartitions, batchAdaptive,
+        checkpointDir) { (b, _) =>
       stateLock.synchronized {
         // ONE feature pass per batch: the eagerly-checkpointed state
         // serves the dedup verify, the corpus probe AND the index
         // (checkpointing is also required anyway — the batch frame is
         // only valid inside this callback)
-        val incCk = Dedup.minhashStateCheckpointed(b, idCol,
-          textCol, numHashes, bands, shingleK, maxBucket)
+        val incCk = Dedup.minhashState(b, idCol, textCol, numHashes,
+          bands, shingleK, maxBucket)
         val kept = Dedup.minhashDedupWithState(b, incCk, state,
           idCol, threshold)
         // executor-side append; survivor ids never touch the driver
@@ -158,9 +162,9 @@ object CorpusStreams {
         // the accumulated index is a left-deep union of checkpointed
         // leaves; the UNION's plan depth still grows with batch count, so
         // collapse it to a fresh pair of flat leaves every few batches —
-        // keeps per-batch analysis cost O(checkpointEvery), not O(#batches)
+        // keeps per-batch analysis cost O(CollapseEvery), not O(#batches)
         batchesSinceCheckpoint += 1
-        if (batchesSinceCheckpoint >= checkpointEvery) {
+        if (batchesSinceCheckpoint >= CollapseEvery) {
           state = state.map(st => Dedup.MinhashState(
             st.sets.localCheckpoint(true), st.buckets.localCheckpoint(true),
             st.params))
@@ -169,7 +173,7 @@ object CorpusStreams {
       }
     }
     stateLock.synchronized {
-      for (dir <- stateDir; st <- state) Dedup.saveMinhashState(st, dir, params)
+      for (dir <- stateDir; st <- state) Dedup.saveMinhashState(st, dir, st.params)
     }
     spark.read.parquet(sink)
   }
@@ -196,7 +200,7 @@ object CorpusStreams {
     *
     * State is the distinct-`seg_h` frame — bounded by distinct segments
     * seen, not documents; localCheckpoint'ed leaves keep lineage flat and
-    * a `distinct()` collapse every `checkpointEvery` batches keeps the
+    * a `distinct()` collapse every `CollapseEvery` (8) batches keeps the
     * union tree shallow. With `stateDir` the seen-hash set loads before
     * the run and persists after it through the shared state store
     * ([[graft.ext.Dedup.saveParagraphState]]) — two separate invocations
@@ -209,11 +213,10 @@ object CorpusStreams {
       spark: SparkSession, stagedDir: String, idCol: String, textCol: String,
       queryName: String,
       sepPattern: String = "\\. ", joinSep: String = ". ",
-      checkpointEvery: Int = 8, sinkDir: Option[String] = None,
+      sinkDir: Option[String] = None,
       shufflePartitions: Option[Int] = None,
       stateDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    require(checkpointEvery > 0, "checkpointEvery must be positive")
     val stream = StagedStream.staged(spark, stagedDir)
     val stateLock = new Object
     var seen: Option[DataFrame] = stateLock.synchronized {
@@ -233,7 +236,7 @@ object CorpusStreams {
           sepPattern).select(col("seg_h")).distinct().localCheckpoint()
         var merged = seen.fold(newHashes)(_.unionByName(newHashes))
         batchesSinceCollapse += 1
-        if (batchesSinceCollapse >= checkpointEvery) {
+        if (batchesSinceCollapse >= CollapseEvery) {
           merged = merged.distinct().localCheckpoint()
           batchesSinceCollapse = 0
         }
@@ -320,7 +323,7 @@ object CorpusStreams {
   def containmentProbeStreaming(
       spark: SparkSession, stagedDir: String, idCol: String, textCol: String,
       state: graft.ext.Dedup.ContainmentState,
-      tau: Double, shingleK: Int, queryName: String,
+      tau: Double, queryName: String,
       sinkDir: Option[String] = None,
       shufflePartitions: Option[Int] = None,
       maxDf: Long = Long.MaxValue,
@@ -330,7 +333,7 @@ object CorpusStreams {
     StagedStream.foreachStaged(stream, shufflePartitions,
         adaptive = batchAdaptive, queryName = Some(queryName)) { (b, _) =>
       graft.ext.Dedup.containmentProbe(b, state, idCol, textCol, tau,
-          shingleK, maxDf)
+          maxDf = maxDf)
         .write.mode("append").parquet(sink)
     }
     spark.read.parquet(sink)

@@ -50,7 +50,7 @@ object EventStreams {
     * 4e5 keys/partition -> 12.70 s vs 24.20 s. While state FITS IN HEAP
     * the default heap-map provider wins (mutating an in-memory map beats
     * RocksDB's native write + compaction path), which is why `rocksdbState`
-    * is an opt-in on every streaming driver rather than the default. The
+    * is an opt-in on every stateful streaming face rather than the default. The
     * crossover is a memory bound, not a speed curve: at 100 TB with
     * state larger than executor heap the heap provider OOMs and RocksDB
     * (disk-bounded, delta-checkpointed) is the setting to flip first.

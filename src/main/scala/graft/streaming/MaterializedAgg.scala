@@ -27,7 +27,6 @@ object MaterializedAgg {
       nCol: String = "n", sumCol: String = "sum_value",
       scale: Int = 4,
       shufflePartitions: Option[Int] = None,
-      rocksdbState: Boolean = false,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
     val stream = StagedStream.staged(spark, stagedDir)
     // written from the micro-batch thread, read from the caller thread after
@@ -37,8 +36,8 @@ object MaterializedAgg {
     var state: Option[DataFrame] = None
     // bounding partitions here shrinks the per-batch groups-sized shuffle
     // AND the localCheckpoint'ed state materialization (tasks per batch)
-    StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
-        batchAdaptive, persistBatch = false) { (added, _) =>
+    StagedStream.foreachStaged(stream, shufflePartitions, batchAdaptive,
+        persistBatch = false) { (added, _) =>
       stateLock.synchronized {
         val next = state match {
           case None =>

@@ -59,7 +59,6 @@ object QualityStreams {
   def gateStreaming(spark: SparkSession, stagedDir: String,
       rules: Seq[Expectations.Rule],
       shufflePartitions: Option[Int] = None,
-      rocksdbState: Boolean = false,
       passDir: Option[String] = None,
       quarantineDir: Option[String] = None,
       checkpointDir: Option[String] = None,
@@ -83,8 +82,8 @@ object QualityStreams {
     val metricsLock = new Object
     val ruleCounts = scala.collection.mutable.Map.empty[String, Long]
     rules.foreach(r => ruleCounts(r.name) = 0L)
-    StagedStream.foreachStaged(stream, shufflePartitions, rocksdbState,
-        batchAdaptive, checkpointDir) { (b, _) =>
+    StagedStream.foreachStaged(stream, shufflePartitions, batchAdaptive,
+        checkpointDir) { (b, _) =>
       val (pass, quarantine) = Expectations.split(b, rules)
       pass.write.mode("append").parquet(passSink)
       quarantine.write.mode("append").parquet(quarSink)

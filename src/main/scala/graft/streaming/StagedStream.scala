@@ -93,15 +93,19 @@ private[streaming] object StagedStream {
     * `persistBatch = false` hands the body the batch as it is: for a body
     * that reads the batch once, caching all of its columns costs more
     * than that one pruned read.
+    *
+    * There is no state-store choice here: a file source feeding
+    * `foreachBatch` has no stateful operator, so no state store is
+    * opened (the stateful faces run through [[toMemory]]).
     */
   def foreachStaged(stream: DataFrame, partitions: Option[Int],
-      rocksdb: Boolean = false, adaptive: Option[Boolean] = None,
+      adaptive: Option[Boolean] = None,
       checkpointDir: Option[String] = None,
       queryName: Option[String] = None,
       persistBatch: Boolean = true)(
       body: (DataFrame, Long) => Unit): Unit =
     EventStreams.withStatePartitions(stream.sparkSession, partitions,
-        rocksdb, adaptive) {
+        adaptive = adaptive) {
       val w = stream.writeStream
         .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
           if (!persistBatch) body(batch.toDF(), batchId)

@@ -652,6 +652,21 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
       s"q311 fusion sum not map-side partial:\n$plan")
   }
 
+  test("q311: the loaded IVF-PQ parts enter as widened checkpoints, " +
+      "never a raw index scan; no cartesian or nested-loop join") {
+    // the first run builds and saves the index (or loads one an earlier
+    // run saved), the second always loads it
+    finalPlan("q311_hybrid_indexed")
+    val plan = finalPlan("q311_hybrid_indexed")
+    assert(!plan.contains("CartesianProduct"),
+      s"q311 planned a cartesian product:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin"),
+      s"q311 planned a nested-loop join:\n$plan")
+    assert(plan.contains("ExistingRDD"), s"q311: no checkpointed index in:\n$plan")
+    assert(!plan.contains("graft_ann_index"),
+      s"q311 scans the persisted index raw:\n$plan")
+  }
+
   test("q277: the moment matrix is single-scan — one hash exchange like q150") {
     // ALL d(d+1)/2 moments ride ONE GramMoments buffer through ONE
     // groupBy exchange; the pair fan-out is a row-local explode of the

@@ -197,10 +197,10 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
       (id, r.shuffle(vocab).take(8).map(_ * 2).mkString(" ")) // doubled letters: disjoint vocab
     }
     val incoming = (quotes ++ fresh).toDF("doc_id", "text")
-    val state = Dedup.containmentStateCheckpointed(standing.toDF("doc_id", "text"),
+    val state = Dedup.containmentState(standing.toDF("doc_id", "text"),
       "doc_id", "text", shingleK = 1)
     val fast = Dedup.containmentProbe(incoming, state, "doc_id", "text",
-        tau = 0.8, shingleK = 1)
+        tau = 0.8)
       .select("id_in", "id_host").as[(Long, Long)].collect().toSet
     // brute force over word sets: every (incoming, standing) pair with
     // |I ∩ S| / |I| >= 0.8
@@ -220,14 +220,14 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     val dir = TempDirs.make("graft_cstate").toString
     val standing = Seq((1L, "a b c d e f"), (2L, "p q r s t"))
       .toDF("doc_id", "text")
-    val st = Dedup.containmentStateCheckpointed(standing, "doc_id", "text", shingleK = 1)
-    Dedup.saveContainmentState(st, dir, Dedup.ContainmentParams(1))
+    val st = Dedup.containmentState(standing, "doc_id", "text", shingleK = 1)
+    Dedup.saveContainmentState(st, dir)
     val loaded = Dedup.loadContainmentState(
       spark, dir, Dedup.ContainmentParams(1)).get
     val incoming = Seq((10L, "a b c d e")).toDF("doc_id", "text")
     def probe(s: Dedup.ContainmentState) =
       Dedup.containmentProbe(incoming, s, "doc_id", "text",
-          tau = 0.8, shingleK = 1)
+          tau = 0.8)
         .as[(Long, Long, Long, Long, Double)].collect().toSeq
     val fresh = probe(st)
     assert(fresh == Seq((10L, 1L, 5L, 5L, 1.0))) // 5-of-5 words in doc 1
@@ -242,27 +242,27 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
   test("appended state: stale df never changes probe RESULTS; drift refresh triggers") {
     val standing = Seq((1L, "a b c d e f"), (2L, "p q r s t"))
       .toDF("doc_id", "text")
-    val st0 = Dedup.containmentStateCheckpointed(standing, "doc_id", "text",
+    val st0 = Dedup.containmentState(standing, "doc_id", "text",
       shingleK = 1)
     // append a host whose vocabulary is ENTIRELY absent from the stale
     // dfreq (worst case for ordering: every token sorts at df 0), below
     // the refresh threshold so dfreq stays stale
     val batch = Seq((3L, "x y z w v u")).toDF("doc_id", "text")
     val appended = Dedup.appendContainmentState(st0, batch,
-      "doc_id", "text", shingleK = 1, refreshDfreqAbove = 0.9)
+      "doc_id", "text", refreshDfreqAbove = 0.9)
     assert(appended.staleDocs == 1L)
     assert(appended.dfreq.count() == st0.dfreq.count(), "dfreq must be reused")
     // the maintenance contract's proof obligation: results against the
     // stale-df state EQUAL results against a fresh rebuild — ordering
     // is a fan-out dial, the pigeonhole bound holds under any order
-    val fresh = Dedup.containmentStateCheckpointed(
+    val fresh = Dedup.containmentState(
       standing.unionByName(Seq((3L, "x y z w v u")).toDF("doc_id", "text")),
       "doc_id", "text", shingleK = 1)
     val incoming = Seq((10L, "x y z w v"), (11L, "a b c d e"))
       .toDF("doc_id", "text")
     def probe(s: Dedup.ContainmentState) =
       Dedup.containmentProbe(incoming, s, "doc_id", "text",
-          tau = 0.8, shingleK = 1)
+          tau = 0.8)
         .as[(Long, Long, Long, Long, Double)].collect().toSet
     val got = probe(appended)
     assert(got == probe(fresh), "stale df changed probe results")
@@ -272,7 +272,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     // no-op — no duplicated sets rows (which would double probe hits and
     // every refreshed df count), no drift-counter bump
     val replayed = Dedup.appendContainmentState(appended, batch,
-      "doc_id", "text", shingleK = 1, refreshDfreqAbove = 0.9)
+      "doc_id", "text", refreshDfreqAbove = 0.9)
     assert(replayed.sets.count() == appended.sets.count(),
       "replayed batch duplicated sets rows")
     assert(replayed.staleDocs == 1L)
@@ -281,12 +281,12 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     // docs... push with a bigger batch): dfreq rebuilds and resets
     val big = (20L to 40L).map(i => (i, s"m$i n$i")).toDF("doc_id", "text")
     val refreshed = Dedup.appendContainmentState(appended, big,
-      "doc_id", "text", shingleK = 1, refreshDfreqAbove = 0.9)
+      "doc_id", "text", refreshDfreqAbove = 0.9)
     assert(refreshed.staleDocs == 0L, "drift past threshold must rebuild")
     assert(refreshed.dfreq.count() > st0.dfreq.count())
     // staleDocs persists through disk round-trips
     val dir = TempDirs.make("graft_cstate_app").toString
-    Dedup.saveContainmentState(appended, dir, Dedup.ContainmentParams(1))
+    Dedup.saveContainmentState(appended, dir)
     val loaded = Dedup.loadContainmentState(
       spark, dir, Dedup.ContainmentParams(1)).get
     assert(loaded.staleDocs == 1L)
@@ -300,7 +300,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
         .mkString(" "))
     val standing = (1L to 30L).map(doc).toDF("doc_id", "text")
     val incoming = (101L to 125L).map(doc).toDF("doc_id", "text")
-    val st = Dedup.resemblanceStateCheckpointed(standing, "doc_id", "text",
+    val st = Dedup.resemblanceState(standing, "doc_id", "text",
       threshold = 0.5, shingleK = 1)
     def pairs(s: Dedup.ResemblanceState) =
       Dedup.jaccardProbe(incoming, s, "doc_id", "text")
@@ -321,7 +321,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     Dedup.saveResemblanceState(st, dir)
     val loaded = Dedup.loadResemblanceState(
       spark, dir, Dedup.ResemblanceParams(0.5, 1)).get
-    assert(loaded.threshold == 0.5 && loaded.shingleK == 1)
+    assert(loaded.params == Dedup.ResemblanceParams(0.5, 1))
     assert(pairs(loaded) == fast)
     intercept[IllegalArgumentException] {
       Dedup.loadResemblanceState(spark, dir, Dedup.ResemblanceParams(0.6, 1))
@@ -343,7 +343,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
       Seq((66L, "zz1 zz2 zz3 zz4"), (67L, "zz1 zz2 zz3 zz5"))
     val incoming = (101L to 115L).map(doc) ++
       Seq((116L, "zz1 zz2 zz3 zz4"))
-    val st0 = Dedup.resemblanceStateCheckpointed(
+    val st0 = Dedup.resemblanceState(
       standing.toDF("doc_id", "text"), "doc_id", "text",
       threshold = 0.5, shingleK = 1)
     // below the refresh threshold: df frozen, new-host prefixes built
@@ -395,11 +395,11 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     }
     val quotes = standing.filter(_._1 % 3 == 0).map { case (id, t) =>
       (id + 100L, t.split(" ").slice(1, 6).mkString(" ")) }
-    val state = Dedup.containmentStateCheckpointed(
+    val state = Dedup.containmentState(
       standing.toDF("doc_id", "text"), "doc_id", "text", shingleK = 1)
     val incoming = quotes.toDF("doc_id", "text")
     val batch = Dedup.containmentProbe(incoming, state, "doc_id", "text",
-        tau = 0.8, shingleK = 1)
+        tau = 0.8)
       .orderBy("id_in", "id_host")
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(batch.nonEmpty)
@@ -407,7 +407,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     incoming.repartition(3).write.parquet(s"$dir/in") // 3 micro-batches
     val streamed = graft.streaming.CorpusStreams.containmentProbeStreaming(
         spark, s"$dir/in", "doc_id", "text", state,
-        tau = 0.8, shingleK = 1, "cprobe_spec", shufflePartitions = Some(4))
+        tau = 0.8, "cprobe_spec", shufflePartitions = Some(4))
       .orderBy("id_in", "id_host")
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(streamed == batch)
@@ -415,18 +415,18 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
 
   test("containmentProbe degenerate inputs: empty batch, empty corpus, null text") {
     val standing = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
-    val state = Dedup.containmentStateCheckpointed(standing, "doc_id", "text", shingleK = 1)
+    val state = Dedup.containmentState(standing, "doc_id", "text", shingleK = 1)
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(Dedup.containmentProbe(empty, state, "doc_id", "text",
-      tau = 0.8, shingleK = 1).isEmpty)
-    val emptyState = Dedup.containmentStateCheckpointed(empty, "doc_id", "text", shingleK = 1)
+      tau = 0.8).isEmpty)
+    val emptyState = Dedup.containmentState(empty, "doc_id", "text", shingleK = 1)
     val incoming = Seq((10L, "a b c d e"), (11L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
     assert(Dedup.containmentProbe(incoming, emptyState, "doc_id", "text",
-      tau = 0.8, shingleK = 1).isEmpty)
+      tau = 0.8).isEmpty)
     // null-text incoming rows are excluded, not crashed on
     val out = Dedup.containmentProbe(incoming, state, "doc_id", "text",
-        tau = 0.8, shingleK = 1)
+        tau = 0.8)
       .select("id_in").as[Long].collect().toSeq
     assert(out == Seq(10L))
   }
@@ -522,11 +522,11 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
       "doc_id", "text", tau = 0.7, shingleK = 1, maxCandidates = wantMass * 2)
     assert(ok.getAs[Boolean]("advise_cap"))
     // probe face: mass of an incoming batch against a standing state
-    val st = Dedup.containmentStateCheckpointed(
+    val st = Dedup.containmentState(
       docs.toDF("doc_id", "text"), "doc_id", "text", shingleK = 1)
     val pr = Dedup.containmentProbeAdvisor(
       skewed.toDF("doc_id", "text").where(col("doc_id") >= 100L), st,
-      "doc_id", "text", tau = 0.7, shingleK = 1, maxCandidates = 1L).head()
+      "doc_id", "text", tau = 0.7, maxCandidates = 1L).head()
     // template tokens are ABSENT from the standing df -> df 0, zero mass
     assert(pr.getAs[Long]("candidates_est") == 0L,
       "absent tokens generate no candidates and no mass")

@@ -64,7 +64,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // incoming under it, a persisted round-trip keeps it, a mismatched
     // expectation fails loudly
     val standing = cjk.where(col("doc_id") <= 4)
-    val st = Dedup.resemblanceStateCheckpointed(standing, "doc_id", "text",
+    val st = Dedup.resemblanceState(standing, "doc_id", "text",
       threshold = 0.5, shingleK = 3, route = route)
     val incoming = Seq((10L, poem.updated(2, '亦')), (11L, base))
       .toDF("doc_id", "text")
@@ -75,32 +75,27 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     Dedup.saveResemblanceState(st, dir)
     val loaded = Dedup.loadResemblanceState(spark, dir,
       Dedup.ResemblanceParams(0.5, 3, route)).get
-    assert(loaded.route == route)
+    assert(loaded.params.route == route)
     assert(Dedup.jaccardProbe(incoming, loaded, "doc_id", "text")
       .select("id_in", "id_host").as[(Long, Long)].collect().toSet == hits)
     intercept[IllegalArgumentException] { // unrouted expectation: loud
       Dedup.loadResemblanceState(spark, dir, Dedup.ResemblanceParams(0.5, 3))
     }
     // containment probe: a Han QUOTE of a standing Han host
-    val cst = Dedup.containmentStateCheckpointed(standing, "doc_id", "text",
+    val cst = Dedup.containmentState(standing, "doc_id", "text",
       shingleK = 3, route = route)
     // a routed containment state served to an UNROUTED expectation must
     // fail loudly at load (the gram sets would never intersect and every
     // duplicate would silently pass)
     val cdir = TempDirs.make("graft_croute").toString
-    Dedup.saveContainmentState(cst, cdir, Dedup.ContainmentParams(3, route))
+    Dedup.saveContainmentState(cst, cdir)
     intercept[IllegalArgumentException] {
       Dedup.loadContainmentState(spark, cdir, Dedup.ContainmentParams(3))
     }
     assert(Dedup.loadContainmentState(spark, cdir,
       Dedup.ContainmentParams(3, route)).isDefined)
     val quote = Seq((20L, poem.take(14))).toDF("doc_id", "text")
-    // routing derives from the STATE (ADVICE r15: per-call re-pass was a
-    // silent-mismatch hazard); an explicit shingleK must AGREE or fail
-    intercept[IllegalArgumentException] {
-      Dedup.containmentProbe(quote, cst, "doc_id", "text",
-        tau = 0.8, shingleK = 5)
-    }
+    // the probe shingles and routes under the state's own params
     val chits = Dedup.containmentProbe(quote, cst, "doc_id", "text",
         tau = 0.8)
       .select("id_in", "id_host").as[(Long, Long)].collect().toSet
@@ -654,20 +649,34 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val corpus = docs.where(col("doc_id") <= mid)
     val inc = docs.where(col("doc_id") > mid)
     // fresh-batch path == minhashDedup
-    val freshState = Dedup.minhashStateCheckpointed(corpus, "doc_id", "text")
+    val freshState = Dedup.minhashState(corpus, "doc_id", "text")
     val freshGot = Dedup.minhashDedupWithState(corpus, freshState, None,
       "doc_id", threshold = 0.6).select("doc_id").as[Long].collect().sorted
     val freshWant = Dedup.minhashDedup(corpus, "doc_id", "text",
       threshold = 0.6).select("doc_id").as[Long].collect().sorted
     assert(freshGot.toSeq == freshWant.toSeq)
-    // against-corpus path == minhashDedupAgainst
-    val incState = Dedup.minhashStateCheckpointed(inc, "doc_id", "text")
+    // against-corpus path == minhashDedup over the id-ordered split: every
+    // corpus id is below every increment id, so an increment doc drops iff
+    // it pairs with a corpus doc or a smaller increment id
+    val incState = Dedup.minhashState(inc, "doc_id", "text")
     val gotAgainst = Dedup.minhashDedupWithState(inc, incState,
       Some(freshState), "doc_id", threshold = 0.6)
       .select("doc_id").as[Long].collect().sorted
-    val wantAgainst = Dedup.minhashDedupAgainst(inc, corpus, "doc_id", "text",
-      threshold = 0.6).select("doc_id").as[Long].collect().sorted
+    val wantAgainst = Dedup.minhashDedup(docs, "doc_id", "text",
+        threshold = 0.6)
+      .where(col("doc_id") > mid).select("doc_id").as[Long].collect().sorted
     assert(gotAgainst.toSeq == wantAgainst.toSeq)
+  }
+
+  test("saveMinhashState refuses params other than the state's own") {
+    val st = Dedup.minhashState(docs, "doc_id", "text")
+    val dir = TempDirs.make("graft_mh_label").toString
+    val e = intercept[IllegalArgumentException] {
+      Dedup.saveMinhashState(st, dir, Dedup.MinhashParams(64, 8, 3))
+    }
+    assert(e.getMessage.contains(st.params.encoded))
+    // nothing was committed under the wrong label
+    assert(Dedup.loadMinhashState(spark, dir, st.params).isEmpty)
   }
 
   test("bucketCapAuditPortable: same telemetry contract under the md5 family") {

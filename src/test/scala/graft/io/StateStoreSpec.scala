@@ -53,20 +53,20 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
 
   test("containment state: a crash mid-save serves the previous state") {
     val p = Dedup.ContainmentParams(3)
-    val a = Dedup.containmentStateCheckpointed(docsA, "doc_id", "text")
-    val b = Dedup.containmentStateCheckpointed(docsB, "doc_id", "text")
+    val a = Dedup.containmentState(docsA, "doc_id", "text")
+    val b = Dedup.containmentState(docsB, "doc_id", "text")
     crashKeepsPrevious("containment")(
-      Dedup.saveContainmentState(a, _, p),
+      Dedup.saveContainmentState(a, _),
       Dedup.saveContainmentState(b.copy(dfreq = poisoned(b.dfreq),
-        staleDocs = 7L), _, p),
+        staleDocs = 7L), _),
       d => Dedup.loadContainmentState(spark, d, p).exists(s =>
         same(s.sets, a.sets) && same(s.dfreq, a.dfreq) && s.staleDocs == 0L))
   }
 
   test("resemblance state: a crash mid-save serves the previous state") {
     val p = Dedup.ResemblanceParams(0.6, 3)
-    val a = Dedup.resemblanceStateCheckpointed(docsA, "doc_id", "text")
-    val b = Dedup.resemblanceStateCheckpointed(docsB, "doc_id", "text")
+    val a = Dedup.resemblanceState(docsA, "doc_id", "text")
+    val b = Dedup.resemblanceState(docsB, "doc_id", "text")
     crashKeepsPrevious("resemblance")(
       Dedup.saveResemblanceState(a, _),
       Dedup.saveResemblanceState(b.copy(dfreq = poisoned(b.dfreq)), _),
