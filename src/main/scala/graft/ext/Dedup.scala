@@ -1962,36 +1962,6 @@ object Dedup {
       containmentPrefix(inc, state.dfreq, tau), maxCandidates)
   }
 
-  /** Imperative pre-flight gate over [[containmentJoinAdvisor]]: runs
-    * the (cheap, join-free) report, WARNS on stderr when the estimated
-    * candidate mass exceeds `maxCandidates` — pointing at the `maxDf`
-    * cap and the cap audit — and, with `failAbove = true`, throws
-    * instead so a pipeline stops BEFORE the melted join burns the
-    * cluster. Returns the report row either way for logging/telemetry.
-    */
-  def preflightContainmentJoin(
-      df: DataFrame, idCol: String, textCol: String,
-      tau: Double = 0.9, shingleK: Int = 3,
-      maxCandidates: Long = 100000000L,
-      failAbove: Boolean = false,
-      route: Option[CharGramRouting] = None): org.apache.spark.sql.Row = {
-    // route forwards so a ROUTED pipeline's gate measures the routed
-    // char-gram candidate mass, not the (materially lower) word-shingle
-    // mass — char-gram dfs run ~5x higher on the q286 fixture geometry
-    val row = containmentJoinAdvisor(df, idCol, textCol, tau, shingleK,
-      maxCandidates, route).head()
-    if (row.getAs[Boolean]("advise_cap")) {
-      val msg = s"containment join pre-flight: estimated candidate mass " +
-        s"${row.getAs[Long]("candidates_est")} exceeds $maxCandidates " +
-        s"(hottest token df ${row.getAs[Any]("hot_df")}) — run " +
-        "containmentPairs with a maxDf ubiquity cap and review " +
-        "containmentCapAudit for the recall trade"
-      if (failAbove) throw new IllegalStateException(msg)
-      System.err.println(s"[graft] WARN $msg")
-    }
-    row
-  }
-
   /** Precomputed containment state of a standing corpus: the hashed
     * shingle-set frame [[containmentPairs]] builds internally PLUS the
     * corpus-wide token document frequencies the probe prefix orders by

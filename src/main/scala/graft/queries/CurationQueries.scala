@@ -53,18 +53,13 @@ $its
          FROM base b JOIN r$iters ON r$iters.node = b.node ORDER BY b.node"""
   }
 
-  /** Shared by q251 (one-shot NB train+score) and q254 (the same model
-    * rebuilt from MERGED per-shard sufficient statistics — additive, so
-    * incremental == one-shot is the operator's contract and one oracle
-    * gates both paths).
+  /** The NB model over the labelled token lists `d` (doc_id, y, tk):
+    * `fx` (each token hashed into 4096 buckets), `cnt`, the per-bucket
+    * log-odds weights `model` (x1000, floored), the prior `pri` and the
+    * per-doc weight sums `sc`.
     */
-  private val nbClassifierOracle: String =
-    raw"""WITH d AS (SELECT doc_id,
-             CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-               x -> x <> '') AS tk
-           FROM documents WHERE text IS NOT NULL),
-         fx AS (SELECT doc_id, y,
+  private val nbModelCtes: String =
+    """fx AS (SELECT doc_id, y,
              CAST(CAST(concat('0x', substring(md5(unnest(tk)), 1, 8)) AS BIGINT)
                % 4096 AS INTEGER) AS bucket
            FROM d),
@@ -78,7 +73,35 @@ $its
                / CAST(count(*) - sum(y) + 1 AS DOUBLE))) AS BIGINT) AS bias
            FROM d),
          sc AS (SELECT fx.doc_id, CAST(sum(m.w) AS BIGINT) AS s
-           FROM fx JOIN model m USING (bucket) GROUP BY 1),
+           FROM fx JOIN model m USING (bucket) GROUP BY 1)"""
+
+  /** The doubled mid-rank AUC per source from the cumulative counts
+    * `cum` (source, c, yv, cc).
+    */
+  private val aucTail: String =
+    """agg AS (SELECT source, CAST(sum(yv) AS BIGINT) AS n_pos,
+             CAST(sum(c - yv) AS BIGINT) AS n_neg,
+             CAST(sum(yv * (2 * cc - c + 1)) AS BIGINT) AS r2
+           FROM cum GROUP BY 1)
+         SELECT source, n_pos, n_neg,
+           CAST(r2 - n_pos * (n_pos + 1) AS BIGINT) AS u2,
+           CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
+                ELSE round(CAST(r2 - n_pos * (n_pos + 1) AS DOUBLE)
+                  / (2.0 * n_pos * n_neg), 6) END AS auc
+         FROM agg ORDER BY source"""
+
+  /** Shared by q251 (one-shot NB train+score) and q254 (the same model
+    * rebuilt from MERGED per-shard sufficient statistics — additive, so
+    * incremental == one-shot is the operator's contract and one oracle
+    * gates both paths).
+    */
+  private val nbClassifierOracle: String =
+    raw"""WITH d AS (SELECT doc_id,
+             CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
+             list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
+               x -> x <> '') AS tk
+           FROM documents WHERE text IS NOT NULL),
+         $nbModelCtes,
          full_sc AS (SELECT d.doc_id,
              coalesce(sc.s, 0) + (SELECT bias FROM pri) AS score
            FROM d LEFT JOIN sc USING (doc_id))
@@ -95,21 +118,7 @@ $its
              list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
                x -> x <> '') AS tk
            FROM documents WHERE text IS NOT NULL),
-         fx AS (SELECT doc_id, y,
-             CAST(CAST(concat('0x', substring(md5(unnest(tk)), 1, 8)) AS BIGINT)
-               % 4096 AS INTEGER) AS bucket
-           FROM d),
-         cnt AS (SELECT bucket, count(*) AS n, CAST(sum(y) AS BIGINT) AS p
-           FROM fx GROUP BY 1),
-         model AS (SELECT bucket,
-             CAST(floor(1000.0 * ln(CAST(p + 1 AS DOUBLE)
-               / CAST(n - p + 1 AS DOUBLE))) AS BIGINT) AS w
-           FROM cnt),
-         pri AS (SELECT CAST(floor(1000.0 * ln(CAST(sum(y) + 1 AS DOUBLE)
-               / CAST(count(*) - sum(y) + 1 AS DOUBLE))) AS BIGINT) AS bias
-           FROM d),
-         sc AS (SELECT fx.doc_id, CAST(sum(m.w) AS BIGINT) AS s
-           FROM fx JOIN model m USING (bucket) GROUP BY 1),
+         $nbModelCtes,
          scored AS (SELECT d.doc_id, d.source, d.y,
              coalesce(sc.s, 0) + (SELECT bias FROM pri) AS score
            FROM d LEFT JOIN sc USING (doc_id)),
@@ -132,16 +141,7 @@ $its
          cum AS (SELECT source, b, c, yv,
              sum(c) OVER (PARTITION BY source ORDER BY b) AS cc
            FROM perb),
-         agg AS (SELECT source, CAST(sum(yv) AS BIGINT) AS n_pos,
-             CAST(sum(c - yv) AS BIGINT) AS n_neg,
-             CAST(sum(yv * (2 * cc - c + 1)) AS BIGINT) AS r2
-           FROM cum GROUP BY 1)
-         SELECT source, n_pos, n_neg,
-           CAST(r2 - n_pos * (n_pos + 1) AS BIGINT) AS u2,
-           CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-                ELSE round(CAST(r2 - n_pos * (n_pos + 1) AS DOUBLE)
-                  / (2.0 * n_pos * n_neg), 6) END AS auc
-         FROM agg ORDER BY source"""
+         $aucTail"""
 
   /** Shared by q255 (batch AUC readout) and q256 (the same monitor over
     * a streamed corpus): the NB score chain + doubled rank sums.
@@ -150,16 +150,7 @@ $its
          cum AS (SELECT source, score, c, yv,
              sum(c) OVER (PARTITION BY source ORDER BY score) AS cc
            FROM per),
-         agg AS (SELECT source, CAST(sum(yv) AS BIGINT) AS n_pos,
-             CAST(sum(c - yv) AS BIGINT) AS n_neg,
-             CAST(sum(yv * (2 * cc - c + 1)) AS BIGINT) AS r2
-           FROM cum GROUP BY 1)
-         SELECT source, n_pos, n_neg,
-           CAST(r2 - n_pos * (n_pos + 1) AS BIGINT) AS u2,
-           CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-                ELSE round(CAST(r2 - n_pos * (n_pos + 1) AS DOUBLE)
-                  / (2.0 * n_pos * n_neg), 6) END AS auc
-         FROM agg ORDER BY source"""
+         $aucTail"""
 
   /** q257: threshold-based average precision over the same scored frame
     * — exact integer TP/FP cumulatives, 12-dp-rounded per-threshold
@@ -1063,31 +1054,11 @@ $its
                '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g')) AS text
            FROM documents),
          base AS (SELECT doc_id, text,
-             len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS n_tok,
-             length(text) AS n_chars,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
-             length(regexp_replace(trim(text), '\s+', '', 'g')) AS n_nonspace,
-             list_distinct(list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '')) AS toks
+             $qualitySignalCols
            FROM clean),
-         mult AS (SELECT doc_id, max(cnt) AS m, sum(cnt) AS n FROM (
-             SELECT doc_id, tok, count(*) AS cnt FROM (
-               SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-               FROM clean) GROUP BY doc_id, tok) GROUP BY doc_id),
+         ${tokenShareCte("clean")},
          sig AS (SELECT b.doc_id, b.text, b.n_tok,
-             CASE WHEN b.n_tok = 0 THEN 0.0
-                  ELSE CAST(b.n_nonspace AS DOUBLE) / b.n_tok END AS avg_len,
-             CASE WHEN b.n_chars = 0 THEN 0.0
-                  ELSE CAST(b.n_digit AS DOUBLE) / b.n_chars END AS dig_r,
-             greatest(
-               len(list_intersect(b.toks, ${swList("de")})),
-               len(list_intersect(b.toks, ${swList("en")})),
-               len(list_intersect(b.toks, ${swList("es")})),
-               len(list_intersect(b.toks, ${swList("fr")})),
-               len(list_intersect(b.toks, ${swList("it")}))) AS stop_hits,
-             CASE WHEN mult.m IS NULL THEN 0.0
-                  ELSE CAST(mult.m AS DOUBLE) / mult.n END AS max_share
-           FROM base b LEFT JOIN mult ON b.doc_id = mult.doc_id),
+             $qualityRatioCols),
          kept AS (SELECT doc_id, text, n_tok FROM sig
            WHERE NOT (n_tok < 20 OR n_tok > 100000)
              AND NOT (avg_len < 3.0 OR avg_len > 10.0)
@@ -1122,31 +1093,11 @@ $its
       // stopword inventories interpolated from text.stopwords so the oracle
       // can never drift from the engine's lists
       raw"""WITH base AS (SELECT doc_id,
-             len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS n_tok,
-             length(text) AS n_chars,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
-             length(regexp_replace(trim(text), '\s+', '', 'g')) AS n_nonspace,
-             list_distinct(list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '')) AS toks
+             $qualitySignalCols
            FROM documents),
-         mult AS (SELECT doc_id, max(cnt) AS m, sum(cnt) AS n FROM (
-             SELECT doc_id, tok, count(*) AS cnt FROM (
-               SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-               FROM documents) GROUP BY doc_id, tok) GROUP BY doc_id),
+         ${tokenShareCte("documents")},
          sig AS (SELECT b.doc_id, b.n_tok,
-             CASE WHEN b.n_tok = 0 THEN 0.0
-                  ELSE CAST(b.n_nonspace AS DOUBLE) / b.n_tok END AS avg_len,
-             CASE WHEN b.n_chars = 0 THEN 0.0
-                  ELSE CAST(b.n_digit AS DOUBLE) / b.n_chars END AS dig_r,
-             greatest(
-               len(list_intersect(b.toks, ${swList("de")})),
-               len(list_intersect(b.toks, ${swList("en")})),
-               len(list_intersect(b.toks, ${swList("es")})),
-               len(list_intersect(b.toks, ${swList("fr")})),
-               len(list_intersect(b.toks, ${swList("it")}))) AS stop_hits,
-             CASE WHEN mult.m IS NULL THEN 0.0
-                  ELSE CAST(mult.m AS DOUBLE) / mult.n END AS max_share
-           FROM base b LEFT JOIN mult ON b.doc_id = mult.doc_id),
+             $qualityRatioCols),
          rs AS (SELECT doc_id, n_tok, stop_hits,
              CAST(CASE WHEN n_tok < 20 OR n_tok > 100000 THEN 1 ELSE 0 END
                + CASE WHEN avg_len < 3.0 OR avg_len > 10.0 THEN 2 ELSE 0 END

@@ -68,6 +68,82 @@ object DedupQueries extends Family {
             "abcdefghijklmnopqrstuvwxyz", hanAlphabet))
           .otherwise(col("text")).as("text"))
 
+  /** Oracle CTE `corpus`: [[cjkCorpus]] rebuilt in SQL. */
+  private val cjkCorpusCte: String =
+    raw"""corpus AS (SELECT doc_id, CASE WHEN doc_id % 2 = 0
+             THEN translate(regexp_replace(lower(text), '\s+', '', 'g'),
+               'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
+             ELSE text END AS text
+           FROM documents WHERE text IS NOT NULL)"""
+
+  /** The script router's detector over `corpus`, as CTE `rt` (doc_id,
+    * text, n_un = base-Han code points, n_nonws = non-whitespace code
+    * points); a doc is routed when n_nonws > 0 and n_un / n_nonws > 0.3.
+    */
+  private def unspacedCountsCte(rt: String): String =
+    raw"""$rt AS (SELECT doc_id, text,
+             length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS n_un,
+             length(regexp_replace(text, '\s', '', 'g')) AS n_nonws
+           FROM corpus)"""
+
+  /** The same routing rule as one boolean expression over `text`. */
+  private val cjkRoutedExpr: String =
+    raw"""CASE WHEN length(regexp_replace(text, '\s', '', 'g')) = 0
+               THEN FALSE
+               ELSE CAST(length(regexp_replace(text,
+                      '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS DOUBLE)
+                    / length(regexp_replace(text, '\s', '', 'g')) > 0.3
+             END"""
+
+  /** The routed docs' grams (doc_id, gram): code-point 5-grams of the
+    * whitespace-stripped lower-cased text of each routed row of `rt`
+    * (an [[unspacedCountsCte]]), a text of at most 5 being one gram.
+    */
+  private def charGramSelect(rt: String): String =
+    raw"""SELECT doc_id, CASE WHEN length(norm) <= 5 THEN norm
+               ELSE substring(norm, i, 5) END AS gram
+           FROM (SELECT doc_id, norm,
+                   unnest(generate_series(1, greatest(length(norm) - 4, 1))) AS i
+                 FROM (SELECT doc_id,
+                         regexp_replace(lower(text), '\s+', '', 'g') AS norm
+                       FROM $rt
+                       WHERE n_nonws > 0 AND CAST(n_un AS DOUBLE) / n_nonws > 0.3))"""
+
+  /** q116's keep-first exact-substring APPLY replay: the min doc id
+    * claims each 12-token window, higher ids lose every covered token,
+    * and each doc of `tok` that passes `docFilter` (a WHERE clause, or
+    * empty) reports md5 of its rebuilt text with its token counts.
+    */
+  private def substringApplyOracle(docFilter: String): String =
+    raw"""WITH tok AS (SELECT doc_id,
+             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
+               x -> x <> '') AS t
+           FROM documents),
+         w AS (SELECT doc_id, i, array_to_string(t[i:i+11], ' ') AS win
+               FROM (SELECT doc_id, t,
+                       unnest(generate_series(1, len(t) - 11)) AS i FROM tok)),
+         keeper AS (SELECT win, min(doc_id) AS k FROM w GROUP BY 1),
+         dup AS (SELECT w.doc_id, w.i FROM w
+                 JOIN keeper ON w.win = keeper.win WHERE w.doc_id > keeper.k),
+         cov AS (SELECT DISTINCT doc_id,
+                   unnest(generate_series(i, i + 11)) AS p FROM dup),
+         pos AS (SELECT doc_id, t[p] AS tok, p
+                 FROM (SELECT doc_id, t,
+                         unnest(generate_series(1, len(t))) AS p FROM tok)),
+         kept AS (SELECT pos.doc_id, pos.p, pos.tok
+                  FROM pos LEFT JOIN cov
+                    ON pos.doc_id = cov.doc_id AND pos.p = cov.p
+                  WHERE cov.p IS NULL),
+         agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS clean_text,
+                        count(*) AS nk
+                 FROM kept GROUP BY doc_id)
+         SELECT tok.doc_id, md5(coalesce(agg.clean_text, '')) AS h,
+           CAST(coalesce(len(tok.t), 0) AS BIGINT) AS n_total,
+           CAST(coalesce(agg.nk, 0) AS BIGINT) AS n_kept
+         FROM tok LEFT JOIN agg ON tok.doc_id = agg.doc_id
+         $docFilter
+         ORDER BY tok.doc_id"""
+
   /** Shared q278/q279/q284/q285 fixture: standing corpus = the `%3 != 0`
     * slice of documents; incoming = the `%3 == 0` slice plus 90%-token
     * truncations of the `%3 == 1` docs (planted near-copies of standing
@@ -85,6 +161,36 @@ object DedupQueries extends Family {
     (standing, docs.where(col("doc_id") % 3 === 0).unionByName(trunc))
   }
 
+  /** Shared q21/q71 oracle: keep every doc that is not the larger id of
+    * a verified pair at jaccard >= 0.6 (the canonical-min-id keep-first).
+    * The LSH stages only generate candidates, so whenever banding recall
+    * on the fixture is complete (planted near-dups sit at j >= 0.92)
+    * the screens return exactly these survivors; the streamed q71 is
+    * batch-boundary-invariant by construction (see CorpusStreams).
+    */
+  private val minhashDedupOracle: String =
+    raw"""WITH ${shingleJaccardCtes()}
+         SELECT doc_id FROM documents
+         WHERE doc_id NOT IN (SELECT DISTINCT id_r FROM j WHERE jac >= 0.6)
+         ORDER BY doc_id"""
+
+  /** q70's components: the q21 pairs at jaccard >= 0.6 closed
+    * transitively (q70, q139, q174 and the soft-dedup chain).
+    */
+  private val nearDupComponentCtes: String =
+    shingleJaccardCtes() + ",\n         " + componentCtes("j WHERE jac >= 0.6")
+
+  /** q293's soft-dedup weight chain, shared by q293/q294/q298:
+    * [[nearDupComponentCtes]], `lbl` (every doc with its component, a
+    * singleton labelled by its own id) and `cnt` (component,
+    * cluster_size).
+    */
+  private val softWeightCtes: String = nearDupComponentCtes + """,
+         lbl AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
+                 FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+         cnt AS (SELECT component, CAST(count(*) AS BIGINT) AS cluster_size
+                 FROM lbl GROUP BY 1)"""
+
   /** Shared q183/q184 oracle — q67's string-shingle replay aimed at
     * counting instead of dropping: per-doc distinct 8-token shingles,
     * membership in the reference tenth's gram set, 6-dp double ratio. ONE
@@ -93,14 +199,7 @@ object DedupQueries extends Family {
     * streamed == batch verbatim).
     */
   private val noveltyOracle: String =
-    """WITH toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 8 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+7], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 7, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
+    raw"""WITH ${wordShingleCtes(8)},
          bs AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 0),
          d AS (SELECT sh.doc_id, count(*) AS n_grams,
                  count(bs.shingle) AS n_seen
@@ -110,43 +209,64 @@ object DedupQueries extends Family {
            round((n_grams - n_seen) / n_grams, 6) AS novelty
          FROM d ORDER BY doc_id"""
 
-  /** Shared by q301 (batch corpus-level segment dedup) and q303 (the same
-    * screen with the corpus ARRIVING as id-ordered slices — streamed
-    * keep-first equals one-shot keep-first by the
-    * paragraphDedupStreaming batch-boundary argument): the synth text is
-    * rebuilt with the same concatenation as synthSegmentedDocs; seg_ord
-    * indexes the RAW split (empty segments filtered after ordinal
-    * assignment, matching posexplode-then-filter); winner = row_number 1
-    * over the md5-of-normalized-segment partition ordered by
-    * (doc_id, seg_ord), exactly Dedup.paragraphDedup's min(struct)
-    * convention.
+  /** [[synthSegmentedDocs]] rebuilt in SQL with the same concatenation,
+    * as the body of a CTE.
     */
-  private val paragraphDedupOracle: String =
-    raw"""WITH b AS (SELECT doc_id,
+  private val synthSegmentedBase: String =
+    """SELECT doc_id,
              text || '. shared footer for ' || source ||
              (CASE WHEN doc_id % 5 = 0
                    THEN '. subscribe to our newsletter today' ELSE '' END)
                AS text
-           FROM documents WHERE text IS NOT NULL),
-         sp AS (SELECT doc_id, regexp_split_to_array(text, '\. ') AS sg FROM b),
+           FROM documents WHERE text IS NOT NULL"""
+
+  /** The [[Dedup.paragraphDedup]] replay over the rows (doc_id, text) of
+    * `base`, a CTE body: split on the regex `sep` (seg_ord indexes the
+    * RAW split; empty segments are filtered after ordinal assignment,
+    * matching posexplode-then-filter); a segment is kept when it is
+    * row_number 1 of its md5-of-normalized-segment partition ordered by
+    * (doc_id, seg_ord), exactly paragraphDedup's min(struct) convention,
+    * and, given `dropAboveCount`, its partition holds at most that many
+    * segments; kept segments rejoin with `joinSep`.
+    */
+  private def paragraphOracle(base: String, sep: String, joinSep: String,
+      dropAboveCount: Option[Int] = None): String = {
+    val (keepCol, kept) = dropAboveCount match {
+      case None => ("""row_number() OVER (PARTITION BY md5(lower(trim(seg)))
+               ORDER BY doc_id, seg_ord) AS rn""", "rn = 1")
+      case Some(n) => (s"""(row_number() OVER (PARTITION BY md5(lower(trim(seg)))
+                ORDER BY doc_id, seg_ord) = 1
+              AND count(*) OVER (PARTITION BY md5(lower(trim(seg)))) <= $n)
+               AS keep""", "keep")
+    }
+    raw"""WITH b AS ($base),
+         sp AS (SELECT doc_id, regexp_split_to_array(text, '$sep') AS sg FROM b),
          e AS (SELECT doc_id, i - 1 AS seg_ord, sg[i] AS seg
            FROM (SELECT doc_id, sg,
                unnest(generate_series(1, len(sg))) AS i FROM sp)
            WHERE sg[i] <> ''),
          w AS (SELECT doc_id, seg_ord, seg,
-             row_number() OVER (PARTITION BY md5(lower(trim(seg)))
-               ORDER BY doc_id, seg_ord) AS rn
+             $keepCol
            FROM e),
          a AS (SELECT doc_id,
              CAST(count(*) AS BIGINT) AS n_total,
-             CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+             CAST(sum(CASE WHEN $kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
              coalesce(array_to_string(
-               list(seg ORDER BY seg_ord) FILTER (WHERE rn = 1), '. '), '')
+               list(seg ORDER BY seg_ord) FILTER (WHERE $kept), '$joinSep'), '')
                AS clean_text
            FROM w GROUP BY doc_id)
          SELECT b.doc_id, coalesce(a.clean_text, '') AS clean_text,
            coalesce(a.n_total, 0) AS n_total, coalesce(a.n_kept, 0) AS n_kept
          FROM b LEFT JOIN a ON a.doc_id = b.doc_id ORDER BY b.doc_id"""
+  }
+
+  /** Shared by q301 (batch corpus-level segment dedup) and q303 (the same
+    * screen with the corpus ARRIVING as id-ordered slices — streamed
+    * keep-first equals one-shot keep-first by the
+    * paragraphDedupStreaming batch-boundary argument).
+    */
+  private val paragraphDedupOracle: String =
+    paragraphOracle(synthSegmentedBase, raw"\. ", ". ")
 
   /** Shared q278/q279 oracle: the naive incoming-x-standing Jaccard
     * enumeration the prefix-filtered resemblance probe must reproduce.
@@ -192,6 +312,58 @@ object DedupQueries extends Family {
          CAST(szh AS BIGINT) AS sz_host, CAST(ic AS BIGINT) AS overlap,
          round(jac, 6) AS jaccard
        FROM c WHERE jac >= 0.6 ORDER BY id_in, id_host"""
+
+  /** q199's AllPairs shingle tokens over the rows of `src`: `tk` (the
+    * [[graft.functions.text.tokens]] split), `shl` (word-3-shingles, a
+    * doc of fewer than 3 tokens being one shingle) and `tok` (distinct
+    * doc_id, token = the portable 60-bit md5 prefix of a shingle).
+    */
+  private def shingleTokenCtes(src: String): String =
+    raw"""tk AS (SELECT doc_id,
+             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
+               x -> x <> '') AS arr
+           FROM $src),
+         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
+             THEN [array_to_string(arr, ' ')]
+             ELSE list_transform(generate_series(1, len(arr) - 2),
+               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
+           FROM tk),
+         tok AS (SELECT DISTINCT doc_id,
+             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
+           FROM (SELECT doc_id, unnest(sh) AS g FROM shl))"""
+
+  /** q274's planted-excerpt corpus `uni`: the documents plus, for every
+    * 5th doc, its first 40 tokens as a standalone row at id + 1e6.
+    */
+  private val excerptUnionCte: String =
+    raw"""uni AS (SELECT doc_id, text FROM documents
+           UNION ALL
+           SELECT doc_id + 1000000,
+             array_to_string(list_slice(list_filter(
+               regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
+               x -> x <> ''), 1, 40), ' ')
+           FROM documents WHERE doc_id % 5 = 0)"""
+
+  /** The engine's rarest-first prefix order over `tok`: `dfq` (token
+    * df), `sz` (set sizes) and `ord` (rank rn of each token in its doc
+    * by df then token, beside the set size s).
+    */
+  private val prefixRankCtes: String =
+    """dfq AS (SELECT token, count(*) AS dfv FROM tok GROUP BY 1),
+         sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY 1),
+         ord AS (SELECT t.doc_id, t.token, d.dfv,
+             row_number() OVER (PARTITION BY t.doc_id
+               ORDER BY d.dfv, t.token) AS rn,
+             z.s
+           FROM tok t JOIN dfq d USING (token) JOIN sz z USING (doc_id))"""
+
+  /** `pref`: each doc's first floor((1 - tau) * s) + 2 tokens of `ord`,
+    * with the subtraction in DOUBLE as the engine computes it.
+    */
+  private def prefixCte(tau: Double): String =
+    s"""pref AS (SELECT doc_id, token, dfv FROM ord
+           WHERE rn <= CAST(floor(
+             (CAST(1.0 AS DOUBLE) - CAST($tau AS DOUBLE)) * s) + 2 AS INT))"""
 
   /** Shared q270/q271 oracle: the naive incoming-x-standing containment
     * enumeration (every cross pair sharing a shingle, cont = ic/|in|) —
@@ -264,29 +436,7 @@ object DedupQueries extends Family {
           "doc_id", "text", threshold = 0.6)
         .select(col("doc_id")).orderBy("doc_id")
     }, oracle = Some(
-      // q21/q23: the LSH stages are candidate generators only — the emitted
-      // pairs are EXACT-verified (jaccard over full gram sets), so whenever LSH
-      // recall on the dataset is complete, the output equals the brute-force
-      // pair set this SQL computes. Verified complete on the driver's fixtures
-      // (planted near-dups sit at j >= 0.92; banding recall there ~= 1).
-      """WITH toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r)
-         SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT DISTINCT id_r FROM j WHERE jac >= 0.6)
-         ORDER BY doc_id""")),
+      minhashDedupOracle)),
 
     Case("q64_dedup_increment", (s, d) => {
       // incremental dedup: increment (doc_id >= 400) deduped against the
@@ -300,21 +450,7 @@ object DedupQueries extends Family {
       // same brute-force pair CTE as q21; an increment row (id >= 400) drops
       // iff some pair has it as the LARGER side with jaccard >= 0.6 — the
       // partner is then either a corpus doc (< 400) or a smaller increment id
-      """WITH toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r)
+      raw"""WITH ${shingleJaccardCtes()}
          SELECT doc_id FROM documents
          WHERE doc_id >= 400 AND doc_id NOT IN
            (SELECT DISTINCT id_r FROM j WHERE jac >= 0.6 AND id_r >= 400)
@@ -360,14 +496,7 @@ object DedupQueries extends Family {
     }, oracle = Some(
       // same 8-token shingle definition as the q21 3-shingle CTE; benchmark =
       // doc_id % 10 == 0; any shared shingle contaminates
-      """WITH toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 8 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+7], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 7, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
+      raw"""WITH ${wordShingleCtes(8)},
          bs AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 0),
          hit AS (SELECT DISTINCT sh.doc_id FROM sh JOIN bs USING (shingle))
          SELECT doc_id FROM documents
@@ -419,24 +548,7 @@ object DedupQueries extends Family {
     }, oracle = Some(
       // identical semantics to q21 (the streaming path is batch-boundary-
       // invariant by construction — see CorpusStreams): same oracle SQL
-      """WITH toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r)
-         SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT DISTINCT id_r FROM j WHERE jac >= 0.6)
-         ORDER BY doc_id""")),
+      minhashDedupOracle)),
 
     Case("q139_dedup_keep_best", (s, d) => {
       // retention POLICY knob on transitive near-dup clusters: keep the
@@ -461,27 +573,7 @@ object DedupQueries extends Family {
         .orderBy("component")
     }, oracle = Some(
       // q70's component CTEs + per-component keep-longest representative
-      raw"""WITH RECURSIVE toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r),
-         e AS (SELECT id_l AS a, id_r AS b FROM j WHERE jac >= 0.6
-               UNION SELECT id_r, id_l FROM j WHERE jac >= 0.6),
-         reach(a, b) AS (SELECT a, b FROM e
-               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-                  FROM reach GROUP BY a),
+      raw"""WITH RECURSIVE $nearDupComponentCtes,
          lab AS (SELECT d.doc_id,
              len(list_filter(regexp_split_to_array(d.text, '\s+'), x -> x <> '')) AS n_tok,
              coalesce(c.component, d.doc_id) AS component
@@ -508,27 +600,7 @@ object DedupQueries extends Family {
     }, oracle = Some(
       // q21's exact-pair CTE + recursive transitive closure; component = min
       // reachable id (self included), singletons label themselves via LEFT JOIN
-      """WITH RECURSIVE toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r),
-         e AS (SELECT id_l AS a, id_r AS b FROM j WHERE jac >= 0.6
-               UNION SELECT id_r, id_l FROM j WHERE jac >= 0.6),
-         reach(a, b) AS (SELECT a, b FROM e
-               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-                  FROM reach GROUP BY a)
+      raw"""WITH RECURSIVE $nearDupComponentCtes
          SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
          FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
          ORDER BY d.doc_id""")),
@@ -545,31 +617,7 @@ object DedupQueries extends Family {
         .orderBy("doc_id")
     }, oracle = Some(
       // q70's component CTEs + per-component size and the 1/size weight
-      """WITH RECURSIVE toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r),
-         e AS (SELECT id_l AS a, id_r AS b FROM j WHERE jac >= 0.6
-               UNION SELECT id_r, id_l FROM j WHERE jac >= 0.6),
-         reach(a, b) AS (SELECT a, b FROM e
-               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-                  FROM reach GROUP BY a),
-         lbl AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
-                 FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-         cnt AS (SELECT component, CAST(count(*) AS BIGINT) AS cluster_size
-                 FROM lbl GROUP BY 1)
+      raw"""WITH RECURSIVE $softWeightCtes
          SELECT l.doc_id, l.component, c.cluster_size,
            round(1.0 / c.cluster_size, 6) AS weight
          FROM lbl l JOIN cnt c USING (component)
@@ -633,33 +681,7 @@ object DedupQueries extends Family {
           col("n_total"), col("n_kept"))
         .orderBy("doc_id")
     }, oracle = Some(
-      """WITH tok AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS t
-           FROM documents),
-         w AS (SELECT doc_id, i, array_to_string(t[i:i+11], ' ') AS win
-               FROM (SELECT doc_id, t,
-                       unnest(generate_series(1, len(t) - 11)) AS i FROM tok)),
-         keeper AS (SELECT win, min(doc_id) AS k FROM w GROUP BY 1),
-         dup AS (SELECT w.doc_id, w.i FROM w
-                 JOIN keeper ON w.win = keeper.win WHERE w.doc_id > keeper.k),
-         cov AS (SELECT DISTINCT doc_id,
-                   unnest(generate_series(i, i + 11)) AS p FROM dup),
-         pos AS (SELECT doc_id, t[p] AS tok, p
-                 FROM (SELECT doc_id, t,
-                         unnest(generate_series(1, len(t))) AS p FROM tok)),
-         kept AS (SELECT pos.doc_id, pos.p, pos.tok
-                  FROM pos LEFT JOIN cov
-                    ON pos.doc_id = cov.doc_id AND pos.p = cov.p
-                  WHERE cov.p IS NULL),
-         agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS clean_text,
-                        count(*) AS nk
-                 FROM kept GROUP BY doc_id)
-         SELECT tok.doc_id, md5(coalesce(agg.clean_text, '')) AS h,
-           CAST(coalesce(len(tok.t), 0) AS BIGINT) AS n_total,
-           CAST(coalesce(agg.nk, 0) AS BIGINT) AS n_kept
-         FROM tok LEFT JOIN agg ON tok.doc_id = agg.doc_id
-         ORDER BY tok.doc_id""")),
+      substringApplyOracle(""))),
 
     Case("q120_substring_dedup_incr", (s, d) => {
       // incremental apply: the lower-id half is the standing corpus (its
@@ -680,34 +702,8 @@ object DedupQueries extends Family {
     }, oracle = Some(
       // corpus ids precede batch ids, so the incremental apply equals the
       // one-shot keep-first dedup (q116's oracle) restricted to the batch
-      """WITH tok AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS t
-           FROM documents),
-         w AS (SELECT doc_id, i, array_to_string(t[i:i+11], ' ') AS win
-               FROM (SELECT doc_id, t,
-                       unnest(generate_series(1, len(t) - 11)) AS i FROM tok)),
-         keeper AS (SELECT win, min(doc_id) AS k FROM w GROUP BY 1),
-         dup AS (SELECT w.doc_id, w.i FROM w
-                 JOIN keeper ON w.win = keeper.win WHERE w.doc_id > keeper.k),
-         cov AS (SELECT DISTINCT doc_id,
-                   unnest(generate_series(i, i + 11)) AS p FROM dup),
-         pos AS (SELECT doc_id, t[p] AS tok, p
-                 FROM (SELECT doc_id, t,
-                         unnest(generate_series(1, len(t))) AS p FROM tok)),
-         kept AS (SELECT pos.doc_id, pos.p, pos.tok
-                  FROM pos LEFT JOIN cov
-                    ON pos.doc_id = cov.doc_id AND pos.p = cov.p
-                  WHERE cov.p IS NULL),
-         agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS clean_text,
-                        count(*) AS nk
-                 FROM kept GROUP BY doc_id)
-         SELECT tok.doc_id, md5(coalesce(agg.clean_text, '')) AS h,
-           CAST(coalesce(len(tok.t), 0) AS BIGINT) AS n_total,
-           CAST(coalesce(agg.nk, 0) AS BIGINT) AS n_kept
-         FROM tok LEFT JOIN agg ON tok.doc_id = agg.doc_id
-         WHERE tok.doc_id > (SELECT max(doc_id) // 2 FROM documents)
-         ORDER BY tok.doc_id""")),
+      substringApplyOracle(
+        "WHERE tok.doc_id > (SELECT max(doc_id) // 2 FROM documents)"))),
 
     Case("q308_cjk_paragraph_dedup", (s, d) => {
       // q301 on an unsegmented-script corpus: paragraph boundaries are
@@ -737,33 +733,16 @@ object DedupQueries extends Family {
       // the q301 replay with the Han derivation (q281's corpus CTE form)
       // and the ideographic separator; md5 runs over the same UTF-8 bytes
       // in both engines, lower/trim are no-ops on Han
-      raw"""WITH b AS (SELECT doc_id,
+      paragraphOracle(
+        raw"""SELECT doc_id,
              translate(regexp_replace(lower(text), '\s+', '', 'g'),
                'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
              || '。$hanFooterPrefix'
              || translate(source, 'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
              || (CASE WHEN doc_id % 10 = 0
                       THEN '。$hanNewsletter' ELSE '' END) AS text
-           FROM documents WHERE text IS NOT NULL AND doc_id % 2 = 0),
-         sp AS (SELECT doc_id, regexp_split_to_array(text, '。') AS sg FROM b),
-         e AS (SELECT doc_id, i - 1 AS seg_ord, sg[i] AS seg
-           FROM (SELECT doc_id, sg,
-               unnest(generate_series(1, len(sg))) AS i FROM sp)
-           WHERE sg[i] <> ''),
-         w AS (SELECT doc_id, seg_ord, seg,
-             row_number() OVER (PARTITION BY md5(lower(trim(seg)))
-               ORDER BY doc_id, seg_ord) AS rn
-           FROM e),
-         a AS (SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_total,
-             CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-             coalesce(array_to_string(
-               list(seg ORDER BY seg_ord) FILTER (WHERE rn = 1), '。'), '')
-               AS clean_text
-           FROM w GROUP BY doc_id)
-         SELECT b.doc_id, coalesce(a.clean_text, '') AS clean_text,
-           coalesce(a.n_total, 0) AS n_total, coalesce(a.n_kept, 0) AS n_kept
-         FROM b LEFT JOIN a ON a.doc_id = b.doc_id ORDER BY b.doc_id""")),
+           FROM documents WHERE text IS NOT NULL AND doc_id % 2 = 0""",
+        "。", "。"))),
 
     Case("q301_paragraph_dedup", (s, d) => {
       // corpus-level paragraph dedup (CCNet crawl convention, round 17):
@@ -795,33 +774,8 @@ object DedupQueries extends Family {
       // q301 in remove-frequent-lines mode: keep requires BOTH first
       // occurrence AND corpus frequency <= 3, so the planted footer (~50
       // copies) and newsletter (~100) vanish entirely
-      raw"""WITH b AS (SELECT doc_id,
-             text || '. shared footer for ' || source ||
-             (CASE WHEN doc_id % 5 = 0
-                   THEN '. subscribe to our newsletter today' ELSE '' END)
-               AS text
-           FROM documents WHERE text IS NOT NULL),
-         sp AS (SELECT doc_id, regexp_split_to_array(text, '\. ') AS sg FROM b),
-         e AS (SELECT doc_id, i - 1 AS seg_ord, sg[i] AS seg
-           FROM (SELECT doc_id, sg,
-               unnest(generate_series(1, len(sg))) AS i FROM sp)
-           WHERE sg[i] <> ''),
-         w AS (SELECT doc_id, seg_ord, seg,
-             (row_number() OVER (PARTITION BY md5(lower(trim(seg)))
-                ORDER BY doc_id, seg_ord) = 1
-              AND count(*) OVER (PARTITION BY md5(lower(trim(seg)))) <= 3)
-               AS keep
-           FROM e),
-         a AS (SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_total,
-             CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-             coalesce(array_to_string(
-               list(seg ORDER BY seg_ord) FILTER (WHERE keep), '. '), '')
-               AS clean_text
-           FROM w GROUP BY doc_id)
-         SELECT b.doc_id, coalesce(a.clean_text, '') AS clean_text,
-           coalesce(a.n_total, 0) AS n_total, coalesce(a.n_kept, 0) AS n_kept
-         FROM b LEFT JOIN a ON a.doc_id = b.doc_id ORDER BY b.doc_id""")),
+      paragraphOracle(synthSegmentedBase, raw"\. ", ". ",
+        dropAboveCount = Some(3)))),
 
     Case("q303_stream_paragraph_dedup", (s, d) => {
       // q301 with the corpus ARRIVING as id-ordered slices: each
@@ -925,18 +879,7 @@ object DedupQueries extends Family {
       // naive exact replay: distinct 3-word-shingle sets, full pair
       // intersection counts, the identical double ratio and threshold —
       // the prefix filter must lose NOTHING for this to hash-match
-      raw"""WITH tk AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-           FROM documents WHERE text IS NOT NULL),
-         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM tk),
-         tok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM shl)),
+      raw"""WITH ${shingleTokenCtes("documents WHERE text IS NOT NULL")},
          sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY 1),
          inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
            FROM tok a JOIN tok b ON a.token = b.token AND a.doc_id < b.doc_id
@@ -968,31 +911,7 @@ object DedupQueries extends Family {
     }, oracle = Some(
       // the q293 weight chain + whitespace token mass, rolled up by source
       // with the decimal-routed weighted sum
-      """WITH RECURSIVE toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r),
-         e AS (SELECT id_l AS a, id_r AS b FROM j WHERE jac >= 0.6
-               UNION SELECT id_r, id_l FROM j WHERE jac >= 0.6),
-         reach(a, b) AS (SELECT a, b FROM e
-               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-                  FROM reach GROUP BY a),
-         lbl AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
-                 FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-         cnt AS (SELECT component, CAST(count(*) AS BIGINT) AS cluster_size
-                 FROM lbl GROUP BY 1),
+      raw"""WITH RECURSIVE $softWeightCtes,
          wt AS (SELECT l.doc_id, round(1.0 / c.cluster_size, 6) AS weight
                 FROM lbl l JOIN cnt c USING (component)),
          tok AS (SELECT doc_id, source,
@@ -1024,31 +943,7 @@ object DedupQueries extends Family {
       // the q293 weight chain, then priority = md5-32bit(doc_id) x
       // cluster_size ascending (tie doc_id), first 120 kept — the
       // weighted-sampler replay over the replayed weights
-      """WITH RECURSIVE toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r),
-         e AS (SELECT id_l AS a, id_r AS b FROM j WHERE jac >= 0.6
-               UNION SELECT id_r, id_l FROM j WHERE jac >= 0.6),
-         reach(a, b) AS (SELECT a, b FROM e
-               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-                  FROM reach GROUP BY a),
-         lbl AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
-                 FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-         cnt AS (SELECT component, CAST(count(*) AS BIGINT) AS cluster_size
-                 FROM lbl GROUP BY 1),
+      raw"""WITH RECURSIVE $softWeightCtes,
          wt AS (SELECT l.doc_id, l.component, c.cluster_size,
                  round(1.0 / c.cluster_size, 6) AS weight
                 FROM lbl l JOIN cnt c USING (component)),
@@ -1083,39 +978,14 @@ object DedupQueries extends Family {
       // replay shingle->md5 hash->doc-level df->rarest-first prefix slice
       // (floor((1-tau)*|set|)+2, the engine's double arithmetic verbatim)
       // and the df > maxDf cut — the audit is fully SQL-rebuildable
-      raw"""WITH uni AS (SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000,
-             array_to_string(list_slice(list_filter(
-               regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> ''), 1, 40), ' ')
-           FROM documents WHERE doc_id % 5 = 0),
-         tk AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-           FROM uni WHERE text IS NOT NULL),
-         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM tk),
-         tok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM shl)),
-         dfq AS (SELECT token, count(*) AS dfv FROM tok GROUP BY 1),
-         sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY 1),
-         ord AS (SELECT t.doc_id, t.token, d.dfv,
-             row_number() OVER (PARTITION BY t.doc_id
-               ORDER BY d.dfv, t.token) AS rn,
-             z.s
-           FROM tok t JOIN dfq d USING (token) JOIN sz z USING (doc_id)),
+      raw"""WITH $excerptUnionCte,
+         ${shingleTokenCtes("uni WHERE text IS NOT NULL")},
+         $prefixRankCtes,
          -- DOUBLE subtraction on purpose: DuckDB parses 1.0 - 0.8 as
          -- exact DECIMAL 0.2, but the engine's prefix bound is the IEEE
          -- double 0.19999...96 whose floor drops one at s % 5 == 0 —
          -- the +2 slack the engine documents; replay the same arithmetic
-         pref AS (SELECT doc_id, token, dfv FROM ord
-           WHERE rn <= CAST(floor(
-             (CAST(1.0 AS DOUBLE) - CAST(0.8 AS DOUBLE)) * s) + 2 AS INT))
+         ${prefixCte(0.8)}
          SELECT token, CAST(dfv AS BIGINT) AS df,
            count(*) AS n_prefix_docs
          FROM pref WHERE dfv > 1 GROUP BY 1, 2 ORDER BY token""")),
@@ -1197,24 +1067,10 @@ object DedupQueries extends Family {
       // naive pair join at >= 0.7, drop every doc with an earlier-id
       // verified near-dup (canonical-min-id), survivors ordered. Gates
       // the LSH screen end to end: banding recall, routed verify, drop
-      raw"""WITH corpus AS (SELECT doc_id, CASE WHEN doc_id % 2 = 0
-             THEN translate(regexp_replace(lower(text), '\s+', '', 'g'),
-               'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
-             ELSE text END AS text
-           FROM documents WHERE text IS NOT NULL),
-         rt AS (SELECT doc_id, text,
-             length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS n_un,
-             length(regexp_replace(text, '\s', '', 'g')) AS n_nonws
-           FROM corpus),
+      raw"""WITH $cjkCorpusCte,
+         ${unspacedCountsCte("rt")},
          g AS (
-           SELECT doc_id, CASE WHEN length(norm) <= 5 THEN norm
-               ELSE substring(norm, i, 5) END AS gram
-           FROM (SELECT doc_id, norm,
-                   unnest(generate_series(1, greatest(length(norm) - 4, 1))) AS i
-                 FROM (SELECT doc_id,
-                         regexp_replace(lower(text), '\s+', '', 'g') AS norm
-                       FROM rt
-                       WHERE n_nonws > 0 AND CAST(n_un AS DOUBLE) / n_nonws > 0.3))
+           ${charGramSelect("rt")}
            UNION ALL
            SELECT doc_id, gg AS gram FROM (
              SELECT doc_id, unnest(CASE WHEN len(arr) = 0 THEN []
@@ -1257,15 +1113,8 @@ object DedupQueries extends Family {
       // 12-code-point substrings of their ws-stripped lowered text, word
       // docs as the q107 12-token windows — one distinct window table,
       // the <= 1000 size guard, and the pair join with shared-window counts
-      raw"""WITH corpus AS (SELECT doc_id, CASE WHEN doc_id % 2 = 0
-             THEN translate(regexp_replace(lower(text), '\s+', '', 'g'),
-               'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
-             ELSE text END AS text
-           FROM documents WHERE text IS NOT NULL),
-         rt AS (SELECT doc_id, text,
-             length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS n_un,
-             length(regexp_replace(text, '\s', '', 'g')) AS n_nonws
-           FROM corpus),
+      raw"""WITH $cjkCorpusCte,
+         ${unspacedCountsCte("rt")},
          w AS (
            SELECT DISTINCT doc_id, substring(norm, i, 12) AS win
            FROM (SELECT doc_id, norm,
@@ -1309,18 +1158,8 @@ object DedupQueries extends Family {
       // higher ids, and the rebuild per branch — words rejoin with ' ',
       // code points with '' — hashed; n_total/n_kept in each doc's own
       // token currency
-      raw"""WITH corpus AS (SELECT doc_id, CASE WHEN doc_id % 2 = 0
-             THEN translate(regexp_replace(lower(text), '\s+', '', 'g'),
-               'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
-             ELSE text END AS text
-           FROM documents WHERE text IS NOT NULL),
-         rt AS (SELECT doc_id, text,
-             CASE WHEN length(regexp_replace(text, '\s', '', 'g')) = 0
-               THEN FALSE
-               ELSE CAST(length(regexp_replace(text,
-                      '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS DOUBLE)
-                    / length(regexp_replace(text, '\s', '', 'g')) > 0.3
-             END AS routed
+      raw"""WITH $cjkCorpusCte,
+         rt AS (SELECT doc_id, text, $cjkRoutedExpr AS routed
            FROM corpus),
          tokw AS (SELECT doc_id,
              list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
@@ -1388,18 +1227,8 @@ object DedupQueries extends Family {
       // (the detector itself is hash-gated by q282; a Spark-side script
       // misclassification would mismatch); spaced docs replay the q28
       // stopword argmax verbatim
-      raw"""WITH corpus AS (SELECT doc_id, CASE WHEN doc_id % 2 = 0
-             THEN translate(regexp_replace(lower(text), '\s+', '', 'g'),
-               'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
-             ELSE text END AS text
-           FROM documents WHERE text IS NOT NULL),
-         r AS (SELECT doc_id, text,
-             CASE WHEN length(regexp_replace(text, '\s', '', 'g')) = 0
-                  THEN FALSE
-                  ELSE CAST(length(regexp_replace(text,
-                         '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS DOUBLE)
-                       / length(regexp_replace(text, '\s', '', 'g')) > 0.3
-             END AS routed
+      raw"""WITH $cjkCorpusCte,
+         r AS (SELECT doc_id, text, $cjkRoutedExpr AS routed
            FROM corpus),
          toks AS (SELECT doc_id,
              list_distinct(list_filter(
@@ -1444,24 +1273,10 @@ object DedupQueries extends Family {
       // collapse, set-level df, capped rarest-first prefixes at the
       // engine's floor((1-t)sz)+2 double arithmetic, symmetric length
       // prune, exact verify, member expansion + within-cluster 1.0 pairs
-      raw"""WITH corpus AS (SELECT doc_id, CASE WHEN doc_id % 2 = 0
-             THEN translate(regexp_replace(lower(text), '\s+', '', 'g'),
-               'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
-             ELSE text END AS text
-           FROM documents WHERE text IS NOT NULL),
-         rt0 AS (SELECT doc_id, text,
-             length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS n_un,
-             length(regexp_replace(text, '\s', '', 'g')) AS n_nonws
-           FROM corpus),
+      raw"""WITH $cjkCorpusCte,
+         ${unspacedCountsCte("rt0")},
          g AS (
-           SELECT doc_id, CASE WHEN length(norm) <= 5 THEN norm
-               ELSE substring(norm, i, 5) END AS gram
-           FROM (SELECT doc_id, norm,
-                   unnest(generate_series(1, greatest(length(norm) - 4, 1))) AS i
-                 FROM (SELECT doc_id,
-                         regexp_replace(lower(text), '\s+', '', 'g') AS norm
-                       FROM rt0
-                       WHERE n_nonws > 0 AND CAST(n_un AS DOUBLE) / n_nonws > 0.3))
+           ${charGramSelect("rt0")}
            UNION ALL
            SELECT doc_id, gg AS gram FROM (
              SELECT doc_id, unnest(CASE WHEN len(arr) < 3
@@ -1544,28 +1359,9 @@ object DedupQueries extends Family {
       // deterministic hottest token (mass desc, token desc) against two
       // bounds — candidate mass is sum over prefix rows of df, the upper
       // bound of what the open join would materialize
-      raw"""WITH tk AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-           FROM documents WHERE text IS NOT NULL),
-         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM tk),
-         tok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM shl)),
-         dfq AS (SELECT token, count(*) AS dfv FROM tok GROUP BY 1),
-         sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY 1),
-         ord AS (SELECT t.doc_id, t.token, d.dfv,
-             row_number() OVER (PARTITION BY t.doc_id
-               ORDER BY d.dfv, t.token) AS rn,
-             z.s
-           FROM tok t JOIN dfq d USING (token) JOIN sz z USING (doc_id)),
-         pref AS (SELECT doc_id, token, dfv FROM ord
-           WHERE rn <= CAST(floor(
-             (CAST(1.0 AS DOUBLE) - CAST(0.9 AS DOUBLE)) * s) + 2 AS INT)),
+      raw"""WITH ${shingleTokenCtes("documents WHERE text IS NOT NULL")},
+         $prefixRankCtes,
+         ${prefixCte(0.9)},
          pt AS (SELECT token, count(*) AS np, min(dfv) AS dfv,
              count(*) * min(dfv) AS mass
            FROM pref GROUP BY token),
@@ -1602,24 +1398,10 @@ object DedupQueries extends Family {
       // hashing, and the naive pair join + exact Jaccard at 0.8. The
       // detector regex only needs the base Han block: the derivation
       // introduces exactly [[hanAlphabet]]
-      raw"""WITH corpus AS (SELECT doc_id, CASE WHEN doc_id % 2 = 0
-             THEN translate(regexp_replace(lower(text), '\s+', '', 'g'),
-               'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
-             ELSE text END AS text
-           FROM documents WHERE text IS NOT NULL),
-         rt AS (SELECT doc_id, text,
-             length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS n_un,
-             length(regexp_replace(text, '\s', '', 'g')) AS n_nonws
-           FROM corpus),
+      raw"""WITH $cjkCorpusCte,
+         ${unspacedCountsCte("rt")},
          g AS (
-           SELECT doc_id, CASE WHEN length(norm) <= 5 THEN norm
-               ELSE substring(norm, i, 5) END AS gram
-           FROM (SELECT doc_id, norm,
-                   unnest(generate_series(1, greatest(length(norm) - 4, 1))) AS i
-                 FROM (SELECT doc_id,
-                         regexp_replace(lower(text), '\s+', '', 'g') AS norm
-                       FROM rt
-                       WHERE n_nonws > 0 AND CAST(n_un AS DOUBLE) / n_nonws > 0.3))
+           ${charGramSelect("rt")}
            UNION ALL
            SELECT doc_id, g AS gram FROM (
              SELECT doc_id, unnest(CASE WHEN len(arr) < 3
@@ -1662,16 +1444,8 @@ object DedupQueries extends Family {
       // unspaced share over non-ws chars, and seg tokens via the
       // surround-each-ideograph-with-spaces trick (each unspaced code
       // point its own token, other non-ws runs one each)
-      raw"""WITH corpus AS (SELECT doc_id, CASE WHEN doc_id % 2 = 0
-             THEN translate(regexp_replace(lower(text), '\s+', '', 'g'),
-               'abcdefghijklmnopqrstuvwxyz', '$hanAlphabet')
-             ELSE text END AS text
-           FROM documents WHERE text IS NOT NULL)
-         SELECT doc_id,
-           CASE WHEN length(regexp_replace(text, '\s', '', 'g')) = 0 THEN FALSE
-                ELSE CAST(length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g'))
-                       AS DOUBLE)
-                     / length(regexp_replace(text, '\s', '', 'g')) > 0.3 END AS routed,
+      raw"""WITH $cjkCorpusCte
+         SELECT doc_id, $cjkRoutedExpr AS routed,
            CAST(length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g'))
              AS BIGINT) AS n_unspaced,
            CAST(len(list_filter(regexp_split_to_array(
@@ -1699,18 +1473,7 @@ object DedupQueries extends Family {
       // exactly — integers are representable, so the boundary cases
       // round identically), exact verify, then member expansion +
       // within-cluster 1.0 pairs
-      raw"""WITH tk AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-           FROM documents WHERE text IS NOT NULL),
-         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM tk),
-         tok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM shl)),
+      raw"""WITH ${shingleTokenCtes("documents WHERE text IS NOT NULL")},
          sets AS (SELECT doc_id, list(token ORDER BY token) AS arr
            FROM tok GROUP BY 1),
          cl AS (SELECT arr, min(doc_id) AS rep, len(arr) AS sz,
@@ -1829,35 +1592,10 @@ object DedupQueries extends Family {
       // the capped join itself: candidates come ONLY from prefix tokens at
       // df <= 3 (the q274 prefix replay + the cap cut), then the exact
       // intersect verify — the engine's capped contract end to end
-      raw"""WITH uni AS (SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000,
-             array_to_string(list_slice(list_filter(
-               regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> ''), 1, 40), ' ')
-           FROM documents WHERE doc_id % 5 = 0),
-         tk AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-           FROM uni WHERE text IS NOT NULL),
-         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM tk),
-         tok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM shl)),
-         dfq AS (SELECT token, count(*) AS dfv FROM tok GROUP BY 1),
-         sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY 1),
-         ord AS (SELECT t.doc_id, t.token, d.dfv,
-             row_number() OVER (PARTITION BY t.doc_id
-               ORDER BY d.dfv, t.token) AS rn,
-             z.s
-           FROM tok t JOIN dfq d USING (token) JOIN sz z USING (doc_id)),
-         pref AS (SELECT doc_id, token, dfv FROM ord
-           WHERE rn <= CAST(floor(
-             (CAST(1.0 AS DOUBLE) - CAST(0.8 AS DOUBLE)) * s) + 2 AS INT)),
+      raw"""WITH $excerptUnionCte,
+         ${shingleTokenCtes("uni WHERE text IS NOT NULL")},
+         $prefixRankCtes,
+         ${prefixCte(0.8)},
          cand AS (SELECT DISTINCT p.doc_id AS id_part, q.doc_id AS id_whole
            FROM pref p JOIN tok q ON p.token = q.token
              AND p.doc_id <> q.doc_id
@@ -1896,25 +1634,8 @@ object DedupQueries extends Family {
       // same cut over SET-level df: identical token sets collapse to one
       // rep (min doc id) before the df build and the |X|-ceil(t|X|)+1
       // prefix slice — the engine's cluster-collapse replayed in SQL
-      raw"""WITH uni AS (SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000,
-             array_to_string(list_slice(list_filter(
-               regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> ''), 1, 40), ' ')
-           FROM documents WHERE doc_id % 5 = 0),
-         tk AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-           FROM uni WHERE text IS NOT NULL),
-         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM tk),
-         tok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM shl)),
+      raw"""WITH $excerptUnionCte,
+         ${shingleTokenCtes("uni WHERE text IS NOT NULL")},
          sets AS (SELECT doc_id, list(token ORDER BY token) AS arr
            FROM tok GROUP BY 1),
          cl AS (SELECT arr, min(doc_id) AS rep, len(arr) AS sz,
@@ -1960,28 +1681,9 @@ object DedupQueries extends Family {
       // q70's verified pairs under BOTH split rules: the md5-threshold
       // constants are q56's (80/10/10 over 2^32), the cluster key is
       // q174's stringified component
-      """WITH RECURSIVE toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r),
+      raw"""WITH RECURSIVE ${shingleJaccardCtes()},
          p AS (SELECT id_l, id_r FROM j WHERE jac >= 0.6),
-         e AS (SELECT id_l AS a, id_r AS b FROM p
-               UNION SELECT id_r, id_l FROM p),
-         reach(a, b) AS (SELECT a, b FROM e
-               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-                  FROM reach GROUP BY a),
+         ${componentCtes("p")},
          lab AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
                  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
          nsp AS (SELECT doc_id, CASE
@@ -2024,25 +1726,8 @@ object DedupQueries extends Family {
       // NAIVE ordered-pair enumeration (every pair sharing a shingle) —
       // the zero-false-negative oracle the prefix-filtered engine plan
       // must reproduce exactly
-      raw"""WITH uni AS (SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000,
-             array_to_string(list_slice(list_filter(
-               regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> ''), 1, 40), ' ')
-           FROM documents WHERE doc_id % 5 = 0),
-         tk AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-           FROM uni WHERE text IS NOT NULL),
-         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM tk),
-         tok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM shl)),
+      raw"""WITH $excerptUnionCte,
+         ${shingleTokenCtes("uni WHERE text IS NOT NULL")},
          sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY 1),
          inter AS (SELECT a.doc_id AS id_part, b.doc_id AS id_whole,
              count(*) AS ic
@@ -2129,18 +1814,7 @@ object DedupQueries extends Family {
       // the q199 naive pair replay, then the a<b<c triangle join (edges
       // normalized ascending, so the ordered triple join counts each
       // triangle once — the oracle needs no degree orientation)
-      raw"""WITH tk AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-           FROM documents WHERE text IS NOT NULL AND lang = 'en'),
-         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM tk),
-         tok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM shl)),
+      raw"""WITH ${shingleTokenCtes("documents WHERE text IS NOT NULL AND lang = 'en'")},
          sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY 1),
          inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
            FROM tok a JOIN tok b ON a.token = b.token AND a.doc_id < b.doc_id
@@ -2255,27 +1929,7 @@ object DedupQueries extends Family {
     }, oracle = Some(
       // q70's component CTEs + the q56 md5-threshold split applied to the
       // COMPONENT id (stringified) — same exact 32-bit thresholds
-      """WITH RECURSIVE toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r),
-         e AS (SELECT id_l AS a, id_r AS b FROM j WHERE jac >= 0.6
-               UNION SELECT id_r, id_l FROM j WHERE jac >= 0.6),
-         reach(a, b) AS (SELECT a, b FROM e
-               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-                  FROM reach GROUP BY a),
+      raw"""WITH RECURSIVE $nearDupComponentCtes,
          lab AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
                  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
          SELECT doc_id, component, CASE

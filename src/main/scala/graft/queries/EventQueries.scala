@@ -89,12 +89,13 @@ object EventQueries extends Family {
        SELECT window_day, count(*) AS n_active FROM w
        GROUP BY 1 ORDER BY 1"""
 
-  /** Shared by q189 (batch chained-window funnel) and q198 (stateful
-    * streaming twin — the carried stage-reach bitmap makes streamed stage
-    * counts equal the batch rule exactly, so one replay gates both).
+  /** The chained-window funnel's reach times (q189): CTEs s0..s3 and
+    * p0..p2 walk signup -> view -> click -> purchase, each stage counting
+    * only after an earlier reach of the one before it, and `u` holds each
+    * user's first reach time r0..r3 of every stage.
     */
-  private val funnelOracle: String =
-    """WITH s0 AS (SELECT user_id, event_id, ts, event_type,
+  private val funnelReachCtes: String =
+    """s0 AS (SELECT user_id, event_id, ts, event_type,
              CASE WHEN event_type = 'signup' THEN ts END AS q0 FROM events),
          p0 AS (SELECT *, min(q0) OVER (PARTITION BY user_id ORDER BY ts, event_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pp0 FROM s0),
@@ -109,7 +110,26 @@ object EventQueries extends Family {
          s3 AS (SELECT *, CASE WHEN event_type = 'purchase' AND pp2 IS NOT NULL
              THEN ts END AS q3 FROM p2),
          u AS (SELECT user_id, min(q0) AS r0, min(q1) AS r1, min(q2) AS r2,
-             min(q3) AS r3 FROM s3 GROUP BY 1),
+             min(q3) AS r3 FROM s3 GROUP BY 1)"""
+
+  /** Shared by q31 (batch 1-hour tumbling window) and q32 (its streamed
+    * twin): per window start and event type, the count and the
+    * decimal-exact value sum.
+    */
+  private val tumblingOracle: String =
+    """WITH b AS (SELECT
+           (CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(ts)) AS BIGINT) % 3600) AS wstart,
+           event_type, value FROM events)
+         SELECT wstart, event_type, count(*) AS n_events,
+           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+         FROM b GROUP BY wstart, event_type ORDER BY wstart, event_type"""
+
+  /** Shared by q189 (batch chained-window funnel) and q198 (stateful
+    * streaming twin — the carried stage-reach bitmap makes streamed stage
+    * counts equal the batch rule exactly, so one replay gates both).
+    */
+  private val funnelOracle: String =
+    raw"""WITH $funnelReachCtes,
          c AS (SELECT count(r0) AS n0, count(r1) AS n1, count(r2) AS n2,
              count(r3) AS n3 FROM u)
          SELECT * FROM (
@@ -209,13 +229,7 @@ object EventQueries extends Family {
     Case("q31_window_tumbling", (s, d) => {
       EventStreams.tumblingWindowBatch(events(s, d), "1 hour")
         .orderBy("wstart", "event_type")
-    }, oracle = Some(
-      """WITH b AS (SELECT
-           (CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(ts)) AS BIGINT) % 3600) AS wstart,
-           event_type, value FROM events)
-         SELECT wstart, event_type, count(*) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM b GROUP BY wstart, event_type ORDER BY wstart, event_type""")),
+    }, oracle = Some(tumblingOracle)),
 
     Case("q55_stream_stateful_sessions", (s, d) => {
       // flatMapGroupsWithState sessionization over a real stream: Append
@@ -254,13 +268,7 @@ object EventQueries extends Family {
       EventStreams.tumblingWindowStreaming(s, s"$d/events.parquet", name, "1 hour",
           shufflePartitions = Some(8))
         .orderBy("wstart", "event_type")
-    }, oracle = Some(
-      """WITH b AS (SELECT
-           (CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(ts)) AS BIGINT) % 3600) AS wstart,
-           event_type, value FROM events)
-         SELECT wstart, event_type, count(*) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM b GROUP BY wstart, event_type ORDER BY wstart, event_type""")),
+    }, oracle = Some(tumblingOracle)),
 
     Case("q43_sliding_window", (s, d) => {
       // sliding window: 2h length, 1h slide — every event lands in 2 windows
@@ -790,22 +798,7 @@ object EventQueries extends Family {
     }, oracle = Some(
       // the q189 chain, then per-transition duration branches with the
       // decimal mean and quantile_cont median (the q37 convention)
-      """WITH s0 AS (SELECT user_id, event_id, ts, event_type,
-             CASE WHEN event_type = 'signup' THEN ts END AS q0 FROM events),
-         p0 AS (SELECT *, min(q0) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pp0 FROM s0),
-         s1 AS (SELECT *, CASE WHEN event_type = 'view' AND pp0 IS NOT NULL
-             THEN ts END AS q1 FROM p0),
-         p1 AS (SELECT *, min(q1) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pp1 FROM s1),
-         s2 AS (SELECT *, CASE WHEN event_type = 'click' AND pp1 IS NOT NULL
-             THEN ts END AS q2 FROM p1),
-         p2 AS (SELECT *, min(q2) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pp2 FROM s2),
-         s3 AS (SELECT *, CASE WHEN event_type = 'purchase' AND pp2 IS NOT NULL
-             THEN ts END AS q3 FROM p2),
-         u AS (SELECT user_id, min(q0) AS r0, min(q1) AS r1, min(q2) AS r2,
-             min(q3) AS r3 FROM s3 GROUP BY 1),
+      raw"""WITH $funnelReachCtes,
          d AS (
            SELECT 'signup' AS from_stage, 'view' AS to_stage,
              CAST(floor(epoch(r1)) AS BIGINT) - CAST(floor(epoch(r0)) AS BIGINT) AS dur

@@ -13,6 +13,24 @@ import graft.streaming.EventStreams
 object ProfileQueries extends Family {
   import Shared._
 
+  /** The q154/q160 sketch sample: per source, the 64 smallest
+    * (md5-prefix hash of doc_id, n_chars) pairs, value-ranked as `srt`
+    * (source, v, vr = rank by value, n = sample size).
+    */
+  private val sketchSampleCtes: String =
+    """h AS (SELECT source,
+             CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+               AS BIGINT) AS hv,
+             CAST(n_chars AS DOUBLE) AS v
+           FROM documents WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),
+         r AS (SELECT source, hv, v,
+             row_number() OVER (PARTITION BY source ORDER BY hv, v) AS rn
+           FROM h),
+         srt AS (SELECT source, v,
+             row_number() OVER (PARTITION BY source ORDER BY v) AS vr,
+             count(*) OVER (PARTITION BY source) AS n
+           FROM r WHERE rn <= 64)"""
+
   /** Shared by q230 (batch KS drift) and q237 (streamed monitor — the
     * (cohort, value) side counts are additive, so Complete mode equals
     * batch under any cut). Window sums of BIGINT promote to HUGEINT in
@@ -173,18 +191,7 @@ object ProfileQueries extends Family {
       // estimate is the nearest-rank-lower element sample[floor(q*(n-1))]
       // of the value-sorted sample — the exact slice + element pick the
       // engine computes, so estimates hash-match bit-for-bit
-      """WITH h AS (SELECT source,
-             CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-               AS BIGINT) AS hv,
-             CAST(n_chars AS DOUBLE) AS v
-           FROM documents WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),
-         r AS (SELECT source, hv, v,
-             row_number() OVER (PARTITION BY source ORDER BY hv, v) AS rn
-           FROM h),
-         srt AS (SELECT source, v,
-             row_number() OVER (PARTITION BY source ORDER BY v) AS vr,
-             count(*) OVER (PARTITION BY source) AS n
-           FROM r WHERE rn <= 64),
+      raw"""WITH $sketchSampleCtes,
          qs AS (SELECT unnest([0.25, 0.5, 0.75, 0.9]) AS q)
          SELECT s.source, qs.q, CAST(s.n AS BIGINT) AS n_sample, s.v AS est
          FROM srt s CROSS JOIN qs
@@ -205,18 +212,7 @@ object ProfileQueries extends Family {
       // q154's slice with the quantile_cont pick: both bracketing elements
       // at p = q*(n-1) joined in, linear interpolation in IEEE double with
       // the house 6-dp round; upper index clamped at n (q=1.0 / frac=0)
-      """WITH h AS (SELECT source,
-             CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-               AS BIGINT) AS hv,
-             CAST(n_chars AS DOUBLE) AS v
-           FROM documents WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),
-         r AS (SELECT source, hv, v,
-             row_number() OVER (PARTITION BY source ORDER BY hv, v) AS rn
-           FROM h),
-         srt AS (SELECT source, v,
-             row_number() OVER (PARTITION BY source ORDER BY v) AS vr,
-             count(*) OVER (PARTITION BY source) AS n
-           FROM r WHERE rn <= 64),
+      raw"""WITH $sketchSampleCtes,
          qs AS (SELECT CAST(unnest([0.25, 0.5, 0.75, 0.9]) AS DOUBLE) AS q),
          pos AS (SELECT g.source, g.n, qs.q, qs.q * (g.n - 1) AS p
            FROM (SELECT DISTINCT source, n FROM srt) g CROSS JOIN qs)

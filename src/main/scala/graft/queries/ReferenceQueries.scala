@@ -17,6 +17,13 @@ import graft.ops.{MatchMerge, NaLocfPlusOne, Ops}
 object ReferenceQueries extends Family {
   import Shared._
 
+  /** Shared by the lossless event round trips (q97 JSONL, q136 ORC):
+    * the source events with `ts` as epoch seconds.
+    */
+  private val eventRowsOracle: String =
+    """SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS es,
+         user_id, event_type, value FROM events ORDER BY event_id"""
+
   /** Shared q143/q144 SCD2 changelog fixture over pre-selected orders
     * columns: generation 1 inserts every key, 2 and 3 are update waves on
     * overlapping key slices, 4 deletes every 10th-mod-7 key. `gens`
@@ -536,9 +543,7 @@ object ReferenceQueries extends Family {
         .select(col("event_id"), epochSec(col("ts")).as("es"),
           col("user_id"), col("event_type"), col("value"))
         .orderBy("event_id")
-    }, oracle = Some(
-      """SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS es,
-         user_id, event_type, value FROM events ORDER BY event_id""")),
+    }, oracle = Some(eventRowsOracle)),
 
     Case("q268_embedding_jsonl_roundtrip", (s, d) => {
       // vector ingest interchange: the embeddings table through JSONL and
@@ -575,9 +580,7 @@ object ReferenceQueries extends Family {
         .select(col("event_id"), epochSec(col("ts")).as("es"),
           col("user_id"), col("event_type"), col("value"))
         .orderBy("event_id")
-    }, oracle = Some(
-      """SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS es,
-         user_id, event_type, value FROM events ORDER BY event_id""")),
+    }, oracle = Some(eventRowsOracle)),
 
     Case("q101_partition_pruning", (s, d) => {
       // Hive-partitioned layout + partition pruning — THE scan optimization

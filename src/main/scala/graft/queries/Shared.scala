@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** The few helpers several query families use: fixture-table reads, the
   * bench-shape scan fan-out, exact sums and timestamp literals, the
-  * stopword literal for oracle SQL, the stream-name counter and the
-  * load-or-build step of query-owned persisted states.
+  * stopword literal and the oracle SQL fragments used by more than one
+  * family, the stream-name counter and the load-or-build step of
+  * query-owned persisted states.
   *
   * Numeric-parity convention: any SUM over doubles goes through
   * `CAST(x AS DECIMAL(18,k))` and the exact decimal sum is cast back to
@@ -61,6 +62,92 @@ object Shared {
   private[graft] def swList(lang: String): String =
     graft.functions.text.stopwords(lang)
       .map(w => "'" + w.replace("'", "''") + "'").mkString("[", ", ", "]")
+
+  /** The raw per-doc signals of [[graft.functions.text.gopherSignals]]
+    * as oracle select items over `text`: n_tok (whitespace tokens),
+    * n_chars, n_digit, n_nonspace and toks (the distinct
+    * [[graft.functions.text.tokens]]).
+    */
+  private[graft] val qualitySignalCols: String =
+    raw"""len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS n_tok,
+             length(text) AS n_chars,
+             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
+             length(regexp_replace(trim(text), '\s+', '', 'g')) AS n_nonspace,
+             list_distinct(list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
+               x -> x <> '')) AS toks"""
+
+  /** Oracle CTE `mult` over the docs of `src`: each doc's largest
+    * [a-z0-9]+ token count `m` and its token total `n`.
+    */
+  private[graft] def tokenShareCte(src: String): String =
+    s"""mult AS (SELECT doc_id, max(cnt) AS m, sum(cnt) AS n FROM (
+             SELECT doc_id, tok, count(*) AS cnt FROM (
+               SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+               FROM $src) GROUP BY doc_id, tok) GROUP BY doc_id)"""
+
+  /** The derived Gopher signals avg_len, dig_r, stop_hits (the best
+    * language's stopword hits) and max_share, as select items over
+    * `base b` (with [[qualitySignalCols]]) and [[tokenShareCte]], with
+    * their FROM clause.
+    */
+  private[graft] val qualityRatioCols: String =
+    s"""CASE WHEN b.n_tok = 0 THEN 0.0
+                  ELSE CAST(b.n_nonspace AS DOUBLE) / b.n_tok END AS avg_len,
+             CASE WHEN b.n_chars = 0 THEN 0.0
+                  ELSE CAST(b.n_digit AS DOUBLE) / b.n_chars END AS dig_r,
+             greatest(
+               len(list_intersect(b.toks, ${swList("de")})),
+               len(list_intersect(b.toks, ${swList("en")})),
+               len(list_intersect(b.toks, ${swList("es")})),
+               len(list_intersect(b.toks, ${swList("fr")})),
+               len(list_intersect(b.toks, ${swList("it")}))) AS stop_hits,
+             CASE WHEN mult.m IS NULL THEN 0.0
+                  ELSE CAST(mult.m AS DOUBLE) / mult.n END AS max_share
+           FROM base b LEFT JOIN mult ON b.doc_id = mult.doc_id"""
+
+  /** Oracle CTEs `toks` (each doc's lower-cased [a-z0-9]+ runs) and `sh`
+    * (distinct doc_id, shingle: its word-`n`-shingles, a doc of fewer
+    * than n words being one shingle) over the `text` column of `src`.
+    */
+  private[graft] def wordShingleCtes(n: Int, src: String = "documents"): String =
+    raw"""toks AS (SELECT doc_id,
+             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM $src),
+         sh AS (SELECT DISTINCT doc_id,
+                 CASE WHEN len(tk) < $n THEN array_to_string(tk, ' ')
+                      ELSE array_to_string(tk[i:i+${n - 1}], ' ') END AS shingle
+               FROM (SELECT doc_id, tk,
+                       unnest(generate_series(1, greatest(len(tk) - ${n - 1}, 1))) AS i
+                     FROM toks WHERE len(tk) > 0))"""
+
+  /** q21's brute-force pair set, which every minhash screen must
+    * reproduce (its LSH stages only generate candidates; the emitted
+    * pairs are verified exactly): [[wordShingleCtes]] at n = 3, then
+    * `sz` (set sizes), `inter` (shared shingles per id_l < id_r) and `j`
+    * (id_l, id_r, jac = exact Jaccard).
+    */
+  private[graft] def shingleJaccardCtes(src: String = "documents"): String =
+    wordShingleCtes(3, src) + """,
+         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
+         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
+                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2),
+         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
+               FROM inter JOIN sz sa ON sa.doc_id = id_l
+                          JOIN sz sb ON sb.doc_id = id_r)"""
+
+  /** q70's transitive near-dup components over the (id_l, id_r) rows of
+    * `pairs` (a CTE, or `j WHERE jac >= 0.6`): `e` (both directions),
+    * the recursive closure `reach` (the query says WITH RECURSIVE) and
+    * `comp` (doc_id, component = the least reachable id). A doc in no
+    * pair has no `comp` row; callers label it with its own id.
+    */
+  private[graft] def componentCtes(pairs: String): String =
+    raw"""e AS (SELECT id_l AS a, id_r AS b FROM $pairs
+               UNION SELECT id_r, id_l FROM $pairs),
+         reach(a, b) AS (SELECT a, b FROM e
+               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
+         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
+                  FROM reach GROUP BY a)"""
 
   private[graft] def ts(lit0: String): Column = lit(lit0).cast("timestamp")
 

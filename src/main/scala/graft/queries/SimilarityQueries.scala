@@ -178,6 +178,27 @@ $fin"""
            FROM m2 JOIN m1 ma ON m2.i = ma.i
                    JOIN m1 mb ON m2.j = mb.i)"""
 
+  /** q261's spectral step over [[covCtes]]: the symmetric matrix `M`,
+    * the all-ones start `v0` and 3 power rounds, each an exact decimal
+    * mat-vec product `w`, its max magnitude `x` and the iterate `v`
+    * divided once in double and re-quantized to 6 dp.
+    */
+  private val powerIterationCtes: String = {
+    val rounds = (1 to 3).map { i =>
+      s"""w$i AS (SELECT m.i, sum(m.c * v${i - 1}.v) AS w
+           FROM M m JOIN v${i - 1} ON m.j = v${i - 1}.i GROUP BY m.i),
+         x$i AS (SELECT max(abs(w)) AS mx FROM w$i),
+         v$i AS (SELECT i, CAST(round(CAST(w AS DOUBLE) / CAST(mx AS DOUBLE), 6)
+             AS DECIMAL(18,6)) AS v FROM w$i, x$i)"""
+    }.mkString(",\n         ")
+    covCtes + s""",
+         M AS (SELECT i, j, CAST(cov AS DECIMAL(18,6)) AS c FROM cv
+               UNION ALL
+               SELECT j, i, CAST(cov AS DECIMAL(18,6)) FROM cv WHERE i <> j),
+         v0 AS (SELECT DISTINCT i, CAST(1.0 AS DECIMAL(18,6)) AS v FROM M),
+         $rounds"""
+  }
+
   /** The SQ8 quantization chain through the per-(vec, dim) `cd` code
     * frame — shared by q263 (the fidelity report) and q264 (the
     * integer-dot ANN): 6-dp coordinates, exact decimal per-dim ranges,
@@ -199,43 +220,64 @@ $fin"""
                       / CAST(hi - lo AS DOUBLE) + 0.5) AS INTEGER))) END AS code
            FROM x JOIN rg USING (i))"""
 
-  /** Shared by q299 (persisted-index batch probe) and q307 (the same
-    * probe with the increment ARRIVING as a stream — row-local given the
-    * frozen state, so streamed == batch under any cut): the q169 IVFADC
-    * CTEs over the standing/incoming split, models and codes from the
-    * STANDING slice only (provenance invariance, the q284 convention).
+  /** The portable seed rule of [[graft.ext.Ivf.portableSeedModel]] and
+    * [[graft.ext.Pq.portableSeedCodebooks]]: CTE `name` holds the first
+    * `limit` rows of `src` by (md5(vec_id), vec_id), each vector `v` as
+    * `vec` beside its 0-based index as `cell`.
     */
-  private val annIndexProbeOracle: String =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         st AS (SELECT * FROM e WHERE vec_id % 5 <> 2),
-         inc AS (SELECT * FROM e WHERE vec_id % 5 = 2),
-         nc AS (SELECT greatest(4, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS k
-           FROM st),
-         ivfseeds AS (SELECT v AS c_vec, rn - 1 AS icell FROM
+  private def md5SeedsCte(name: String, vec: String, cell: String,
+      src: String, limit: String): String =
+    s"""$name AS (SELECT v AS $vec, rn - 1 AS $cell FROM
              (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= (SELECT k FROM nc)),
-         asg AS (SELECT vec_id, icell FROM (
-             SELECT st.vec_id, s.icell,
-               row_number() OVER (PARTITION BY st.vec_id
-                 ORDER BY list_cosine_similarity(st.v, s.c_vec) DESC, s.icell) AS rn
-             FROM st CROSS JOIN ivfseeds s)
-           WHERE rn = 1),
+                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM $src)
+           WHERE rn <= $limit)"""
+
+  /** `asg`: each vector of `src` in the cell of its cosine-nearest seed
+    * of `seeds` (an [[md5SeedsCte]] with `c_vec`), ties to the lower
+    * `cell`.
+    */
+  private def seedAssignCte(cell: String, src: String, seeds: String): String =
+    s"""asg AS (SELECT vec_id, $cell FROM (
+             SELECT $src.vec_id, s.$cell,
+               row_number() OVER (PARTITION BY $src.vec_id
+                 ORDER BY list_cosine_similarity($src.v, s.c_vec) DESC, s.$cell) AS rn
+             FROM $src CROSS JOIN $seeds s)
+           WHERE rn = 1)"""
+
+  /** `nc`: [[graft.ext.AnnIndex.derivedNCells]] over the rows of `src`. */
+  private def derivedNCellsCte(src: String): String =
+    s"""nc AS (SELECT greatest(4, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS k
+           FROM $src)"""
+
+  /** The IVF probe of the incoming vectors `inc` against the standing
+    * `st`: `ivfseeds` (the first `nCells` vectors of `seedSrc`), `asg`,
+    * `probes` (each incoming vector's `nProbe` nearest cells) and `cand`
+    * (the standing members of its probed cells).
+    */
+  private def ivfProbeCtes(seedSrc: String, nCells: String, nProbe: Int): String =
+    md5SeedsCte("ivfseeds", "c_vec", "icell", seedSrc, nCells) + ",\n         " +
+      seedAssignCte("icell", "st", "ivfseeds") + s""",
          probes AS (SELECT vec_id AS query_id, icell FROM (
              SELECT inc.vec_id, s.icell,
                row_number() OVER (PARTITION BY inc.vec_id
                  ORDER BY list_cosine_similarity(inc.v, s.c_vec) DESC, s.icell) AS rn
              FROM inc CROSS JOIN ivfseeds s)
-           WHERE rn <= 2),
+           WHERE rn <= $nProbe),
          cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-           FROM probes p JOIN asg a ON p.icell = a.icell),
-         pqseeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= 16),
+           FROM probes p JOIN asg a ON p.icell = a.icell)"""
+
+  /** q168's PQ encode over the vectors `e`: codeword seeds `seeds` (the
+    * first 16 of `seedSrc`), `js` (8 subspaces of 8 dims), `cw` (the
+    * seeds' sub-slices), `sd` (every vector's squared sub-distance to
+    * every codeword, summed in the native kernel's order) and `codes`
+    * (the argmin codeword per vector and subspace over the rows of
+    * `encoded`, ties to the lower cell).
+    */
+  private def pqCodeCtes(seeds: String, seedSrc: String, encoded: String): String =
+    md5SeedsCte(seeds, "sv", "cell", seedSrc, "16") + s""",
          js AS (SELECT unnest(generate_series(0, 7)) AS j),
          cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM pqseeds s CROSS JOIN js),
+           FROM $seeds s CROSS JOIN js),
          sd AS (SELECT e.vec_id, c.j, c.cell,
              list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
                         for d in generate_series(1, 8) ]) AS sdist
@@ -243,20 +285,153 @@ $fin"""
          codes AS (SELECT vec_id, j, cell AS code FROM (
              SELECT vec_id, j, cell, row_number() OVER
                (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd WHERE vec_id % 5 <> 2)
-           WHERE rn = 1),
-         adc AS (SELECT c.query_id, c.neighbor_id,
+             FROM $encoded)
+           WHERE rn = 1)"""
+
+  /** `adc`: each candidate pair of `cand` scored by the ADC distance,
+    * the query's sub-distances to the neighbour's codes summed in
+    * subspace order.
+    */
+  private val candAdcCte: String =
+    """adc AS (SELECT c.query_id, c.neighbor_id,
              list_sum(list(s.sdist ORDER BY s.j)) AS dist
            FROM cand c
            JOIN codes n ON n.vec_id = c.neighbor_id
            JOIN sd s ON s.vec_id = c.query_id AND s.j = n.j AND s.cell = n.code
-           GROUP BY 1, 2),
-         r AS (SELECT query_id, neighbor_id, floor(dist * 1e6 + 0.5) / 1e6 AS adc_dist,
+           GROUP BY 1, 2)"""
+
+  /** `adc` for the exhaustive PQ scan: every encoded vector scored for
+    * each query id < 10 from the sub-distance table `sd`.
+    */
+  private def scanAdcCte(sd: String): String =
+    s"""adc AS (SELECT s.vec_id AS query_id, n.vec_id AS neighbor_id,
+             list_sum(list(s.sdist ORDER BY s.j)) AS dist
+           FROM codes n JOIN $sd s ON s.j = n.j AND s.cell = n.code
+           WHERE s.vec_id < 10 AND n.vec_id <> s.vec_id
+           GROUP BY 1, 2)"""
+
+  /** The ADC top-5 per query: distance rounded half-up to 6 dp, rank by
+    * (raw distance, neighbor id).
+    */
+  private val adcTopKTail: String =
+    """r AS (SELECT query_id, neighbor_id, floor(dist * 1e6 + 0.5) / 1e6 AS adc_dist,
              CAST(row_number() OVER (PARTITION BY query_id
                ORDER BY dist ASC, neighbor_id ASC) AS INTEGER) AS rank
            FROM adc)
          SELECT query_id, neighbor_id, adc_dist, rank FROM r WHERE rank <= 5
          ORDER BY query_id, rank"""
+
+  /** The persisted IVF-PQ index replay over the standing `st` and the
+    * incoming `inc` slices of `e` (q299): derived cell count, the IVF
+    * probe at `nProbe`, PQ codes of the standing slice and ADC scores.
+    */
+  private def annIndexCtes(nProbe: Int): String =
+    Seq(derivedNCellsCte("st"), ivfProbeCtes("st", "(SELECT k FROM nc)", nProbe),
+      pqCodeCtes("pqseeds", "st", "sd WHERE vec_id % 5 <> 2"), candAdcCte)
+      .mkString(",\n         ")
+
+  /** An exact cosine rerank of the ADC shortlist `shortr` (the first
+    * `depth` of `adc` by distance): each query id < 10 against the raw
+    * vectors of its shortlist rows, top 5.
+    */
+  private def shortlistRerankTail(depth: String): String =
+    s"""shortr AS (SELECT query_id, neighbor_id FROM (
+             SELECT query_id, neighbor_id, row_number() OVER
+               (PARTITION BY query_id ORDER BY dist ASC, neighbor_id ASC) AS rn
+             FROM adc)
+           WHERE rn <= $depth),
+         qv AS (SELECT vec_id AS query_id, v AS qvec FROM e WHERE vec_id < 10),
+         rs AS (SELECT s.query_id, s.neighbor_id,
+             list_cosine_similarity(q.qvec, c.v) AS cos_raw
+           FROM shortr s JOIN e c ON c.vec_id = s.neighbor_id
+           JOIN qv q USING (query_id)),
+         rr AS (SELECT query_id, neighbor_id, round(cos_raw, 6) + 0 AS cosine,
+             CAST(row_number() OVER (PARTITION BY query_id
+               ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rank
+           FROM rs)
+         SELECT query_id, neighbor_id, cosine, rank FROM rr WHERE rank <= 5
+         ORDER BY query_id, rank"""
+
+  /** q304's mining tail over the shortlist `short` of each incoming
+    * query: exact cosine rerank against the standing slice, excluding the
+    * query's labelled positive `p` (its true top-1) and every
+    * near-positive at cosine >= 0.95, top 5.
+    */
+  private val miningTail: String =
+    """p AS (SELECT query_id, neighbor_id AS pos_id FROM
+             (SELECT i.vec_id AS query_id, s2.vec_id AS neighbor_id,
+                row_number() OVER (PARTITION BY i.vec_id
+                  ORDER BY list_cosine_similarity(i.v, s2.v) DESC, s2.vec_id) AS rn
+              FROM inc i CROSS JOIN st s2)
+           WHERE rn = 1),
+         ex AS (SELECT sh.query_id, sh.neighbor_id,
+             list_cosine_similarity(i.v, s2.v) AS cos_raw
+           FROM short sh
+           JOIN inc i ON i.vec_id = sh.query_id
+           JOIN st s2 ON s2.vec_id = sh.neighbor_id
+           LEFT JOIN p ON p.query_id = sh.query_id
+                      AND p.pos_id = sh.neighbor_id
+           WHERE p.pos_id IS NULL),
+         rr AS (SELECT query_id, neighbor_id, round(cos_raw, 6) + 0 AS cosine,
+             CAST(row_number() OVER (PARTITION BY query_id
+               ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rank
+           FROM ex WHERE cos_raw < 0.95)
+         SELECT query_id, neighbor_id, cosine, rank FROM rr WHERE rank <= 5
+         ORDER BY query_id, rank"""
+
+  /** The refine tier's SQ8 re-score: `wide` (the first `depth` of `adc`
+    * per query), the standing slice's exact-decimal per-dim ranges `rg`,
+    * dequantized codes for the standing (`dqc`) and incoming (`dqq`)
+    * vectors, and `sqs`, the exact decimal dot product per wide pair.
+    */
+  private def sq8RefineCtes(depth: String): String =
+    s"""wide AS (SELECT query_id, neighbor_id FROM
+             (SELECT query_id, neighbor_id, row_number() OVER
+                (PARTITION BY query_id ORDER BY dist ASC, neighbor_id ASC) AS rnk
+              FROM adc)
+           WHERE rnk <= $depth),
+         sx AS (SELECT vec_id, i,
+             CAST(round(v[i], 6) AS DECIMAL(18,6)) AS xq
+           FROM (SELECT vec_id, v, unnest(generate_series(1, 64)) AS i
+                 FROM st)),
+         rg AS (SELECT i, min(xq) AS lo, max(xq) AS hi FROM sx GROUP BY i),
+         dqc AS (SELECT vec_id, sx.i,
+             CAST(lo * 255 + (CASE WHEN hi = lo THEN 0
+                  ELSE LEAST(255, GREATEST(0,
+                    CAST(floor(CAST((xq - lo) * 255 AS DOUBLE)
+                      / CAST(hi - lo AS DOUBLE) + 0.5) AS INTEGER))) END)
+               * (hi - lo) AS DECIMAL(18,6)) AS dd
+           FROM sx JOIN rg USING (i)),
+         qx AS (SELECT vec_id, i,
+             CAST(round(v[i], 6) AS DECIMAL(18,6)) AS xq
+           FROM (SELECT vec_id, v, unnest(generate_series(1, 64)) AS i
+                 FROM inc)),
+         dqq AS (SELECT vec_id AS query_id, qx.i,
+             CAST(lo * 255 + (CASE WHEN hi = lo THEN 0
+                  ELSE LEAST(255, GREATEST(0,
+                    CAST(floor(CAST((xq - lo) * 255 AS DOUBLE)
+                      / CAST(hi - lo AS DOUBLE) + 0.5) AS INTEGER))) END)
+               * (hi - lo) AS DECIMAL(18,6)) AS qd
+           FROM qx JOIN rg USING (i)),
+         sqs AS (SELECT w.query_id, w.neighbor_id,
+             CAST(sum(q.qd * c.dd) AS DECIMAL(38,12)) AS sc
+           FROM wide w
+           JOIN dqq q ON q.query_id = w.query_id
+           JOIN dqc c ON c.vec_id = w.neighbor_id AND c.i = q.i
+           GROUP BY 1, 2)"""
+
+  /** Shared by q299 (persisted-index batch probe) and q307 (the same
+    * probe with the increment ARRIVING as a stream — row-local given the
+    * frozen state, so streamed == batch under any cut): the q169 IVFADC
+    * CTEs over the standing/incoming split, models and codes from the
+    * STANDING slice only (provenance invariance, the q284 convention).
+    */
+  private val annIndexProbeOracle: String =
+    raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         st AS (SELECT * FROM e WHERE vec_id % 5 <> 2),
+         inc AS (SELECT * FROM e WHERE vec_id % 5 = 2),
+         ${annIndexCtes(2)},
+         $adcTopKTail"""
 
   /** Shared by q228 (batch semantic screen) and q232 (streamed, stateless
     * — Append mode equals batch row-for-row under any cut): q24's cosine
@@ -276,6 +451,80 @@ $fin"""
          SELECT vec_id, eval_id, round(cr, 6) + 0 AS cosine,
            round(cr, 6) >= 0.9 AS contaminated
          FROM r WHERE rn = 1 ORDER BY vec_id"""
+
+  /** q182's BM25 replay over the documents passing `docFilter`: the
+    * q162 tokenization, rational idf (N+1)/(df+0.5), per-term doubles in
+    * the engine's evaluation order rounded to 6 dp, decimal totals, and
+    * `r` (query_id, doc_id, score, rnk) for the [[bm25Queries]].
+    */
+  private def bm25Ctes(docFilter: String): String =
+    raw"""d0 AS (SELECT doc_id,
+           list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
+             x -> x <> '') AS arr
+         FROM documents WHERE $docFilter),
+        st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+            CAST(sum(len(arr)) AS DOUBLE) AS dls FROM d0),
+        tok AS (SELECT doc_id, CAST(len(arr) AS BIGINT) AS dl,
+            unnest(arr) AS token FROM d0),
+        tf AS (SELECT doc_id, token, dl, count(*) AS tf
+          FROM tok GROUP BY 1, 2, 3),
+        qq AS (SELECT * FROM (VALUES $bm25QueriesLit) AS t(query_id, qtext)),
+        qt AS (SELECT DISTINCT query_id,
+            unnest(list_filter(regexp_split_to_array(lower(qtext), '[^\p{L}\p{N}_]+'),
+              x -> x <> '')) AS token
+          FROM qq),
+        dfq AS (SELECT token, count(*) AS df FROM tf
+          WHERE token IN (SELECT DISTINCT token FROM qt) GROUP BY 1),
+        sc AS (SELECT qt.query_id, tf.doc_id,
+            CAST(round((st.n + 1.0) / (dfq.df + 0.5) *
+              (tf.tf * (1.2 + 1.0) / (tf.tf + 1.2 * (1.0 - 0.75 +
+                0.75 * tf.dl * st.n / st.dls))), 6) AS DECIMAL(18,6)) AS ts
+          FROM qt JOIN tf USING (token) JOIN dfq USING (token) CROSS JOIN st),
+        tot AS (SELECT query_id, doc_id, CAST(sum(ts) AS DOUBLE) AS score
+          FROM sc GROUP BY 1, 2),
+        r AS (SELECT query_id, doc_id, score,
+            row_number() OVER (PARTITION BY query_id
+              ORDER BY score DESC, doc_id) AS rnk
+          FROM tot)"""
+
+  /** The pseudo-relevance-feedback query vector `qv` (query_id, qvec):
+    * the per-dim DECIMAL sum of the embeddings of each query's BM25 top 3
+    * (`top3` over `ev`); no division, since cosine is scale-invariant.
+    */
+  private val prfQueryCtes: String =
+    """dims AS (SELECT unnest(generate_series(1, 64)) AS dim),
+        pd AS (SELECT t.query_id, dims.dim,
+            CAST(sum(CAST(e.v[dims.dim] AS DECIMAL(18,8))) AS DOUBLE) AS sv
+          FROM top3 t JOIN ev e ON e.vec_id = t.doc_id CROSS JOIN dims
+          GROUP BY 1, 2),
+        qv AS (SELECT query_id, list(sv ORDER BY dim) AS qvec
+          FROM pd GROUP BY 1)"""
+
+  /** The RRF fusion of the BM25 ranks `r` and the dense ranks `dr`
+    * (computed here from the scores `dsc`): each rank's 1/(60 + rank)
+    * rounded to 6 dp and decimal-summed, top 10. No contribution lands on
+    * a rounding half-boundary: the only terminating value is 1/64, exact
+    * at 6 places.
+    */
+  private val rrfTail: String =
+    """dr AS (SELECT query_id, doc_id, row_number() OVER
+            (PARTITION BY query_id ORDER BY cs DESC, doc_id) AS drk
+          FROM dsc),
+        c AS (SELECT query_id, doc_id,
+            CAST(round(1.0 / (60 + rnk), 6) AS DECIMAL(18,6)) AS c
+          FROM r WHERE rnk <= 10
+          UNION ALL
+          SELECT query_id, doc_id,
+            CAST(round(1.0 / (60 + drk), 6) AS DECIMAL(18,6)) AS c
+          FROM dr WHERE drk <= 10),
+        f AS (SELECT query_id, doc_id, CAST(sum(c) AS DOUBLE) AS rrf_score
+          FROM c GROUP BY 1, 2),
+        fr AS (SELECT query_id, doc_id, rrf_score, row_number() OVER
+            (PARTITION BY query_id ORDER BY rrf_score DESC, doc_id) AS rank
+          FROM f)
+        SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, rrf_score,
+          CAST(rank AS INTEGER) AS rank
+        FROM fr WHERE rank <= 10 ORDER BY query_id, rank"""
 
   /** q182's frozen retrieval queries — multi-term (the regime where BM25's
     * score SUM matters), mixing common terms (`the`, `table`) with rarer
@@ -579,17 +828,9 @@ $fin"""
         "vec_id", "embedding", "vec_id", k = 5, nProbe = 2)
         .orderBy("query_id", "rank")
     }, oracle = Some(
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         seeds AS (SELECT v AS c_vec, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM e)
-           WHERE rn <= 8),
-         asg AS (SELECT vec_id, cell FROM (
-             SELECT e.vec_id, s.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.v, s.c_vec) DESC, s.cell) AS rn
-             FROM e CROSS JOIN seeds s)
-           WHERE rn = 1),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         ${md5SeedsCte("seeds", "c_vec", "cell", "e", "8")},
+         ${seedAssignCte("cell", "e", "seeds")},
          probes AS (SELECT vec_id AS query_id, cell FROM (
              SELECT e.vec_id, s.cell,
                row_number() OVER (PARTITION BY e.vec_id
@@ -634,34 +875,10 @@ $fin"""
       // via per-(vector, subspace) argmin, ADC totals as
       // list_sum(list(... ORDER BY j)) — every sum in the same sequential
       // order the native kernel uses, so raw doubles match bit-exactly
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         seeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM e)
-           WHERE rn <= 16),
-         js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM seeds s CROSS JOIN js),
-         sd AS (SELECT e.vec_id, c.j, c.cell,
-             list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
-                        for d in generate_series(1, 8) ]) AS sdist
-           FROM e CROSS JOIN cw c),
-         codes AS (SELECT vec_id, j, cell AS code FROM (
-             SELECT vec_id, j, cell, row_number() OVER
-               (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd)
-           WHERE rn = 1),
-         adc AS (SELECT s.vec_id AS query_id, n.vec_id AS neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM codes n JOIN sd s ON s.j = n.j AND s.cell = n.code
-           WHERE s.vec_id < 10 AND n.vec_id <> s.vec_id
-           GROUP BY 1, 2),
-         r AS (SELECT query_id, neighbor_id, floor(dist * 1e6 + 0.5) / 1e6 AS adc_dist,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY dist ASC, neighbor_id ASC) AS INTEGER) AS rank
-           FROM adc)
-         SELECT query_id, neighbor_id, adc_dist, rank FROM r WHERE rank <= 5
-         ORDER BY query_id, rank""")),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         ${pqCodeCtes("seeds", "e", "sd")},
+         ${scanAdcCte("sd")},
+         $adcTopKTail""")),
 
     Case("q169_knn_ivfpq", (s, d) => {
       // the production ANN architecture (FAISS IVFADC) as a COMPOSITION
@@ -681,17 +898,9 @@ $fin"""
     }, oracle = Some(
       // the q118 probing CTEs + the q168 ADC CTEs, joined: candidates come
       // from the probed cells only, scores stay the fixed-order ADC sums
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         ivfseeds AS (SELECT v AS c_vec, rn - 1 AS icell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM e)
-           WHERE rn <= 8),
-         asg AS (SELECT vec_id, icell FROM (
-             SELECT e.vec_id, s.icell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.v, s.c_vec) DESC, s.icell) AS rn
-             FROM e CROSS JOIN ivfseeds s)
-           WHERE rn = 1),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         ${md5SeedsCte("ivfseeds", "c_vec", "icell", "e", "8")},
+         ${seedAssignCte("icell", "e", "ivfseeds")},
          probes AS (SELECT vec_id AS query_id, icell FROM (
              SELECT e.vec_id, s.icell,
                row_number() OVER (PARTITION BY e.vec_id
@@ -701,34 +910,9 @@ $fin"""
          cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
            FROM probes p JOIN asg a ON p.icell = a.icell
            WHERE a.vec_id <> p.query_id),
-         pqseeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM e)
-           WHERE rn <= 16),
-         js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM pqseeds s CROSS JOIN js),
-         sd AS (SELECT e.vec_id, c.j, c.cell,
-             list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
-                        for d in generate_series(1, 8) ]) AS sdist
-           FROM e CROSS JOIN cw c),
-         codes AS (SELECT vec_id, j, cell AS code FROM (
-             SELECT vec_id, j, cell, row_number() OVER
-               (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd)
-           WHERE rn = 1),
-         adc AS (SELECT c.query_id, c.neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM cand c
-           JOIN codes n ON n.vec_id = c.neighbor_id
-           JOIN sd s ON s.vec_id = c.query_id AND s.j = n.j AND s.cell = n.code
-           GROUP BY 1, 2),
-         r AS (SELECT query_id, neighbor_id, floor(dist * 1e6 + 0.5) / 1e6 AS adc_dist,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY dist ASC, neighbor_id ASC) AS INTEGER) AS rank
-           FROM adc)
-         SELECT query_id, neighbor_id, adc_dist, rank FROM r WHERE rank <= 5
-         ORDER BY query_id, rank""")),
+         ${pqCodeCtes("pqseeds", "e", "sd")},
+         $candAdcCte,
+         $adcTopKTail""")),
 
     Case("q291_knn_pq_trained", (s, d) => {
       // trained PQ under a FULL hash oracle: ONE Lloyd step from the
@@ -753,11 +937,8 @@ $fin"""
       // divided in double and re-quantized to 6 dp; an empty cell keeps
       // its seed codeword via the LEFT JOIN coalesce — then the identical
       // ADC search under the refined codebooks
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         seeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM e)
-           WHERE rn <= 16),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         ${md5SeedsCte("seeds", "sv", "cell", "e", "16")},
          js AS (SELECT unnest(generate_series(0, 7)) AS j),
          dss AS (SELECT unnest(generate_series(1, 8)) AS d),
          cw0 AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
@@ -790,17 +971,8 @@ $fin"""
                (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
              FROM sd1)
            WHERE rn = 1),
-         adc AS (SELECT s.vec_id AS query_id, n.vec_id AS neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM codes n JOIN sd1 s ON s.j = n.j AND s.cell = n.code
-           WHERE s.vec_id < 10 AND n.vec_id <> s.vec_id
-           GROUP BY 1, 2),
-         r AS (SELECT query_id, neighbor_id, floor(dist * 1e6 + 0.5) / 1e6 AS adc_dist,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY dist ASC, neighbor_id ASC) AS INTEGER) AS rank
-           FROM adc)
-         SELECT query_id, neighbor_id, adc_dist, rank FROM r WHERE rank <= 5
-         ORDER BY query_id, rank""")),
+         ${scanAdcCte("sd1")},
+         $adcTopKTail""")),
 
     Case("q292_knn_pq_rerank", (s, d) => {
       // ADC shortlist + exact cosine re-rank, fully hash-oracled: the
@@ -820,44 +992,10 @@ $fin"""
     }, oracle = Some(
       // the q168 ADC chain cut at the 50-deep shortlist, then the q24
       // cosine convention re-ranks raw vectors of shortlist rows only
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         seeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM e)
-           WHERE rn <= 16),
-         js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM seeds s CROSS JOIN js),
-         sd AS (SELECT e.vec_id, c.j, c.cell,
-             list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
-                        for d in generate_series(1, 8) ]) AS sdist
-           FROM e CROSS JOIN cw c),
-         codes AS (SELECT vec_id, j, cell AS code FROM (
-             SELECT vec_id, j, cell, row_number() OVER
-               (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd)
-           WHERE rn = 1),
-         adc AS (SELECT s.vec_id AS query_id, n.vec_id AS neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM codes n JOIN sd s ON s.j = n.j AND s.cell = n.code
-           WHERE s.vec_id < 10 AND n.vec_id <> s.vec_id
-           GROUP BY 1, 2),
-         shortr AS (SELECT query_id, neighbor_id FROM (
-             SELECT query_id, neighbor_id, row_number() OVER
-               (PARTITION BY query_id ORDER BY dist ASC, neighbor_id ASC) AS rn
-             FROM adc)
-           WHERE rn <= 50),
-         qv AS (SELECT vec_id AS query_id, v AS qvec FROM e WHERE vec_id < 10),
-         rs AS (SELECT s.query_id, s.neighbor_id,
-             list_cosine_similarity(q.qvec, c.v) AS cos_raw
-           FROM shortr s JOIN e c ON c.vec_id = s.neighbor_id
-           JOIN qv q USING (query_id)),
-         rr AS (SELECT query_id, neighbor_id, round(cos_raw, 6) + 0 AS cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rank
-           FROM rs)
-         SELECT query_id, neighbor_id, cosine, rank FROM rr WHERE rank <= 5
-         ORDER BY query_id, rank""")),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         ${pqCodeCtes("seeds", "e", "sd")},
+         ${scanAdcCte("sd")},
+         ${shortlistRerankTail("50")}""")),
 
     Case("q297_pq_rerank_scaled", (s, d) => {
       // the q292 rerank under the DERIVED shortlist (r16 verdict #1):
@@ -878,46 +1016,12 @@ $fin"""
       // greatest(ceil(0.2 * count(*)), 10 * k) — the engine's sizing rule
       // recomputed from the corpus count, so a drifted derivation breaks
       // the hash
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          sl AS (SELECT greatest(CAST(ceil(0.2 * count(*)) AS BIGINT), 50) AS s
            FROM e),
-         seeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM e)
-           WHERE rn <= 16),
-         js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM seeds s CROSS JOIN js),
-         sd AS (SELECT e.vec_id, c.j, c.cell,
-             list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
-                        for d in generate_series(1, 8) ]) AS sdist
-           FROM e CROSS JOIN cw c),
-         codes AS (SELECT vec_id, j, cell AS code FROM (
-             SELECT vec_id, j, cell, row_number() OVER
-               (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd)
-           WHERE rn = 1),
-         adc AS (SELECT s.vec_id AS query_id, n.vec_id AS neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM codes n JOIN sd s ON s.j = n.j AND s.cell = n.code
-           WHERE s.vec_id < 10 AND n.vec_id <> s.vec_id
-           GROUP BY 1, 2),
-         shortr AS (SELECT query_id, neighbor_id FROM (
-             SELECT query_id, neighbor_id, row_number() OVER
-               (PARTITION BY query_id ORDER BY dist ASC, neighbor_id ASC) AS rn
-             FROM adc)
-           WHERE rn <= (SELECT s FROM sl)),
-         qv AS (SELECT vec_id AS query_id, v AS qvec FROM e WHERE vec_id < 10),
-         rs AS (SELECT s.query_id, s.neighbor_id,
-             list_cosine_similarity(q.qvec, c.v) AS cos_raw
-           FROM shortr s JOIN e c ON c.vec_id = s.neighbor_id
-           JOIN qv q USING (query_id)),
-         rr AS (SELECT query_id, neighbor_id, round(cos_raw, 6) + 0 AS cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rank
-           FROM rs)
-         SELECT query_id, neighbor_id, cosine, rank FROM rr WHERE rank <= 5
-         ORDER BY query_id, rank""")),
+         ${pqCodeCtes("seeds", "e", "sd")},
+         ${scanAdcCte("sd")},
+         ${shortlistRerankTail("(SELECT s FROM sl)")}""")),
 
     Case("q299_ann_index_probe", (s, d) => {
       // the persisted IVF-PQ index probed by an increment — the ANN
@@ -979,65 +1083,15 @@ $fin"""
       // RRF contributions rounded to 6dp and decimal-summed. No 1/(60+r)
       // lands on a rounding half-boundary: the only terminating value is
       // 1/64, exact at 6 places
-      raw"""WITH d0 AS (SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-             x -> x <> '') AS arr
-         FROM documents WHERE text IS NOT NULL),
-        st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-            CAST(sum(len(arr)) AS DOUBLE) AS dls FROM d0),
-        tok AS (SELECT doc_id, CAST(len(arr) AS BIGINT) AS dl,
-            unnest(arr) AS token FROM d0),
-        tf AS (SELECT doc_id, token, dl, count(*) AS tf
-          FROM tok GROUP BY 1, 2, 3),
-        qq AS (SELECT * FROM (VALUES $bm25QueriesLit) AS t(query_id, qtext)),
-        qt AS (SELECT DISTINCT query_id,
-            unnest(list_filter(regexp_split_to_array(lower(qtext), '[^\p{L}\p{N}_]+'),
-              x -> x <> '')) AS token
-          FROM qq),
-        dfq AS (SELECT token, count(*) AS df FROM tf
-          WHERE token IN (SELECT DISTINCT token FROM qt) GROUP BY 1),
-        sc AS (SELECT qt.query_id, tf.doc_id,
-            CAST(round((st.n + 1.0) / (dfq.df + 0.5) *
-              (tf.tf * (1.2 + 1.0) / (tf.tf + 1.2 * (1.0 - 0.75 +
-                0.75 * tf.dl * st.n / st.dls))), 6) AS DECIMAL(18,6)) AS ts
-          FROM qt JOIN tf USING (token) JOIN dfq USING (token) CROSS JOIN st),
-        tot AS (SELECT query_id, doc_id, CAST(sum(ts) AS DOUBLE) AS score
-          FROM sc GROUP BY 1, 2),
-        r AS (SELECT query_id, doc_id, score,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY score DESC, doc_id) AS rnk
-          FROM tot),
+      raw"""WITH ${bm25Ctes("text IS NOT NULL")},
         top3 AS (SELECT query_id, doc_id FROM r WHERE rnk <= 3),
         ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
           FROM embeddings),
-        dims AS (SELECT unnest(generate_series(1, 64)) AS dim),
-        pd AS (SELECT t.query_id, dims.dim,
-            CAST(sum(CAST(e.v[dims.dim] AS DECIMAL(18,8))) AS DOUBLE) AS sv
-          FROM top3 t JOIN ev e ON e.vec_id = t.doc_id CROSS JOIN dims
-          GROUP BY 1, 2),
-        qv AS (SELECT query_id, list(sv ORDER BY dim) AS qvec
-          FROM pd GROUP BY 1),
+        $prfQueryCtes,
         dsc AS (SELECT q.query_id, e.vec_id AS doc_id,
             list_cosine_similarity(q.qvec, e.v) AS cs
           FROM qv q CROSS JOIN ev e),
-        dr AS (SELECT query_id, doc_id, row_number() OVER
-            (PARTITION BY query_id ORDER BY cs DESC, doc_id) AS drk
-          FROM dsc),
-        c AS (SELECT query_id, doc_id,
-            CAST(round(1.0 / (60 + rnk), 6) AS DECIMAL(18,6)) AS c
-          FROM r WHERE rnk <= 10
-          UNION ALL
-          SELECT query_id, doc_id,
-            CAST(round(1.0 / (60 + drk), 6) AS DECIMAL(18,6)) AS c
-          FROM dr WHERE drk <= 10),
-        f AS (SELECT query_id, doc_id, CAST(sum(c) AS DOUBLE) AS rrf_score
-          FROM c GROUP BY 1, 2),
-        fr AS (SELECT query_id, doc_id, rrf_score, row_number() OVER
-            (PARTITION BY query_id ORDER BY rrf_score DESC, doc_id) AS rank
-          FROM f)
-        SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, rrf_score,
-          CAST(rank AS INTEGER) AS rank
-        FROM fr WHERE rank <= 10 ORDER BY query_id, rank""")),
+        $rrfTail""")),
 
     Case("q311_hybrid_indexed", (s, d) => {
       // q310's hybrid retrieval with the dense side served by the
@@ -1050,59 +1104,17 @@ $fin"""
       // q299/q305 index chain (derived nCells + derived shortlist depth,
       // nProbe 4) probed BY THE PRF VECTOR, exact cosine rerank of the ADC
       // shortlist, and the same RRF tail
-      raw"""WITH d0 AS (SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-             x -> x <> '') AS arr
-         FROM documents WHERE text IS NOT NULL AND doc_id % 5 <> 2),
-        st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-            CAST(sum(len(arr)) AS DOUBLE) AS dls FROM d0),
-        tok AS (SELECT doc_id, CAST(len(arr) AS BIGINT) AS dl,
-            unnest(arr) AS token FROM d0),
-        tf AS (SELECT doc_id, token, dl, count(*) AS tf
-          FROM tok GROUP BY 1, 2, 3),
-        qq AS (SELECT * FROM (VALUES $bm25QueriesLit) AS t(query_id, qtext)),
-        qt AS (SELECT DISTINCT query_id,
-            unnest(list_filter(regexp_split_to_array(lower(qtext), '[^\p{L}\p{N}_]+'),
-              x -> x <> '')) AS token
-          FROM qq),
-        dfq AS (SELECT token, count(*) AS df FROM tf
-          WHERE token IN (SELECT DISTINCT token FROM qt) GROUP BY 1),
-        sc AS (SELECT qt.query_id, tf.doc_id,
-            CAST(round((st.n + 1.0) / (dfq.df + 0.5) *
-              (tf.tf * (1.2 + 1.0) / (tf.tf + 1.2 * (1.0 - 0.75 +
-                0.75 * tf.dl * st.n / st.dls))), 6) AS DECIMAL(18,6)) AS ts
-          FROM qt JOIN tf USING (token) JOIN dfq USING (token) CROSS JOIN st),
-        tot AS (SELECT query_id, doc_id, CAST(sum(ts) AS DOUBLE) AS score
-          FROM sc GROUP BY 1, 2),
-        r AS (SELECT query_id, doc_id, score,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY score DESC, doc_id) AS rnk
-          FROM tot),
+      raw"""WITH ${bm25Ctes("text IS NOT NULL AND doc_id % 5 <> 2")},
         top3 AS (SELECT query_id, doc_id FROM r WHERE rnk <= 3),
         ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
           FROM embeddings),
         se AS (SELECT * FROM ev WHERE vec_id % 5 <> 2),
-        dims AS (SELECT unnest(generate_series(1, 64)) AS dim),
-        pd AS (SELECT t.query_id, dims.dim,
-            CAST(sum(CAST(e.v[dims.dim] AS DECIMAL(18,8))) AS DOUBLE) AS sv
-          FROM top3 t JOIN ev e ON e.vec_id = t.doc_id CROSS JOIN dims
-          GROUP BY 1, 2),
-        qv AS (SELECT query_id, list(sv ORDER BY dim) AS qvec
-          FROM pd GROUP BY 1),
-        nc AS (SELECT greatest(4, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS k
-          FROM se),
+        $prfQueryCtes,
+        ${derivedNCellsCte("se")},
         slsz AS (SELECT greatest(CAST(ceil(0.02 * count(*)) AS BIGINT), 100) AS s
           FROM se),
-        ivfseeds AS (SELECT v AS c_vec, rn - 1 AS icell FROM
-            (SELECT v, row_number() OVER
-               (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM se)
-          WHERE rn <= (SELECT k FROM nc)),
-        asg AS (SELECT vec_id, icell FROM (
-            SELECT se.vec_id, s.icell,
-              row_number() OVER (PARTITION BY se.vec_id
-                ORDER BY list_cosine_similarity(se.v, s.c_vec) DESC, s.icell) AS rn
-            FROM se CROSS JOIN ivfseeds s)
-          WHERE rn = 1),
+        ${md5SeedsCte("ivfseeds", "c_vec", "icell", "se", "(SELECT k FROM nc)")},
+        ${seedAssignCte("icell", "se", "ivfseeds")},
         probes AS (SELECT query_id, icell FROM (
             SELECT q.query_id, s.icell,
               row_number() OVER (PARTITION BY q.query_id
@@ -1111,10 +1123,7 @@ $fin"""
           WHERE rn <= 4),
         cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
           FROM probes p JOIN asg a ON p.icell = a.icell),
-        pqseeds AS (SELECT v AS sv2, rn - 1 AS cell FROM
-            (SELECT v, row_number() OVER
-               (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM se)
-          WHERE rn <= 16),
+        ${md5SeedsCte("pqseeds", "sv2", "cell", "se", "16")},
         js AS (SELECT unnest(generate_series(0, 7)) AS j),
         cw AS (SELECT js.j, s.cell, s.sv2[js.j*8 + 1 : js.j*8 + 8] AS w
           FROM pqseeds s CROSS JOIN js),
@@ -1148,24 +1157,7 @@ $fin"""
           FROM short sh
           JOIN qv q ON q.query_id = sh.query_id
           JOIN se ON se.vec_id = sh.neighbor_id),
-        dr AS (SELECT query_id, doc_id, row_number() OVER
-            (PARTITION BY query_id ORDER BY cs DESC, doc_id) AS drk
-          FROM dsc),
-        c AS (SELECT query_id, doc_id,
-            CAST(round(1.0 / (60 + rnk), 6) AS DECIMAL(18,6)) AS c
-          FROM r WHERE rnk <= 10
-          UNION ALL
-          SELECT query_id, doc_id,
-            CAST(round(1.0 / (60 + drk), 6) AS DECIMAL(18,6)) AS c
-          FROM dr WHERE drk <= 10),
-        f AS (SELECT query_id, doc_id, CAST(sum(c) AS DOUBLE) AS rrf_score
-          FROM c GROUP BY 1, 2),
-        fr AS (SELECT query_id, doc_id, rrf_score, row_number() OVER
-            (PARTITION BY query_id ORDER BY rrf_score DESC, doc_id) AS rank
-          FROM f)
-        SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, rrf_score,
-          CAST(rank AS INTEGER) AS rank
-        FROM fr WHERE rank <= 10 ORDER BY query_id, rank""")),
+        $rrfTail""")),
 
     Case("q309_mining_autotune", (s, d) => {
       // the mining-shortlist dial MEASURED in-engine (the q296 tuner
@@ -1199,53 +1191,12 @@ $fin"""
       // with the q304 exclusions and scored against the exact mining
       // truth; recall = n_hit/n_truth through DECIMAL (n_truth = 50, so
       // the quotient terminates within 6 places in both engines)
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          st AS (SELECT * FROM e WHERE vec_id % 5 <> 2),
          sl AS (SELECT greatest(CAST(ceil(0.02 * count(*)) AS BIGINT), 50) AS s
            FROM st),
          inc AS (SELECT * FROM e WHERE vec_id % 5 = 2 AND vec_id < 50),
-         nc AS (SELECT greatest(4, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS k
-           FROM st),
-         ivfseeds AS (SELECT v AS c_vec, rn - 1 AS icell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= (SELECT k FROM nc)),
-         asg AS (SELECT vec_id, icell FROM (
-             SELECT st.vec_id, s.icell,
-               row_number() OVER (PARTITION BY st.vec_id
-                 ORDER BY list_cosine_similarity(st.v, s.c_vec) DESC, s.icell) AS rn
-             FROM st CROSS JOIN ivfseeds s)
-           WHERE rn = 1),
-         probes AS (SELECT vec_id AS query_id, icell FROM (
-             SELECT inc.vec_id, s.icell,
-               row_number() OVER (PARTITION BY inc.vec_id
-                 ORDER BY list_cosine_similarity(inc.v, s.c_vec) DESC, s.icell) AS rn
-             FROM inc CROSS JOIN ivfseeds s)
-           WHERE rn <= 4),
-         cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-           FROM probes p JOIN asg a ON p.icell = a.icell),
-         pqseeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= 16),
-         js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM pqseeds s CROSS JOIN js),
-         sd AS (SELECT e.vec_id, c.j, c.cell,
-             list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
-                        for d in generate_series(1, 8) ]) AS sdist
-           FROM e CROSS JOIN cw c),
-         codes AS (SELECT vec_id, j, cell AS code FROM (
-             SELECT vec_id, j, cell, row_number() OVER
-               (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd WHERE vec_id % 5 <> 2)
-           WHERE rn = 1),
-         adc AS (SELECT c.query_id, c.neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM cand c
-           JOIN codes n ON n.vec_id = c.neighbor_id
-           JOIN sd s ON s.vec_id = c.query_id AND s.j = n.j AND s.cell = n.code
-           GROUP BY 1, 2),
+         ${annIndexCtes(4)},
          ranked AS (SELECT query_id, neighbor_id,
              row_number() OVER (PARTITION BY query_id
                ORDER BY dist ASC, neighbor_id ASC) AS rnk
@@ -1406,78 +1357,18 @@ $fin"""
       // knee nProbe = 4, then the q304 mining tail: exact cosine rerank,
       // true-top-1 positive exclusion, 0.95 margin — the whole indexed
       // mining chain in one replay
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          st AS (SELECT * FROM e WHERE vec_id % 5 <> 2),
          sl AS (SELECT greatest(CAST(ceil(0.02 * count(*)) AS BIGINT), 50) AS s
            FROM st),
          inc AS (SELECT * FROM e WHERE vec_id % 5 = 2 AND vec_id < 50),
-         nc AS (SELECT greatest(4, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS k
-           FROM st),
-         ivfseeds AS (SELECT v AS c_vec, rn - 1 AS icell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= (SELECT k FROM nc)),
-         asg AS (SELECT vec_id, icell FROM (
-             SELECT st.vec_id, s.icell,
-               row_number() OVER (PARTITION BY st.vec_id
-                 ORDER BY list_cosine_similarity(st.v, s.c_vec) DESC, s.icell) AS rn
-             FROM st CROSS JOIN ivfseeds s)
-           WHERE rn = 1),
-         probes AS (SELECT vec_id AS query_id, icell FROM (
-             SELECT inc.vec_id, s.icell,
-               row_number() OVER (PARTITION BY inc.vec_id
-                 ORDER BY list_cosine_similarity(inc.v, s.c_vec) DESC, s.icell) AS rn
-             FROM inc CROSS JOIN ivfseeds s)
-           WHERE rn <= 4),
-         cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-           FROM probes p JOIN asg a ON p.icell = a.icell),
-         pqseeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= 16),
-         js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM pqseeds s CROSS JOIN js),
-         sd AS (SELECT e.vec_id, c.j, c.cell,
-             list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
-                        for d in generate_series(1, 8) ]) AS sdist
-           FROM e CROSS JOIN cw c),
-         codes AS (SELECT vec_id, j, cell AS code FROM (
-             SELECT vec_id, j, cell, row_number() OVER
-               (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd WHERE vec_id % 5 <> 2)
-           WHERE rn = 1),
-         adc AS (SELECT c.query_id, c.neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM cand c
-           JOIN codes n ON n.vec_id = c.neighbor_id
-           JOIN sd s ON s.vec_id = c.query_id AND s.j = n.j AND s.cell = n.code
-           GROUP BY 1, 2),
+         ${annIndexCtes(4)},
          short AS (SELECT query_id, neighbor_id FROM
              (SELECT query_id, neighbor_id, row_number() OVER
                 (PARTITION BY query_id ORDER BY dist ASC, neighbor_id ASC) AS rnk
               FROM adc)
            WHERE rnk <= (SELECT s FROM sl)),
-         p AS (SELECT query_id, neighbor_id AS pos_id FROM
-             (SELECT i.vec_id AS query_id, s2.vec_id AS neighbor_id,
-                row_number() OVER (PARTITION BY i.vec_id
-                  ORDER BY list_cosine_similarity(i.v, s2.v) DESC, s2.vec_id) AS rn
-              FROM inc i CROSS JOIN st s2)
-           WHERE rn = 1),
-         ex AS (SELECT sh.query_id, sh.neighbor_id,
-             list_cosine_similarity(i.v, s2.v) AS cos_raw
-           FROM short sh
-           JOIN inc i ON i.vec_id = sh.query_id
-           JOIN st s2 ON s2.vec_id = sh.neighbor_id
-           LEFT JOIN p ON p.query_id = sh.query_id
-                      AND p.pos_id = sh.neighbor_id
-           WHERE p.pos_id IS NULL),
-         rr AS (SELECT query_id, neighbor_id, round(cos_raw, 6) + 0 AS cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rank
-           FROM ex WHERE cos_raw < 0.95)
-         SELECT query_id, neighbor_id, cosine, rank FROM rr WHERE rank <= 5
-         ORDER BY query_id, rank""")),
+         $miningTail""")),
 
     Case("q312_hard_negatives_refined", (s, d) => {
       // q305 with the SQ8 refine tier between ADC and the exact rerank
@@ -1512,112 +1403,19 @@ $fin"""
       // exact-decimal dequantized dot under ranges fitted on the STANDING
       // slice (the refine tier's own corpus), cut back to the derived S by
       // (sq8 score DESC, neighbor ASC), then the identical exact tail
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          st AS (SELECT * FROM e WHERE vec_id % 5 <> 2),
          sl AS (SELECT greatest(CAST(ceil(0.02 * count(*)) AS BIGINT), 50) AS s
            FROM st),
          inc AS (SELECT * FROM e WHERE vec_id % 5 = 2 AND vec_id < 50),
-         nc AS (SELECT greatest(4, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS k
-           FROM st),
-         ivfseeds AS (SELECT v AS c_vec, rn - 1 AS icell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= (SELECT k FROM nc)),
-         asg AS (SELECT vec_id, icell FROM (
-             SELECT st.vec_id, s.icell,
-               row_number() OVER (PARTITION BY st.vec_id
-                 ORDER BY list_cosine_similarity(st.v, s.c_vec) DESC, s.icell) AS rn
-             FROM st CROSS JOIN ivfseeds s)
-           WHERE rn = 1),
-         probes AS (SELECT vec_id AS query_id, icell FROM (
-             SELECT inc.vec_id, s.icell,
-               row_number() OVER (PARTITION BY inc.vec_id
-                 ORDER BY list_cosine_similarity(inc.v, s.c_vec) DESC, s.icell) AS rn
-             FROM inc CROSS JOIN ivfseeds s)
-           WHERE rn <= 4),
-         cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-           FROM probes p JOIN asg a ON p.icell = a.icell),
-         pqseeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= 16),
-         js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM pqseeds s CROSS JOIN js),
-         sd AS (SELECT e.vec_id, c.j, c.cell,
-             list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
-                        for d in generate_series(1, 8) ]) AS sdist
-           FROM e CROSS JOIN cw c),
-         codes AS (SELECT vec_id, j, cell AS code FROM (
-             SELECT vec_id, j, cell, row_number() OVER
-               (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd WHERE vec_id % 5 <> 2)
-           WHERE rn = 1),
-         adc AS (SELECT c.query_id, c.neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM cand c
-           JOIN codes n ON n.vec_id = c.neighbor_id
-           JOIN sd s ON s.vec_id = c.query_id AND s.j = n.j AND s.cell = n.code
-           GROUP BY 1, 2),
-         wide AS (SELECT query_id, neighbor_id FROM
-             (SELECT query_id, neighbor_id, row_number() OVER
-                (PARTITION BY query_id ORDER BY dist ASC, neighbor_id ASC) AS rnk
-              FROM adc)
-           WHERE rnk <= 4 * (SELECT s FROM sl)),
-         sx AS (SELECT vec_id, i,
-             CAST(round(v[i], 6) AS DECIMAL(18,6)) AS xq
-           FROM (SELECT vec_id, v, unnest(generate_series(1, 64)) AS i
-                 FROM st)),
-         rg AS (SELECT i, min(xq) AS lo, max(xq) AS hi FROM sx GROUP BY i),
-         dqc AS (SELECT vec_id, sx.i,
-             CAST(lo * 255 + (CASE WHEN hi = lo THEN 0
-                  ELSE LEAST(255, GREATEST(0,
-                    CAST(floor(CAST((xq - lo) * 255 AS DOUBLE)
-                      / CAST(hi - lo AS DOUBLE) + 0.5) AS INTEGER))) END)
-               * (hi - lo) AS DECIMAL(18,6)) AS dd
-           FROM sx JOIN rg USING (i)),
-         qx AS (SELECT vec_id, i,
-             CAST(round(v[i], 6) AS DECIMAL(18,6)) AS xq
-           FROM (SELECT vec_id, v, unnest(generate_series(1, 64)) AS i
-                 FROM inc)),
-         dqq AS (SELECT vec_id AS query_id, qx.i,
-             CAST(lo * 255 + (CASE WHEN hi = lo THEN 0
-                  ELSE LEAST(255, GREATEST(0,
-                    CAST(floor(CAST((xq - lo) * 255 AS DOUBLE)
-                      / CAST(hi - lo AS DOUBLE) + 0.5) AS INTEGER))) END)
-               * (hi - lo) AS DECIMAL(18,6)) AS qd
-           FROM qx JOIN rg USING (i)),
-         sqs AS (SELECT w.query_id, w.neighbor_id,
-             CAST(sum(q.qd * c.dd) AS DECIMAL(38,12)) AS sc
-           FROM wide w
-           JOIN dqq q ON q.query_id = w.query_id
-           JOIN dqc c ON c.vec_id = w.neighbor_id AND c.i = q.i
-           GROUP BY 1, 2),
+         ${annIndexCtes(4)},
+         ${sq8RefineCtes("4 * (SELECT s FROM sl)")},
          short AS (SELECT query_id, neighbor_id FROM
              (SELECT query_id, neighbor_id, row_number() OVER
                 (PARTITION BY query_id ORDER BY sc DESC, neighbor_id ASC) AS rnk2
               FROM sqs)
            WHERE rnk2 <= (SELECT s FROM sl)),
-         p AS (SELECT query_id, neighbor_id AS pos_id FROM
-             (SELECT i.vec_id AS query_id, s2.vec_id AS neighbor_id,
-                row_number() OVER (PARTITION BY i.vec_id
-                  ORDER BY list_cosine_similarity(i.v, s2.v) DESC, s2.vec_id) AS rn
-              FROM inc i CROSS JOIN st s2)
-           WHERE rn = 1),
-         ex AS (SELECT sh.query_id, sh.neighbor_id,
-             list_cosine_similarity(i.v, s2.v) AS cos_raw
-           FROM short sh
-           JOIN inc i ON i.vec_id = sh.query_id
-           JOIN st s2 ON s2.vec_id = sh.neighbor_id
-           LEFT JOIN p ON p.query_id = sh.query_id
-                      AND p.pos_id = sh.neighbor_id
-           WHERE p.pos_id IS NULL),
-         rr AS (SELECT query_id, neighbor_id, round(cos_raw, 6) + 0 AS cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rank
-           FROM ex WHERE cos_raw < 0.95)
-         SELECT query_id, neighbor_id, cosine, rank FROM rr WHERE rank <= 5
-         ORDER BY query_id, rank""")),
+         $miningTail""")),
 
     Case("q313_stream_refined_probe", (s, d) => {
       // q307 with the refine tier engaged: each arriving micro-batch
@@ -1650,85 +1448,11 @@ $fin"""
       // against the persisted refine codes, cut back to 5 BY SQ8 SCORE —
       // gating the STREAMED q313 verbatim (batch-boundary invariance, the
       // q299/q307 argument: the refine reads only frozen persisted state)
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          st AS (SELECT * FROM e WHERE vec_id % 5 <> 2),
          inc AS (SELECT * FROM e WHERE vec_id % 5 = 2),
-         nc AS (SELECT greatest(4, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS k
-           FROM st),
-         ivfseeds AS (SELECT v AS c_vec, rn - 1 AS icell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= (SELECT k FROM nc)),
-         asg AS (SELECT vec_id, icell FROM (
-             SELECT st.vec_id, s.icell,
-               row_number() OVER (PARTITION BY st.vec_id
-                 ORDER BY list_cosine_similarity(st.v, s.c_vec) DESC, s.icell) AS rn
-             FROM st CROSS JOIN ivfseeds s)
-           WHERE rn = 1),
-         probes AS (SELECT vec_id AS query_id, icell FROM (
-             SELECT inc.vec_id, s.icell,
-               row_number() OVER (PARTITION BY inc.vec_id
-                 ORDER BY list_cosine_similarity(inc.v, s.c_vec) DESC, s.icell) AS rn
-             FROM inc CROSS JOIN ivfseeds s)
-           WHERE rn <= 4),
-         cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-           FROM probes p JOIN asg a ON p.icell = a.icell),
-         pqseeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM st)
-           WHERE rn <= 16),
-         js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM pqseeds s CROSS JOIN js),
-         sd AS (SELECT e.vec_id, c.j, c.cell,
-             list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
-                        for d in generate_series(1, 8) ]) AS sdist
-           FROM e CROSS JOIN cw c),
-         codes AS (SELECT vec_id, j, cell AS code FROM (
-             SELECT vec_id, j, cell, row_number() OVER
-               (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd WHERE vec_id % 5 <> 2)
-           WHERE rn = 1),
-         adc AS (SELECT c.query_id, c.neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM cand c
-           JOIN codes n ON n.vec_id = c.neighbor_id
-           JOIN sd s ON s.vec_id = c.query_id AND s.j = n.j AND s.cell = n.code
-           GROUP BY 1, 2),
-         wide AS (SELECT query_id, neighbor_id FROM
-             (SELECT query_id, neighbor_id, row_number() OVER
-                (PARTITION BY query_id ORDER BY dist ASC, neighbor_id ASC) AS rnk
-              FROM adc)
-           WHERE rnk <= 20),
-         sx AS (SELECT vec_id, i,
-             CAST(round(v[i], 6) AS DECIMAL(18,6)) AS xq
-           FROM (SELECT vec_id, v, unnest(generate_series(1, 64)) AS i
-                 FROM st)),
-         rg AS (SELECT i, min(xq) AS lo, max(xq) AS hi FROM sx GROUP BY i),
-         dqc AS (SELECT vec_id, sx.i,
-             CAST(lo * 255 + (CASE WHEN hi = lo THEN 0
-                  ELSE LEAST(255, GREATEST(0,
-                    CAST(floor(CAST((xq - lo) * 255 AS DOUBLE)
-                      / CAST(hi - lo AS DOUBLE) + 0.5) AS INTEGER))) END)
-               * (hi - lo) AS DECIMAL(18,6)) AS dd
-           FROM sx JOIN rg USING (i)),
-         qx AS (SELECT vec_id, i,
-             CAST(round(v[i], 6) AS DECIMAL(18,6)) AS xq
-           FROM (SELECT vec_id, v, unnest(generate_series(1, 64)) AS i
-                 FROM inc)),
-         dqq AS (SELECT vec_id AS query_id, qx.i,
-             CAST(lo * 255 + (CASE WHEN hi = lo THEN 0
-                  ELSE LEAST(255, GREATEST(0,
-                    CAST(floor(CAST((xq - lo) * 255 AS DOUBLE)
-                      / CAST(hi - lo AS DOUBLE) + 0.5) AS INTEGER))) END)
-               * (hi - lo) AS DECIMAL(18,6)) AS qd
-           FROM qx JOIN rg USING (i)),
-         sqs AS (SELECT w.query_id, w.neighbor_id,
-             CAST(sum(q.qd * c.dd) AS DECIMAL(38,12)) AS sc
-           FROM wide w
-           JOIN dqq q ON q.query_id = w.query_id
-           JOIN dqc c ON c.vec_id = w.neighbor_id AND c.i = q.i
-           GROUP BY 1, 2),
+         ${annIndexCtes(4)},
+         ${sq8RefineCtes("20")},
          r AS (SELECT query_id, neighbor_id,
              CAST(round(sc, 6) AS DOUBLE) + 0 AS sq8_score,
              CAST(row_number() OVER (PARTITION BY query_id
@@ -1765,56 +1489,14 @@ $fin"""
       // q299's CTEs with models seeded from the BASE 80% only: appended
       // rows (the standing fifth) encode under the SAME base formulas —
       // append-then-probe replays exactly like rebuild-then-probe
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          st AS (SELECT * FROM e WHERE vec_id % 5 <> 2),
          base AS (SELECT * FROM st WHERE vec_id % 25 < 20),
          inc AS (SELECT * FROM e WHERE vec_id % 5 = 2),
-         ivfseeds AS (SELECT v AS c_vec, rn - 1 AS icell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM base)
-           WHERE rn <= 8),
-         asg AS (SELECT vec_id, icell FROM (
-             SELECT st.vec_id, s.icell,
-               row_number() OVER (PARTITION BY st.vec_id
-                 ORDER BY list_cosine_similarity(st.v, s.c_vec) DESC, s.icell) AS rn
-             FROM st CROSS JOIN ivfseeds s)
-           WHERE rn = 1),
-         probes AS (SELECT vec_id AS query_id, icell FROM (
-             SELECT inc.vec_id, s.icell,
-               row_number() OVER (PARTITION BY inc.vec_id
-                 ORDER BY list_cosine_similarity(inc.v, s.c_vec) DESC, s.icell) AS rn
-             FROM inc CROSS JOIN ivfseeds s)
-           WHERE rn <= 2),
-         cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-           FROM probes p JOIN asg a ON p.icell = a.icell),
-         pqseeds AS (SELECT v AS sv, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM base)
-           WHERE rn <= 16),
-         js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         cw AS (SELECT js.j, s.cell, s.sv[js.j*8 + 1 : js.j*8 + 8] AS w
-           FROM pqseeds s CROSS JOIN js),
-         sd AS (SELECT e.vec_id, c.j, c.cell,
-             list_sum([ (e.v[c.j*8 + d] - c.w[d]) * (e.v[c.j*8 + d] - c.w[d])
-                        for d in generate_series(1, 8) ]) AS sdist
-           FROM e CROSS JOIN cw c),
-         codes AS (SELECT vec_id, j, cell AS code FROM (
-             SELECT vec_id, j, cell, row_number() OVER
-               (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-             FROM sd WHERE vec_id % 5 <> 2)
-           WHERE rn = 1),
-         adc AS (SELECT c.query_id, c.neighbor_id,
-             list_sum(list(s.sdist ORDER BY s.j)) AS dist
-           FROM cand c
-           JOIN codes n ON n.vec_id = c.neighbor_id
-           JOIN sd s ON s.vec_id = c.query_id AND s.j = n.j AND s.cell = n.code
-           GROUP BY 1, 2),
-         r AS (SELECT query_id, neighbor_id, floor(dist * 1e6 + 0.5) / 1e6 AS adc_dist,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY dist ASC, neighbor_id ASC) AS INTEGER) AS rank
-           FROM adc)
-         SELECT query_id, neighbor_id, adc_dist, rank FROM r WHERE rank <= 5
-         ORDER BY query_id, rank""")),
+         ${ivfProbeCtes("base", "8", 2)},
+         ${pqCodeCtes("pqseeds", "base", "sd WHERE vec_id % 5 <> 2")},
+         $candAdcCte,
+         $adcTopKTail""")),
 
     Case("q137_semdedup_incr", (s, d) => {
       // incremental semantic dedup: standing corpus = ids < 400 (with the
@@ -1833,16 +1515,13 @@ $fin"""
     }, oracle = Some(
       // corpus seeds only (the generation's frozen model); increment checked
       // vs corpus cell-mates then vs smaller-id increment cell-mates
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          corp AS (SELECT * FROM e WHERE vec_id < 400),
          inc AS (SELECT vec_id, v FROM e WHERE vec_id >= 400
                  UNION ALL
                  SELECT vec_id + 200000, v FROM e
                  WHERE vec_id < 400 AND vec_id % 20 = 0),
-         seeds AS (SELECT v AS c_vec, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM corp)
-           WHERE rn <= 16),
+         ${md5SeedsCte("seeds", "c_vec", "cell", "corp", "16")},
          asgc AS (SELECT vec_id, v, cell FROM (
              SELECT c.vec_id, c.v, s.cell,
                row_number() OVER (PARTITION BY c.vec_id
@@ -1881,20 +1560,12 @@ $fin"""
     }, oracle = Some(
       // seed/assignment CTEs mirror q118's proven quantizer parity; dropped =
       // any smaller-id cell-mate at cosine >= 0.95 (canonical-min-id)
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      raw"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          e AS (SELECT * FROM e0
                UNION ALL
                SELECT vec_id + 100000, v FROM e0 WHERE vec_id % 10 = 0),
-         seeds AS (SELECT v AS c_vec, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM e)
-           WHERE rn <= 16),
-         asg AS (SELECT vec_id, cell FROM (
-             SELECT e.vec_id, s.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.v, s.c_vec) DESC, s.cell) AS rn
-             FROM e CROSS JOIN seeds s)
-           WHERE rn = 1),
+         ${md5SeedsCte("seeds", "c_vec", "cell", "e", "16")},
+         ${seedAssignCte("cell", "e", "seeds")},
          dropped AS (SELECT DISTINCT r.vec_id
            FROM asg l JOIN asg r ON l.cell = r.cell AND l.vec_id < r.vec_id
            JOIN e el ON el.vec_id = l.vec_id
@@ -2019,17 +1690,9 @@ $fin"""
       // the q118 IVF replay swept over the dial ladder: one ranked-cells
       // CTE serves every dial (rn <= n_probe), truth = q24's brute-force
       // top-5, recall over integer pair counts, chosen = min dial >= 0.9
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         seeds AS (SELECT v AS c_vec, rn - 1 AS cell FROM
-             (SELECT v, row_number() OVER
-                (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM e)
-           WHERE rn <= 8),
-         asg AS (SELECT vec_id, cell FROM (
-             SELECT e.vec_id, s.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.v, s.c_vec) DESC, s.cell) AS rn
-             FROM e CROSS JOIN seeds s)
-           WHERE rn = 1),
+      raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         ${md5SeedsCte("seeds", "c_vec", "cell", "e", "8")},
+         ${seedAssignCte("cell", "e", "seeds")},
          ranked AS (SELECT e.vec_id AS query_id, s.cell,
              row_number() OVER (PARTITION BY e.vec_id
                ORDER BY list_cosine_similarity(e.v, s.c_vec) DESC, s.cell) AS rn
@@ -2260,29 +1923,10 @@ $fin"""
       // the full chain once more + the per-doc exact decimal dot product
       // with the round-3 iterate — matrix -> direction -> projection under
       // one oracle
-      (covCtes + """,
-         M AS (SELECT i, j, CAST(cov AS DECIMAL(18,6)) AS c FROM cv
-               UNION ALL
-               SELECT j, i, CAST(cov AS DECIMAL(18,6)) FROM cv WHERE i <> j),
-         v0 AS (SELECT DISTINCT i, CAST(1.0 AS DECIMAL(18,6)) AS v FROM M),
-         w1 AS (SELECT m.i, sum(m.c * v0.v) AS w
-           FROM M m JOIN v0 ON m.j = v0.i GROUP BY m.i),
-         x1 AS (SELECT max(abs(w)) AS mx FROM w1),
-         v1 AS (SELECT i, CAST(round(CAST(w AS DOUBLE) / CAST(mx AS DOUBLE), 6)
-             AS DECIMAL(18,6)) AS v FROM w1, x1),
-         w2 AS (SELECT m.i, sum(m.c * v1.v) AS w
-           FROM M m JOIN v1 ON m.j = v1.i GROUP BY m.i),
-         x2 AS (SELECT max(abs(w)) AS mx FROM w2),
-         v2 AS (SELECT i, CAST(round(CAST(w AS DOUBLE) / CAST(mx AS DOUBLE), 6)
-             AS DECIMAL(18,6)) AS v FROM w2, x2),
-         w3 AS (SELECT m.i, sum(m.c * v2.v) AS w
-           FROM M m JOIN v2 ON m.j = v2.i GROUP BY m.i),
-         x3 AS (SELECT max(abs(w)) AS mx FROM w3),
-         v3 AS (SELECT i, CAST(round(CAST(w AS DOUBLE) / CAST(mx AS DOUBLE), 6)
-             AS DECIMAL(18,6)) AS v FROM w3, x3)
+      powerIterationCtes + """
          SELECT x.vec_id, CAST(sum(x.xi * v3.v) AS DOUBLE) AS proj
          FROM x JOIN v3 USING (i)
-         GROUP BY x.vec_id ORDER BY x.vec_id"""))),
+         GROUP BY x.vec_id ORDER BY x.vec_id""")),
 
     Case("q261_top_component", (s, d) => {
       // the dominant embedding direction via 3 oracle-replayable power
@@ -2302,27 +1946,8 @@ $fin"""
       // DuckDB's precision-38 cap), per-round max-normalization divides in
       // double and re-quantizes to 6 dp — the q222 PageRank iterate
       // convention applied to the spectral step
-      (covCtes + """,
-         M AS (SELECT i, j, CAST(cov AS DECIMAL(18,6)) AS c FROM cv
-               UNION ALL
-               SELECT j, i, CAST(cov AS DECIMAL(18,6)) FROM cv WHERE i <> j),
-         v0 AS (SELECT DISTINCT i, CAST(1.0 AS DECIMAL(18,6)) AS v FROM M),
-         w1 AS (SELECT m.i, sum(m.c * v0.v) AS w
-           FROM M m JOIN v0 ON m.j = v0.i GROUP BY m.i),
-         x1 AS (SELECT max(abs(w)) AS mx FROM w1),
-         v1 AS (SELECT i, CAST(round(CAST(w AS DOUBLE) / CAST(mx AS DOUBLE), 6)
-             AS DECIMAL(18,6)) AS v FROM w1, x1),
-         w2 AS (SELECT m.i, sum(m.c * v1.v) AS w
-           FROM M m JOIN v1 ON m.j = v1.i GROUP BY m.i),
-         x2 AS (SELECT max(abs(w)) AS mx FROM w2),
-         v2 AS (SELECT i, CAST(round(CAST(w AS DOUBLE) / CAST(mx AS DOUBLE), 6)
-             AS DECIMAL(18,6)) AS v FROM w2, x2),
-         w3 AS (SELECT m.i, sum(m.c * v2.v) AS w
-           FROM M m JOIN v2 ON m.j = v2.i GROUP BY m.i),
-         x3 AS (SELECT max(abs(w)) AS mx FROM w3),
-         v3 AS (SELECT i, CAST(round(CAST(w AS DOUBLE) / CAST(mx AS DOUBLE), 6)
-             AS DECIMAL(18,6)) AS v FROM w3, x3)
-         SELECT i, CAST(v AS DOUBLE) AS loading FROM v3 ORDER BY i"""))),
+      powerIterationCtes + """
+         SELECT i, CAST(v AS DOUBLE) AS loading FROM v3 ORDER BY i""")),
 
     Case("q260_embedding_covariance", (s, d) => {
       // the PCA/whitening groundwork and degenerate-dim diagnostic:
@@ -2396,34 +2021,7 @@ $fin"""
       // BM25 replay: same tokenization as q162, rational idf (N+1)/(df+0.5),
       // per-term double math in the IDENTICAL evaluation order, 6-dp round,
       // decimal total — scores and ranks both exact
-      raw"""WITH d0 AS (SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-             x -> x <> '') AS arr
-         FROM documents WHERE text IS NOT NULL),
-        st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-            CAST(sum(len(arr)) AS DOUBLE) AS dls FROM d0),
-        tok AS (SELECT doc_id, CAST(len(arr) AS BIGINT) AS dl,
-            unnest(arr) AS token FROM d0),
-        tf AS (SELECT doc_id, token, dl, count(*) AS tf
-          FROM tok GROUP BY 1, 2, 3),
-        qq AS (SELECT * FROM (VALUES $bm25QueriesLit) AS t(query_id, qtext)),
-        qt AS (SELECT DISTINCT query_id,
-            unnest(list_filter(regexp_split_to_array(lower(qtext), '[^\p{L}\p{N}_]+'),
-              x -> x <> '')) AS token
-          FROM qq),
-        dfq AS (SELECT token, count(*) AS df FROM tf
-          WHERE token IN (SELECT DISTINCT token FROM qt) GROUP BY 1),
-        sc AS (SELECT qt.query_id, tf.doc_id,
-            CAST(round((st.n + 1.0) / (dfq.df + 0.5) *
-              (tf.tf * (1.2 + 1.0) / (tf.tf + 1.2 * (1.0 - 0.75 +
-                0.75 * tf.dl * st.n / st.dls))), 6) AS DECIMAL(18,6)) AS ts
-          FROM qt JOIN tf USING (token) JOIN dfq USING (token) CROSS JOIN st),
-        tot AS (SELECT query_id, doc_id, CAST(sum(ts) AS DOUBLE) AS score
-          FROM sc GROUP BY 1, 2),
-        r AS (SELECT query_id, doc_id, score,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY score DESC, doc_id) AS rnk
-          FROM tot)
+      raw"""WITH ${bm25Ctes("text IS NOT NULL")}
         SELECT CAST(query_id AS BIGINT) AS query_id, rnk, doc_id, score
         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
 

@@ -60,24 +60,9 @@ object TokenQueries extends Family {
              list_distinct(list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
                x -> x <> '')) AS toks
            FROM documents),
-         mult AS (SELECT doc_id, max(cnt) AS m, sum(cnt) AS n FROM (
-             SELECT doc_id, tok, count(*) AS cnt FROM (
-               SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-               FROM documents) GROUP BY doc_id, tok) GROUP BY doc_id),
+         ${tokenShareCte("documents")},
          sig AS (SELECT b.doc_id, b.source, b.h, b.n_tok,
-             CASE WHEN b.n_tok = 0 THEN 0.0
-                  ELSE CAST(b.n_nonspace AS DOUBLE) / b.n_tok END AS avg_len,
-             CASE WHEN b.n_chars = 0 THEN 0.0
-                  ELSE CAST(b.n_digit AS DOUBLE) / b.n_chars END AS dig_r,
-             greatest(
-               len(list_intersect(b.toks, ${swList("de")})),
-               len(list_intersect(b.toks, ${swList("en")})),
-               len(list_intersect(b.toks, ${swList("es")})),
-               len(list_intersect(b.toks, ${swList("fr")})),
-               len(list_intersect(b.toks, ${swList("it")}))) AS stop_hits,
-             CASE WHEN mult.m IS NULL THEN 0.0
-                  ELSE CAST(mult.m AS DOUBLE) / mult.n END AS max_share
-           FROM base b LEFT JOIN mult ON b.doc_id = mult.doc_id),
+             $qualityRatioCols),
          rs AS (SELECT doc_id, source, h,
              CASE WHEN n_tok < 20 OR n_tok > 100000 THEN 1 ELSE 0 END
                + CASE WHEN avg_len < 3.0 OR avg_len > 10.0 THEN 1 ELSE 0 END
@@ -273,27 +258,8 @@ object TokenQueries extends Family {
                x -> x <> '')) AS BIGINT), 0) AS n_tok
            FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)"""
     raw"""WITH RECURSIVE $tokCtes
-         toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r),
-         e AS (SELECT id_l AS a, id_r AS b FROM j WHERE jac >= 0.6
-               UNION SELECT id_r, id_l FROM j WHERE jac >= 0.6),
-         reach(a, b) AS (SELECT a, b FROM e
-               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-                  FROM reach GROUP BY a),
+         ${shingleJaccardCtes()},
+         ${componentCtes("j WHERE jac >= 0.6")},
          $labCte,
          g AS (SELECT component, count(*) AS sz,
              CAST(sum(n_tok) AS BIGINT) AS tok_total,
@@ -388,28 +354,9 @@ object TokenQueries extends Family {
            WHERE doc_id % 10 <> 0
              AND doc_id NOT IN (SELECT vec_id FROM contam)),
          $survCtes
-         toks AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM surv),
-         sh AS (SELECT DISTINCT doc_id,
-                 CASE WHEN len(tk) < 3 THEN array_to_string(tk, ' ')
-                      ELSE array_to_string(tk[i:i+2], ' ') END AS shingle
-               FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS i
-                     FROM toks WHERE len(tk) > 0)),
-         sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS ic
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id_l, id_r, CAST(ic AS DOUBLE) / (sa.s + sb.s - ic) AS jac
-               FROM inter JOIN sz sa ON sa.doc_id = id_l
-                          JOIN sz sb ON sb.doc_id = id_r),
+         ${shingleJaccardCtes("surv")},
          pairs2 AS (SELECT id_l, id_r FROM j WHERE jac >= 0.6),
-         e AS (SELECT id_l AS a, id_r AS b FROM pairs2
-               UNION SELECT id_r, id_l FROM pairs2),
-         reach(a, b) AS (SELECT a, b FROM e
-               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-         comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-                  FROM reach GROUP BY a),
+         ${componentCtes("pairs2")},
          $labCte,
          asg AS (SELECT doc_id, component, n_tok, CASE
              WHEN CAST(concat('0x', substring(md5(CAST(component AS VARCHAR)), 1, 8)) AS BIGINT) < 3435973837 THEN 'train'
@@ -551,31 +498,11 @@ object TokenQueries extends Family {
         .orderBy("source")
     }, oracle = Some(
       raw"""WITH base AS (SELECT doc_id, source,
-             len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS n_tok,
-             length(text) AS n_chars,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
-             length(regexp_replace(trim(text), '\s+', '', 'g')) AS n_nonspace,
-             list_distinct(list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '')) AS toks
+             $qualitySignalCols
            FROM documents),
-         mult AS (SELECT doc_id, max(cnt) AS m, sum(cnt) AS n FROM (
-             SELECT doc_id, tok, count(*) AS cnt FROM (
-               SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-               FROM documents) GROUP BY doc_id, tok) GROUP BY doc_id),
+         ${tokenShareCte("documents")},
          sig AS (SELECT b.doc_id, b.source, b.n_tok,
-             CASE WHEN b.n_tok = 0 THEN 0.0
-                  ELSE CAST(b.n_nonspace AS DOUBLE) / b.n_tok END AS avg_len,
-             CASE WHEN b.n_chars = 0 THEN 0.0
-                  ELSE CAST(b.n_digit AS DOUBLE) / b.n_chars END AS dig_r,
-             greatest(
-               len(list_intersect(b.toks, ${swList("de")})),
-               len(list_intersect(b.toks, ${swList("en")})),
-               len(list_intersect(b.toks, ${swList("es")})),
-               len(list_intersect(b.toks, ${swList("fr")})),
-               len(list_intersect(b.toks, ${swList("it")}))) AS stop_hits,
-             CASE WHEN mult.m IS NULL THEN 0.0
-                  ELSE CAST(mult.m AS DOUBLE) / mult.n END AS max_share
-           FROM base b LEFT JOIN mult ON b.doc_id = mult.doc_id),
+             $qualityRatioCols),
          rs AS (SELECT source, n_tok,
              CASE WHEN n_tok < 20 OR n_tok > 100000 THEN 1 ELSE 0 END
                + CASE WHEN avg_len < 3.0 OR avg_len > 10.0 THEN 1 ELSE 0 END
@@ -720,31 +647,11 @@ object TokenQueries extends Family {
     }, oracle = Some(
       // q88's gopher replication grouped per source + corpus-wide dup join
       raw"""WITH base AS (SELECT doc_id, source, md5(text) AS h,
-             len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS n_tok,
-             length(text) AS n_chars,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
-             length(regexp_replace(trim(text), '\s+', '', 'g')) AS n_nonspace,
-             list_distinct(list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '')) AS toks
+             $qualitySignalCols
            FROM documents),
-         mult AS (SELECT doc_id, max(cnt) AS m, sum(cnt) AS n FROM (
-             SELECT doc_id, tok, count(*) AS cnt FROM (
-               SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-               FROM documents) GROUP BY doc_id, tok) GROUP BY doc_id),
+         ${tokenShareCte("documents")},
          sig AS (SELECT b.doc_id, b.source, b.h, b.n_tok,
-             CASE WHEN b.n_tok = 0 THEN 0.0
-                  ELSE CAST(b.n_nonspace AS DOUBLE) / b.n_tok END AS avg_len,
-             CASE WHEN b.n_chars = 0 THEN 0.0
-                  ELSE CAST(b.n_digit AS DOUBLE) / b.n_chars END AS dig_r,
-             greatest(
-               len(list_intersect(b.toks, ${swList("de")})),
-               len(list_intersect(b.toks, ${swList("en")})),
-               len(list_intersect(b.toks, ${swList("es")})),
-               len(list_intersect(b.toks, ${swList("fr")})),
-               len(list_intersect(b.toks, ${swList("it")}))) AS stop_hits,
-             CASE WHEN mult.m IS NULL THEN 0.0
-                  ELSE CAST(mult.m AS DOUBLE) / mult.n END AS max_share
-           FROM base b LEFT JOIN mult ON b.doc_id = mult.doc_id),
+             $qualityRatioCols),
          rs AS (SELECT source, h, n_tok,
              CASE WHEN n_tok < 20 OR n_tok > 100000 THEN 1 ELSE 0 END
                + CASE WHEN avg_len < 3.0 OR avg_len > 10.0 THEN 1 ELSE 0 END

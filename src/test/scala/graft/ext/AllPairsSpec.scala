@@ -509,18 +509,6 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
       s"skewed corpus must trigger: ${sk.getAs[Long]("candidates_est")}")
     assert(sk.getAs[Long]("hot_df") >= 30L,
       "the hottest token must be the boilerplate one")
-    // imperative gate: failAbove throws with the remediation pointer;
-    // the permissive form returns the row (and only warns)
-    val ex = intercept[IllegalStateException] {
-      Dedup.preflightContainmentJoin(skewed.toDF("doc_id", "text"),
-        "doc_id", "text", tau = 0.7, shingleK = 1,
-        maxCandidates = wantMass * 2, failAbove = true)
-    }
-    assert(ex.getMessage.contains("maxDf") &&
-      ex.getMessage.contains("containmentCapAudit"))
-    val ok = Dedup.preflightContainmentJoin(skewed.toDF("doc_id", "text"),
-      "doc_id", "text", tau = 0.7, shingleK = 1, maxCandidates = wantMass * 2)
-    assert(ok.getAs[Boolean]("advise_cap"))
     // probe face: mass of an incoming batch against a standing state
     val st = Dedup.containmentState(
       docs.toDF("doc_id", "text"), "doc_id", "text", shingleK = 1)
