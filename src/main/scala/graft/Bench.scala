@@ -60,15 +60,6 @@ object Bench {
       try src.mkString.split("\\s+").head.toDouble finally src.close()
     } catch { case _: Throwable => -1.0 }
 
-  /** Per-query PRIOR FLOOR (short qNN keys): the minimum time each query
-    * achieved across the newest three BENCH_r*.json artifacts in the
-    * working directory (the driver writes them at the repo root). The min
-    * matters: a single prior artifact can itself be contaminated (round 8
-    * was), which would mask inflation in the next round. Hand-rolled
-    * extraction of the flat "queries" object — no JSON library on the
-    * runtime classpath, and the shape is machine-written on this
-    * program's own contract.
-    */
   /** Extract the flat `"queries"` object from one artifact's raw text.
     *
     * The driver's artifacts carry the bench line in two real shapes, and
@@ -161,6 +152,15 @@ object Bench {
     keyed.indexOf(keyed.min)
   }
 
+  /** Per-query PRIOR FLOOR (short qNN keys): the minimum time each query
+    * achieved across the newest three BENCH_r*.json artifacts in the
+    * working directory (the driver writes them at the repo root). The min
+    * matters: a single prior artifact can itself be contaminated (round 8
+    * was), which would mask inflation in the next round. Hand-rolled
+    * extraction of the flat "queries" object — no JSON library on the
+    * runtime classpath, and the shape is machine-written on this
+    * program's own contract.
+    */
   private[graft] def priorTimes(dir: java.io.File = new java.io.File(".")): Map[String, Double] = {
     val arts = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))

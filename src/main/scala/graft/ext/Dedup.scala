@@ -186,7 +186,7 @@ object Dedup {
         regexp_replace(lower(trim(col(textCol))), "\\s+", " "), n).as("sh"))
 
   /** Optional per-document CHAR-GRAM ROUTING for the shingle front-ends
-    * (the [[scriptAwareJaccardPairs]] contract packaged as a parameter
+    * (the script-aware contract of [[allPairsJaccard]], a parameter
     * every screen accepts): documents whose
     * [[graft.functions.text.unspacedRatio]] exceeds `routeAbove` shingle
     * as `charN`-grams of their whitespace-STRIPPED lowercase text —
@@ -838,7 +838,7 @@ object Dedup {
     * whitespace-stripped lowercase text instead of whitespace tokens —
     * without it a CJK document is ONE mega-token, yields no windows, and
     * its exact duplicated runs are invisible to all three operators (the
-    * blindness [[scriptAwareJaccardPairs]] fixed for the shingle screens).
+    * blindness routing fixed for the shingle screens).
     * Spaced-script documents are bit-identical with or without routing.
     */
   def exactSubstringPairs(
@@ -1162,25 +1162,6 @@ object Dedup {
         arrayLen(keptPos).cast("long").as("n_kept"))
   }
 
-  /** EXACT all-pairs token-Jaccard join at `threshold` via prefix
-    * filtering (Bayardo/Chaudhuri AllPairs, the Vernica et al. SIGMOD'10
-    * distributed formulation) — the exact complement to the MinHash-LSH
-    * family: zero false negatives by construction, no banding recall
-    * curve. Returns `(id_l, id_r, jaccard)` rounded to 6 dp.
-    *
-    * Completeness: tokens are globally ordered by (df, token) — rarest
-    * first; each document joins only its PREFIX of `|X| - ceil(t|X|) + 1`
-    * tokens. For any pair with `jaccard >= t` the overlap `o` satisfies
-    * `o >= ceil(t|A|)` and `o >= ceil(t|B|)`, and the globally-smallest
-    * shared token must sit inside BOTH prefixes (if it were past A's
-    * prefix, the `>= |A| - ceil(t|A|) + 1` elements before it would all be
-    * non-shared, forcing `o < ceil(t|A|)` — contradiction). So the prefix
-    * equi-join loses nothing, and rare-token prefixes keep per-token
-    * fan-out small exactly because prefixes hold each document's LOWEST-df
-    * tokens. A length prune (`t|A| <= |B|`, symmetric) cuts candidates
-    * before verification; verification is row-local `array_intersect`
-    * over the two token arrays carried by equi-joins.
-    */
   /** Portable hashed shingle SETS `(doc, toks sorted array<long>)` — the
     * shared front end of [[allPairsJaccard]] and [[containmentPairs]].
     *
@@ -1251,8 +1232,8 @@ object Dedup {
     sp.unionByName(un)
   }
 
-  /** Distinct-set cluster frame shared by [[allPairsJaccard]] and
-    * [[allPairsCapAudit]].
+  /** Distinct-set cluster frame `(toks, members, rep)` of a `(doc, toks)`
+    * sets frame, shared by [[allPairsJaccard]] and [[allPairsCapAudit]].
     *
     * COLLAPSE identical token sets before any pair work: template-stamped
     * corpora put hundreds of documents on one token set, and a cluster of
@@ -1269,57 +1250,66 @@ object Dedup {
     * per partition, |distinct sets| rows — the collapsed frame, not
     * the corpus) and is dropped by the ContextCleaner with the plan.
     */
-  private def allPairsClusters(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleK: Int): DataFrame =
-    clustersOfSets(portableShingleSets(df, idCol, textCol, shingleK), threshold)
-
-  /** [[allPairsClusters]] over a PREBUILT `(doc, toks)` sets frame — the
-    * seam that lets alternative shingling front-ends (script-aware
-    * routing, precomputed states) reuse the identical-set collapse and
-    * everything downstream of it.
-    */
-  private def clustersOfSets(sets: DataFrame, threshold: Double): DataFrame =
+  private def clustersOf(sets: DataFrame): DataFrame =
     sets
       .groupBy(col("toks"))
       .agg(sort_array(collect_list(col("doc"))).as("members"))
       .select(col("toks"), col("members"),
-        col("members").getItem(0).as("rep"), size(col("toks")).as("sz"),
-        // floor((1-t)|X|) + 2, NOT |X| - ceil(t|X|) + 1: the two agree in
-        // exact arithmetic (+1 slack), but double 0.8/0.9 round UP, so at
-        // integral t|X| the ceil form lands one BELOW the exact bound and
-        // the prefix can miss a boundary witness — the containmentPrefix
-        // +2 rationale, applied to the symmetric face (round 15; the ceil
-        // form shipped without slack since q199)
-        (floor(lit(1.0 - threshold) * size(col("toks"))) + 2)
-          .cast("int").as("__pl"))
+        col("members").getItem(0).as("rep"))
       .localCheckpoint()
 
-  /** Per-set rarest-first prefix rows `(rep, sz, token, __df)` over the
-    * cluster frame — the AllPairs candidate generator, df attached so
-    * the ubiquity cap and its audit key on it without a second join.
+  /** Per-set rarest-first prefix rows `(doc, sz, token, __df)` of a
+    * `(doc, toks)` sets frame, ordered by (df, token) against `dfreq` —
+    * the ONE zero-false-negative candidate generator of every exact face:
+    * [[allPairsJaccard]] (sets = the distinct-set reps, df over them),
+    * [[containmentPairs]] (df = the self-corpus), [[containmentProbe]]
+    * (df = the standing corpus) and the [[ResemblanceState]] prefixes of
+    * [[jaccardProbe]] (host and incoming sides both ordered by the SAME
+    * standing df — the symmetric lemma needs one total order shared by
+    * both join sides). df rides out with each prefix token so the
+    * ubiquity cap and its audit key on it without a second join; sz
+    * rides out for the length prune and the probe's broadcast gate.
     *
-    * Element frequencies and the rarest-first prefix ordering are
-    * computed over DISTINCT SETS (reps), not documents — set-level df is
-    * what prefix selectivity needs (a 10k-doc template cluster must not
-    * make its tokens look common), and the frame is |reps| x |set| rows,
-    * tiny next to the corpus (AQE broadcasts the df attach on its own —
-    * an explicit hint here defeats ReusedExchange across the branches
-    * that share the cluster frame, recomputing the whole upstream).
+    * Length `floor((1-t)|X|) + 2`. In exact arithmetic the bound is
+    * `floor((1-t)|X|) + 1` (= `|X| - ceil(t|X|) + 1`, the Bayardo
+    * Jaccard prefix; for containment, a part with `c >= t` has at most
+    * `floor((1-t)|X|)` shingles outside its host, so one of that many
+    * plus one is shared). The + 2 is ulp slack: `(1.0 - t) * |X|` in
+    * double can land BELOW the exact product at integer boundaries
+    * (1.0 - 0.9 = 0.0999…98, times 30 = 2.999…96, floor 2 where the
+    * exact floor is 3), and one extra prefix token absorbs the drift.
+    *
+    * Tokens ABSENT from `dfreq` join left-null, fill to df 0 and sort
+    * first; they generate no candidates, which is safe: the witness is
+    * present on the other side by definition, so it has df >= 1 and
+    * survives in the prefix behind at most the absent ones.
     */
-  private def allPairsPrefix(clusters: DataFrame): DataFrame = {
-    val repTok = clusters.select(col("rep"), col("sz"), explode(col("toks")).as("token"))
-    val dfreq = repTok.groupBy(col("token")).agg(count(lit(1)).as("__df"))
-    val ordered = repTok.join(dfreq, Seq("token"))
-      .groupBy(col("rep"))
+  private[graft] def rarestFirstPrefix(
+      sets: DataFrame, dfreq: DataFrame, t: Double): DataFrame =
+    sets.select(col("doc"), size(col("toks")).as("sz"),
+        explode(col("toks")).as("token"))
+      .join(dfreq, Seq("token"), "left")
+      .na.fill(0L, Seq("__df"))
+      .groupBy(col("doc"), col("sz"))
       .agg(array_sort(collect_list(struct(col("__df"), col("token"))))
         .as("ost"))
-    clusters.select(col("rep"), col("sz"), col("__pl"))
-      .join(ordered, Seq("rep"))
-      .select(col("rep"), col("sz"),
-        explode(slice(col("ost"), lit(1), col("__pl"))).as("st"))
-      .select(col("rep"), col("sz"),
+      .select(col("doc"), col("sz"),
+        explode(slice(col("ost"), lit(1),
+          (floor(lit(1.0 - t) * col("sz")) + 2).cast("int")))
+          .as("st"))
+      .select(col("doc"), col("sz"),
         col("st.token").as("token"), col("st.__df").as("__df"))
+
+  /** [[rarestFirstPrefix]] over a cluster frame, one row set per
+    * distinct set with `rep` as its doc. Element frequencies are counted
+    * over DISTINCT SETS, not documents — set-level df is what prefix
+    * selectivity needs (a 10k-doc template cluster must not make its
+    * tokens look common), and the frame is |reps| x |set| rows, tiny next
+    * to the corpus.
+    */
+  private def clusterPrefix(clusters: DataFrame, threshold: Double): DataFrame = {
+    val reps = clusters.select(col("rep").as("doc"), col("toks"))
+    rarestFirstPrefix(reps, dfreqOf(reps), threshold)
   }
 
   /** Ubiquity-cap telemetry for [[allPairsJaccard]] — the q155/q159
@@ -1338,69 +1328,56 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     require(maxDf >= 1, "maxDf must be at least 1")
     require(shingleK >= 1, "shingleK must be at least 1")
-    allPairsPrefix(allPairsClusters(df, idCol, textCol, threshold, shingleK))
+    clusterPrefix(
+        clustersOf(portableShingleSets(df, idCol, textCol, shingleK)), threshold)
       .where(col("__df") > maxDf)
       .groupBy(col("token"), col("__df"))
       .agg(count(lit(1)).as("n_prefix_sets"))
       .select(col("token"), col("__df").as("df"), col("n_prefix_sets"))
   }
 
+  /** EXACT all-pairs token-Jaccard join at `threshold` via prefix
+    * filtering (Bayardo/Chaudhuri AllPairs, the Vernica et al. SIGMOD'10
+    * distributed formulation) — the exact complement to the MinHash-LSH
+    * family: zero false negatives by construction, no banding recall
+    * curve. Returns `(id_l, id_r, jaccard)` rounded to 6 dp.
+    *
+    * Completeness: tokens are globally ordered by (df, token) — rarest
+    * first; each document joins only its PREFIX of `|X| - ceil(t|X|) + 1`
+    * tokens. For any pair with `jaccard >= t` the overlap `o` satisfies
+    * `o >= ceil(t|A|)` and `o >= ceil(t|B|)`, and the globally-smallest
+    * shared token must sit inside BOTH prefixes (if it were past A's
+    * prefix, the `>= |A| - ceil(t|A|) + 1` elements before it would all be
+    * non-shared, forcing `o < ceil(t|A|)` — contradiction). So the prefix
+    * equi-join loses nothing, and rare-token prefixes keep per-token
+    * fan-out small exactly because prefixes hold each document's LOWEST-df
+    * tokens. A length prune (`t|A| <= |B|`, symmetric) cuts candidates
+    * before verification; verification is row-local `array_intersect`
+    * over the two token arrays carried by equi-joins.
+    *
+    * `route` switches on per-document SCRIPT ROUTING (the
+    * [[CharGramRouting]] every screen accepts): documents whose
+    * [[graft.functions.text.unspacedRatio]] exceeds `routeAbove` shingle
+    * as code-point `charN`-grams over whitespace-stripped lowercase text,
+    * the rest as word-`shingleK`-shingles. The whitespace tokenizer glues
+    * an unspaced ideograph run into ONE token, so word-shingle dedup sees
+    * every CJK/Thai/Khmer document as a single-shingle set and its
+    * near-duplicates become invisible; char-grams restore them. On a pure
+    * spaced-script corpus routing never fires and results equal the
+    * unrouted join. Cross-script pairs share no grams by construction
+    * (word shingles carry spaces, stripped char grams cannot).
+    */
   def allPairsJaccard(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.6, shingleK: Int = 3,
       maxDf: Long = Long.MaxValue,
+      route: Option[CharGramRouting] = None,
       adviseAbove: Long = DefaultAdviseCandidates,
       failAbove: Boolean = false): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     require(maxDf >= 1, "maxDf must be at least 1")
     require(shingleK >= 1, "shingleK must be at least 1")
-    allPairsOnClusters(
-      allPairsClusters(df, idCol, textCol, threshold, shingleK),
-      threshold, maxDf, adviseAbove, failAbove)
-  }
-
-  /** SCRIPT-AWARE exact all-pairs Jaccard: per-document routing between
-    * word-`wordK`-shingles (spaced scripts) and code-point `charN`-grams
-    * over whitespace-stripped lowercase text (unsegmented scripts —
-    * detection via [[graft.functions.text.unspacedRatio]] `> routeAbove`).
-    * The whitespace tokenizer glues an unspaced ideograph run into ONE
-    * token, so word-shingle dedup sees every CJK/Thai/Khmer document as a
-    * single-shingle set and near-duplicates become invisible; char-grams
-    * restore them. On a pure spaced-script corpus results EQUAL
-    * [[allPairsJaccard]] at the same `wordK` (routing never fires).
-    * Cross-script pairs share no grams by construction (word shingles
-    * carry spaces, stripped char grams cannot) — a document and its
-    * translation are different content, not near-duplicates. Same
-    * AllPairs machinery downstream: identical-set collapse, set-level df,
-    * Bayardo prefix filter, ubiquity cap, exact row-local verify.
-    */
-  def scriptAwareJaccardPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.6, wordK: Int = 3, charN: Int = 5,
-      routeAbove: Double = 0.3, maxDf: Long = Long.MaxValue,
-      adviseAbove: Long = DefaultAdviseCandidates,
-      failAbove: Boolean = false): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    require(maxDf >= 1, "maxDf must be at least 1")
-    require(wordK >= 1, "wordK must be at least 1")
-    require(charN >= 1, "charN must be at least 1")
-    require(routeAbove > 0.0 && routeAbove < 1.0,
-      "routeAbove must be in (0, 1) — 0 routes blank docs, 1 never routes")
-    allPairsOnClusters(
-      clustersOfSets(
-        scriptAwareShingleSets(df, idCol, textCol, wordK, charN, routeAbove),
-        threshold),
-      threshold, maxDf, adviseAbove, failAbove)
-  }
-
-  /** The AllPairs pair engine over a prebuilt cluster frame — shared by
-    * [[allPairsJaccard]] and [[scriptAwareJaccardPairs]] so the prefix
-    * bound, the cap and the verify can never diverge between them.
-    */
-  private def allPairsOnClusters(
-      clusters: DataFrame, threshold: Double, maxDf: Long,
-      adviseAbove: Long = DefaultAdviseCandidates,
-      failAbove: Boolean = false): DataFrame = {
+    val clusters = clustersOf(portableSets(df, idCol, textCol, shingleK, route))
     // within-cluster pairs: identical sets, jaccard exactly 1.0
     val within = clusters.where(size(col("members")) >= 2)
       .select(explode(col("members")).as("id_l"), col("members"))
@@ -1412,82 +1389,29 @@ object Dedup {
     // convention) bounds per-token fan-out on skewed corpora.
     // Checkpointed: the pre-flight gate's mass report and the candidate
     // join both read the prefix blocks (one build, two consumers)
-    val prefix = capPrefix(allPairsPrefix(clusters), maxDf).localCheckpoint()
+    val prefix = capPrefix(clusterPrefix(clusters, threshold), maxDf)
+      .localCheckpoint()
     // default-ON pre-flight: the (post-cap) prefix mass bounds the
     // candidate rows the equi-join below will materialize — warn/fail
     // BEFORE the melt, the q283 advisor run by the join itself
     gateOpenJoin(prefix, adviseAbove, failAbove, "all-pairs jaccard join",
       selfJoin = true)
-    val cand = prefix.select(col("token"), col("rep").as("rl"), col("sz").as("__szl"))
-      .join(prefix.select(col("token"), col("rep").as("rr"), col("sz").as("__szr")),
+    val cand = prefix.select(col("token"), col("doc").as("l"), col("sz").as("__szl"))
+      .join(prefix.select(col("token"), col("doc").as("r"), col("sz").as("__szr")),
         Seq("token"))
-      .where(col("rl") < col("rr") &&
+      .where(col("l") < col("r") &&
         lit(threshold) * col("__szl") <= col("__szr") &&
         lit(threshold) * col("__szr") <= col("__szl"))
-      .select(col("rl"), col("rr")).distinct()
-      // materialized so its COUNT can size the verify shuffles — the
-      // containmentPairs verifyPartitionsFor convention, which this face
-      // lacked until the q281 25x curve went super-linear (44x wall on
-      // 25x data): char-gram shingle sets are ~5x the word-shingle
-      // payload, and at a fixed session width the verify joins drive
-      // 25x intersect bytes into the same buckets and spill
-      .localCheckpoint()
-    val nCand = cand.count()
-    val spark = clusters.sparkSession
-    val width = sessionWidth(spark)
-    // ONE stats action on the checkpointed cluster frame: row count and
-    // the average toks/members widths size both the verify shuffle width
-    // and the broadcast gate below
-    val cstats = clusters.agg(count(lit(1)),
-      coalesce(avg(size(col("toks"))), lit(0.0)),
-      coalesce(avg(size(col("members"))), lit(0.0))).head()
-    val (nSets, avgSz, avgMembers) =
-      (cstats.getLong(0), cstats.getDouble(1), cstats.getDouble(2))
-    val verifyParts =
-      if (nCand == 0) width else verifyPartitionsFor(nCand, avgSz, width)
-    val side = clusters.select(col("rep"), col("toks"), col("members"))
-    val sideL = side.select(col("rep").as("rl"), col("toks").as("__tl"),
-      col("members").as("__ml"))
-    val sideR = side.select(col("rep").as("rr"), col("toks").as("__tr"),
-      col("members").as("__mr"))
-    // MEASURED broadcast gate on the verify joins (the probe-face
-    // convention, probeBroadcastBudget): the sized sort-merge chain below
-    // re-shuffles every candidate row WITH its attached shingle array
-    // between the two joins — measured 450 MB shuffled and ~60 s of
-    // executor time for a 5k-doc corpus whose distinct-set side is 20 MB
-    // (guide §8's move-payloads-once rule). When the side frame fits the
-    // driver-derived budget, broadcast it into BOTH joins: the only
-    // exchange left is the candidate id-pair spread, and each shingle
-    // array crosses the wire once per executor instead of once per
-    // candidate. Over budget (a corpus-sized side) the sized chain stands.
-    // ADVICE r18: the plan broadcasts the side frame TWICE (sideL and
-    // sideR are both hinted below), so the gate compares BOTH copies
-    // against the budget; member ids may be strings (24 B/element covers
-    // a short UTF8String where longs need 8), and the hashed-relation
-    // build overhead is already priced into probeBroadcastBudget's /8
-    // heap derivation.
-    val sideBytes = 2L * (nSets * (avgSz * 8 + avgMembers * 24 + 64)).toLong
-    val bcastVerify = nCand > 0 &&
-      sideBytes <= probeBroadcastBudget(spark)
-    val joined =
-      if (bcastVerify)
-        // keyless spread of the checkpointed id-pair frame: round-robin
-        // balances the intersect work even when one rep is hot
-        cand.repartition(verifyParts)
-          .join(broadcast(sideL), Seq("rl"))
-          .join(broadcast(sideR), Seq("rr"))
-      else
-        cand.repartition(verifyParts, col("rl"))
-          .join(sideL.repartition(verifyParts, col("rl")), Seq("rl"))
-          .repartition(verifyParts, col("rr"))
-          .join(sideR.repartition(verifyParts, col("rr")), Seq("rr"))
-    val cross = joined
-      .withColumn("__ic", graft.expressions.SortedIntersect.sortedIntersectCount(col("__tl"), col("__tr")))
+    // member ids may be strings: 24 B/element covers a short UTF8String
+    // where longs need 8
+    val cross = verifyOpenJoin(cand,
+        clusters.select(col("rep").as("id"), col("toks"), col("members")),
+        Seq("members" -> 24))
       .withColumn("__jac", col("__ic").cast("double") /
         (size(col("__tl")) + size(col("__tr")) - col("__ic")))
       .where(col("__jac") >= threshold)
-      .select(explode(col("__ml")).as("a"), col("__mr"), col("__jac"))
-      .select(col("a"), explode(col("__mr")).as("b"), col("__jac"))
+      .select(explode(col("members_l")).as("a"), col("members_r"), col("__jac"))
+      .select(col("a"), explode(col("members_r")).as("b"), col("__jac"))
       .select(least(col("a"), col("b")).as("id_l"),
         greatest(col("a"), col("b")).as("id_r"), col("__jac").as("jaccard"))
     within.unionByName(
@@ -1495,73 +1419,86 @@ object Dedup {
       .select(col("id_l"), col("id_r"), round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** EXACT shingle-CONTAINMENT join: ordered pairs where at least `tau` of
-    * the PART document's shingle set sits inside the WHOLE document —
-    * `c(A→B) = |A∩B| / |A|`. The asymmetric complement to
-    * [[allPairsJaccard]]: a quote, an excerpt, or a page fully embedded in
-    * a larger one has containment ≈ 1 while its Jaccard vanishes as the
-    * host grows, so resemblance dedup never sees it. The emitted
-    * `jaccard` column makes the gap visible (`jaccard < tau` rows are
-    * exactly what resemblance-threshold dedup missed).
+  /** The verify step both OPEN joins share ([[allPairsJaccard]],
+    * [[containmentPairs]]): checkpoint the candidate id pairs `(l, r)`
+    * — the natural barrier between generation and verification, id
+    * pairs only, orders smaller than the corpus — and count them; size
+    * the verify shuffles by that count ([[verifyPartitionsFor]]); gate a
+    * broadcast of the side frame against [[probeBroadcastBudget]]; and
+    * return the pairs joined to both sides with the native intersect
+    * count: `(l, r, __tl, __tr, <payload>_l, <payload>_r, __ic)`.
     *
-    * Zero false negatives by prefix filtering on the PART side only: if
-    * `c(A→B) >= tau`, A has at most `floor((1-tau)|A|)` shingles outside
-    * B, so among A's `floor((1-tau)|A|) + 1` rarest shingles at least one
-    * is shared — joining that prefix against the FULL postings of the
-    * corpus finds every qualifying pair (the containment variant of the
-    * Bayardo prefix argument; no length prune applies because B may be
-    * arbitrarily larger). Rarest-first prefixes keep fan-out small;
-    * verification is row-local `array_intersect` on candidate pairs.
+    * `side` holds `id`, `toks` and the `payload` array columns, each with
+    * its bytes per element; it must read a checkpointed frame, since one
+    * stats action (row count, average set and payload sizes) runs over it
+    * before the joins. The stats run UNCONDITIONALLY: a candidate-count-only
+    * skip branch needs a bytes-per-row guess, and any fixed guess
+    * understates some corpus (400-token sets are ~6.4 KB/row — 3x a
+    * "conservative" 2 KB). Candidates skew toward LARGE sets, so the
+    * average understates the verify payload on mixed corpora; the 32 MB
+    * per-partition target is itself several times below the spill
+    * threshold, which absorbs that bias.
     *
-    * Returns `(id_part, id_whole, sz_part, overlap, containment,
-    * jaccard)`; high `tau` keeps prefixes short — the operator is meant
-    * for the 0.8+ subsumption regime.
+    * MEASURED broadcast gate: the sized sort-merge chain re-shuffles
+    * every candidate row WITH its attached shingle array between the two
+    * joins — measured 450 MB shuffled and ~60 s of executor time for a
+    * 5k-doc corpus whose distinct-set side is 20 MB (guide §8's
+    * move-payloads-once rule). When the side fits the driver-derived
+    * budget it is broadcast into BOTH joins: the only exchange left is
+    * the candidate id-pair spread (keyless round-robin, which balances
+    * the intersect work even when one id is hot), and each array crosses
+    * the wire once per executor instead of once per candidate. The plan
+    * broadcasts the side TWICE, so the gate prices both copies at
+    * `2·n·(avgSz·8 + Σ avgPayload·bytes + 64)`; the hashed-relation build
+    * overhead is already in probeBroadcastBudget's /8 heap derivation.
+    * Over budget the explicit co-partitioned chain stands: both sides
+    * land on HashPartitioning(key, verifyParts), so the joins add NO
+    * further exchange, at a width scaled to the candidate payload
+    * instead of the fixed session default (AQE can only coalesce, never
+    * widen, a uniform non-skewed spill).
     */
-  /** Rarest-first containment prefix of each part-side shingle set —
-    * `(doc, token)` rows of the `floor((1-tau)|A|) + 2` lowest-df tokens
-    * per doc, the zero-false-negative candidate generator SHARED by
-    * [[containmentPairs]] (df = the self-corpus) and [[containmentProbe]]
-    * (df = the standing corpus): one implementation, so a correction to
-    * the bound or the ordering can never land in only one of them.
-    *
-    * + 2, not + 1: the exact bound is floor_exact((1-tau)|A|) + 1, but
-    * (1.0 - tau) * |A| in double can land 1 ulp BELOW the exact product
-    * at integer boundaries (1.0 - 0.9 = 0.0999…98, times 30 = 2.999…96,
-    * floor 2 where the exact floor is 3) — one extra prefix token
-    * absorbs the drift and keeps zero-false-negative against the naive
-    * all-pairs oracle. Tokens ABSENT from `dfreq` join left-null, fill
-    * to df 0 and sort first; they generate no candidates, which is safe:
-    * the pigeonhole witness is host-present by definition, so it has
-    * df >= 1 and survives in the prefix behind at most the absent ones.
-    */
-  private[graft] def containmentPrefix(
-      partSets: DataFrame, dfreq: DataFrame, tau: Double): DataFrame =
-    partSets.select(col("doc"), explode(col("toks")).as("token"))
-      .join(dfreq, Seq("token"), "left")
-      .na.fill(0L, Seq("__df"))
-      .groupBy(col("doc"))
-      .agg(array_sort(collect_list(struct(col("__df"), col("token"))))
-        .as("ost"))
-      .select(col("doc"), size(col("ost")).as("sz"),
-        explode(slice(col("ost"), lit(1),
-          (floor(lit(1.0 - tau) * size(col("ost"))) + 2).cast("int")))
-          .as("st"))
-      // df rides out with each prefix token so the ubiquity cap and its
-      // audit can key on it without a second dfreq join; sz rides out so
-      // the probe's broadcast-budget gate needs no second action
-      .select(col("doc"), col("sz"),
-        col("st.token").as("token"), col("st.__df").as("__df"))
+  private def verifyOpenJoin(
+      cand: DataFrame, side: DataFrame,
+      payload: Seq[(String, Int)] = Nil): DataFrame = {
+    val pairs = cand.select(col("l"), col("r")).distinct().localCheckpoint()
+    val nCand = pairs.count()
+    val spark = side.sparkSession
+    // the width "today's plan" would use: the session shuffle width,
+    // never below the core count — flooring on defaultParallelism alone
+    // could NARROW the verify joins below the pre-sizing plan on a
+    // library session (Spark's default 200 shuffle partitions over 8
+    // cores) and reintroduce the very spill this sizing removes
+    val width = sessionWidth(spark)
+    val stats = side.agg(count(lit(1)),
+      coalesce(avg(size(col("toks"))), lit(0.0)) +:
+        payload.map { case (c, _) => coalesce(avg(size(col(c))), lit(0.0)) }: _*)
+      .head()
+    val avgSz = stats.getDouble(1)
+    val verifyParts =
+      if (nCand == 0) width else verifyPartitionsFor(nCand, avgSz, width)
+    val rowBytes = payload.zipWithIndex.foldLeft(avgSz * 8) {
+      case (b, ((_, w), i)) => b + stats.getDouble(2 + i) * w
+    } + 64
+    val bcastVerify = nCand > 0 &&
+      2L * (stats.getLong(0) * rowBytes).toLong <= probeBroadcastBudget(spark)
+    def sideAs(s: String) = side.select(col("id").as(s) +:
+      col("toks").as(s"__t$s") +:
+      payload.map { case (c, _) => col(c).as(s"${c}_$s") }: _*)
+    val (sideL, sideR) = (sideAs("l"), sideAs("r"))
+    val joined =
+      if (bcastVerify)
+        pairs.repartition(verifyParts)
+          .join(broadcast(sideL), Seq("l"))
+          .join(broadcast(sideR), Seq("r"))
+      else
+        pairs.repartition(verifyParts, col("l"))
+          .join(sideL.repartition(verifyParts, col("l")), Seq("l"))
+          .repartition(verifyParts, col("r"))
+          .join(sideR.repartition(verifyParts, col("r")), Seq("r"))
+    joined.withColumn("__ic", graft.expressions.SortedIntersect
+      .sortedIntersectCount(col("__tl"), col("__tr")))
+  }
 
-  /** Verify-stage shuffle width from the MATERIALIZED candidate count
-    * (the [[graft.ext.DupGraph.triangleCensus]] sizing convention,
-    * applied upward): each verify row carries TWO shingle arrays of
-    * ~`avgSetSize` longs, so at a fixed session width a 25x corpus
-    * drives 25x intersect payload into the same buckets and spills —
-    * the measured q266 10x->25x super-linear segment. Width targets
-    * ~32 MB of array payload per partition, never below the session's
-    * parallelism (a small corpus keeps today's plan), with a sanity
-    * ceiling far above any real candidate frame's need.
-    */
   /** Byte budget for broadcasting the batch-derived sides of the probe
     * joins, derived from the DRIVER heap (the broadcast hash relation is
     * built there, and JVM hash-relation overhead multiplies the
@@ -1569,8 +1506,7 @@ object Dedup {
     * 1g default driver gates at
     * 128 MB, where the previous hard-coded 256 MB constant — ADVICE
     * r15 — sat at the OOM edge), capped at 256 MB (the measured-safe
-    * ceiling on this harness's large-heap session). Callers override
-    * per call via the probes' `broadcastBudget` parameter;
+    * ceiling on this harness's large-heap session).
     * `spark.sql.autoBroadcastJoinThreshold` is deliberately NOT the
     * source — its 10 MB default tunes AUTOMATIC planning, while this
     * gate broadcasts frames it has MEASURED, a different risk model.
@@ -1623,6 +1559,16 @@ object Dedup {
     }
   }
 
+  /** Verify-stage shuffle width from the MATERIALIZED candidate count
+    * (the [[graft.ext.DupGraph.triangleCensus]] sizing convention,
+    * applied upward): each verify row carries TWO shingle arrays of
+    * ~`avgSetSize` longs, so at a fixed session width a 25x corpus
+    * drives 25x intersect payload into the same buckets and spills —
+    * the measured q266 10x->25x super-linear segment. Width targets
+    * ~32 MB of array payload per partition, never below the session's
+    * parallelism (a small corpus keeps today's plan), with a sanity
+    * ceiling far above any real candidate frame's need.
+    */
   private[graft] def verifyPartitionsFor(
       nCand: Long, avgSetSize: Double, defaultParallelism: Int): Int = {
     val bytesPerCand = 2.0 * 8.0 * math.max(avgSetSize, 0.0) + 48.0
@@ -1647,6 +1593,27 @@ object Dedup {
   private def capPrefix(prefix: DataFrame, maxDf: Long): DataFrame =
     if (maxDf == Long.MaxValue) prefix else prefix.where(col("__df") <= maxDf)
 
+  /** EXACT shingle-CONTAINMENT join: ordered pairs where at least `tau` of
+    * the PART document's shingle set sits inside the WHOLE document —
+    * `c(A→B) = |A∩B| / |A|`. The asymmetric complement to
+    * [[allPairsJaccard]]: a quote, an excerpt, or a page fully embedded in
+    * a larger one has containment ≈ 1 while its Jaccard vanishes as the
+    * host grows, so resemblance dedup never sees it. The emitted
+    * `jaccard` column makes the gap visible (`jaccard < tau` rows are
+    * exactly what resemblance-threshold dedup missed).
+    *
+    * Zero false negatives by prefix filtering on the PART side only: the
+    * [[rarestFirstPrefix]] of A holds a shingle of every host B with
+    * `c(A→B) >= tau`, so joining that prefix against the FULL postings
+    * of the corpus finds every qualifying pair (the containment variant
+    * of the Bayardo prefix argument; no length prune applies because B
+    * may be arbitrarily larger). Rarest-first prefixes keep fan-out small;
+    * verification is row-local `array_intersect` on candidate pairs.
+    *
+    * Returns `(id_part, id_whole, sz_part, overlap, containment,
+    * jaccard)`; high `tau` keeps prefixes short — the operator is meant
+    * for the 0.8+ subsumption regime.
+    */
   def containmentPairs(
       df: DataFrame, idCol: String, textCol: String,
       tau: Double = 0.9, shingleK: Int = 3,
@@ -1661,85 +1628,25 @@ object Dedup {
     // materialization (the allPairsJaccard cluster-frame precedent)
     val docs = portableSets(df, idCol, textCol, shingleK, route)
       .localCheckpoint()
-    val postings = docs.select(col("doc"), explode(col("toks")).as("token"))
-    val dfreq = postings.groupBy(col("token")).agg(count(lit(1)).as("__df"))
-    // shared rarest-first prefix (see containmentPrefix for the bound);
-    // the ubiquity cap (see capPrefix) bounds per-token fan-out on
-    // skewed corpora — default off, zero-false-negative preserved.
-    // Checkpointed: the pre-flight gate and the candidate join both
-    // read the prefix blocks (one build, two consumers)
-    val gatedPrefix = capPrefix(containmentPrefix(docs, dfreq, tau), maxDf)
+    // shared rarest-first prefix; the ubiquity cap (see capPrefix) bounds
+    // per-token fan-out on skewed corpora — default off,
+    // zero-false-negative preserved. Checkpointed: the pre-flight gate
+    // and the candidate join both read the prefix blocks (one build, two
+    // consumers)
+    val gatedPrefix = capPrefix(rarestFirstPrefix(docs, dfreqOf(docs), tau), maxDf)
       .localCheckpoint()
     // default-ON pre-flight (the q283 advisor run by the join itself):
     // post-cap prefix mass bounds the generation stage — warn/fail
     // BEFORE the measured 46x-on-25x-skew melt, never after
     gateOpenJoin(gatedPrefix, adviseAbove, failAbove, "containment join")
-    val prefix = gatedPrefix.select(col("doc").as("dl"), col("token"))
-    // the candidate frame is the natural barrier between generation and
-    // verification: materialize it (id pairs only — orders smaller than
-    // the corpus) so its COUNT can size the verify-stage shuffles; the
-    // count is free on the checkpointed frame
-    val cand = prefix
-      .join(postings.select(col("token"), col("doc").as("dr")), Seq("token"))
-      .where(col("dl") =!= col("dr"))
-      .select(col("dl"), col("dr")).distinct()
-      .localCheckpoint()
-    val nCand = cand.count()
-    val spark = df.sparkSession
-    // the width "today's plan" would use: the session shuffle width,
-    // never below the core count — flooring on defaultParallelism alone
-    // could NARROW the verify joins below the pre-sizing plan on a
-    // library session (Spark's default 200 shuffle partitions over 8
-    // cores) and reintroduce the very spill this sizing removes
-    val width = sessionWidth(spark)
-    // count + avg shingle-set size ride on the already-checkpointed docs
-    // frame — one cheap agg, no corpus recompute, and it runs
-    // UNCONDITIONALLY: a candidate-count-only skip branch needs a
-    // bytes-per-row guess, and any fixed guess understates some corpus
-    // (400-token sets are ~6.4 KB/row — 3x a "conservative" 2 KB).
-    // verifyPartitionsFor floors at the session width, so sizing can only
-    // widen. Candidates skew toward LARGE documents, so the corpus
-    // average understates the verify payload on mixed corpora; the
-    // 32 MB/partition target is itself several times below the spill
-    // threshold, which absorbs that bias.
-    val dstats = docs.agg(count(lit(1)),
-      coalesce(avg(size(col("toks"))), lit(0.0))).head()
-    val (nDocs, avgSz) = (dstats.getLong(0), dstats.getDouble(1))
-    val verifyParts =
-      if (nCand == 0) width else verifyPartitionsFor(nCand, avgSz, width)
-    val side = docs.select(col("doc"), col("toks"))
-    val sideL = side.select(col("doc").as("dl"), col("toks").as("__tl"))
-    val sideR = side.select(col("doc").as("dr"), col("toks").as("__tr"))
-    // MEASURED broadcast gate on the verify joins (see allPairsOnClusters
-    // for the full argument): the sized sort-merge chain re-shuffles every
-    // candidate row with its attached part-side array between the two
-    // joins (measured 162 MB shuffled for a 6k-doc corpus); under the
-    // driver-derived budget both joins broadcast the sets side and the
-    // only exchange left is the candidate id-pair spread. Over budget the
-    // explicit co-partitioned chain stands: both sides land on
-    // HashPartitioning(key, verifyParts), so the joins add NO further
-    // exchange — same shuffle count as the bare plan, width scaled to the
-    // candidate payload instead of the fixed session default (AQE can
-    // only coalesce, never widen, a uniform non-skewed spill).
-    // both verify joins broadcast a copy of the side (ADVICE r18) — gate
-    // on the two copies together
-    val sideBytes = 2L * (nDocs * (avgSz * 8 + 64)).toLong
-    val bcastVerify = nCand > 0 && sideBytes <= probeBroadcastBudget(spark)
-    val joined =
-      if (bcastVerify)
-        cand.repartition(verifyParts)
-          .join(broadcast(sideL), Seq("dl"))
-          .join(broadcast(sideR), Seq("dr"))
-      else
-        cand.repartition(verifyParts, col("dl"))
-          .join(sideL.repartition(verifyParts, col("dl")), Seq("dl"))
-          .repartition(verifyParts, col("dr"))
-          .join(sideR.repartition(verifyParts, col("dr")), Seq("dr"))
-    joined
-      .withColumn("__ic", graft.expressions.SortedIntersect.sortedIntersectCount(col("__tl"), col("__tr")))
+    val cand = gatedPrefix.select(col("doc").as("l"), col("token"))
+      .join(docs.select(explode(col("toks")).as("token"), col("doc").as("r")),
+        Seq("token"))
+      .where(col("l") =!= col("r"))
+    verifyOpenJoin(cand, docs.select(col("doc").as("id"), col("toks")))
       .withColumn("__cont", col("__ic").cast("double") / size(col("__tl")))
       .where(col("__cont") >= tau)
-      .select(col("dl").as("id_part"), col("dr").as("id_whole"),
+      .select(col("l").as("id_part"), col("r").as("id_whole"),
         size(col("__tl")).cast("long").as("sz_part"),
         // the whole side's size rides out for free (the verify join holds
         // both sets) so subsumption policies never re-shingle the corpus
@@ -1799,7 +1706,7 @@ object Dedup {
     val docs = portableSets(df, idCol, textCol, shingleK, route)
       .localCheckpoint()
     val dfreq = dfreqOf(docs)
-    containmentPrefix(docs, dfreq, tau)
+    rarestFirstPrefix(docs, dfreq, tau)
       .where(col("__df") > maxDf)
       .groupBy(col("token"), col("__df"))
       .agg(count(lit(1)).as("n_prefix_docs"))
@@ -1939,7 +1846,7 @@ object Dedup {
     val docs = portableSets(df, idCol, textCol, shingleK, route)
       .localCheckpoint() // dfreq + prefix, the containmentCapAudit shape
     prefixMassReport(
-      containmentPrefix(docs, dfreqOf(docs), tau), maxCandidates)
+      rarestFirstPrefix(docs, dfreqOf(docs), tau), maxCandidates)
   }
 
   /** [[containmentJoinAdvisor]] for the PROBE face: the mass the
@@ -1959,7 +1866,7 @@ object Dedup {
     val inc = portableSets(incoming, idCol, textCol, state.params.shingleK,
       state.params.route)
     prefixMassReport(
-      containmentPrefix(inc, state.dfreq, tau), maxCandidates)
+      rarestFirstPrefix(inc, state.dfreq, tau), maxCandidates)
   }
 
   /** Precomputed containment state of a standing corpus: the hashed
@@ -1976,7 +1883,7 @@ object Dedup {
     * `sets` per batch WITHOUT touching `dfreq`. A stale df frame can
     * only degrade prefix ORDERING (which tokens count as "rarest", so
     * candidate fan-out — a perf dial), NEVER completeness: the
-    * pigeonhole bound behind [[containmentPrefix]] holds for ANY total
+    * pigeonhole bound behind [[rarestFirstPrefix]] holds for ANY total
     * order of a part's tokens, and a token absent from a stale dfreq
     * sorts first (df 0) while its postings join still finds every host
     * that carries it — [[AllPairsSpec]] proves probe-result EQUALITY
@@ -2134,79 +2041,24 @@ object Dedup {
     *
     * Zero-false-negative prefix filter, probe-side: incoming tokens
     * order rarest-first by the STANDING corpus's document frequency
-    * (absent tokens df 0, sorted first — they generate no candidates,
-    * and the pigeonhole still holds: a host containing >= ceil(tau*|A|)
-    * of A's tokens must contain one of any floor((1-tau)*|A|)+1-subset,
-    * and a contained token is by definition present in the corpus, so
-    * the postings join finds it; the +2 slack absorbs the double-floor
-    * ulp, the [[containmentPairs]] bound). Candidates are verified with
-    * one exact intersection — never all-pairs.
+    * ([[rarestFirstPrefix]]; tokens absent from the corpus sort first
+    * and generate no candidates, and the bound still holds) and the
+    * prefix joins the full postings. Candidates are verified with one
+    * exact intersection — never all-pairs.
     */
   def containmentProbe(
       incoming: DataFrame, state: ContainmentState,
       idCol: String, textCol: String,
       tau: Double = 0.9,
-      maxDf: Long = Long.MaxValue,
-      broadcastBudget: Option[Long] = None): DataFrame = {
+      maxDf: Long = Long.MaxValue): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, "tau must be in (0, 1]")
     require(maxDf >= 1, "maxDf must be at least 1")
-    // incoming shingles under the STATE's shingleK and routing (its
-    // scaladoc contract — a mismatched re-pass silently finds nothing)
-    val inc = portableSets(incoming, idCol, textCol, state.params.shingleK,
-        state.params.route)
-      .localCheckpoint() // feeds the prefix pass and the verify side once
-    // corpus-sized frames come FROM THE STATE as built: per-call work is
-    // batch-sized only — a streaming screen must never re-checkpoint the
-    // corpus sets or re-aggregate corpus-wide df per micro-batch (pass a
-    // built or loaded containmentState)
-    val hosts = state.sets.select(col("doc").as("host"), col("toks"))
-    val postings = hosts.select(col("host"), explode(col("toks")).as("token"))
-    // shared rarest-first prefix against the STANDING df (see
-    // containmentPrefix for the bound and the absent-token argument);
-    // same ubiquity cap as the batch face (capPrefix — default off)
-    // checkpointed: the size-gate stats and the candidate join both read
-    // it, and the prefix pipeline (explode + df join + sort-agg) must
-    // not run twice per probe
-    val prefix = capPrefix(containmentPrefix(inc, state.dfreq, tau), maxDf)
-      .select(col("doc").as("din"), col("sz"), col("token"), col("__df"))
-      .localCheckpoint()
-    // BROADCAST the batch-derived sides when they are MEASURED small:
-    // the corpus-sized state frames (postings, host sets) should only
-    // ever be SCANNED per probe, never shuffled — without the hints
-    // Spark plans sort-merge joins that exchange the whole standing
-    // corpus per batch, and the probe wall grows super-linearly in
-    // corpus size at fixed width (measured 4.9x time on 2.5x corpus;
-    // with the hints the fixed-increment probe curve is flat — the
-    // probe-only scaling record in SURVEY.md).
-    // The gate is the advisor's own cost model evaluated on the frames
-    // in hand (prefix rows for the prefix side, sum-of-df x batch array
-    // bytes for the verify side): an UNCONDITIONAL hint OOMs the driver
-    // the moment a caller probes a corpus-sized batch (q284 at 25x did,
-    // at ~41k incoming docs), and over the byte budget the plan safely
-    // reverts to sort-merge.
-    // ONE action on the checkpointed frame: row count, candidate mass,
-    // and the batch's avg set size (prefix-row-weighted — candidates
-    // come proportionally from prefix rows, so the weighting is the
-    // conservative one for a byte budget)
-    val stats = prefix.agg(count(lit(1)), coalesce(sum(col("__df")), lit(0L)),
-      coalesce(avg(col("sz")), lit(0.0))).head()
-    val avgSz = stats.getDouble(2)
-    val budget = broadcastBudget
-      .getOrElse(probeBroadcastBudget(incoming.sparkSession))
-    val bcast = stats.getLong(0) * 48 <= budget &&
-      (stats.getLong(1) * (avgSz * 8 + 48)).toLong <= budget
-    val prefixJoin = prefix.select(col("din"), col("token"))
-    val cand = (if (bcast) broadcast(prefixJoin) else prefixJoin)
-      .join(postings, Seq("token"))
-      .where(col("din") =!= col("host"))
-      .select(col("din"), col("host")).distinct()
-    // single-split scan-stage verify is fine here — see the jaccardProbe
-    // note on the native intersect kernel vs the reverted host spread
-    val enriched = cand
-      .join(inc.select(col("doc").as("din"), col("toks").as("__ti")), Seq("din"))
-    (if (bcast) enriched.hint("broadcast") else enriched)
-      .join(hosts.select(col("host"), col("toks").as("__th")), Seq("host"))
-      .withColumn("__ic", graft.expressions.SortedIntersect.sortedIntersectCount(col("__ti"), col("__th")))
+    // the batch prefix joins the FULL postings of the standing sets
+    val postings = state.sets
+      .select(col("doc").as("host"), explode(col("toks")).as("token"))
+    probeState(incoming, idCol, textCol, state.params.shingleK,
+        state.params.route, state.sets, state.dfreq, tau, maxDf, postings,
+        lengthPrune = false)
       .withColumn("__cont", col("__ic").cast("double") / size(col("__ti")))
       .where(col("__cont") >= tau)
       .select(col("din").as("id_in"), col("host").as("id_host"),
@@ -2215,34 +2067,84 @@ object Dedup {
         round(col("__cont"), 6).as("containment"))
   }
 
-  /** Per-doc rarest-first JACCARD prefix rows `(doc, sz, token, __df)` —
-    * the symmetric (Bayardo) prefix of length `|X| - ceil(t|X|) + 1`,
-    * ordered by (df, token) against the supplied df frame (absent
-    * tokens df 0, sorted first). The completeness lemma needs ONE total
-    * order shared by both join sides; [[jaccardProbe]] orders both the
-    * standing prefixes (built here at state time) and the incoming
-    * prefixes (built here per batch) by the SAME standing df, so the
-    * globally smallest shared token of any qualifying pair sits inside
-    * both prefixes — the q199 argument, probe-shaped.
+  /** The probe step both standing-state probes share ([[containmentProbe]],
+    * [[jaccardProbe]]): shingle the batch under the state's `shingleK` and
+    * `route` (a mismatched re-pass silently finds nothing), build its
+    * [[rarestFirstPrefix]] against the STANDING `dfreq` (capped at
+    * `maxDf`, the batch face's ubiquity cap), join it to `hostTokens`
+    * `(host, token)` — the state's postings, or its host prefix with
+    * `__szh` when `lengthPrune` adds the symmetric `t|A| <= |B| <= |A|/t`
+    * prune — and join the distinct candidates to the batch and host
+    * sets with the native intersect count: `(din, host, __ti, __th,
+    * __ic)`.
+    *
+    * Corpus-sized frames come FROM THE STATE as built: per-call work is
+    * batch-sized only — a streaming screen must never re-checkpoint the
+    * corpus sets or re-aggregate corpus-wide df per micro-batch.
+    *
+    * The batch sides are BROADCAST when MEASURED small: the corpus-sized
+    * state frames should only ever be SCANNED per probe, never shuffled —
+    * without the hints Spark plans sort-merge joins that exchange the
+    * whole standing corpus per batch, and the probe wall grows
+    * super-linearly in corpus size at fixed width (measured 4.9x time on
+    * 2.5x corpus; with the hints the fixed-increment probe curve is flat
+    * — the probe-only scaling record in SURVEY.md). The gate is the
+    * advisor's own cost model evaluated on the frames in hand, from ONE
+    * stats action on the checkpointed prefix (rows at 48 B, 56 B with
+    * the size column of the length prune; sum-of-df x batch array bytes
+    * for the verify side, the average set size weighted by prefix rows
+    * since candidates come proportionally from them): an UNCONDITIONAL
+    * hint OOMs the driver the moment a caller probes a corpus-sized
+    * batch (q284 at 25x did, at ~41k incoming docs), and over the byte
+    * budget the plan safely reverts to sort-merge.
+    *
+    * Broadcast mode streams the STANDING sets scan through the verify
+    * join, so the intersects run at the state's split count — fine with
+    * the native two-pointer sorted_intersect_count. This step keeps the
+    * probe shape, not the open joins' [[verifyOpenJoin]]: a round-18
+    * spread of the intersects to the sized verify width was measured a
+    * net loss once the kernel landed, its extra candidate
+    * checkpoint/count/semi-join actions costing more per micro-batch
+    * than the now-cheap single-split verify.
     */
-  private def jaccardPrefix(
-      sets: DataFrame, dfreq: DataFrame, threshold: Double): DataFrame =
-    sets.select(col("doc"), size(col("toks")).as("sz"),
-        explode(col("toks")).as("token"))
-      .join(dfreq, Seq("token"), "left")
-      .na.fill(0L, Seq("__df"))
-      .groupBy(col("doc"), col("sz"))
-      .agg(array_sort(collect_list(struct(col("__df"), col("token"))))
-        .as("ost"))
-      .select(col("doc"), col("sz"),
-        // floor((1-t)sz) + 2 — the clustersOfSets/containmentPrefix ulp
-        // slack; the ceil form can cut one below the exact bound where
-        // double t rounds up (t = 0.8, 0.9) and t*sz is integral
-        explode(slice(col("ost"), lit(1),
-          (floor(lit(1.0 - threshold) * col("sz")) + 2).cast("int")))
-          .as("st"))
-      .select(col("doc"), col("sz"),
-        col("st.token").as("token"), col("st.__df").as("__df"))
+  private def probeState(
+      incoming: DataFrame, idCol: String, textCol: String, shingleK: Int,
+      route: Option[CharGramRouting], hostSets: DataFrame, dfreq: DataFrame,
+      t: Double, maxDf: Long, hostTokens: DataFrame,
+      lengthPrune: Boolean): DataFrame = {
+    val inc = portableSets(incoming, idCol, textCol, shingleK, route)
+      .localCheckpoint() // feeds the prefix pass and the verify side once
+    // checkpointed: the size-gate stats and the candidate join both read
+    // it, and the prefix pipeline (explode + df join + sort-agg) must not
+    // run twice per probe
+    val prefix = capPrefix(rarestFirstPrefix(inc, dfreq, t), maxDf)
+      .select(col("doc").as("din"), col("sz").as("__szi"), col("token"),
+        col("__df"))
+      .localCheckpoint()
+    val stats = prefix.agg(count(lit(1)),
+      coalesce(sum(col("__df")), lit(0L)),
+      coalesce(avg(col("__szi")), lit(0.0))).head()
+    val avgSz = stats.getDouble(2)
+    val budget = probeBroadcastBudget(incoming.sparkSession)
+    val bcast = stats.getLong(0) * (if (lengthPrune) 56 else 48) <= budget &&
+      (stats.getLong(1) * (avgSz * 8 + 48)).toLong <= budget
+    val probe = prefix.select(col("din") +:
+      (if (lengthPrune) Seq(col("__szi")) else Nil) :+ col("token"): _*)
+    val keep = col("din") =!= col("host")
+    val cand = (if (bcast) broadcast(probe) else probe)
+      .join(hostTokens, Seq("token"))
+      .where(if (!lengthPrune) keep else keep &&
+        lit(t) * col("__szi") <= col("__szh") &&
+        lit(t) * col("__szh") <= col("__szi"))
+      .select(col("din"), col("host")).distinct()
+    val enriched = cand
+      .join(inc.select(col("doc").as("din"), col("toks").as("__ti")), Seq("din"))
+    (if (bcast) enriched.hint("broadcast") else enriched)
+      .join(hostSets.select(col("doc").as("host"), col("toks").as("__th")),
+        Seq("host"))
+      .withColumn("__ic", graft.expressions.SortedIntersect
+        .sortedIntersectCount(col("__ti"), col("__th")))
+  }
 
   /** Precomputed EXACT-resemblance state of a standing corpus — the
     * third leg of the incremental screen triangle beside
@@ -2291,10 +2193,10 @@ object Dedup {
     if (a.refresh) {
       val dfreq = dfreqOf(a.sets).localCheckpoint(true)
       ResemblanceState(a.sets, dfreq,
-        jaccardPrefix(a.sets, dfreq, p.threshold).localCheckpoint(true), p)
+        rarestFirstPrefix(a.sets, dfreq, p.threshold).localCheckpoint(true), p)
     } else
       ResemblanceState(a.sets, state.dfreq,
-        state.prefix.unionByName(jaccardPrefix(a.inc, state.dfreq, p.threshold))
+        state.prefix.unionByName(rarestFirstPrefix(a.inc, state.dfreq, p.threshold))
           .localCheckpoint(true),
         p, a.staleDocs)
   }
@@ -2314,7 +2216,7 @@ object Dedup {
       .localCheckpoint(true)
     val dfreq = dfreqOf(sets).localCheckpoint(true)
     ResemblanceState(sets, dfreq,
-      jaccardPrefix(sets, dfreq, threshold).localCheckpoint(true),
+      rarestFirstPrefix(sets, dfreq, threshold).localCheckpoint(true),
       ResemblanceParams(threshold, shingleK, route))
   }
 
@@ -2370,7 +2272,7 @@ object Dedup {
     * per-call work is batch-sized plus the prefix equi-join.
     *
     * Zero false negatives: both prefixes order by the SAME standing df
-    * (see [[jaccardPrefix]]), so the globally smallest shared token of
+    * (see [[rarestFirstPrefix]]), so the globally smallest shared token of
     * a qualifying pair sits in both — the symmetric length prune
     * (`t|A| <= |B| <= |A|/t`) cuts candidates before the row-local
     * intersect verify. `maxDf` (default off) is the [[containmentPairs]]
@@ -2381,61 +2283,14 @@ object Dedup {
   def jaccardProbe(
       incoming: DataFrame, state: ResemblanceState,
       idCol: String, textCol: String,
-      maxDf: Long = Long.MaxValue,
-      broadcastBudget: Option[Long] = None): DataFrame = {
+      maxDf: Long = Long.MaxValue): DataFrame = {
     require(maxDf >= 1, "maxDf must be at least 1")
-    // incoming shingles under the STATE's routing — routed and unrouted
-    // gram sets never intersect correctly, so the choice is a state
-    // parameter, not a call-site one
     val p = state.params
-    val inc = portableSets(incoming, idCol, textCol, p.shingleK, p.route)
-      .localCheckpoint() // feeds the prefix pass and the verify side once
-    // checkpointed: the size-gate stats and the candidate join both
-    // consume it (the containmentProbe argument)
-    val incPrefix = capPrefix(
-      jaccardPrefix(inc, state.dfreq, p.threshold), maxDf)
-      .select(col("doc").as("din"), col("sz").as("__szi"), col("token"),
-        col("__df"))
-      .localCheckpoint()
+    // the batch prefix joins the STATE's host prefixes, never rebuilt
     val hostPrefix = capPrefix(state.prefix, maxDf)
       .select(col("doc").as("host"), col("sz").as("__szh"), col("token"))
-    // batch sides BROADCAST when MEASURED small, state frames only
-    // scanned — see containmentProbe for the full argument: without the
-    // hints the corpus-sized prefix/sets frames shuffle per probe (the
-    // wall grows super-linearly in corpus size); with UNCONDITIONAL
-    // hints a corpus-sized batch OOMs the driver. The gate is the
-    // advisor cost model on the frames in hand; over budget the plan
-    // reverts to sort-merge.
-    // one action (the containmentProbe stats shape): count, mass, and
-    // the prefix-row-weighted batch set size
-    val stats = incPrefix.agg(count(lit(1)),
-      coalesce(sum(col("__df")), lit(0L)),
-      coalesce(avg(col("__szi")), lit(0.0))).head()
-    val avgSz = stats.getDouble(2)
-    val budget = broadcastBudget
-      .getOrElse(probeBroadcastBudget(incoming.sparkSession))
-    val bcast = stats.getLong(0) * 56 <= budget &&
-      (stats.getLong(1) * (avgSz * 8 + 48)).toLong <= budget
-    val incJoin = incPrefix.select(col("din"), col("__szi"), col("token"))
-    val cand = (if (bcast) broadcast(incJoin) else incJoin)
-      .join(hostPrefix, Seq("token"))
-      .where(col("din") =!= col("host") &&
-        lit(p.threshold) * col("__szi") <= col("__szh") &&
-        lit(p.threshold) * col("__szh") <= col("__szi"))
-      .select(col("din"), col("host")).distinct()
-    // broadcast mode streams the STANDING sets scan through the verify
-    // join, so the intersects run at the state's parquet split count —
-    // fine now that the verify kernel is the native two-pointer
-    // sorted_intersect_count (a round-18 spread of the intersects to the
-    // sized verify width was measured a net loss once the kernel landed:
-    // its extra candidate checkpoint/count/semi-join actions cost more
-    // per micro-batch than the now-cheap single-split verify)
-    val enriched = cand
-      .join(inc.select(col("doc").as("din"), col("toks").as("__ti")), Seq("din"))
-    (if (bcast) enriched.hint("broadcast") else enriched)
-      .join(state.sets.select(col("doc").as("host"), col("toks").as("__th")),
-        Seq("host"))
-      .withColumn("__ic", graft.expressions.SortedIntersect.sortedIntersectCount(col("__ti"), col("__th")))
+    probeState(incoming, idCol, textCol, p.shingleK, p.route, state.sets,
+        state.dfreq, p.threshold, maxDf, hostPrefix, lengthPrune = true)
       .withColumn("__jac", col("__ic").cast("double") /
         (size(col("__ti")) + size(col("__th")) - col("__ic")))
       .where(col("__jac") >= p.threshold)
@@ -2619,8 +2474,8 @@ object Dedup {
   /** Character-n-gram Jaccard near-dup pairs: MinHash-LSH candidates over
     * char n-grams, verified with exact char-n-gram Jaccard. Robust to
     * whitespace/token boundary edits where word shingles are not.
-    */
-  /** Banding default r=8 (bands=4 of 32 hashes): char-n-gram baseline
+    *
+    * Banding default r=8 (bands=4 of 32 hashes): char-n-gram baseline
     * similarity between UNRELATED texts is high (~0.3 for prose over a
     * shared vocabulary), so the s-curve must be sharp — r=8 keeps noise
     * collisions at j=0.3 to ~2.6e-4 while retaining ~100% recall at j>=0.95.

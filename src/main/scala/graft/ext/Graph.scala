@@ -17,6 +17,12 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** Edge bound for the driver-side walk: 100k edges collect to a few MB
+    * (the broadcast-join-threshold order, as in
+    * [[DupGraph.triangleCensus]]).
+    */
+  private val LocalEdgeLimit = 100000L
+
   /** `iters` rounds of damped PageRank over a directed edge frame
     * `(srcCol, dstCol)` (parallel edges are collapsed; self-loops kept —
     * they are ordinary edges to the algorithm). Returns one row per node:
@@ -39,12 +45,6 @@ object Graph {
     * small constant (authority scores converge geometrically; curation
     * uses the ORDER, which stabilizes in a handful of rounds).
     */
-  /** Edge bound for the driver-side walk: 100k edges collect to a few MB
-    * (the broadcast-join-threshold order, as in
-    * [[DupGraph.triangleCensus]]).
-    */
-  private val LocalEdgeLimit = 100000L
-
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, damping: Double = 0.85, scale: Int = 12,

@@ -167,24 +167,6 @@ object Packing {
     df.sparkSession.createDataFrame(outRdd, schema)
   }
 
-  /** Sliding-window chunking: one output row per context-window chunk of a
-    * token-array column — windows of `size` tokens starting every `stride`
-    * tokens (stride < size = overlapping chunks, the usual
-    * long-document-into-context-window shape). The final window may be
-    * shorter than `size`; every token appears in at least one chunk; rows
-    * with empty token arrays produce no chunks. This is the OTHER packing
-    * convention from [[concatChunk]]: chunking splits one long document
-    * into many training rows, packing merges many short ones into a block.
-    *
-    * Output: the id columns plus `chunk_idx` (0-based) and `chunk`
-    * (the token slice).
-    *
-    * Scale: row-local — `sequence` + `posexplode` + `slice` are all
-    * codegen'd, no shuffle, no UDF; output size is rows x ceil(n/stride),
-    * the same blow-up any chunker pays. Composable with any tokenizer that
-    * yields an array column ([[graft.functions.text.tokens]] for the
-    * shared-oracle one).
-    */
   /** Length-bucketed batching padding report — the dynamic-batching
     * planner's cost model: sequences land in equal-width length buckets
     * (`bucket = len div bucketWidth`), each bucket is batched `batchSize`
@@ -231,6 +213,24 @@ object Packing {
           .as("efficiency"))
   }
 
+  /** Sliding-window chunking: one output row per context-window chunk of a
+    * token-array column — windows of `size` tokens starting every `stride`
+    * tokens (stride < size = overlapping chunks, the usual
+    * long-document-into-context-window shape). The final window may be
+    * shorter than `size`; every token appears in at least one chunk; rows
+    * with empty token arrays produce no chunks. This is the OTHER packing
+    * convention from [[concatChunk]]: chunking splits one long document
+    * into many training rows, packing merges many short ones into a block.
+    *
+    * Output: the id columns plus `chunk_idx` (0-based) and `chunk`
+    * (the token slice).
+    *
+    * Scale: row-local — `sequence` + `posexplode` + `slice` are all
+    * codegen'd, no shuffle, no UDF; output size is rows x ceil(n/stride),
+    * the same blow-up any chunker pays. Composable with any tokenizer that
+    * yields an array column ([[graft.functions.text.tokens]] for the
+    * shared-oracle one).
+    */
   def slidingChunks(
       df: DataFrame, tokensCol: String, idCols: Seq[String],
       size: Int, stride: Int): DataFrame = {

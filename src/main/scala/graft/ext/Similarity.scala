@@ -20,14 +20,6 @@ import graft.functions.{text, vectors}
   */
 object Similarity {
 
-  /** Exact top-k: for every row of `queries`, the `k` nearest `corpus` rows
-    * by cosine. `queries` is broadcast — keep it bounded (the 100 TB-scale
-    * contract: corpus huge, probe set small).
-    *
-    * `excludeSelf` filters neighbor_id == query_id; only set it when queries
-    * are drawn FROM the corpus under one id space — with distinct id spaces
-    * it would silently drop an unrelated corpus row per query.
-    */
   /** Shared per-query top-k tail on the GroupTopK heap operator: each
     * query is ONE hot group holding its whole candidate set — the heap's
     * O(n log k) beats the window form's per-partition full sort there,
@@ -45,6 +37,14 @@ object Similarity {
         (round(col("cosine"), 6) + lit(0.0)).as("cosine"),
         col("rank").cast("int").as("rank"))
 
+  /** Exact top-k: for every row of `queries`, the `k` nearest `corpus` rows
+    * by cosine. `queries` is broadcast — keep it bounded (the 100 TB-scale
+    * contract: corpus huge, probe set small).
+    *
+    * `excludeSelf` filters neighbor_id == query_id; only set it when queries
+    * are drawn FROM the corpus under one id space — with distinct id spaces
+    * it would silently drop an unrelated corpus row per query.
+    */
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, queryIdCol: String,
@@ -323,14 +323,6 @@ object Similarity {
     }
   }
 
-  /** [[lshTopK]] with FULLY CROSS-ENGINE-REPRODUCIBLE buckets: Rademacher
-    * planes from [[portablePlanes]], projection = the sequential
-    * left-to-right double dot product (both Spark's `aggregate` fold and
-    * SQL engines' list dot evaluate in index order, so the bits — and
-    * therefore the candidate sets and the final top-k — are bit-identical),
-    * bucket key = the bit string. This makes an LSH ANN query verifiable by
-    * a differential SQL oracle, not just recall-tested.
-    */
   /** Dim guard shared by the LSH faces: fail fast on a mismatch —
     * zip_with null-pads, a null dot product makes every bucket bit "0",
     * and the LSH silently degenerates into a full queries x corpus
@@ -374,6 +366,14 @@ object Similarity {
       .select(col(out), col(vout), col("bb.tbl").as("tbl"), col("bb.bh").as("bh"))
   }
 
+  /** [[lshTopK]] with FULLY CROSS-ENGINE-REPRODUCIBLE buckets: Rademacher
+    * planes from [[portablePlanes]], projection = the sequential
+    * left-to-right double dot product (both Spark's `aggregate` fold and
+    * SQL engines' list dot evaluate in index order, so the bits — and
+    * therefore the candidate sets and the final top-k — are bit-identical),
+    * bucket key = the bit string. This makes an LSH ANN query verifiable by
+    * a differential SQL oracle, not just recall-tested.
+    */
   def lshTopKPortable(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, queryIdCol: String, dim: Int,
@@ -394,22 +394,6 @@ object Similarity {
     cosineTopKRank(cand, k)
   }
 
-  /** Approximate top-k via hyperplane LSH: queries and corpus are bucketed
-    * with identical deterministic hyperplanes across `tables` independent
-    * tables; candidates = bucket collisions in any table; exact cosine
-    * re-rank keeps the best `k` per query. Recall grows with `tables` and
-    * shrinks with `bits`; no stage is quadratic.
-    *
-    * The `tables = 16` default is the MEASURED knee (RecallBench, graded
-    * planted twins at 1x/10x/25x of sf0.1): 8 tables read recall@10 0.52
-    * vs 0.73 at 16, scale-flat, with candidate cost ~doubling — the
-    * multi-table trade bought where it pays (round-16 verdict #6: the
-    * default should be the measured dial, not the first one tried). Use
-    * [[autoTuneLshTables]] with `portable = false` to pick the dial for
-    * a RECALL TARGET measured on your own corpus — that flag sweeps
-    * THIS seeded family; the default portable sweep measures the q98
-    * Rademacher face, whose dial does not transfer here.
-    */
   /** `(out, vout, tbl, bh)` bucket rows of the SEEDED hyperplane family —
     * the [[portableBucketed]] twin for [[lshTopK]]; each table's seed
     * depends only on its index, so dial-t buckets are the first t tables
@@ -428,6 +412,22 @@ object Similarity {
       .select(col(out), col(vout), col("bb.tbl").as("tbl"), col("bb.bh").as("bh"))
   }
 
+  /** Approximate top-k via hyperplane LSH: queries and corpus are bucketed
+    * with identical deterministic hyperplanes across `tables` independent
+    * tables; candidates = bucket collisions in any table; exact cosine
+    * re-rank keeps the best `k` per query. Recall grows with `tables` and
+    * shrinks with `bits`; no stage is quadratic.
+    *
+    * The `tables = 16` default is the MEASURED knee (RecallBench, graded
+    * planted twins at 1x/10x/25x of sf0.1): 8 tables read recall@10 0.52
+    * vs 0.73 at 16, scale-flat, with candidate cost ~doubling — the
+    * multi-table trade bought where it pays (round-16 verdict #6: the
+    * default should be the measured dial, not the first one tried). Use
+    * [[autoTuneLshTables]] with `portable = false` to pick the dial for
+    * a RECALL TARGET measured on your own corpus — that flag sweeps
+    * THIS seeded family; the default portable sweep measures the q98
+    * Rademacher face, whose dial does not transfer here.
+    */
   def lshTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, queryIdCol: String, dim: Int,

@@ -11,20 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  /** Per-group distinct-count estimate from the KMV sketch, next to the
-    * exact count for audit: `(groupCols..., n_exact, n_est)`.
-    *
-    * Estimator (Bar-Yossef et al. 2002): with h uniform on [0, 2^32) and
-    * h_(k) the k-th smallest DISTINCT hash, D ~ (k-1) * 2^32 / h_(k);
-    * relative error ~ 1/sqrt(k-2). A group with fewer than k distinct
-    * hashes has an exact sketch — the estimate IS its size. All integer
-    * math (floor division), so the estimate hash-matches any engine that
-    * reproduces the md5-prefix hash — no float drift (q130).
-    *
-    * Scale: the exact count here is for the oracle/audit column; at 100 TB
-    * drop it (`withExact = false`) and the whole statistic is one bounded
-    * map-side-combinable aggregation — the point of carrying a sketch.
-    */
   /** Count-Min sketch row-local bucket positions: ONE md5 per value, its
     * 32 hex chars sliced into four independent 32-bit hashes, each mod
     * `w` — d is fixed at 4 (error prob e^-4 ~ 1.8%), reproducible in any
@@ -175,6 +161,20 @@ object Sketches {
     when(size(col("bk")) < k, size(col("bk")).cast("long"))
       .otherwise(expr(s"CAST(${(k - 1).toLong * 4294967296L} div element_at(bk, $k) AS BIGINT)"))
 
+  /** Per-group distinct-count estimate from the KMV sketch, next to the
+    * exact count for audit: `(groupCols..., n_exact, n_est)`.
+    *
+    * Estimator (Bar-Yossef et al. 2002): with h uniform on [0, 2^32) and
+    * h_(k) the k-th smallest DISTINCT hash, D ~ (k-1) * 2^32 / h_(k);
+    * relative error ~ 1/sqrt(k-2). A group with fewer than k distinct
+    * hashes has an exact sketch — the estimate IS its size. All integer
+    * math (floor division), so the estimate hash-matches any engine that
+    * reproduces the md5-prefix hash — no float drift (q130).
+    *
+    * Scale: the exact count here is for the oracle/audit column; at 100 TB
+    * drop it (`withExact = false`) and the whole statistic is one bounded
+    * map-side-combinable aggregation — the point of carrying a sketch.
+    */
   def kmvDistinctCount(
       df: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Int = 16, withExact: Boolean = true): DataFrame = {

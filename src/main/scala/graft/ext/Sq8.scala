@@ -69,13 +69,6 @@ object Sq8 {
       rows.map(_.getDecimal(2).stripTrailingZeros.setScale(6)).toSeq)
   }
 
-  /** Row-local byte-code array for `vecCol` against range literals:
-    * `code_i = clamp(floor((x_i - lo_i) * 255 / (hi_i - lo_i) + 0.5), 0,
-    * 255)`; a degenerate dim (`hi == lo`) codes 0. Clamping makes the
-    * quantizer total for out-of-range probes (queries quantized against
-    * corpus ranges). Codes are `array<int>` (byte semantics, int storage —
-    * the arithmetic downstream is long anyway).
-    */
   /** The per-element quantizer body shared by [[codes]] and the fused
     * dequant in [[topK]]: nesting `element_at(codes(...), i)` inside
     * another transform's lambda would RE-EVALUATE the whole codes array
@@ -95,6 +88,13 @@ object Sq8 {
           (h - l).cast("double") + lit(0.5)).cast("int"))))
   }
 
+  /** Row-local byte-code array for `vecCol` against range literals:
+    * `code_i = clamp(floor((x_i - lo_i) * 255 / (hi_i - lo_i) + 0.5), 0,
+    * 255)`; a degenerate dim (`hi == lo`) codes 0. Clamping makes the
+    * quantizer total for out-of-range probes (queries quantized against
+    * corpus ranges). Codes are `array<int>` (byte semantics, int storage —
+    * the arithmetic downstream is long anyway).
+    */
   def codes(vecCol: Column,
       lo: Seq[java.math.BigDecimal], hi: Seq[java.math.BigDecimal]): Column = {
     require(lo.nonEmpty && lo.size == hi.size, "range literals misaligned")

@@ -476,7 +476,7 @@ object text {
       joiner)
   }
 
-  /** Intra-document repetition signals (Gopher/C4-style quality rules). */
+  // Intra-document repetition signals (Gopher/C4-style quality rules).
 
   /** Fraction of repeated segments after splitting on `sep` (regex):
     * 1 - distinct/total; 0.0 for empty text. High values flag boilerplate

@@ -72,10 +72,6 @@ object Expectations {
       .agg(count(lit(1)).as(countCol))
   }
 
-  /** Candidate-key audit: key tuples appearing more than once, with their
-    * multiplicities — empty result proves the claimed key IS a key. One
-    * map-side-combinable aggregation; the HAVING filter runs post-merge.
-    */
   /** k-anonymity audit over quasi-identifier columns: every combination
     * whose row count is below `k` — the groups a privacy review must
     * suppress or generalize before release (each is re-identifiable to
@@ -91,6 +87,10 @@ object Expectations {
       .where(col("n") < k)
   }
 
+  /** Candidate-key audit: key tuples appearing more than once, with their
+    * multiplicities — empty result proves the claimed key IS a key. One
+    * map-side-combinable aggregation; the HAVING filter runs post-merge.
+    */
   def duplicateKeys(df: DataFrame, keys: Seq[String],
       countCol: String = "n_rows"): DataFrame = {
     require(keys.nonEmpty, "at least one key column required")

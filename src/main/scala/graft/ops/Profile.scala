@@ -64,16 +64,6 @@ object Profile {
         sum(c.cast(s"decimal(18,$sumScale)")).cast("double").as("sum_value"))
   }
 
-  /** Keep rows whose `colName` lies within the exact [`loQ`, `hiQ`]
-    * quantiles (linear interpolation, the `percentile`/`quantile_cont`
-    * convention) — the standard outlier trim before corpus statistics
-    * ("drop the shortest 5% and longest 5% of documents").
-    *
-    * Scale: thresholds come from ONE exact-percentile aggregation (sort-
-    * based partial agg, distributed), broadcast back as a 1-row frame — the
-    * filter itself is a codegen'd per-row compare. No global sort of the
-    * data and no driver-side collect of anything bigger than two doubles.
-    */
   /** Deterministic PAIRWISE-COMPLETE Pearson correlation for every pair
     * of `valueCols`, optionally per group:
     * `(groupCols..., col_x, col_y, n, corr)`. Each pair's statistics use
@@ -485,24 +475,6 @@ object Profile {
             (col("n_a") * col("n_b")), 6)).as("ks")): _*)
   }
 
-  /** Gini split scores of categorical features against a BINARY target —
-    * "which metadata field best predicts the quality label": for each
-    * feature, the dataset's base Gini impurity, the feature-conditioned
-    * weighted impurity, and their difference (the gain a single-split
-    * decision stump would achieve). The log-free impurity is chosen over
-    * entropy deliberately: with exactly two classes it is ONE fixed
-    * four-op double tree per row (`1 - p1² - p0²`), bit-reproducible in
-    * any engine, where `ln` is libm-dependent in its last ulp.
-    *
-    * Per-value terms are rounded to 6 dp and summed as exact decimals
-    * (order-free); `gain = round(base - weighted, 6)`. Returns one row
-    * per feature: `(feature, n, base_gini, weighted_gini, gain)`.
-    *
-    * Scale: per feature ONE map-side-combinable (value, target-count)
-    * aggregation — shuffle O(distinct values); the scalar base row
-    * broadcasts. Features are scored independently (a Scala-level union,
-    * |features| is a handful).
-    */
   /** Exact two-class AUC per group via the rank-sum (Mann–Whitney U)
     * statistic with full tie handling — the classifier-quality readout a
     * curation run publishes next to its filter thresholds. All rank
@@ -605,6 +577,24 @@ object Profile {
           / (lit(2.0) * col("n_pos") * col("n_neg")), 6)).as("auc")): _*)
   }
 
+  /** Gini split scores of categorical features against a BINARY target —
+    * "which metadata field best predicts the quality label": for each
+    * feature, the dataset's base Gini impurity, the feature-conditioned
+    * weighted impurity, and their difference (the gain a single-split
+    * decision stump would achieve). The log-free impurity is chosen over
+    * entropy deliberately: with exactly two classes it is ONE fixed
+    * four-op double tree per row (`1 - p1² - p0²`), bit-reproducible in
+    * any engine, where `ln` is libm-dependent in its last ulp.
+    *
+    * Per-value terms are rounded to 6 dp and summed as exact decimals
+    * (order-free); `gain = round(base - weighted, 6)`. Returns one row
+    * per feature: `(feature, n, base_gini, weighted_gini, gain)`.
+    *
+    * Scale: per feature ONE map-side-combinable (value, target-count)
+    * aggregation — shuffle O(distinct values); the scalar base row
+    * broadcasts. Features are scored independently (a Scala-level union,
+    * |features| is a handful).
+    */
   def giniFeatureScores(
       df: DataFrame, features: Seq[String], target: Column): DataFrame = {
     require(features.nonEmpty, "need at least one feature")
@@ -716,6 +706,16 @@ object Profile {
         round(col("n_pos").cast("double") / col("n"), 6))
   }
 
+  /** Keep rows whose `colName` lies within the exact [`loQ`, `hiQ`]
+    * quantiles (linear interpolation, the `percentile`/`quantile_cont`
+    * convention) — the standard outlier trim before corpus statistics
+    * ("drop the shortest 5% and longest 5% of documents").
+    *
+    * Scale: thresholds come from ONE exact-percentile aggregation (sort-
+    * based partial agg, distributed), broadcast back as a 1-row frame — the
+    * filter itself is a codegen'd per-row compare. No global sort of the
+    * data and no driver-side collect of anything bigger than two doubles.
+    */
   def quantileTrim(
       df: DataFrame, colName: String, loQ: Double, hiQ: Double): DataFrame = {
     require(0.0 <= loQ && loQ <= hiQ && hiQ <= 1.0, "need 0 <= loQ <= hiQ <= 1")

@@ -313,25 +313,6 @@ object DedupQueries extends Family {
          round(jac, 6) AS jaccard
        FROM c WHERE jac >= 0.6 ORDER BY id_in, id_host"""
 
-  /** q199's AllPairs shingle tokens over the rows of `src`: `tk` (the
-    * [[graft.functions.text.tokens]] split), `shl` (word-3-shingles, a
-    * doc of fewer than 3 tokens being one shingle) and `tok` (distinct
-    * doc_id, token = the portable 60-bit md5 prefix of a shingle).
-    */
-  private def shingleTokenCtes(src: String): String =
-    raw"""tk AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-           FROM $src),
-         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM tk),
-         tok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM shl))"""
-
   /** q274's planted-excerpt corpus `uni`: the documents plus, for every
     * 5th doc, its first 40 tokens as a standalone row at id + 1e6.
     */
@@ -1264,8 +1245,9 @@ object DedupQueries extends Family {
       // every q281 pair survives (the oracle proves it: full replay of
       // routing + cluster collapse + CAPPED prefixes + symmetric prune
       // + exact verify + member expansion, the q280 convention)
-      Dedup.scriptAwareJaccardPairs(cjkCorpus(s, d), "doc_id", "text",
-          threshold = 0.8, maxDf = 25)
+      Dedup.allPairsJaccard(cjkCorpus(s, d), "doc_id", "text",
+          threshold = 0.8, shingleK = 3, maxDf = 25,
+          route = Some(Dedup.CharGramRouting(5, 0.3)))
         .orderBy("id_l", "id_r")
     }, oracle = Some(
       // q281's capped twin: the routed gram build (both paths, q281's
@@ -1388,8 +1370,9 @@ object DedupQueries extends Family {
       // Same AllPairs engine (cluster collapse, set-df Bayardo prefix,
       // exact verify) either way; the oracle replays detection, BOTH
       // gram paths, the portable md5 hashing and the verify end to end
-      Dedup.scriptAwareJaccardPairs(cjkCorpus(s, d), "doc_id", "text",
-          threshold = 0.8)
+      Dedup.allPairsJaccard(cjkCorpus(s, d), "doc_id", "text",
+          threshold = 0.8, shingleK = 3,
+          route = Some(Dedup.CharGramRouting(5, 0.3)))
         .orderBy("id_l", "id_r")
     }, oracle = Some(
       // full replay of script-aware routing: the derived mixed corpus,

@@ -119,6 +119,25 @@ object Shared {
                        unnest(generate_series(1, greatest(len(tk) - ${n - 1}, 1))) AS i
                      FROM toks WHERE len(tk) > 0))"""
 
+  /** q199's AllPairs shingle tokens over the rows of `src`: `tk` (the
+    * [[graft.functions.text.tokens]] split), `shl` (word-3-shingles, a
+    * doc of fewer than 3 tokens being one shingle) and `tok` (distinct
+    * doc_id, token = the portable 60-bit md5 prefix of a shingle).
+    */
+  private[graft] def shingleTokenCtes(src: String): String =
+    raw"""tk AS (SELECT doc_id,
+             list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
+               x -> x <> '') AS arr
+           FROM $src),
+         shl AS (SELECT doc_id, CASE WHEN len(arr) < 3
+             THEN [array_to_string(arr, ' ')]
+             ELSE list_transform(generate_series(1, len(arr) - 2),
+               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
+           FROM tk),
+         tok AS (SELECT DISTINCT doc_id,
+             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
+           FROM (SELECT doc_id, unnest(sh) AS g FROM shl))"""
+
   /** q21's brute-force pair set, which every minhash screen must
     * reproduce (its LSH stages only generate candidates; the emitted
     * pairs are verified exactly): [[wordShingleCtes]] at n = 3, then

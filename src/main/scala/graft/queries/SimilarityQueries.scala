@@ -1108,13 +1108,13 @@ $fin"""
         top3 AS (SELECT query_id, doc_id FROM r WHERE rnk <= 3),
         ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
           FROM embeddings),
-        se AS (SELECT * FROM ev WHERE vec_id % 5 <> 2),
+        e AS (SELECT * FROM ev WHERE vec_id % 5 <> 2),
         $prfQueryCtes,
-        ${derivedNCellsCte("se")},
+        ${derivedNCellsCte("e")},
         slsz AS (SELECT greatest(CAST(ceil(0.02 * count(*)) AS BIGINT), 100) AS s
-          FROM se),
-        ${md5SeedsCte("ivfseeds", "c_vec", "icell", "se", "(SELECT k FROM nc)")},
-        ${seedAssignCte("icell", "se", "ivfseeds")},
+          FROM e),
+        ${md5SeedsCte("ivfseeds", "c_vec", "icell", "e", "(SELECT k FROM nc)")},
+        ${seedAssignCte("icell", "e", "ivfseeds")},
         probes AS (SELECT query_id, icell FROM (
             SELECT q.query_id, s.icell,
               row_number() OVER (PARTITION BY q.query_id
@@ -1123,19 +1123,7 @@ $fin"""
           WHERE rn <= 4),
         cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
           FROM probes p JOIN asg a ON p.icell = a.icell),
-        ${md5SeedsCte("pqseeds", "sv2", "cell", "se", "16")},
-        js AS (SELECT unnest(generate_series(0, 7)) AS j),
-        cw AS (SELECT js.j, s.cell, s.sv2[js.j*8 + 1 : js.j*8 + 8] AS w
-          FROM pqseeds s CROSS JOIN js),
-        sdc AS (SELECT se.vec_id, c.j, c.cell,
-            list_sum([ (se.v[c.j*8 + d] - c.w[d]) * (se.v[c.j*8 + d] - c.w[d])
-                       for d in generate_series(1, 8) ]) AS sdist
-          FROM se CROSS JOIN cw c),
-        codes AS (SELECT vec_id, j, cell AS code FROM (
-            SELECT vec_id, j, cell, row_number() OVER
-              (PARTITION BY vec_id, j ORDER BY sdist ASC, cell ASC) AS rn
-            FROM sdc)
-          WHERE rn = 1),
+        ${pqCodeCtes("pqseeds", "e", "sd")},
         sdq AS (SELECT q.query_id, c.j, c.cell,
             list_sum([ (q.qvec[c.j*8 + d] - c.w[d]) * (q.qvec[c.j*8 + d] - c.w[d])
                        for d in generate_series(1, 8) ]) AS sdist
@@ -1153,10 +1141,10 @@ $fin"""
              FROM adc)
           WHERE rnk <= (SELECT s FROM slsz)),
         dsc AS (SELECT sh.query_id, sh.neighbor_id AS doc_id,
-            list_cosine_similarity(q.qvec, se.v) AS cs
+            list_cosine_similarity(q.qvec, e.v) AS cs
           FROM short sh
           JOIN qv q ON q.query_id = sh.query_id
-          JOIN se ON se.vec_id = sh.neighbor_id),
+          JOIN e ON e.vec_id = sh.neighbor_id),
         $rrfTail""")),
 
     Case("q309_mining_autotune", (s, d) => {

@@ -309,21 +309,10 @@ object TokenQueries extends Family {
     // is cleaned verbatim.
     val survCtes =
       if (containment)
-        raw"""ctk AS (SELECT doc_id, list_filter(
-               regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-               x -> x <> '') AS arr
-             FROM cleaned WHERE text IS NOT NULL),
-         cshl AS (SELECT doc_id, CASE WHEN len(arr) < 3
-             THEN [array_to_string(arr, ' ')]
-             ELSE list_transform(generate_series(1, len(arr) - 2),
-               i -> arr[i] || ' ' || arr[i + 1] || ' ' || arr[i + 2]) END AS sh
-           FROM ctk),
-         ctok AS (SELECT DISTINCT doc_id,
-             CAST(concat('0x', substring(md5(g), 1, 15)) AS BIGINT) AS token
-           FROM (SELECT doc_id, unnest(sh) AS g FROM cshl)),
-         csz AS (SELECT doc_id, count(*) AS s FROM ctok GROUP BY 1),
+        raw"""${shingleTokenCtes("cleaned WHERE text IS NOT NULL")},
+         csz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY 1),
          cinter AS (SELECT a.doc_id AS pa, b.doc_id AS pb, count(*) AS ic
-           FROM ctok a JOIN ctok b ON a.token = b.token
+           FROM tok a JOIN tok b ON a.token = b.token
              AND a.doc_id <> b.doc_id
            GROUP BY 1, 2),
          cdrop AS (SELECT DISTINCT pa AS doc_id FROM cinter

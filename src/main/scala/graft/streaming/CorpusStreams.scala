@@ -532,14 +532,6 @@ object CorpusStreams {
         "hll-registers monitor", maxStateRows, maxStateBytes)))
   }
 
-  /** [[graft.ext.Decontaminate.semanticHitsLiteral]] over an ARRIVING
-    * corpus — the deployment shape of the semantic screen ("score each
-    * new crawl shard against the frozen eval set as it lands"). The
-    * operator is STATELESS (one row-local argmin per vector, no shuffle,
-    * no state store), so the stream runs in plain Append mode and the
-    * result equals the batch screen row-for-row under any cut — q228's
-    * oracle gates this path verbatim.
-    */
   /** Quantized linear classifier at INGEST time: the
     * [[graft.functions.text.hashedLinearScore]] fold is one row-local
     * codegen'd expression over the weight table riding in the plan as an
@@ -619,6 +611,14 @@ object CorpusStreams {
       Seq(groupCol))
   }
 
+  /** [[graft.ext.Decontaminate.semanticHitsLiteral]] over an ARRIVING
+    * corpus — the deployment shape of the semantic screen ("score each
+    * new crawl shard against the frozen eval set as it lands"). The
+    * operator is STATELESS (one row-local argmin per vector, no shuffle,
+    * no state store), so the stream runs in plain Append mode and the
+    * result equals the batch screen row-for-row under any cut — q228's
+    * oracle gates this path verbatim.
+    */
   def semanticScreenStreaming(
       spark: SparkSession, stagedDir: String, idCol: String, vecCol: String,
       evalVecs: Seq[(Long, Seq[Double])], tau: Double, queryName: String,

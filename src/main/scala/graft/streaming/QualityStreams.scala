@@ -46,8 +46,8 @@ object QualityStreams {
     * actions over the cached batch, and CollectMetrics accumulation under
     * re-execution would double-count; the explicit aggregation is exact by
     * construction.
-    */
-  /** `passDir`/`quarantineDir`/`checkpointDir`: pass all three to make the
+    *
+    * `passDir`/`quarantineDir`/`checkpointDir`: pass all three to make the
     * gate RESUMABLE — the checkpoint records which source files each
     * committed micro-batch consumed, so a restarted gate (same staged dir,
     * same checkpoint) processes only files that arrived since the last

@@ -66,8 +66,9 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
       (7L, "the quick brown fox jumps over the lazy dog again and again"),
       (8L, "the quick brown fox jumps over the lazy dog again and again!"),
       (9L, "completely different latin content with no overlap whatsoever here"))
-    val got = Dedup.scriptAwareJaccardPairs(docs.toDF("doc_id", "text"),
-        "doc_id", "text", threshold = 0.5)
+    val got = Dedup.allPairsJaccard(docs.toDF("doc_id", "text"),
+        "doc_id", "text", threshold = 0.5,
+        route = Some(Dedup.CharGramRouting(5, 0.3)), shingleK = 3)
       .select("id_l", "id_r").as[(Long, Long)].collect().toSet
     val want = brute(docs, 0.5)
     assert(got == want, s"missing=${want -- got} extra=${got -- want}")
@@ -93,8 +94,9 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
       (id, (base ++ Seq(vocab(rnd.nextInt(26)))).mkString(" "))
     }
     def norm(rs: Array[(Long, Long, Double)]) = rs.sortBy(r => (r._1, r._2)).toSeq
-    val aware = Dedup.scriptAwareJaccardPairs(ascii.toDF("doc_id", "text"),
-      "doc_id", "text", threshold = 0.5, wordK = 2)
+    val aware = Dedup.allPairsJaccard(ascii.toDF("doc_id", "text"),
+      "doc_id", "text", threshold = 0.5,
+      route = Some(Dedup.CharGramRouting(5, 0.3)), shingleK = 2)
       .as[(Long, Long, Double)].collect()
     val word = Dedup.allPairsJaccard(ascii.toDF("doc_id", "text"),
       "doc_id", "text", threshold = 0.5, shingleK = 2)
@@ -545,8 +547,9 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
       shingleK = 1, adviseAbove = 10L, failAbove = true).count())
     mustThrow(Dedup.allPairsJaccard(df, "doc_id", "text", threshold = 0.6,
       shingleK = 1, adviseAbove = 10L, failAbove = true).count())
-    mustThrow(Dedup.scriptAwareJaccardPairs(df, "doc_id", "text",
-      threshold = 0.6, wordK = 1, adviseAbove = 10L, failAbove = true).count())
+    mustThrow(Dedup.allPairsJaccard(df, "doc_id", "text",
+      threshold = 0.6, route = Some(Dedup.CharGramRouting(5, 0.3)),
+      shingleK = 1, adviseAbove = 10L, failAbove = true).count())
     // the gate's own message carries the measured mass — parse it so the
     // warn-band / ceiling-band bounds below track the fixture exactly
     def measuredMass(f: => Any): Long = {
@@ -668,7 +671,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     // deliberate hot tokens: a qualifying pair survives the cap IF AND
     // ONLY IF some shared prefix token of its part side is at or under
     // maxDf. Prefixes and df come from the ENGINE's own shared
-    // generator (containmentPrefix), so the property gates the real
+    // generator (rarestFirstPrefix), so the property gates the real
     // candidate logic, not a spec-side reimplementation.
     val rnd = new scala.util.Random(11)
     val hot = (1 to 4).map(i => s"hot$i")
@@ -707,7 +710,7 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     val setsDF = Dedup.portableShingleSets(df, "doc_id", "text", 1)
     val dfreqDF = setsDF.sparkSession.createDataFrame(
       dfreq.toSeq.map { case (t, n) => (t, n) }).toDF("token", "__df")
-    val prefix = Dedup.containmentPrefix(setsDF, dfreqDF, tau)
+    val prefix = Dedup.rarestFirstPrefix(setsDF, dfreqDF, tau)
       .select("doc", "token", "__df") // sz rides for the probe gate only
       .as[(Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => r._2 -> r._3).toSeq).toMap
