@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{text, vectors}
-import graft.io.StateStore
+import graft.io.{LibraryParquet, StateStore}
 
 /** Corpus deduplication operators for large-scale training-data pipelines:
   * exact, MinHash+LSH, SimHash, character-n-gram Jaccard, and
@@ -671,13 +671,20 @@ object Dedup {
       params: MinhashParams)
 
   /** Build (or rebuild) the dedup state for a document set, both frames
-    * eagerly `localCheckpoint`'ed and the buckets DERIVED from the
-    * already-checkpointed sets — exactly one shingle/signature pass over
-    * `df` no matter how many consumers read the frames afterwards. The
-    * streaming-ingest shape: the same checkpointed pair serves the
-    * intra-batch verify, the corpus-probe banding AND the accumulating
-    * index, where a lazy state would re-execute its feature pass per
-    * action (measured: three passes per micro-batch in q71).
+    * `localCheckpoint`'ed and the buckets DERIVED from the checkpointed
+    * sets — exactly one shingle/signature pass over `df` no matter how
+    * many consumers read the frames afterwards. The streaming-ingest
+    * shape: the same checkpointed pair serves the intra-batch verify, the
+    * corpus-probe banding AND the accumulating index, where a lazy state
+    * would re-execute its feature pass per action (measured: three passes
+    * per micro-batch in q71).
+    *
+    * One Spark job without AQE (with AQE, the bucket window's shuffle
+    * map stage is a second): the sets' checkpoint is lazy, and the
+    * buckets' eager checkpoint, which reads every row of the sets,
+    * stores them in the same job (a local checkpoint persists to memory
+    * and disk), so the state outlives `df` (a micro-batch frame is valid
+    * only inside its callback).
     */
   def minhashState(
       df: DataFrame, idCol: String, textCol: String,
@@ -685,7 +692,7 @@ object Dedup {
       maxBucket: Int = 1000,
       route: Option[CharGramRouting] = None): MinhashState = {
     val sets = shingleHashSets(df, idCol, textCol, shingleK, route)
-      .localCheckpoint(true)
+      .localCheckpoint(false)
     val buckets = dropOversizedBuckets(
       bandBuckets(signatureOf(sets, idCol, numHashes), idCol, numHashes, bands),
       maxBucket).localCheckpoint(true)
@@ -766,8 +773,8 @@ object Dedup {
       expect: MinhashParams): Option[MinhashState] =
     StateStore.load(dir, Seq("sets", "buckets"), "minhash state",
         expect.encoded, "buckets would never match").map { v =>
-      MinhashState(spark.read.parquet(v.part("sets")),
-        spark.read.parquet(v.part("buckets")), expect)
+      MinhashState(LibraryParquet.read(spark, v.part("sets")),
+        LibraryParquet.read(spark, v.part("buckets")), expect)
     }
 
   /** Incremental dedup — the daily-increment workflow: drop rows of
@@ -985,7 +992,7 @@ object Dedup {
     StateStore.load(dir, Seq("windows"), "substring index",
         substringEncoded(windowTokens, route),
         "windows would never equi-join").map { v =>
-      SubstringIndex(spark.read.parquet(v.part("windows")), windowTokens, route)
+      SubstringIndex(LibraryParquet.read(spark, v.part("windows")), windowTokens, route)
     }
 
   /** Persist a paragraph-dedup seen-hash state (the `priorSeenHashes` frame
@@ -1012,7 +1019,7 @@ object Dedup {
     StateStore.load(dir, Seq("hashes"), "paragraph-dedup state",
         s"sepPattern=$sepPattern",
         "differently-bounded segments would all read as fresh")
-      .map(v => spark.read.parquet(v.part("hashes")))
+      .map(v => LibraryParquet.read(spark, v.part("hashes")))
 
   /** The standing-corpus window index for [[exactSubstringDedupAgainst]]:
     * the distinct `windowTokens`-token windows of `df`, carried WITH the
@@ -1544,7 +1551,7 @@ object Dedup {
     */
   private[graft] def loadStateFrame(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = LibraryParquet.read(spark, path)
     val bytes =
       try {
         val p = new org.apache.hadoop.fs.Path(path)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.text
-import graft.io.StateStore
+import graft.io.{LibraryParquet, StateStore}
 
 /** Streaming per-source data card — the drift-monitoring face of
   * [[graft.ext.Report.dataCard]]: the document, token and quality-pass
@@ -68,7 +68,7 @@ object CardStreams {
     val stateLock = new Object
     val loaded = stateDir.flatMap(StateStore.load(_, Seq("card"),
       "streaming data card", params, "counters would mix two card definitions"))
-    var state: Option[DataFrame] = loaded.map(v => spark.read.parquet(v.part("card")))
+    var state: Option[DataFrame] = loaded.map(v => LibraryParquet.read(spark, v.part("card")))
     var lastApplied: Long = loaded.fold(-1L)(_.counter)
     StagedStream.foreachStaged(stream, shufflePartitions, batchAdaptive,
         checkpointDir, persistBatch = false) { (batch, batchId) =>

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.ext.Dedup
+import graft.io.LibraryParquet
 
 /** Continuous corpus ingestion with streaming near-duplicate removal: each
   * micro-batch of documents is deduplicated against the standing corpus
@@ -53,7 +54,7 @@ object CorpusStreams {
     require(cuts == cuts.sorted && cuts.distinct == cuts, "cuts must be strictly increasing")
     val dir = Files.createTempDirectory("graft_corpus_stream")
     dir.toFile.deleteOnExit()
-    val df = spark.read.parquet(path)
+    val df = LibraryParquet.read(spark, path)
     val bounds = (Long.MinValue +: cuts).zip(cuts :+ Long.MaxValue)
     val base = System.currentTimeMillis()
     // the slice writes are INDEPENDENT one-task jobs over the same source;
@@ -118,6 +119,14 @@ object CorpusStreams {
     * consumed, so a restarted run (same staged dir + checkpoint + sinkDir +
     * stateDir) skips everything already committed instead of re-deduping
     * it — pass all three for the full restart story.
+    *
+    * Spark jobs, with `batchAdaptive = Some(false)`: per micro-batch, one
+    * to build its [[Dedup.minhashState]], one per broadcast exchange of
+    * the verify joins (4 against a loaded state) and one for the sink
+    * append; then one per saved part (2). No job reads a schema: the
+    * staged dir, the loaded state and the sink are read with the schema
+    * stored in their footers ([[graft.io.LibraryParquet]]). One batch
+    * against a saved state runs 8 (asserted in `CorpusStreamsSpec`).
     */
   def corpusDedupStreaming(
       spark: SparkSession, stagedDir: String, idCol: String, textCol: String,
@@ -175,7 +184,7 @@ object CorpusStreams {
     stateLock.synchronized {
       for (dir <- stateDir; st <- state) Dedup.saveMinhashState(st, dir, st.params)
     }
-    spark.read.parquet(sink)
+    LibraryParquet.read(spark, sink)
   }
 
   /** Streaming face of [[graft.ext.Dedup.paragraphDedup]] (keep-first mode):
@@ -247,7 +256,7 @@ object CorpusStreams {
       for (dir <- stateDir; st <- seen)
         Dedup.saveParagraphState(st, dir, sepPattern)
     }
-    spark.read.parquet(sink)
+    LibraryParquet.read(spark, sink)
   }
 
   /** Streaming face of [[graft.ext.AnnIndex.probe]]: probe each arriving
@@ -299,7 +308,7 @@ object CorpusStreams {
       }
       hits.write.mode("append").parquet(sink)
     }
-    spark.read.parquet(sink)
+    LibraryParquet.read(spark, sink)
   }
 
   /** Streaming face of [[graft.ext.Dedup.containmentProbe]]: probe each
@@ -336,7 +345,7 @@ object CorpusStreams {
           maxDf = maxDf)
         .write.mode("append").parquet(sink)
     }
-    spark.read.parquet(sink)
+    LibraryParquet.read(spark, sink)
   }
 
   /** Streaming face of [[graft.ext.Dedup.jaccardProbe]]: probe each
@@ -366,7 +375,7 @@ object CorpusStreams {
       graft.ext.Dedup.jaccardProbe(b, state, idCol, textCol, maxDf)
         .write.mode("append").parquet(sink)
     }
-    spark.read.parquet(sink)
+    LibraryParquet.read(spark, sink)
   }
 
   /** Streaming face of [[graft.ext.NgramLm.score]]: score each arriving
@@ -394,7 +403,7 @@ object CorpusStreams {
       graft.ext.NgramLm.score(b, idCol, textCol, model)
         .write.mode("append").parquet(sink)
     }
-    spark.read.parquet(sink)
+    LibraryParquet.read(spark, sink)
   }
 
   /** Streaming face of [[graft.ext.HeavyHitters.frequentItems]] over a
@@ -434,7 +443,7 @@ object CorpusStreams {
           "heavy-hitters monitor", maxStateRows, maxStateBytes)))
       .select(map_keys(col("mg")).as("cands"), col("n"))
       .collect().headOption
-    HeavyHitters.recountExact(tokens(spark.read.parquet(stagedDir)),
+    HeavyHitters.recountExact(tokens(LibraryParquet.read(spark, stagedDir)),
       col(itemName),
       first.map(_.getSeq[String](0)).getOrElse(Nil),
       first.map(_.getLong(1)).getOrElse(0L),
@@ -466,7 +475,7 @@ object CorpusStreams {
           b, idCol, textCol, reference, refTextCol, n)
         .write.mode("append").parquet(sink)
     }
-    spark.read.parquet(sink)
+    LibraryParquet.read(spark, sink)
   }
 
   /** [[graft.ext.Report.tokenDrift]] with the CANDIDATE side arriving as a

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.io.LibraryParquet
+
 /** The one runner of every streaming face in this package: how a face's
   * source is opened and how its query runs to completion — AvailableNow,
   * awaited, inside [[EventStreams.withStatePartitions]]'s conf scope. A
@@ -29,7 +31,7 @@ private[streaming] object StagedStream {
     * as a stream.
     */
   def staged(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(spark.read.parquet(dir).schema)
+    spark.readStream.schema(LibraryParquet.read(spark, dir).schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
 
   /** The `events` table at `path` (a parquet file or directory) opened as a

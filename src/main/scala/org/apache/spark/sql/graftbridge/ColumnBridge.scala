@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -64,6 +65,17 @@ object ColumnBridge {
       val out = probe(rdd)
       (ofRows(spark, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)), out)
     }
+  }
+
+  /** Whether `df`'s rows are already on the driver: its plan optimizes to
+    * a `LocalRelation` (as `Seq(...).toDF(names)`, or a filter, projection
+    * or limit of one, does). Only a plan whose every leaf is local data is
+    * optimized for the answer, so any other input costs a tree walk.
+    */
+  def isDriverLocal(df: DataFrame): Boolean = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+      qe.optimizedPlan.isInstanceOf[LocalRelation]
   }
 
   /** Whether `df` holds two rows that `groupBy` on all of its columns would

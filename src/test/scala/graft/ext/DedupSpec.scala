@@ -1,7 +1,12 @@
 package graft.ext
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import org.apache.spark.graftspec.JobLog
 
 import graft.{SparkSpec, TempDirs}
 
@@ -666,6 +671,28 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         threshold = 0.6)
       .where(col("doc_id") > mid).select("doc_id").as[Long].collect().sorted
     assert(gotAgainst.toSeq == wantAgainst.toSeq)
+  }
+
+  test("minhashState builds in one job and outlives its source") {
+    val src = s"${TempDirs.make("graft_mh_lineage")}/docs"
+    docs.coalesce(1).write.parquet(src)
+    val df = spark.read.parquet(src)
+    // a micro-batch's setting: AQE would add the bucket window's map stage
+    val aqe = spark.conf.getOption("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (st, log) =
+      try JobLog.of(spark)(
+        Dedup.minhashState(df, "doc_id", "text"))
+      finally aqe.fold(spark.conf.unset("spark.sql.adaptive.enabled"))(
+        spark.conf.set("spark.sql.adaptive.enabled", _))
+    assert(log.jobs == 1, "the bucket checkpoint, which materializes the sets")
+    val listing = Files.walk(Paths.get(src))
+    try listing.sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    finally listing.close()
+    val want = Dedup.minhashState(docs, "doc_id", "text")
+    def rows(f: DataFrame) = f.collect().map(_.toString).sorted.toSeq
+    assert(rows(st.sets) == rows(want.sets))
+    assert(rows(st.buckets) == rows(want.buckets))
   }
 
   test("saveMinhashState refuses params other than the state's own") {

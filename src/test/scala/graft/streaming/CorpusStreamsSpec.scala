@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.graftspec.JobLog
+
 import graft.{SparkSpec, TempDirs}
 import graft.ext.Dedup
 
@@ -184,6 +186,32 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
       .as[Long].collect().toSet
     assert((run1 ++ run2) == oneShot,
       s"resumed runs ($run1 ++ $run2) must equal the one-shot result $oneShot")
+  }
+
+  test("one batch against a saved state runs 8 Spark jobs") {
+    val rows = Seq((1L, docA), (2L, docB), (3L, docC),
+      (4L, "an entirely unrelated document about storage engines and " +
+        "buffer pools with write ahead logging"))
+    val stateDir = TempDirs.make("graft_cs_jobs").toString
+    val base = Dedup.minhashState(rows.take(2).toDF("doc_id", "text"), "doc_id", "text")
+    Dedup.saveMinhashState(base, stateDir, base.params)
+    val staged = CorpusStreams.stageIdSlices(spark, writeDocs(rows.drop(2)), "doc_id", Nil)
+    val sink = s"${TempDirs.make("graft_cs_jobs_sink")}/sink"
+    val (survivors, log) = JobLog.of(spark) {
+      CorpusStreams.corpusDedupStreaming(spark, staged, "doc_id", "text",
+        threshold = 0.7, sinkDir = Some(sink), stateDir = Some(stateDir),
+        batchAdaptive = Some(false), shufflePartitions = Some(1))
+    }
+    // 1: the increment's minhash state (the bucket checkpoint, which
+    //    materializes the lazily checkpointed sets);
+    // 2-5: the broadcast exchanges of the intra-batch and cross-state
+    //    verify joins;
+    // 6: the survivor append to the sink;
+    // 7-8: the save's `sets` and `buckets` writes.
+    // No job reads a schema: the staged dir, the two state parts and the
+    // sink are read with the schema in their footers.
+    assert(log.jobs == 8, s"stages: ${log.stages.map(_.name)}")
+    assert(survivors.as[Long].collect().toSet == Set(4L))
   }
 
   test("an empty micro-batch is harmless") {
