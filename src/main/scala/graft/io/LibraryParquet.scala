@@ -32,7 +32,7 @@ private[graft] object LibraryParquet {
   /** The footer key under which Spark's parquet writer stores the
     * DataFrame schema as JSON.
     */
-  val SchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+  private val SchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   def read(spark: SparkSession, path: String): DataFrame =
     footerSchema(spark, path).fold(spark.read.parquet(path))(
