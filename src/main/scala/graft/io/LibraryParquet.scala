@@ -8,6 +8,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The reader of parquet this library wrote itself: staged micro-batch
@@ -19,7 +20,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * [[SchemaKey]] wins over the converted parquet schema. For a directory
   * Spark wrote, the driver reads that same key directly and hands it to
   * the reader as a known schema, so the read runs no job and yields the
-  * same schema and rows.
+  * same schema and rows. It lists and opens through the session's Hadoop
+  * configuration, as Spark's file sources do, so filesystem settings made
+  * with `spark.conf.set` hold for it too.
   *
   * Anything else goes through `spark.read.parquet` unchanged, so its
   * schema, or its error, stays Spark's: a file without the key (parquet
@@ -46,7 +49,7 @@ private[graft] object LibraryParquet {
         .exists(_.trim.equalsIgnoreCase("true"))) None
     else
       try {
-        val conf = spark.sparkContext.hadoopConfiguration
+        val conf = ColumnBridge.sessionHadoopConf(spark)
         val root = new Path(path)
         val listed = root.getFileSystem(conf).listStatus(root).toSeq
         val visible = listed.filterNot { s =>

@@ -16,7 +16,6 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *    probe takes one row from the plan's final stage, and the write reuses
   *    the broadcasts and shuffle files of that run. Only the final stage
   *    runs twice (for a plan without a shuffle, that is the source scan).
-  *    A driver-local input is checked on the driver, without a job.
   *  - chunked inserts: `by` rows per round-trip (`bit::chunk`,
   *    `R/ffsql.R:991`) -> JDBC `batchsize`.
   *  - first-chunk `overwrite` then forced append for the rest
@@ -46,16 +45,12 @@ object WriteSql {
     GraftDerbyDialect.ensureRegistered()
     require(!(overwrite && append), "overwrite and append are exclusive")
     // Reference semantic `stopifnot(nrow(x) > 0)`, checked before any DDL.
-    // A driver-local input (`Seq(...).toDF`) is probed on the driver, with
-    // no job. Otherwise the probe and the written frame share the plan's
-    // RDD, so the write skips the map stages (scans, shuffles, broadcasts)
-    // already run and pays only the final stage again. Nothing is cached.
+    // The probe and the written frame share the plan's RDD, so the write
+    // skips the map stages (scans, shuffles, broadcasts) already run and
+    // pays only the final stage again. Nothing is cached.
     val input =
       if (!requireNonEmpty) df
-      else if (ColumnBridge.isDriverLocal(df)) {
-        require(!df.isEmpty, "nothing to write: input has zero rows")
-        df
-      } else {
+      else {
         val (shared, empty) = ColumnBridge.executeOnce(df, "WriteSql")(_.isEmpty())
         require(!empty, "nothing to write: input has zero rows")
         shared

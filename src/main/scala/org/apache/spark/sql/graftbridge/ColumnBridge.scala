@@ -1,10 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -46,6 +46,14 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The Hadoop configuration Spark's file sources use in `spark`: the
+    * SparkContext's, overlaid with the session's SQL conf, so a filesystem
+    * setting made with `spark.conf.set` is in it. `SessionState` is
+    * `private[sql]`.
+    */
+  def sessionHadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
   /** Runs `df`'s plan afresh (a new execution, as `df.write` would start)
     * as one SQL execution named `name`, hands the resulting row RDD to
     * `probe`, and returns a frame that reads that same RDD. The plan's
@@ -65,17 +73,6 @@ object ColumnBridge {
       val out = probe(rdd)
       (ofRows(spark, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)), out)
     }
-  }
-
-  /** Whether `df`'s rows are already on the driver: its plan optimizes to
-    * a `LocalRelation` (as `Seq(...).toDF(names)`, or a filter, projection
-    * or limit of one, does). Only a plan whose every leaf is local data is
-    * optimized for the answer, so any other input costs a tree walk.
-    */
-  def isDriverLocal(df: DataFrame): Boolean = {
-    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
-    qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
-      qe.optimizedPlan.isInstanceOf[LocalRelation]
   }
 
   /** Whether `df` holds two rows that `groupBy` on all of its columns would

@@ -1,7 +1,9 @@
 package graft.io
 
+import java.net.URI
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
@@ -66,6 +68,17 @@ class LibraryParquetSpec extends AnyFunSuite with SparkSpec {
     assertSameAsSpark(empty)
   }
 
+  test("a filesystem set only in the session's conf is read without a job") {
+    val dir = s"${TempDirs.make("graft_lp_alias")}/docs"
+    docs.toDF("doc_id", "text").write.parquet(dir)
+    val key = s"fs.${AliasLocalFileSystem.Scheme}.impl"
+    spark.conf.set(key, classOf[AliasLocalFileSystem].getName)
+    try {
+      assert(spark.sparkContext.hadoopConfiguration.get(key) == null)
+      assertSameAsSpark(s"${AliasLocalFileSystem.Scheme}://$dir")
+    } finally spark.conf.unset(key)
+  }
+
   test("parquet without Spark's schema key falls back to Spark's inference") {
     val dir = TempDirs.make("graft_lp_plain")
     val schema = MessageTypeParser.parseMessageType(
@@ -98,4 +111,16 @@ class LibraryParquetSpec extends AnyFunSuite with SparkSpec {
     assert(ourErr.getClass == sparkErr.getClass)
     assert(ourErr.getMessage == sparkErr.getMessage)
   }
+}
+
+/** The local filesystem under a scheme of its own, which a session maps to
+  * this class only through its SQL conf.
+  */
+class AliasLocalFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = AliasLocalFileSystem.Scheme
+  override def getUri: URI = URI.create(s"${AliasLocalFileSystem.Scheme}:///")
+}
+
+object AliasLocalFileSystem {
+  val Scheme = "graftalias"
 }

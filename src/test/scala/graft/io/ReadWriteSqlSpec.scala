@@ -216,18 +216,4 @@ class ReadWriteSqlSpec extends AnyFunSuite with SparkSpec {
     assert(checked.jobs == 2, "the emptiness probe, then the insert")
     assert(ReadSql(spark, url, "SELECT * FROM NO_PROBE").count() == 8)
   }
-
-  test("a driver-local input is checked on the driver, without a probe job") {
-    val local = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val (_, log) = JobLog.of(spark) {
-      WriteSql(local, url, "LOCAL_PROBE", overwrite = true)
-    }
-    assert(log.jobs == 1, "the insert job alone")
-    assert(ReadSql(spark, url, "SELECT * FROM LOCAL_PROBE").count() == 2)
-    val e = intercept[IllegalArgumentException] {
-      WriteSql(Seq.empty[(Long, String)].toDF("k", "v"), url, "LOCAL_PROBE",
-        overwrite = true)
-    }
-    assert(e.getMessage.contains("nothing to write"))
-  }
 }

@@ -2,62 +2,45 @@
 """Compare two checkouts on the etlbench workloads in alternating pairs.
 
     python3 tools/pair_etlbench.py PARENT_DIR CHANGE_DIR [--pairs 10]
-        [--seed 1] [--workloads corpus_stream,etl_roundtrip] [--seconds S]
+        [--workloads corpus_stream,etl_roundtrip]
 
 PARENT_DIR and CHANGE_DIR are two checkouts of the repository, each built
 from its own clean `git archive` (a copied `target/` makes the two builds
 delete each other's classes). The workloads, run length and end-to-end
-metrics come from CHANGE_DIR's BENCHMARK.json. Each checkout first runs the
-first workload once, untimed, so that its build is done before any pair.
-Then, per workload, it runs `etlbench/run.py --trace 0` once in each
-checkout per pair, with the same seed on both sides, and alternates which
+metrics come from CHANGE_DIR's BENCHMARK.json; every run uses seed 1. Each
+run goes through the checkout's own `etlbench/steadiness.py` runner
+(`run_once`: `etlbench/run.py --trace 0`, started in that checkout), so
+this script holds no copy of it. Each checkout first runs the first
+workload once, untimed, so that its build is done before any pair. Then,
+per workload, it runs once in each checkout per pair and alternates which
 side runs first.
 
 For every end-to-end metric it prints each side's median and quartiles
-(`statistics.quantiles(n=4)`), the median move against the parent, the
-pairs the change won (ties count for neither side) and a verdict:
-`gain` when the change won at least nine tenths of the pairs and its median
-is better than the parent's by more than the parent's interquartile range;
-`WORSE` when its median is worse than the parent's by more than the
-metric's bound (a share of the parent's median); `-` otherwise. Exits
-non-zero when a run fails its output checks or any metric reads `WORSE`.
-Run nothing else on the machine meanwhile.
+(steadiness.py's `spread`), the median move against the parent, the pairs
+the change won (ties count for neither side) and a verdict: `gain` when the
+change won at least nine tenths of the pairs and its median is better than
+the parent's by more than the parent's interquartile range; `WORSE` when
+its median is worse than the parent's by more than the metric's bound (a
+share of the parent's median); `-` otherwise. Exits non-zero when a run
+fails its output checks or any metric reads `WORSE`. Run nothing else on
+the machine meanwhile.
 """
 import argparse
+import importlib.util
 import json
 import math
 import os
-import statistics
-import subprocess
 import sys
-import time
+
+SEED = 1
 
 
-def run_once(checkout, workload, seed, seconds):
-    t0 = time.monotonic()
-    p = subprocess.run([sys.executable, os.path.join("etlbench", "run.py"),
-                        "--workload", workload, "--seed", str(seed),
-                        "--seconds", str(seconds), "--trace", "0"],
-                       cwd=checkout, stdout=subprocess.PIPE,
-                       stderr=subprocess.DEVNULL, text=True)
-    wall = time.monotonic() - t0
-    lines = p.stdout.strip().splitlines()
-    try:
-        result = json.loads(lines[-1])
-    except (IndexError, ValueError):
-        result = None
-    if p.returncode != 0 or not result or not result.get("correct"):
-        print(f"!! {checkout} {workload} seed {seed}: exit {p.returncode}", file=sys.stderr)
-        print("\n".join(lines[-5:]), file=sys.stderr)
-        return None, wall
-    return {k: v["value"] for k, v in result["metrics"].items()}, wall
-
-
-def quartiles(xs):
-    if len(xs) < 2:
-        return xs[0], xs[0]
-    q = statistics.quantiles(xs, n=4)
-    return q[0], q[2]
+def load_runner(side, checkout):
+    path = os.path.join(checkout, "etlbench", "steadiness.py")
+    spec = importlib.util.spec_from_file_location(f"steadiness_{side}", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
 
 
 def main():
@@ -65,48 +48,49 @@ def main():
     ap.add_argument("parent")
     ap.add_argument("change")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--workloads", default=None,
                     help="comma-separated; default: every workload in BENCHMARK.json")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="default: BENCHMARK.json's run_seconds")
     a = ap.parse_args()
-    with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
+    sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    with open(os.path.join(sides["change"], "BENCHMARK.json")) as fh:
         bench = json.load(fh)
     workloads = (a.workloads.split(",") if a.workloads
                  else [w["name"] for w in bench["workloads"]])
-    seconds = a.seconds if a.seconds is not None else bench["run_seconds"]
-    metrics = bench["end_to_end"]
-    sides = {"parent": a.parent, "change": a.change}
+    seconds = bench["run_seconds"]
+    runners = {side: load_runner(side, checkout) for side, checkout in sides.items()}
 
-    for side, checkout in sides.items():
+    def run(side, workload):
+        os.chdir(sides[side])  # run.py builds and runs the checkout it starts in
+        m, wall = runners[side].run_once(workload, SEED, seconds)
+        if m is None:
+            sys.exit(f"!! the {side} run of {workload} failed")
+        return m, wall
+
+    for side in sides:
         print(f"   build and warm {side}", file=sys.stderr, flush=True)
-        if run_once(checkout, workloads[0], a.seed, seconds)[0] is None:
-            sys.exit(1)
+        run(side, workloads[0])
 
+    spread = runners["change"].spread
     worse = False
     for w in workloads:
         values = {side: [] for side in sides}
         for i in range(a.pairs):
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             for side in order:
-                m, wall = run_once(sides[side], w, a.seed, seconds)
-                if m is None:
-                    sys.exit(1)
+                m, wall = run(side, w)
                 values[side].append(m)
                 print(f"   pair {i} {w} {side}: {wall:.1f} s", file=sys.stderr, flush=True)
-        print(f"== {w}: {a.pairs} pairs, seed {a.seed}, {seconds} s runs, "
-              f"parent {a.parent}, change {a.change}")
+        print(f"== {w}: {a.pairs} pairs, seed {SEED}, {seconds} s runs, "
+              f"parent {sides['parent']}, change {sides['change']}")
         print(f"   {'metric':<13}{'parent q1':>11}{'median':>11}{'q3':>11}"
               f"{'change q1':>11}{'median':>11}{'q3':>11}{'move':>9}{'wins':>7}  verdict")
-        for spec in metrics:
+        for spec in bench["end_to_end"]:
             k, lower = spec["name"], spec["better"] == "lower"
             p = [m[k] for m in values["parent"]]
             c = [m[k] for m in values["change"]]
-            better = [(y < x) if lower else (y > x) for x, y in zip(p, c) if x != y]
-            wins = sum(better)
-            pm, cm = statistics.median(p), statistics.median(c)
-            (p1, p3), (c1, c3) = quartiles(p), quartiles(c)
+            wins = sum((y < x) if lower else (y > x) for x, y in zip(p, c) if x != y)
+            p1, pm, p3, _ = spread(p)
+            c1, cm, c3, _ = spread(c)
             gain_by = (pm - cm) if lower else (cm - pm)
             verdict = "-"
             if wins >= math.ceil(0.9 * a.pairs) and gain_by > p3 - p1:
