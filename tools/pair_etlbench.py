@@ -79,7 +79,8 @@ def main():
             for side in order:
                 m, wall = run(side, w)
                 values[side].append(m)
-                print(f"   pair {i} {w} {side}: {wall:.1f} s", file=sys.stderr, flush=True)
+                shown = " ".join(f"{s['name']}={m[s['name']]:.4g}" for s in bench["end_to_end"])
+                print(f"   pair {i} {w} {side}: {wall:.1f} s  {shown}", file=sys.stderr, flush=True)
         print(f"== {w}: {a.pairs} pairs, seed {SEED}, {seconds} s runs, "
               f"parent {sides['parent']}, change {sides['change']}")
         print(f"   {'metric':<13}{'parent q1':>11}{'median':>11}{'q3':>11}"
